@@ -1,14 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.measure.{JobCounter, Json}
+import scala.collection.mutable
 
 /** Bench main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
-  * Queries are evaluated through the `noop` sink — `count()` would let
-  * column pruning skip most of the computed columns, under-measuring
-  * real work. Materializations are built once before timing (the
-  * analogue of the reference's offline pipeline refresh — routed
-  * queries are *supposed* to show the routed speed, README.md:424-431).
+  * Queries are evaluated through the `noop` sink ([[measure.sink]]).
+  * Materializations are built once before timing (the analogue of the
+  * reference's offline pipeline refresh — routed queries are *supposed*
+  * to show the routed speed, README.md:424-431).
   *
   * == Measurement protocol (r12, VERDICT r11 tasks 1/5) ==
   *  1. WARM-UP sweep: every query runs once, untimed. This pays JIT,
@@ -28,57 +29,12 @@ import org.apache.spark.sql.SparkSession
   *     the serving numbers amortize) are re-measured in isolation:
   *     staging is cleared and rebuilt SPARK_GRAFT_STAGE_RUNS (≥5)
   *     times per stage-owning query; `stages` reports per-stage
-  *     MEDIANS, `stage_runs` every rep. r11 reported n=1 stage splits
-  *     sampled inside a contended full sweep, which is how the spans
-  *     fold's 2× regression hid behind ambient drift.
-  *
-  * == Host controls (r15 suite-level, r17 stage-level) ==
-  * `host_control` is the median per-query min ratio vs a committed
-  * baseline BENCH_LOCAL artifact — it normalizes the INTERLEAVED
-  * suite. r16 proved it does NOT transfer to the dedicated stage pass
-  * run minutes later in the same session (suite ratio 0.851 while the
-  * stage passes ran 1.3–1.8× hot, so dividing by it moved the
-  * stream_fold reading AWAY from its band). So the stage pass carries
-  * its OWN control: a fixed mid-weight witness query (~2–3 s at
-  * sf0.1; sub-second witnesses over-read bursts, r16) brackets every
-  * stage rep, each rep's readings divide by the host-speed ratio
-  * measured in that rep's own time window, and `stages_normalized` is
-  * the per-stage median of those normalized reps. The BAND GATE
-  * itself reads `stages_min` (SCALE.md r17): stage timings are
-  * lower-bounded, bursts only add, and r17 measured minutes-long
-  * bursts INSIDE reps that boundary witnesses read through — the min
-  * over dedicated full-rebuild reps is burst-robust while remaining
-  * fully sensitive to real regressions, which elevate every rep. The
-  * witness and `stages_normalized` stay as window evidence.
+  *     MEDIANS, `stages_min` the per-stage MIN (the band-gate
+  *     statistic, SCALE.md r17), `stage_runs` every rep. r11 reported
+  *     n=1 stage splits sampled inside a contended full sweep, which is
+  *     how the spans fold's 2× regression hid behind ambient drift.
   */
 object Bench {
-
-  private[graft] def median(v: Vector[Double]): Double = {
-    val s = v.sorted
-    if (s.isEmpty) -1.0
-    else if (s.size % 2 == 1) s(s.size / 2)
-    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-  }
-
-  /** Per-stage median of rep-control-normalized readings, paired by
-    * the rep INDEX each reading came from (ADVICE r17 medium: a failed
-    * stage-pass rep shortens that query's sample vector, and a
-    * positional zip then divides each surviving reading by the WRONG
-    * rep's control). `repIdx(q)` lists the rep index of each recorded
-    * sample in order; a stage whose reading count disagrees with the
-    * query's recorded rep indices reports -1 rather than mispair. */
-  private[graft] def normalizedMedians(
-      samples: Seq[(String, Seq[(String, Vector[Double])])],
-      repIdx: Map[String, Vector[Int]],
-      controls: Vector[Double]): Seq[(String, Seq[(String, Double)])] =
-    samples.map { case (q, ss) =>
-      val idxs = repIdx.getOrElse(q, Vector.empty)
-      q -> ss.map { case (st, v) =>
-        st -> (if (v.size == idxs.size && idxs.forall(_ < controls.size))
-                 median(v.zip(idxs).map { case (raw, i) => raw / controls(i) })
-               else -1.0)
-      }
-    }
 
   /** Self-evaluating band gate (r17; limits from [[BandBudgets]] since
     * r18 — one structure both enforced and printed, VERDICT r17
@@ -111,112 +67,13 @@ object Bench {
     s"""{${(parts :+ compJson).mkString(",")},"all_pass":$allPass}"""
   }
 
-  /** Top-level `"key":{...numbers...}` map extracted with a
-    * balanced-brace scan anchored on the writer's own key shape —
-    * the r16 parse took `substring` to the FIRST '}' after the first
-    * `"queries"`, which silently degrades on any format evolution
-    * (ADVICE r16). Returns empty on a missing key; the caller gates
-    * plausibility. */
-  private[graft] def numberMap(txt: String, key: String): Map[String, Double] = {
-    val anchor = "\"" + key + "\":{"
-    val start = txt.indexOf(anchor)
-    if (start < 0) return Map.empty
-    val open = start + anchor.length - 1
-    var depth = 0
-    var end = -1
-    var j = open
-    while (j < txt.length && end < 0) {
-      txt.charAt(j) match {
-        case '{' => depth += 1
-        case '}' => depth -= 1; if (depth == 0) end = j
-        case _ =>
-      }
-      j += 1
-    }
-    if (end < 0) return Map.empty
-    // value class must admit Scala's Double.toString E-notation incl.
-    // negative exponents ("1.0E-5" for sub-1e-3 timings)
-    "\"([A-Za-z0-9_]+)\":(-?[0-9][0-9.eE+-]*)".r
-      .findAllMatchIn(txt.substring(open + 1, end))
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
-
-  /** Host-drift baseline every control in this run divides by:
-    * pinned via SPARK_GRAFT_BENCH_BASELINE (ADVICE r16 — a re-run
-    * after committing the current round's own artifact otherwise
-    * self-compares at ~1.0, masking drift exactly during A/B triage),
-    * else the newest committed BENCH_LOCAL_r*.json in cwd. Returns
-    * (name, per-query min map, per-query median map). A parse that
-    * yields an implausibly small queries map fails VISIBLY to stderr
-    * instead of silently emitting a null control. */
-  private[graft] def loadBaseline(sfDir: String): Option[(String, Map[String, Double], Map[String, Double])] = {
-    val pat = "BENCH_LOCAL_r(\\d+)\\.json".r
-    val file = sys.env.get("SPARK_GRAFT_BENCH_BASELINE")
-      .map(p => new java.io.File(p))
-      .orElse {
-        Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-          .flatMap(f => f.getName match {
-            case pat(n) => Some((n.toInt, f)); case _ => None
-          }).sortBy(-_._1).headOption.map(_._2)
-      }
-    file.flatMap { f =>
-      try {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        val qs = numberMap(txt, "queries")
-        val meds = numberMap(txt, "medians")
-        if (qs.size < 20) sys.error(
-          s"implausible queries map (${qs.size} entries) — format drift?")
-        // a control vs a different scale factor is not host drift, it
-        // is the workload itself — refuse rather than emit garbage
-        // (smoke runs at sf0.001 otherwise divide by sf0.1 numbers)
-        val sfPat = "\"sf\":\"([^\"]+)\"".r
-        sfPat.findFirstMatchIn(txt).map(_.group(1)).filter(_ != sfDir)
-          .foreach(bSf => sys.error(s"baseline measured at $bSf, this run is $sfDir"))
-        Some((f.getName, qs, meds))
-      } catch { case e: Throwable =>
-        System.err.println(
-          s"[bench] baseline load FAILED (${f.getName}): ${e.getMessage}")
-        None
-      }
-    }
-  }
+  /** A query's failure message as the artifact's `errors` value: one
+    * JSON string of at most 200 characters. */
+  private[graft] def errorJson(msg: String): String = Json.str(msg, max = 200)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sqlext.GraftExtensions")
-      // local-mode knob: fixture files are ~10-30 MB, so the 128 MB
-      // default gives one scan task per table and idles the other
-      // cores; 8 MB splits restore scan parallelism. (On a real
-      // cluster with TB-scale tables the default is correct.)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // explicit-file reads (BucketStore.readExact/readChecked) pass
-      // per-file root paths; above the default threshold (32) Spark
-      // spawns a distributed listing JOB per read -- pure scheduler
-      // overhead on a local FS. (On a real cluster against object
-      // storage the distributed listing is right; this is a local-mode
-      // knob like maxPartitionBytes above.)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // r18 (guide §1 measured, §4 expression/codegen): the generated-
-      // class cache defaults to 100 entries per JVM; a suite of 136
-      // distinct queries cycles ~10x that many codegen units per sweep,
-      // so EVERY query re-Janino-compiled its stages on EVERY run
-      // (~30% of total suite time, measured 134.5 -> 95.7 s at sf0.1).
-      // Not a local-mode knob: executors pay the same compile on a
-      // cluster whenever a deployment runs a query library larger than
-      // the default cache. Sized to hold this suite with headroom
-      // (~5k classes x ~10-50 KB bytecode - bounded metaspace cost).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = measure.session(measure.envCpus)
 
     // untimed setup: catalog registration + rollup/baseline build
     SparkEntry.catalog(spark, sfDir)
@@ -244,149 +101,88 @@ object Bench {
 
     // failed runs never participate in the min/median (ADVICE r3); a
     // query with zero successful runs reports -1 and lands in "errors"
-    val lastErr = scala.collection.mutable.LinkedHashMap[String, String]()
-    val times = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
+    val lastErr = mutable.LinkedHashMap[String, String]()
+    val times = mutable.LinkedHashMap[String, Vector[Double]]()
     ordered.foreach { case (name, _) => times(name) = Vector.empty }
     def runOne(name: String,
         fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        record: Boolean): Unit = {
-      val t0 = System.nanoTime()
+        record: Boolean): Unit =
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        if (record) times(name) = times(name) :+ (System.nanoTime() - t0) / 1e9
+        val t = measure.seconds(measure.sink(fn(spark, sfDir)))
+        if (record) times(name) = times(name) :+ t
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         lastErr(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
-    }
     // 1. warm-up (untimed; builds every staged artifact)
     ordered.foreach { case (name, fn) => runOne(name, fn, record = false) }
 
-    // stage-owning = wrote a stageTimings entry during warm-up; known
-    // BEFORE the timed sweeps so a misconfigured witness fails in
-    // seconds, not after the ~90 min suite
+    // stage-owning = wrote a stageTimings entry during warm-up
     val stageOwners = ordered.filter { case (n, _) =>
       ExtQueries.stageTimings.contains(n) }
-    // Stage witness (VERDICT r16 task 1, header above): mid-weight,
-    // staging-free (the stage pass clears staging every rep — a
-    // staged-artifact consumer would time its own rebuild), and not a
-    // stage owner (its clock must not include the measured work).
-    // q_bigram_quality is a pure two-pass LM aggregate over the
-    // documents table, ~2.5-3 s at sf0.1.
-    val witnessName = sys.env.getOrElse("SPARK_GRAFT_STAGE_WITNESS", "q_bigram_quality")
-    val witnessFn = SparkEntry.queries.getOrElse(witnessName,
-      sys.error(s"unknown stage witness $witnessName"))
-    require(!stageOwners.exists(_._1 == witnessName),
-      s"stage witness $witnessName owns a stage — pick a staging-free query")
 
     // 2. timed interleaved sweeps. Sweep 1 additionally records each
     // query's SCHEDULING SHAPE — Spark job and task counts — for the
     // artifact's scaling block (VERDICT r18 task 2: per-query 8c/32c
     // wall ratios read ≈1 at sf0.1 because every query is floor-
     // dominated; task counts let the driver separate task-parallel
-    // queries from driver-bound ones without a second SF). Counters
-    // snapshot AFTER the clock stops and the listener bus drains
-    // deterministically (ADVICE r18 — no sleep race), so nothing rides
-    // the recorded seconds; later sweeps run exactly as before.
-    val shape = new org.apache.spark.scheduler.SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val tasks = new java.util.concurrent.atomic.AtomicInteger
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        tasks.addAndGet(e.stageInfo.numTasks)
-    }
-    val nJobs = scala.collection.mutable.LinkedHashMap[String, Int]()
-    val nTasks = scala.collection.mutable.LinkedHashMap[String, Int]()
-    spark.sparkContext.addSparkListener(shape)
+    // queries from driver-bound ones without a second SF). Counts are
+    // read AFTER the clock stops (JobCounter.take drains the bus), so
+    // nothing rides the recorded seconds; later sweeps run exactly as
+    // before.
+    val nJobs = mutable.LinkedHashMap[String, Long]()
+    val nTasks = mutable.LinkedHashMap[String, Long]()
+    val shape = new JobCounter(spark)
     for (r <- 1 to runs) {
       for ((name, fn) <- ordered) {
         runOne(name, fn, record = true)
         if (r == 1) {
-          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-          val j = shape.jobs.get; val t = shape.tasks.get
-          nJobs(name) = j - nJobs.values.sum
-          nTasks(name) = t - nTasks.values.sum
+          val c = shape.take()
+          nJobs(name) = c.jobs
+          nTasks(name) = c.tasks
         }
       }
-      if (r == 1) spark.sparkContext.removeSparkListener(shape)
+      if (r == 1) shape.close()
     }
 
     // 3. dedicated stage pass: per rep, clear staging and re-run every
-    // stage-owning query so its build records fresh per-stage clocks,
-    // with a witness probe BRACKETING each rep (before rep 1 and after
-    // every rep) so each rep carries a control from its own window.
-    val stageSamples = scala.collection.mutable.LinkedHashMap[
-      String, scala.collection.mutable.LinkedHashMap[String, Vector[Double]]]()
-    // counters (counts, not seconds) collected apart from the stage
-    // durations so artifact consumers never misread a count as seconds
-    val counterSamples = scala.collection.mutable.LinkedHashMap[
-      String, scala.collection.mutable.LinkedHashMap[String, Vector[Long]]]()
-    // which rep index each recorded sample came from, per query —
-    // normalization pairs readings with controls BY INDEX (ADVICE r17:
-    // a failed rep otherwise shifts every later reading onto the wrong
-    // rep's control)
-    val stageRepIdx = scala.collection.mutable.LinkedHashMap[String, Vector[Int]]()
-    var witnessRuns = Vector.empty[Double]
-    def witnessProbe(): Unit = {
-      val t0 = System.nanoTime()
-      try {
-        witnessFn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        witnessRuns = witnessRuns :+ (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stage witness failed: ${e.getMessage}")
-      }
+    // stage-owning query so its build records fresh per-stage clocks.
+    // Counters (counts, not seconds) are collected apart from the stage
+    // durations so artifact consumers never misread a count as seconds.
+    val stageSamples = mutable.LinkedHashMap[String, mutable.LinkedHashMap[String, Vector[Double]]]()
+    val counterSamples = mutable.LinkedHashMap[String, mutable.LinkedHashMap[String, Vector[Long]]]()
+    def append[T](into: mutable.LinkedHashMap[String, mutable.LinkedHashMap[String, Vector[T]]],
+        name: String, readings: Seq[(String, T)]): Unit = {
+      val per = into.getOrElseUpdate(name, mutable.LinkedHashMap())
+      readings.foreach { case (k, v) => per(k) = per.getOrElse(k, Vector.empty) :+ v }
     }
-    witnessProbe()
-    for (rep <- 0 until stageRuns) {
+    for (_ <- 1 to stageRuns) {
       ExtQueries.clearStaging()
       ExtQueries.stageTimings.clear()
       ExtQueries.stageCounters.clear()
       stageOwners.foreach { case (name, fn) =>
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          ExtQueries.stageTimings.get(name).foreach { ss =>
-            stageRepIdx(name) = stageRepIdx.getOrElse(name, Vector.empty) :+ rep
-            val per = stageSamples.getOrElseUpdate(name,
-              scala.collection.mutable.LinkedHashMap())
-            ss.foreach { case (st, v) =>
-              per(st) = per.getOrElse(st, Vector.empty) :+ v }
-          }
-          ExtQueries.stageCounters.get(name).foreach { cs =>
-            val per = counterSamples.getOrElseUpdate(name,
-              scala.collection.mutable.LinkedHashMap())
-            cs.foreach { case (ct, v) =>
-              per(ct) = per.getOrElse(ct, Vector.empty) :+ v }
-          }
+          measure.sink(fn(spark, sfDir))
+          ExtQueries.stageTimings.get(name).foreach(append(stageSamples, name, _))
+          ExtQueries.stageCounters.get(name).foreach(append(counterSamples, name, _))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] stage pass $name failed: ${e.getMessage}")
         }
       }
-      witnessProbe()
     }
 
     val results = times.toSeq.map { case (k, ts) =>
       (k, if (ts.isEmpty) -1.0 else ts.min)
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val medians = times.toSeq.map { case (k, ts) =>
-      "\"" + k + "\":" + f"${median(ts)}%.4f"
-    }.mkString("{", ",", "}")
-    val runsJson = times.toSeq.map { case (k, ts) =>
-      "\"" + k + "\":" + ts.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", " ").replace("\r", " ").take(200)
+    val qs = Json.obj(results.map { case (k, v) => k -> v.toString })
+    val medians = Json.obj(times.map { case (k, ts) => k -> f"${measure.median(ts)}%.4f" })
+    val runsJson = Json.series(times)
     // a query that failed in one sweep but succeeded in another is a
     // transient flake, not a hard failure — "errors" lists only queries
     // with ZERO successful runs; flakes are visible as a short "runs"
     // array (ADVICE r4)
-    val errs = lastErr.filter { case (k, _) => times(k).isEmpty }
-      .map { case (k, v) => "\"" + k + "\":\"" + esc(v) + "\"" }
-      .mkString("{", ",", "}")
+    val hardErrs = lastErr.filter { case (k, _) => times(k).isEmpty }
+    val errs = Json.obj(hardErrs.map { case (k, v) => k -> errorJson(v) })
     val total = results.map(_._2).filter(_ >= 0).sum
     // the reference's headline claim (README.md:424-431, "10-100x for
     // common aggregation patterns"), MEASURED (VERDICT r6 task 1):
@@ -396,7 +192,7 @@ object Bench {
     // real work to skip.
     val routing =
       try Some(RoutingBench.measure(spark, sfDir,
-        sys.env.getOrElse("SPARK_GRAFT_ROUTING_REPLICAS", "512").toInt))
+        sys.env.get("SPARK_GRAFT_ROUTING_REPLICAS").fold(RoutingBench.DefaultReplicas)(_.toInt)))
       catch { case e: Throwable =>
         System.err.println(s"[bench] routing bench failed: ${e.getMessage}"); None }
     // per-run samples for BOTH sides (VERDICT r14 task 4) plus the
@@ -404,102 +200,41 @@ object Bench {
     // artifact — the unrouted min-of-3 swung the headline 16×→33×
     // between rounds on host load alone, and the median is the
     // spread-robust second statistic for bursty hosts
-    val routingJson = routing.map { r =>
-      val ur = r.unroutedRuns.map(x => f"$x%.3f").mkString("[", ",", "]")
-      val rr = r.routedRuns.map(x => f"$x%.3f").mkString("[", ",", "]")
-      val uo = r.unroutedOutliers.map(x => f"$x%.3f").mkString("[", ",", "]")
-      val ro = r.routedOutliers.map(x => f"$x%.3f").mkString("[", ",", "]")
-      f""","routing_speedup":${r.speedup}%.2f,"routing":{"replicas":${r.replicas},"unrouted_sec":${r.unroutedSec}%.3f,"routed_sec":${r.routedSec}%.3f,"unrouted_median":${median(r.unroutedRuns)}%.3f,"routed_median":${median(r.routedRuns)}%.3f,"unrouted_runs":$ur%s,"routed_runs":$rr%s,"unrouted_outliers":$uo%s,"routed_outliers":$ro%s}"""
-    }.getOrElse(""","routing_speedup":-1""")
-
-    // ---- host controls ----
-    val baseline = loadBaseline(sfDir)
-    // suite-level control (r15): median per-query min ratio vs the
-    // baseline, with the pure-scan witness queries' ratios alongside
-    val hostControlJson = baseline.flatMap { case (fname, prev, _) =>
-      val ratios = results.flatMap { case (k, cur) =>
-        prev.get(k).filter(p => p > 0 && cur > 0).map(p => k -> cur / p) }
-      if (ratios.isEmpty) None
-      else {
-        val med = median(ratios.map(_._2).toVector)
-        val wits = Seq("q_stg_customers", "q_mv_segment")
-          .flatMap(w => ratios.collectFirst {
-            case (`w`, r) => "\"" + w + "\":" + f"$r%.3f" })
-          .mkString("{", ",", "}")
-        Some(s"""{"baseline":"$fname","median_min_ratio":${f"$med%.3f"},"n":${ratios.size},"witnesses":$wits}""")
-      }
-    }.getOrElse("null")
-    // stage-level control (r17): witness medians + per-rep host-speed
-    // ratios vs the baseline's witness median. rep i's control is the
-    // mean of the witness runs bracketing it, divided by the quiet
-    // baseline value — >1 means rep i's window ran slow.
-    val witSuiteMed = median(times.getOrElse(witnessName, Vector.empty))
-    val witMed = median(witnessRuns)
-    val witBase = baseline.flatMap { case (_, prevQ, prevM) =>
-      prevM.get(witnessName).orElse(prevQ.get(witnessName)).filter(_ > 0) }
-    val repControls: Option[Vector[Double]] = witBase.flatMap { wb =>
-      if (witnessRuns.size == stageRuns + 1)
-        Some((0 until stageRuns).toVector.map(i =>
-          ((witnessRuns(i) + witnessRuns(i + 1)) / 2) / wb))
-      else None // a witness rep failed — per-rep pairing is broken
-    }
-    val stageWitnessJson = {
-      val runsS = witnessRuns.map(x => f"$x%.3f").mkString("[", ",", "]")
-      val baseS = witBase.map(b => f"$b%.4f").getOrElse("null")
-      val shc = witBase.filter(_ => witMed > 0)
-        .map(b => f"${witMed / b}%.3f").getOrElse("null")
-      val svs = if (witSuiteMed > 0 && witMed > 0)
-        f"${witMed / witSuiteMed}%.3f" else "null"
-      val prc = repControls.map(_.map(c => f"$c%.3f")
-        .mkString("[", ",", "]")).getOrElse("null")
-      s"""{"name":"$witnessName","runs":$runsS,"median":${f"$witMed%.3f"},"suite_median":${f"$witSuiteMed%.3f"},"baseline_median":$baseS,"stage_host_control":$shc,"stage_vs_suite":$svs,"per_rep_control":$prc}"""
-    }
+    val routingJson = routing.map(r =>
+      f""","routing_speedup":${r.speedup}%.2f,"routing":${Json.obj(r.fields)}""")
+      .getOrElse(""","routing_speedup":-1""")
 
     // per-stage MEDIANS from the dedicated pass (backward-compatible
-    // scalar shape), raw and normalized-by-rep-control, with every
-    // rep alongside
+    // scalar shape), with every rep alongside
+    val sortedSamples = stageSamples.toSeq.sortBy(_._1)
     val stageMedians: Seq[(String, Seq[(String, Double)])] =
-      stageSamples.toSeq.sortBy(_._1).map { case (q, ss) =>
-        q -> ss.toSeq.map { case (st, v) => st -> median(v) } }
+      sortedSamples.map { case (q, ss) =>
+        q -> ss.toSeq.map { case (st, v) => st -> measure.median(v) } }
     // per-stage MIN over the dedicated reps — the band-gate statistic
     // (r17): stage timings are lower-bounded, so host contention only
     // ever ADDS time, and the r17 run showed minutes-long bursts INSIDE
-    // reps that the boundary witnesses read right through (rep 5 ran
+    // reps that boundary witnesses read right through (rep 5 ran
     // 2.2x slow on every substage incl. trivial ones while its control
     // read 0.987). Each rep is a complete fresh rebuild, so the min is
     // a valid full measurement of the op — the same policy as the
     // suite's min-of-5 — while staying exactly as sensitive to a real
     // regression, which elevates every rep including the quietest.
     val stageMins: Seq[(String, Seq[(String, Double)])] =
-      stageSamples.toSeq.sortBy(_._1).map { case (q, ss) =>
+      sortedSamples.map { case (q, ss) =>
         q -> ss.toSeq.map { case (st, v) =>
           st -> (if (v.isEmpty) -1.0 else v.min) } }
-    val stageNormMedians: Option[Seq[(String, Seq[(String, Double)])]] =
-      repControls.map { cs =>
-        normalizedMedians(
-          stageSamples.toSeq.sortBy(_._1).map { case (q, ss) => q -> ss.toSeq },
-          stageRepIdx.toMap, cs) }
     def renderStages(src: Seq[(String, Seq[(String, Double)])]): String =
-      src.map { case (q, ss) =>
-        "\"" + q + "\":" + ss.map { case (k, v) =>
-          "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
+      Json.obj(src.map { case (q, ss) => q -> Json.obj(ss.map { case (k, v) => k -> Json.sec(v) }) })
     val stages = renderStages(stageMedians)
     val stagesMin = renderStages(stageMins)
-    val stagesNormalized =
-      stageNormMedians.map(renderStages).getOrElse("null")
-    val stageRunsJson = stageSamples.toSeq.sortBy(_._1).map { case (q, ss) =>
-      "\"" + q + "\":" + ss.map { case (k, v) =>
-        "\"" + k + "\":" + v.map(x => f"$x%.3f").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
+    val stageRunsJson = Json.obj(sortedSamples.map { case (q, ss) =>
+      q -> Json.series(ss, Json.sec) })
     // counts live under their own field, NOT in the seconds-typed
     // stages map (ADVICE r14) — every rep's value, they're tiny
-    val countersJson = counterSamples.toSeq.sortBy(_._1).map { case (q, cs) =>
-      "\"" + q + "\":" + cs.map { case (k, v) =>
-        "\"" + k + "\":" + v.mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
+    val sortedCounters = counterSamples.toSeq.sortBy(_._1)
+    def renderCounters(src: Seq[(String, mutable.LinkedHashMap[String, Vector[Long]])]) =
+      Json.obj(src.map { case (q, cs) => q -> Json.series(cs) })
+    val countersJson = renderCounters(sortedCounters)
 
     // Self-evaluating band gate (r17; see evalBands — budgets live in
     // BandBudgets, the one structure enforced AND printed). Only
@@ -511,26 +246,23 @@ object Bench {
     // per-query scheduling shape from sweep 1 (VERDICT r18 task 2) —
     // ADDITIVE fields; the existing queries/medians/runs maps are
     // untouched so PERF keeps its per-query round-over-round table
-    val nJobsJson = nJobs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val nTasksJson = nTasks.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val nJobsJson = Json.obj(nJobs.map { case (k, v) => k -> v.toString })
+    val nTasksJson = Json.obj(nTasks.map { case (k, v) => k -> v.toString })
+    val sf = Json.str(sfDir)
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"medians":$medians,"runs":$runsJson,"n_jobs":$nJobsJson,"n_tasks":$nTasksJson,"errors":$errs$routingJson,"stages":$stages,"stages_min":$stagesMin,"stages_normalized":$stagesNormalized,"stage_runs":$stageRunsJson,"counters":$countersJson,"stage_witness":$stageWitnessJson,"host_control":$hostControlJson,"bands":$bandsJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"medians":$medians,"runs":$runsJson,"n_jobs":$nJobsJson,"n_tasks":$nTasksJson,"errors":$errs$routingJson,"stages":$stages,"stages_min":$stagesMin,"stage_runs":$stageRunsJson,"counters":$countersJson,"bands":$bandsJson,"sf":$sf}"""
     // the artifact must survive stdout truncation (BENCH_r05 lost its
     // tail once the per-run arrays made the line long) — also write it
     // to a file so the full queries/runs/errors maps are recoverable
-    val out = java.nio.file.Paths.get("target/bench_result.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.writeString(out, json + "\n")
+    measure.writeArtifact("target/bench_result.json", json)
 
     // compact summary as the FINAL line (r14, VERDICT r13 task 2): the
     // full line outgrew the driver's 2000-char tail window at 135
     // queries. This line carries the headline numbers (total,
     // query/error counts, routing with both sides' bands and medians,
-    // the BUDGET-PINNED stage medians raw AND normalized, the stage
-    // witness control, counters) — the complete maps stay in the full
-    // line above and in target/bench_result.json.
+    // the BUDGET-PINNED stage medians and mins, counters) — the
+    // complete maps stay in the full line above and in
+    // target/bench_result.json.
     // Stages are CAPPED to the budget-pinned queries (ADVICE r14) —
     // the pinned set is exactly what the round contract audits: spans
     // fold ≤6s, clusters fold ≤4s, bm25 write<15/fold<10, stream_fold
@@ -543,33 +275,17 @@ object Bench {
       "q_dedup_clusters_incremental" -> Set("fold"),
       "q_bm25_incremental" -> Set("write_state", "fold"),
       "q_stream_curation" -> Set("stream_fold"))
-    def onlyQueries(src: Seq[(String, Seq[(String, Double)])], keep: Set[String]) =
-      src.filter { case (q, _) => keep(q) }
     def onlyBand(src: Seq[(String, Seq[(String, Double)])]) =
       src.flatMap { case (q, ss) =>
         bandStages.get(q).map(ks =>
           q -> ss.filter { case (k, _) => ks(k) })
       }.filter(_._2.nonEmpty)
-    val pinnedCounters = counterSamples.toSeq.sortBy(_._1)
-      .filter { case (q, _) => pinned(q) }.map { case (q, cs) =>
-        "\"" + q + "\":" + cs.map { case (k, v) =>
-          "\"" + k + "\":" + v.mkString("[", ",", "]")
-        }.mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
-    val witCompact = {
-      val shc = witBase.filter(_ => witMed > 0)
-        .map(b => f"${witMed / b}%.3f").getOrElse("null")
-      val svs = if (witSuiteMed > 0 && witMed > 0)
-        f"${witMed / witSuiteMed}%.3f" else "null"
-      s"""{"name":"$witnessName","median":${f"$witMed%.3f"},"stage_host_control":$shc,"stage_vs_suite":$svs}"""
-    }
-    def summaryWith(st: String, stMin: String, stN: String, ct: String) =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${lastErr.count { case (k, _) => times(k).isEmpty }}$routingJson,"stages":$st,"stages_min":$stMin,"stages_normalized":$stN,"stage_witness":$witCompact,"counters":$ct,"host_control":$hostControlJson,"bands":$bandsJson,"sf":"$sfDir","detail":"target/bench_result.json"}"""
-    val normBand = stageNormMedians
-      .map(s => renderStages(onlyBand(s))).getOrElse("null")
+    val pinnedCounters = renderCounters(sortedCounters.filter { case (q, _) => pinned(q) })
     // the band-gate statistic always rides the summary: min over reps
     // for the band stages (SCALE.md r17 band rule)
     val minBand = renderStages(onlyBand(stageMins))
+    def summaryWith(st: String, ct: String) =
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${hardErrs.size}$routingJson,"stages":$st,"stages_min":$minBand,"counters":$ct,"bands":$bandsJson,"sf":$sf,"detail":"target/bench_result.json"}"""
     // degradation ladder, most→least informative, first fit ≤1600 of
     // the driver's 2000-char tail window (r17: the r16 summary fit
     // 1800 but an 800-char post-summary WARN evicted its head — the
@@ -577,10 +293,10 @@ object Bench {
     // ADVICE r17: the cap now matches this comment — 1900 left only
     // 100 chars of slack, smaller than the WARN that already failed)
     val candidates = Seq(
-      summaryWith(renderStages(onlyQueries(stageMedians, pinned)), minBand, normBand, pinnedCounters),
-      summaryWith(renderStages(onlyBand(stageMedians)), minBand, normBand, pinnedCounters),
-      summaryWith(renderStages(onlyBand(stageMedians)), minBand, normBand, "{}"),
-      summaryWith("{}", minBand, "null", "{}"))
+      summaryWith(renderStages(stageMedians.filter { case (q, _) => pinned(q) }), pinnedCounters),
+      summaryWith(renderStages(onlyBand(stageMedians)), pinnedCounters),
+      summaryWith(renderStages(onlyBand(stageMedians)), "{}"),
+      summaryWith("{}", "{}"))
     val summary = candidates.find(_.length <= 1600).getOrElse(candidates.last)
     if (summary != candidates.head)
       System.err.println(s"[bench] summary degraded to ${summary.length} chars " +

@@ -1,5 +1,6 @@
 package graft
 
+import graft.measure.{Json, envCpus, median, seconds, session, sink}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -35,24 +36,32 @@ object RoutingBench {
     def unroutedSec: Double = unroutedRuns.min
     def routedSec: Double = routedRuns.min
     def speedup: Double = unroutedSec / routedSec
-    private def med(v: Vector[Double]): Double = {
-      val s = v.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
     // spread-robust second statistic (VERDICT r16 task 4): on a bursty
     // host the min under-reads and the mean over-reads; consumers that
     // distrust the recorded band get the median alongside
-    def unroutedMedian: Double = med(unroutedRuns)
-    def routedMedian: Double = med(routedRuns)
+    def unroutedMedian: Double = median(unroutedRuns)
+    def routedMedian: Double = median(routedRuns)
+    /** The artifact's `routing` object fields, shared by Bench and main. */
+    def fields: Seq[(String, String)] = Seq(
+      "replicas" -> replicas.toString,
+      "unrouted_sec" -> Json.sec(unroutedSec), "routed_sec" -> Json.sec(routedSec),
+      "unrouted_median" -> Json.sec(unroutedMedian), "routed_median" -> Json.sec(routedMedian),
+      "unrouted_runs" -> Json.arr(unroutedRuns, Json.sec),
+      "routed_runs" -> Json.arr(routedRuns, Json.sec),
+      "unrouted_outliers" -> Json.arr(unroutedOutliers, Json.sec),
+      "routed_outliers" -> Json.arr(routedOutliers, Json.sec))
   }
+
+  /** Orders-table replication factor: ×512 is the headline the bench
+    * artifact tracks (~77M rows / ~1.1GB parquet at sf0.1). */
+  val DefaultReplicas = 512
 
   /** Dedicated n≥5 pass for BOTH sides (VERDICT r14 task 4): the
     * headline swung 16×→33× between rounds because the unrouted side
     * was a min-of-3 on a loaded host. Every sample is recorded so the
     * artifact carries the band, not just the min. */
   def measure(spark: SparkSession, baseDir: String,
-      replicas: Int = 256,
+      replicas: Int = DefaultReplicas,
       runs: Int = sys.env.getOrElse("SPARK_GRAFT_ROUTING_RUNS", "5").toInt): Result = {
     val dir = fixture(spark, baseDir, replicas)
 
@@ -69,16 +78,12 @@ object RoutingBench {
     // measures nothing (observed: ratio collapsed to ~1.4 and the
     // routed time GREW with R).
     def q(view: graft.api.MetricView): Unit =
-      view.query(Seq("market_segment"), Seq("total_orders", "total_revenue"))
-        .write.format("noop").mode("overwrite").save()
+      sink(view.query(Seq("market_segment"), Seq("total_orders", "total_revenue")))
 
     // interleaved min-of-N (Bench's contention defense), routed first in
     // each sweep so neither side systematically rides the other's cache
     var unrouted = Vector.empty[Double]
     var routed = Vector.empty[Double]
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // Warm-up TO STEADY STATE per side (VERDICT r16 task 4; r15's one
     // warm-up still left a 1.9x first-to-last spread on the bursty
     // driver host): keep warming until two consecutive untimed runs
@@ -91,11 +96,11 @@ object RoutingBench {
     // vector read [26.8, 142.2, 5.5, 1.7, 5.3] — an 80x apparent
     // spread); the min-based headline is unchanged by construction.
     def warm(f: => Unit): Unit = {
-      var prev = time(f)
+      var prev = seconds(f)
       var extra = 0
       var steady = false
       while (!steady && extra < 5) {
-        val cur = time(f)
+        val cur = seconds(f)
         steady = math.max(cur, prev) / math.min(cur, prev) <= 1.15
         prev = cur
         extra += 1
@@ -104,8 +109,8 @@ object RoutingBench {
     warm(q(routedView)); warm(q(unroutedView))
     val n = math.max(1, runs)
     for (_ <- 1 to n) {
-      routed = routed :+ time(q(routedView))
-      unrouted = unrouted :+ time(q(unroutedView))
+      routed = routed :+ seconds(q(routedView))
+      unrouted = unrouted :+ seconds(q(unroutedView))
     }
     // Spread-bounded recorded vectors (VERDICT r17 task 3): the r17
     // driver artifact's unrouted vector spread 3.16x because one
@@ -119,8 +124,8 @@ object RoutingBench {
     var extra = 0
     while ((burstSplit(unrouted)._1.size < n || burstSplit(routed)._1.size < n)
         && extra < n) {
-      routed = routed :+ time(q(routedView))
-      unrouted = unrouted :+ time(q(unroutedView))
+      routed = routed :+ seconds(q(routedView))
+      unrouted = unrouted :+ seconds(q(unroutedView))
       extra += 1
     }
     val (uKeep, uOut) = burstSplit(unrouted)
@@ -200,35 +205,11 @@ object RoutingBench {
   /** Standalone entry for iterating on the measurement. */
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_ROUTING_REPLICAS", "256").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sqlext.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // explicit-file reads (BucketStore.readExact/readChecked) pass
-      // per-file root paths; above the default threshold (32) Spark
-      // spawns a distributed listing JOB per read -- pure scheduler
-      // overhead on a local FS. (On a real cluster against object
-      // storage the distributed listing is right; this is a local-mode
-      // knob like maxPartitionBytes above.)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // generated-class cache sized for the full query library
-      // (r18; measured in Bench.scala - same rationale)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val replicas = sys.env.get("SPARK_GRAFT_ROUTING_REPLICAS").fold(DefaultReplicas)(_.toInt)
+    val spark = session(envCpus)
     val r = measure(spark, baseDir, replicas)
-    val ur = r.unroutedRuns.map(x => f"$x%.3f").mkString("[", ",", "]")
-    val rr = r.routedRuns.map(x => f"$x%.3f").mkString("[", ",", "]")
-    val uo = r.unroutedOutliers.map(x => f"$x%.3f").mkString("[", ",", "]")
-    val ro = r.routedOutliers.map(x => f"$x%.3f").mkString("[", ",", "]")
-    println(f"""{"metric":"routing_speedup","value":${r.speedup}%.2f,"replicas":${r.replicas},"unrouted_sec":${r.unroutedSec}%.3f,"routed_sec":${r.routedSec}%.3f,"unrouted_median":${r.unroutedMedian}%.3f,"routed_median":${r.routedMedian}%.3f,"unrouted_runs":$ur%s,"routed_runs":$rr%s,"unrouted_outliers":$uo%s,"routed_outliers":$ro%s}""")
+    println(Json.obj(Seq("metric" -> Json.str("routing_speedup"),
+      "value" -> f"${r.speedup}%.2f") ++ r.fields))
     spark.stop()
   }
 }

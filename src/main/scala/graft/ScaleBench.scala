@@ -1,5 +1,6 @@
 package graft
 
+import graft.measure.{Json, minOf, seconds, sink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -126,12 +127,7 @@ object ScaleBench {
       .select(explode(split(col("text"), "\\s+")).as("tok"), col("doc_id"))
       .select(concat(col("tok"), lit("#"),
         pmod(col("doc_id"), lit(1000000L)).cast("string")).as("key"))
-    (1 to runs).map { _ =>
-      val t0 = System.nanoTime()
-      toks.agg(expr("graft_topk(key, 20, 4096)"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.toVector
+    Vector.fill(runs)(seconds(sink(toks.agg(expr("graft_topk(key, 20, 4096)")))))
   }
 
   def main(args: Array[String]): Unit = {
@@ -139,28 +135,7 @@ object ScaleBench {
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       java.nio.file.Paths.get("target", "scale_sf1").toAbsolutePath.toString)
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sqlext.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // explicit-file reads (BucketStore.readExact/readChecked) pass
-      // per-file root paths; above the default threshold (32) Spark
-      // spawns a distributed listing JOB per read -- pure scheduler
-      // overhead on a local FS. (On a real cluster against object
-      // storage the distributed listing is right; this is a local-mode
-      // knob like maxPartitionBytes above.)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // generated-class cache sized for the full query library
-      // (r18; measured in Bench.scala - same rationale)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = measure.session(measure.envCpus)
 
     generateIfAbsent(spark, baseDir, scaleDir, replicas)
 
@@ -203,10 +178,9 @@ object ScaleBench {
         // oracle (ADVICE r12 — the two must not share a knob)
         val fn = if (name == "q_semdedup") ExtQueries.semDedupAutoK _
                  else ExtQueries.all(name)
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        val t = seconds(sink(fn(spark, dir)))
         if (name == "q_dedup_clusters") ccRounds = graft.ops.ConnectedComponents.lastRounds
-        times(name) = times(name) :+ (System.nanoTime() - t0) / 1e9
+        times(name) = times(name) :+ t
       }
       (times.map { case (k, v) =>
         k -> (if (firstRunOnly(k)) v.head else v.min)
@@ -228,22 +202,15 @@ object ScaleBench {
       val rows = heavy ++ (if (wantTopk) Seq("topk_tokens") else Nil)
       val allBase = withTopk(baseSamples, tkBase)
       val allScaled = withTopk(scaledSamples, tkScaled)
-      def js(m: Map[String, Vector[Double]]) = rows
-        .map(q => "\"" + q + "\":[" +
-          m(q).map(v => f"$v%.3f").mkString(",") + "]")
-        .mkString("{", ",", "}")
+      def js(m: Map[String, Vector[Double]]) = Json.series(rows.map(q => q -> m(q)), Json.sec)
       // heavy rows keep the sweep's min/first-run policy (scaled/base
       // maps); the probe row is min-of-n like its full-mode shape
-      val subsetRatios = rows
-        .map(q => "\"" + q + "\":" + f"${
+      val subsetRatios = Json.obj(rows.map(q => q -> f"${
           if (q == "topk_tokens") tkScaled.min / tkBase.min
-          else scaled(q) / base(q)}%.2f")
-        .mkString("{", ",", "}")
+          else scaled(q) / base(q)}%.2f"))
       val json =
         s"""{"metric":"scale_subset","replicas":$replicas,"runs":$runs,"base_dir":"$baseDir","scale_dir":"$scaleDir","base_samples":${js(allBase)},"scaled_samples":${js(allScaled)},"ratio":$subsetRatios}"""
-      val out = java.nio.file.Paths.get("target/scale_subset.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.writeString(out, json + "\n")
+      measure.writeArtifact("target/scale_subset.json", json)
       spark.stop()
       println(json)
       return
@@ -266,12 +233,7 @@ object ScaleBench {
         docs.filter(col("doc_id") % 10 =!= 7), idx)
       val delta = graft.model.Tables.documents(spark, baseDir)
         .filter(col("doc_id") % 10 === 7)
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        graft.ops.IncrementalDedup.deltaPairs(spark, idx, delta)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      minOf(runs)(sink(graft.ops.IncrementalDedup.deltaPairs(spark, idx, delta)))
     }
     val incBase = incProbe(baseDir)
     val incScaled = incProbe(scaleDir)
@@ -291,12 +253,7 @@ object ScaleBench {
         docs.filter(col("doc_id") % 10 =!= 7), idx)
       val delta = graft.model.Tables.documents(spark, baseDir)
         .filter(col("doc_id") % 100 === 7)
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        graft.ops.IncrementalDedup.deltaPairs(spark, idx, delta)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      minOf(runs)(sink(graft.ops.IncrementalDedup.deltaPairs(spark, idx, delta)))
     }
     val incSmBase = incSmallProbe(baseDir)
     val incSmScaled = incSmallProbe(scaleDir)
@@ -320,10 +277,8 @@ object ScaleBench {
         val run = java.nio.file.Files.createTempDirectory("graft_scale_inccc_run").toString
         org.apache.commons.io.FileUtils.copyDirectory(
           new java.io.File(st), new java.io.File(run))
-        val t0 = System.nanoTime()
-        graft.ops.IncrementalClusters.applyDelta(spark, run, delta,
-          "doc_id", Seq("k1", "k2"), nBuckets)
-        val t = (System.nanoTime() - t0) / 1e9
+        val t = seconds(graft.ops.IncrementalClusters.applyDelta(spark, run, delta,
+          "doc_id", Seq("k1", "k2"), nBuckets))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(run))
         t
       }.min
@@ -357,11 +312,7 @@ object ScaleBench {
       graft.ops.IvfIndex.writeIndexed(corpus, s"$idx/layout", model)
       val delta = graft.model.Tables.embeddings(spark, baseDir)
         .filter(col("vec_id") % 10 === 7)
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        graft.ops.IvfIndex.appendIndexed(delta, s"$idx/layout", model)
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      minOf(runs)(graft.ops.IvfIndex.appendIndexed(delta, s"$idx/layout", model))
     }
     val incAnnBase = incAnnProbe(baseDir)
     val incAnnScaled = incAnnProbe(scaleDir)
@@ -381,9 +332,7 @@ object ScaleBench {
       Seq(7L, 17L).map { m =>
         val delta = graft.model.Tables.documents(spark, baseDir)
           .filter(col("doc_id") % 100 === m)
-        val t0 = System.nanoTime()
-        graft.ops.IncrementalSpans.applyDelta(spark, st, delta)
-        (System.nanoTime() - t0) / 1e9
+        seconds(graft.ops.IncrementalSpans.applyDelta(spark, st, delta))
       }.min
     }
     val incSpansBase = incSpansProbe(baseDir)
@@ -405,9 +354,7 @@ object ScaleBench {
         val delta = graft.model.Tables.documents(spark, baseDir)
           .filter(col("doc_id") % 100 === m)
           .select(col("doc_id"), col("source"), col("text"))
-        val t0 = System.nanoTime()
-        graft.ops.IncrementalSegments.applyDelta(spark, st, delta)
-        (System.nanoTime() - t0) / 1e9
+        seconds(graft.ops.IncrementalSegments.applyDelta(spark, st, delta))
       }.min
     }
     val incSegsBase = incSegsProbe(baseDir)
@@ -429,9 +376,7 @@ object ScaleBench {
         val delta = graft.model.Tables.documents(spark, baseDir)
           .filter(col("doc_id") % 100 === m)
           .select(col("doc_id"), col("source"), col("text"))
-        val t0 = System.nanoTime()
-        graft.ops.Bm25Index.applyDelta(spark, st, delta)
-        (System.nanoTime() - t0) / 1e9
+        seconds(graft.ops.Bm25Index.applyDelta(spark, st, delta))
       }.min
     }
     val incBm25Base = incBm25Probe(baseDir)
@@ -448,11 +393,7 @@ object ScaleBench {
       graft.ops.DriftStore.writeProfile(docs.filter(col("doc_id") % 10 =!= 7), st)
       val delta = graft.model.Tables.documents(spark, baseDir)
         .filter(col("doc_id") % 10 === 7)
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        graft.ops.DriftStore.applyDelta(spark, st, delta)
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      minOf(runs)(graft.ops.DriftStore.applyDelta(spark, st, delta))
     }
     val incDriftBase = incDriftProbe(baseDir)
     val incDriftScaled = incDriftProbe(scaleDir)
@@ -470,11 +411,7 @@ object ScaleBench {
         docs.filter(col("doc_id") % 10 =!= 7), pred, st)
       val delta = graft.model.Tables.documents(spark, baseDir)
         .filter(col("doc_id") % 10 === 7)
-      (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        graft.ops.DsirStore.applyDelta(spark, st, delta, pred)
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      minOf(runs)(graft.ops.DsirStore.applyDelta(spark, st, delta, pred))
     }
     val incDsirBase = incDsirProbe(baseDir)
     val incDsirScaled = incDsirProbe(scaleDir)
@@ -491,10 +428,8 @@ object ScaleBench {
     val topkBase = topkProbeSamples(spark, baseDir, runs).min
     val topkScaled = topkProbeSamples(spark, scaleDir, runs).min
 
-    def j(m: Map[String, Double]) = Heavy
-      .map(q => "\"" + q + "\":" + f"${m(q)}%.3f").mkString("{", ",", "}")
-    val ratios = Heavy
-      .map(q => "\"" + q + "\":" + f"${scaled(q) / base(q)}%.2f").mkString("{", ",", "}")
+    def j(m: Map[String, Double]) = Json.obj(Heavy.map(q => q -> Json.sec(m(q))))
+    val ratios = Json.obj(Heavy.map(q => q -> f"${scaled(q) / base(q)}%.2f"))
     // one ratio list feeds the compact summary, the bands gate, and
     // SCALE.md's documented keys — computed once
     val incRatios: Seq[(String, Double)] = Seq(
@@ -510,18 +445,14 @@ object ScaleBench {
     // same artifact defense as Bench (VERDICT r12 task 3): the r12
     // sweep's ratios existed only as stdout history — write the file
     // FIRST, then quiesce Spark, then print as the last stdout act
-    val out = java.nio.file.Paths.get("target/scale_result.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.writeString(out, json + "\n")
+    measure.writeArtifact("target/scale_result.json", json)
     spark.stop()
     println(json)
     // compact summary as the FINAL stdout line (r14, VERDICT r13 task
     // 2, the Bench rule): the full line is several KB, so a 2000-char
     // tail reader gets an unparseable fragment — this line carries
     // every ratio in a few hundred chars.
-    val incRatio = incRatios
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
-      .mkString("{", ",", "}")
+    val incRatio = Json.obj(incRatios.map { case (k, v) => k -> f"$v%.2f" })
     // the bands verdict rides the compact summary too — a tail reader
     // sees the gate without opening the detail file
     println(s"""{"metric":"scale_sweep","replicas":$replicas,"runs":$runs,"ratio":$ratios,"inc_ratio":$incRatio,"bands":$bandsJson,"detail":"target/scale_result.json"}""")

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.measure
+import graft.measure.{JobCounter, JobCounts, Json}
 
 /** Per-query profiling harness for the optimization rounds (guide §1:
   * measure first). For every registered query it records, over one
@@ -24,55 +24,14 @@ import org.apache.spark.sql.SparkSession
   */
 object QueryProfile {
 
-  private final class Acc extends SparkListener {
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var shufReadB = 0L
-    @volatile var shufWriteB = 0L
-    @volatile var spillB = 0L
-    @volatile var inputB = 0L
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
-      stages += 1
-      tasks += e.stageInfo.numTasks
-      val m = e.stageInfo.taskMetrics
-      if (m != null) {
-        shufReadB += m.shuffleReadMetrics.totalBytesRead
-        shufWriteB += m.shuffleWriteMetrics.bytesWritten
-        spillB += m.diskBytesSpilled
-        inputB += m.inputMetrics.bytesRead
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val tag = args.headOption.getOrElse("before")
     val prefixes = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val plansDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r18"))
     java.nio.file.Files.createDirectories(plansDir)
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sqlext.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-    // config A/Bs without code edits (r19): "k=v;k=v" extra confs —
-    // a MEASUREMENT knob only; the driver-contract mains (Bench,
-    // Verify) pin their confs in code
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder = builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = measure.session(measure.envCpus)
 
     graft.SparkEntry.catalog(spark, sfDir)
     graft.SparkEntry.matCatalog(spark, sfDir)
@@ -80,25 +39,20 @@ object QueryProfile {
     val ordered = graft.SparkEntry.queries.toSeq.sortBy(_._1)
     val keep: String => Boolean =
       if (prefixes.isEmpty) _ => true else n => prefixes.exists(n.startsWith)
-    // warm-up sweep: JIT + staged artifacts (same as Bench step 1).
-    // SPARK_GRAFT_PROFILE_WARM=subset warms only the profiled queries —
-    // fast iteration on queries with no staged-artifact dependencies
-    // (a subset-warmed staged consumer would time its own staging).
-    val warmSubset = sys.env.get("SPARK_GRAFT_PROFILE_WARM").contains("subset")
-    ordered.filter { case (n, _) => !warmSubset || keep(n) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[profile] warmup $name failed: ${e.getMessage}") }
-      }
+    // warm-up sweep: JIT + staged artifacts (same as Bench step 1)
+    ordered.foreach { case (name, fn) =>
+      try measure.sink(fn(spark, sfDir))
+      catch { case e: Throwable =>
+        System.err.println(s"[profile] warmup $name failed: ${e.getMessage}") }
+    }
     // min over SPARK_GRAFT_PROFILE_RUNS full fn+noop repeats (default 1;
     // scheduling-shape metrics come from the FIRST repeat only)
     val profRuns = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "1").toInt)
     val rows = ordered.filter { case (n, _) => keep(n) }.flatMap { case (name, fn) =>
       try {
-        val acc = new Acc
-        spark.sparkContext.addSparkListener(acc)
+        val counter = new JobCounter(spark)
+        var counts = JobCounts()
         // split the bench's clock: construct (ONE fn call per repeat —
         // some fns fold state per invocation, so plan capture reuses
         // the first repeat's DataFrame), analyze+plan, then execute
@@ -112,24 +66,21 @@ object QueryProfile {
           val t1 = System.nanoTime()
           df.queryExecution.executedPlan // force analysis + physical planning
           val t2 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
+          measure.sink(df)
           val t3 = System.nanoTime()
           val sec = (t3 - t0) / 1e9
           if (sec < best) {
             best = sec; bc = (t1 - t0) / 1e9; bp = (t2 - t1) / 1e9
           }
           if (r == 1) {
-            // listener bus is async: drain it DETERMINISTICALLY before
-            // freezing the scheduling-shape numbers (ADVICE r18 — the
-            // old sleep(120) silently dropped stages completing later)
-            org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-            spark.sparkContext.removeSparkListener(acc)
+            counts = counter.take()
+            counter.close()
             plan = df.queryExecution.explainString(
               org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
           }
         }
         java.nio.file.Files.writeString(plansDir.resolve(s"${name}_$tag.txt"), plan)
-        Some((name, best, bc, bp, acc))
+        Some((name, best, bc, bp, counts))
       } catch { case e: Throwable =>
         System.err.println(s"[profile] $name failed: ${e.getMessage}")
         None
@@ -138,14 +89,12 @@ object QueryProfile {
     val mb = (b: Long) => f"${b / 1048576.0}%.1f"
     println("query                                sec  build   plan   jobs stages  tasks  shufR_MB shufW_MB spill_MB")
     rows.sortBy(-_._2).foreach { case (n, sec, tc, tp, a) =>
-      println(f"$n%-36s ${sec}%6.3f ${tc}%6.3f ${tp}%6.3f ${a.jobs}%5d ${a.stages}%6d ${a.tasks}%6d  ${mb(a.shufReadB)}%8s ${mb(a.shufWriteB)}%8s ${mb(a.spillB)}%8s")
+      println(f"$n%-36s ${sec}%6.3f ${tc}%6.3f ${tp}%6.3f ${a.jobs}%5d ${a.stages}%6d ${a.tasks}%6d  ${mb(a.shuffleReadBytes)}%8s ${mb(a.shuffleWriteBytes)}%8s ${mb(a.spillBytes)}%8s")
     }
-    val json = rows.map { case (n, sec, tc, tp, a) =>
-      s""""$n":{"sec":${f"$sec%.3f"},"build_sec":${f"$tc%.3f"},"plan_sec":${f"$tp%.3f"},"jobs":${a.jobs},"stages":${a.stages},"tasks":${a.tasks},"shuf_read_mb":${mb(a.shufReadB)},"shuf_write_mb":${mb(a.shufWriteB)},"spill_mb":${mb(a.spillB)},"input_mb":${mb(a.inputB)}}"""
-    }.mkString("{", ",", "}")
-    val out = java.nio.file.Paths.get(s"target/profile_$tag.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.writeString(out, json + "\n")
+    val json = Json.obj(rows.map { case (n, sec, tc, tp, a) =>
+      n -> s"""{"sec":${Json.sec(sec)},"build_sec":${Json.sec(tc)},"plan_sec":${Json.sec(tp)},"jobs":${a.jobs},"stages":${a.stages},"tasks":${a.tasks},"shuf_read_mb":${mb(a.shuffleReadBytes)},"shuf_write_mb":${mb(a.shuffleWriteBytes)},"spill_mb":${mb(a.spillBytes)},"input_mb":${mb(a.inputBytes)}}"""
+    })
+    measure.writeArtifact(s"target/profile_$tag.json", json)
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
     println(s"PROFILE_JSON $json")

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.measure
+import graft.measure.Json
 import org.apache.spark.sql.functions._
 
 /** Isolated, repeated measurement of the staged incremental folds —
@@ -10,25 +11,12 @@ import org.apache.spark.sql.functions._
   * from ambient host drift without reverse-engineering the full bench.
   *
   * Usage: `sbt "runMain graft.tools.StageProbe [family ...]"` with
-  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_STAGE_RUNS (default 5).
+  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_STAGE_RUNS (default 5) /
+  * SPARK_GRAFT_CPUS (default 32).
   *
   * Every family also emits a machine-readable line
   * `PROBE_JSON {"probe":"<family>","reps":N,"stages":{label:[secs…]}}`
-  * so drivers (the `ab` mode below, shell wrappers) never parse the
-  * human-formatted columns.
-  *
-  * == A/B mode (r17, VERDICT r16 task 6) ==
-  * `StageProbe ab <family> <pre-commit> [reps]` promotes the r16
-  * same-host A/B triage recipe (git-checkout arm, interleaved reps,
-  * committed per-rep vectors) into a tool: it materializes
-  * `<pre-commit>` in a git worktree, builds BOTH arms with sbt, then
-  * alternates single-rep probe JVMs pre/post (swapping which arm goes
-  * first every rep, so a monotone host trend cannot masquerade as a
-  * diff) and emits the paired per-stage vectors as ONE artifact
-  * (stdout + target/stageprobe_ab_<family>.json). Fresh JVM per rep =
-  * both arms equally cold — the comparison is arm-vs-arm, not
-  * absolute. This settled r16 (daemonfloor 9.35 post vs 8.66 pre,
-  * same hour → host, not diff) where control arithmetic could not.
+  * so shell wrappers never parse the human-formatted columns.
   */
 object StageProbe {
 
@@ -89,30 +77,9 @@ object StageProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("ab")) { runAb(args.drop(1)); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_STAGE_RUNS", "5").toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sqlext.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // explicit-file reads (BucketStore.readExact/readChecked) pass
-      // per-file root paths; above the default threshold (32) Spark
-      // spawns a distributed listing JOB per read -- pure scheduler
-      // overhead on a local FS. (On a real cluster against object
-      // storage the distributed listing is right; this is a local-mode
-      // knob like maxPartitionBytes above.)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // generated-class cache sized for the full query library
-      // (r18; measured in Bench.scala - same rationale)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = measure.session(measure.envCpus)
     val docs = graft.model.Tables.documents(spark, sfDir)
       .select("doc_id", "source", "text")
     val families = if (args.nonEmpty) args.toSet else Set("spans", "clusters")
@@ -135,9 +102,7 @@ object StageProbe {
       p.toString
     }
     def timed(label: String)(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      val t = (System.nanoTime() - t0) / 1e9
+      val t = measure.seconds(f)
       println(f"  $label%-14s $t%8.2f s")
       record(label, t)
       t
@@ -251,14 +216,15 @@ object StageProbe {
           .coalesce(1).write.parquet(s"$p/feed/b$i"))
         val stream = spark.readStream.schema(allDocs.schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$p/feed/b*")
-        val t0 = System.nanoTime()
-        val n = graft.streaming.ContinuousIngest.run(stream,
-          s"$p/index", s"$p/state", s"$p/pairs", s"$p/drift", s"$p/spans",
-          keyedOf, metrics = Some((mv, im)),
-          segmentsRoot = Some(s"$p/segs"), bm25Root = Some(s"$p/bm25"),
-          dsir = Some((s"$p/dsir", dsirPred)),
-          fingerprints = Some(s"$p/fps"))
-        val t = (System.nanoTime() - t0) / 1e9
+        var n = 0L
+        val t = measure.seconds {
+          n = graft.streaming.ContinuousIngest.run(stream,
+            s"$p/index", s"$p/state", s"$p/pairs", s"$p/drift", s"$p/spans",
+            keyedOf, metrics = Some((mv, im)),
+            segmentsRoot = Some(s"$p/segs"), bm25Root = Some(s"$p/bm25"),
+            dsir = Some((s"$p/dsir", dsirPred)),
+            fingerprints = Some(s"$p/fps"))
+        }
         require(n == nBatches, s"expected $nBatches batches, got $n")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
         t
@@ -275,10 +241,9 @@ object StageProbe {
         record("intercept", (t3 - t1) / 2)
         oneB += t1; threeB += t3
       }
-      def med(v: Seq[Double]) = v.sorted.apply(v.size / 2)
-      println(f"medians: 1-batch ${med(oneB.toSeq)}%.2f s, " +
-        f"3-batch ${med(threeB.toSeq)}%.2f s, " +
-        f"fixed cost/batch ${(med(threeB.toSeq) - med(oneB.toSeq)) / 2}%.2f s")
+      val (med1, med3) = (measure.median(oneB.toSeq), measure.median(threeB.toSeq))
+      println(f"medians: 1-batch $med1%.2f s, 3-batch $med3%.2f s, " +
+        f"fixed cost/batch ${(med3 - med1) / 2}%.2f s")
       // self-evaluating gate + quiet-session detector (VERDICT r17
       // task 2) — written to its own artifact file and queued for the
       // final stdout line (after PROBE_JSON, Spark quiesced)
@@ -292,8 +257,7 @@ object StageProbe {
         graft.ExtQueries.clearStaging()
         graft.ExtQueries.stageTimings.clear()
         println(s" rep $r")
-        timed("total") { graft.ExtQueries.streamCuration(spark, sfDir)
-          .write.format("noop").mode("overwrite").save() }
+        timed("total") { measure.sink(graft.ExtQueries.streamCuration(spark, sfDir)) }
         graft.ExtQueries.stageTimings.get("q_stream_curation").foreach(_.foreach {
           case (k, v) =>
             println(f"  $k%-18s $v%8.2f s")
@@ -340,147 +304,14 @@ object StageProbe {
     spark.stop()
     // machine-readable per-family lines, last so no fold output follows
     recorded.foreach { case (fam, stages) =>
-      val st = stages.map { case (k, v) =>
-        "\"" + k + "\":" + v.map(x => f"$x%.3f").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      println(s"""PROBE_JSON {"probe":"$fam","reps":$reps,"stages":$st}""")
+      println(s"""PROBE_JSON {"probe":"$fam","reps":$reps,"stages":${Json.series(stages, Json.sec)}}""")
     }
     daemonfloorGate.foreach { gate =>
-      val runsJson = recorded.get("daemonfloor").map(_.map { case (k, v) =>
-        "\"" + k + "\":" + v.map(x => f"$x%.3f").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")).getOrElse("{}")
+      val runsJson = recorded.get("daemonfloor").fold("{}")(Json.series(_, Json.sec))
       val json =
         s"""{"metric":"daemonfloor_gate","reps":$reps,"runs":$runsJson,"gate":$gate}"""
-      val out = java.nio.file.Paths.get("target/stageprobe_daemonfloor.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.writeString(out, json + "\n")
+      measure.writeArtifact("target/stageprobe_daemonfloor.json", json)
       println(s"DAEMONFLOOR_JSON $json")
     }
-  }
-
-  // ---------------------------------------------------------------
-  // A/B mode
-  // ---------------------------------------------------------------
-
-  /** Matches build.sbt's jdk17AddOpens — Spark 4.x on JDK 17 needs
-    * these when SparkSession is created outside spark-submit. */
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  private def sh(cwd: java.io.File, cmd: String*): String = {
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.directory(cwd)
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
-    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-    val rc = proc.waitFor()
-    require(rc == 0, s"${cmd.mkString(" ")} failed (rc=$rc):\n${out.takeRight(2000)}")
-    out
-  }
-
-  /** One single-rep probe JVM against `classesDir`'s build; returns the
-    * family's per-stage map parsed from the human-formatted
-    * `  <label>  <secs> s` lines — NOT the PROBE_JSON line, because the
-    * PRE arm runs the probe class from ITS OWN commit, which may
-    * predate PROBE_JSON; the column format has been stable since r11
-    * and prints identically on both arms. Labels are unique within a
-    * single-rep run (the only mode ab launches). */
-  private def probeOnce(classesDir: String, family: String): Map[String, Double] = {
-    val java = System.getProperty("java.home") + "/bin/java"
-    val cmd = Seq(java) ++ addOpens ++ Seq(
-      s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-      "-Dspark.ui.enabled=false",
-      "-cp", s"$classesDir:/opt/spark/jars/*",
-      "graft.tools.StageProbe", family)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_GRAFT_STAGE_RUNS", "1")
-    sys.env.get("SPARK_GRAFT_SF_DIR").foreach(
-      pb.environment().put("SPARK_GRAFT_SF_DIR", _))
-    // child stderr (Spark logs) flows to ours live; stdout is captured
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val proc = pb.start()
-    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-    val rc = proc.waitFor()
-    require(rc == 0, s"probe JVM failed (rc=$rc):\n${out.takeRight(2000)}")
-    val timedLine = "^  (\\S+)\\s+(-?[0-9.]+) s$".r
-    val pairs = out.linesIterator.collect {
-      case timedLine(label, secs) => label -> secs.toDouble
-    }.toVector
-    require(pairs.nonEmpty, s"no timed stage lines for $family in probe output:\n" +
-      out.takeRight(1500))
-    // duplicate labels (shouldn't happen at STAGE_RUNS=1) get indexed
-    // rather than silently overwritten
-    val seen = scala.collection.mutable.HashMap[String, Int]()
-    pairs.map { case (label, v) =>
-      val n = seen.updateWith(label)(c => Some(c.getOrElse(0) + 1)).get
-      (if (n == 1) label else s"$label#$n") -> v
-    }.toMap
-  }
-
-  private def runAb(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: StageProbe ab <family> <pre-commit> [reps]")
-    val family = args(0)
-    val preCommit = args(1)
-    val reps = math.max(1,
-      args.lift(2).orElse(sys.env.get("SPARK_GRAFT_STAGE_RUNS"))
-        .getOrElse("5").toInt)
-    val repo = new java.io.File(".").getCanonicalFile
-    val preSha = sh(repo, "git", "rev-parse", preCommit).trim
-    val postSha = sh(repo, "git", "rev-parse", "HEAD").trim
-    require(preSha != postSha, "pre-commit resolves to HEAD — nothing to A/B")
-    val preDir = new java.io.File(repo, s"target/ab_worktree_${preSha.take(12)}")
-    if (!new java.io.File(preDir, "build.sbt").exists()) {
-      // -f tolerates a stale registration from a deleted target/
-      sh(repo, "git", "worktree", "add", "--detach", "-f",
-        preDir.getAbsolutePath, preSha)
-    }
-    println(s"[ab] building pre arm ($preSha) ...")
-    sh(preDir, "sbt", "-batch", "compile")
-    println(s"[ab] building post arm ($postSha) ...")
-    sh(repo, "sbt", "-batch", "compile")
-    val preCp = s"${preDir.getAbsolutePath}/target/scala-2.13/classes"
-    val postCp = s"${repo.getAbsolutePath}/target/scala-2.13/classes"
-
-    val pre = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    val post = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    def add(into: scala.collection.mutable.LinkedHashMap[String, Vector[Double]],
-        m: Map[String, Double]): Unit =
-      m.foreach { case (k, v) => into(k) = into.getOrElse(k, Vector.empty) :+ v }
-    for (r <- 1 to reps) {
-      // swap which arm goes first every rep: a monotone host trend then
-      // penalizes each arm equally instead of always the second one
-      val order = if (r % 2 == 1) Seq(("pre", preCp), ("post", postCp))
-                  else Seq(("post", postCp), ("pre", preCp))
-      order.foreach { case (arm, cp) =>
-        println(s"[ab] rep $r $arm")
-        val m = probeOnce(cp, family)
-        if (arm == "pre") add(pre, m) else add(post, m)
-      }
-    }
-    def med(v: Vector[Double]): Double = {
-      val s = v.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    def js(m: scala.collection.mutable.LinkedHashMap[String, Vector[Double]]) =
-      m.map { case (k, v) =>
-        "\"" + k + "\":" + v.map(x => f"$x%.3f").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-    val ratios = post.keys.filter(pre.contains).map { k =>
-      "\"" + k + "\":" + f"${med(post(k)) / med(pre(k))}%.3f"
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"stageprobe_ab","family":"$family","pre":"$preSha","post":"$postSha","reps":$reps,"pre_stages":${js(pre)},"post_stages":${js(post)},"post_over_pre_median":$ratios}"""
-    val out = java.nio.file.Paths.get(s"target/stageprobe_ab_$family.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.writeString(out, json + "\n")
-    println(json)
   }
 }

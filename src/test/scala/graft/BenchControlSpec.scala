@@ -2,72 +2,29 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Host-control plumbing (ADVICE r16 + VERDICT r16 task 1): the
-  * baseline parse must survive format evolution instead of silently
-  * degrading the control to null, and the arithmetic helpers must be
-  * exact on the shapes the artifact actually carries. */
+/** The artifact arithmetic and gates the measurement mains print:
+  * the shared median, the errors map's JSON strings, and the
+  * self-evaluating band gates. */
 class BenchControlSpec extends AnyFunSuite {
 
-  test("numberMap extracts a flat map regardless of field order") {
-    val txt = """{"value":1.5,"medians":{"q_a":0.5,"q_b":2.0},"queries":{"q_a":0.4,"q_b":1.75}}"""
-    assert(Bench.numberMap(txt, "queries") == Map("q_a" -> 0.4, "q_b" -> 1.75))
-    assert(Bench.numberMap(txt, "medians") == Map("q_a" -> 0.5, "q_b" -> 2.0))
-  }
-
-  test("numberMap is balanced-brace, not first-'}' (the r16 defect)") {
-    // a nested object BEFORE the values would have truncated the r16
-    // indexOf('}') scan to the inner close
-    val txt = """{"queries":{"nested":{"q_x":9.0},"q_a":0.4,"q_b":1.75},"tail":1}"""
-    val m = Bench.numberMap(txt, "queries")
-    assert(m("q_a") == 0.4 && m("q_b") == 1.75)
-  }
-
-  test("numberMap does not mistake n_queries for queries") {
-    val txt = """{"n_queries":135,"queries":{"q_a":0.4}}"""
-    assert(Bench.numberMap(txt, "queries") == Map("q_a" -> 0.4))
-  }
-
-  test("numberMap admits Double.toString E-notation incl. negative exponents") {
-    // a sub-1e-3 timing serializes as "1.0E-5" in the queries map
-    val txt = """{"queries":{"q_tiny":1.0E-5,"q_neg":-2.5,"q_exp":1.5E2}}"""
-    val m = Bench.numberMap(txt, "queries")
-    assert(m("q_tiny") == 1.0e-5 && m("q_neg") == -2.5 && m("q_exp") == 150.0)
-  }
-
-  test("numberMap on a missing key is empty, not a crash") {
-    assert(Bench.numberMap("""{"value":1}""", "queries").isEmpty)
-    assert(Bench.numberMap("""{"queries":{"q_a":0.4""", "queries").isEmpty) // unbalanced
-  }
-
   test("median: odd, even, empty") {
-    assert(Bench.median(Vector(3.0, 1.0, 2.0)) == 2.0)
-    assert(Bench.median(Vector(4.0, 1.0, 2.0, 3.0)) == 2.5)
-    assert(Bench.median(Vector.empty) == -1.0)
+    assert(measure.median(Vector(3.0, 1.0, 2.0)) == 2.0)
+    assert(measure.median(Vector(4.0, 1.0, 2.0, 3.0)) == 2.5)
+    // an even-sized rep count averages the middle pair, not the upper one
+    assert(measure.median(Vector(9.0, 5.0)) == 7.0)
+    assert(measure.median(Vector.empty) == -1.0)
   }
 
-  test("normalizedMedians pairs readings with controls by rep INDEX " +
-      "(ADVICE r17: a failed rep must not shift later readings onto " +
-      "the wrong rep's control)") {
-    val controls = Vector(1.0, 2.0, 4.0) // rep 1 ran 2x slow, rep 2 4x
-    // q_ok succeeded in all 3 reps; q_flaky failed rep 1 — its two
-    // samples came from reps 0 and 2
-    val samples = Seq(
-      "q_flaky" -> Seq("fold" -> Vector(1.0, 4.0)),
-      "q_ok" -> Seq("fold" -> Vector(1.0, 2.0, 4.0)))
-    val repIdx = Map("q_flaky" -> Vector(0, 2), "q_ok" -> Vector(0, 1, 2))
-    val norm = Bench.normalizedMedians(samples, repIdx, controls).toMap
-    // q_flaky: 1.0/controls(0)=1.0 and 4.0/controls(2)=1.0 — the r17
-    // positional zip would have computed 4.0/controls(1)=2.0
-    assert(norm("q_flaky") == Seq("fold" -> 1.0))
-    assert(norm("q_ok") == Seq("fold" -> 1.0))
-  }
-
-  test("normalizedMedians nulls out (=-1) on length mismatch instead of mispairing") {
-    val samples = Seq("q_x" -> Seq("fold" -> Vector(1.0, 2.0)))
-    // recorded rep indices disagree with the sample count
-    val norm = Bench.normalizedMedians(samples,
-      Map("q_x" -> Vector(0)), Vector(1.0, 1.0)).toMap
-    assert(norm("q_x") == Seq("fold" -> -1.0))
+  test("errors JSON: cut before escaping, every control char escaped") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    def parsed(msg: String): String =
+      mapper.readTree(s"""{"q_x":${Bench.errorJson(msg)}}""").get("q_x").asText
+    // a quote at characters 199-200: escape-then-cut left a lone `\`
+    // that escaped the closing quote
+    val quoted = "a" * 199 + "\"tail"
+    assert(parsed(quoted) == quoted.take(200))
+    val ctl = "col\tname\r\nnext\u0001end"
+    assert(parsed(ctl) == ctl)
   }
 
   test("evalBands: limits from BandBudgets, zero-compactions rides all_pass") {

@@ -12,21 +12,5 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sqlext.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      // local-mode knob (see Bench): explicit-file reads above 32 root
-      // paths otherwise spawn a distributed listing job per read
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = graft.measure.session(cpus = 4)
 }
