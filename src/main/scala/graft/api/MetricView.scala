@@ -342,10 +342,9 @@ final class MetricView(
         if (set.contains(d)) 0L else 1L << (unionDims.length - 1 - i)
       }.sum
 
-    val allRouted = catalog.materializer.exists(m =>
-      ms.forall(!_.isWindowed) &&
-        sets.forall(s => m.route(this, s, ms, where,
-          where.toSeq.flatMap(whereDims)).isDefined))
+    val wd = where.toSeq.flatMap(whereDims)
+    val allRouted = ms.forall(!_.isWindowed) && catalog.materializer.exists(m =>
+      sets.forall(s => m.routeTarget(this, s, ms, wd).isDefined))
     if (allRouted || ms.exists(_.isWindowed)) {
       // per-set union; dim types come from the widest grain's schema
       // (lazy — analysis only, no job)

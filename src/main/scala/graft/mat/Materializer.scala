@@ -145,70 +145,67 @@ final class Materializer(workDir: String, resolve: String => DataFrame) {
       baseGrain: Seq[String],
       neededPartials: Seq[String],
       where: Option[String],
-      whereDims: Seq[String]): Option[DataFrame] = {
-    if (!isBuilt(v)) return None
-    val spark = SparkSession.active
-    val needed = (baseGrain ++ whereDims).toSet
-    val candidates = v.spec.materialization.toSeq
-      .flatMap(_.materializedViews)
-      .filter(_.isAggregated)
-      .filter { r =>
-        needed.subsetOf(r.dimensions.toSet) && {
-          val stored = graft.plan.AggDecompose.distinctPartials(
-            r.measures.flatMap(n =>
-              v.decomposed(v.spec.measure(n)).toSeq.flatMap(_.partials)))
-            .map(_.name).toSet
-          neededPartials.forall(stored.contains)
-        }
-      }
-    candidates.sortBy(r =>
-      (VersionedTable.rowCount(path(v, r.name)).getOrElse(Long.MaxValue),
-        r.dimensions.size)).headOption.map { r =>
-      val pre = VersionedTable.read(spark, path(v, r.name))
-      where.fold(pre)(w => pre.filter(
-        Expander.dimFilter(spark, identityDims(v), w)))
-    }
-  }
+      whereDims: Seq[String]): Option[DataFrame] =
+    cheapestCovering(v, baseGrain ++ whereDims) { r =>
+      val stored = graft.plan.AggDecompose.distinctPartials(
+        r.measures.flatMap(n =>
+          v.decomposed(v.spec.measure(n)).toSeq.flatMap(_.partials)))
+        .map(_.name).toSet
+      neededPartials.forall(stored.contains)
+    }.map(r => readFiltered(v, r, where))
 
-  /** Routing decision + routed plan (reference A10, README.md:399-431):
-    * eligible iff some aggregated rollup covers the query dims, the
-    * WHERE's dims, and every requested measure (all decomposable, none
-    * windowed). Smallest covering rollup wins — by ACTUAL row count
-    * (recorded at build time, [[VersionedTable.rowCount]]), because
-    * dimension count is only a proxy: one high-cardinality dim (e.g.
-    * order_date, thousands of groups) makes a bigger table than two
-    * low-cardinality ones (segment x status, ~15). Cost-based choice is
-    * what matters at 100 TB, where the rollup size spread spans orders
-    * of magnitude; dim count stays as the tie-break and the fallback
-    * for stats-less tables. */
+  /** The rollup a plain-measure query routes to (reference A10,
+    * README.md:399-431), chosen without building any plan: eligible iff
+    * it covers the query dims, the WHERE's dims, and every requested
+    * measure (all decomposable, none windowed). */
+  def routeTarget(
+      v: MetricView,
+      dims: Seq[String],
+      measures: Seq[Measure],
+      whereDims: Seq[String]): Option[MatViewSpec] =
+    cheapestCovering(v, dims ++ whereDims)(r =>
+      measures.forall(m => r.measures.contains(m.name) &&
+        !m.isWindowed && v.decomposed(m).isDefined))
+
+  /** Routed plan: [[routeTarget]]'s rollup, where-filtered, with every
+    * measure re-aggregated from its stored partials to `dims`. */
   def route(
       v: MetricView,
       dims: Seq[String],
       measures: Seq[Measure],
       where: Option[String],
-      whereDims: Seq[String]): Option[DataFrame] = {
-    if (!isBuilt(v)) return None
-    val spark = SparkSession.active
-    val needed = (dims ++ whereDims).toSet
-    val candidates = v.spec.materialization.toSeq
-      .flatMap(_.materializedViews)
-      .filter(_.isAggregated)
-      .filter { r =>
-        needed.subsetOf(r.dimensions.toSet) &&
-          measures.forall(m => r.measures.contains(m.name)) &&
-          measures.forall(m => !m.isWindowed && v.decomposed(m).isDefined)
-      }
-    candidates.sortBy(r =>
-      (VersionedTable.rowCount(path(v, r.name)).getOrElse(Long.MaxValue),
-        r.dimensions.size)).headOption.map { r =>
-      val pre0 = VersionedTable.read(spark, path(v, r.name))
-      val pre = where.fold(pre0)(w => pre0.filter(
-        Expander.dimFilter(spark, identityDims(v), w)))
+      whereDims: Seq[String]): Option[DataFrame] =
+    routeTarget(v, dims, measures, whereDims).map { r =>
       val aggCols = measures.map { m =>
         v.decomposed(m).get.reaggregate(identity).as(m.name)
       }
-      pre.groupBy(dims.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+      readFiltered(v, r, where)
+        .groupBy(dims.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
     }
+
+  /** Smallest built aggregated rollup whose dims cover `needed` and that
+    * `serves` accepts — by ACTUAL row count (recorded at build time,
+    * [[VersionedTable.rowCount]]), because dimension count is only a
+    * proxy: one high-cardinality dim (e.g. order_date, thousands of
+    * groups) makes a bigger table than two low-cardinality ones
+    * (segment x status, ~15). Cost-based choice is what matters at
+    * 100 TB, where the rollup size spread spans orders of magnitude;
+    * dim count stays as the tie-break and the fallback for stats-less
+    * tables. */
+  private def cheapestCovering(v: MetricView, needed: Seq[String])(
+      serves: MatViewSpec => Boolean): Option[MatViewSpec] =
+    if (!isBuilt(v)) None
+    else v.spec.materialization.toSeq.flatMap(_.materializedViews)
+      .filter(r => r.isAggregated && needed.toSet.subsetOf(r.dimensions.toSet) && serves(r))
+      .sortBy(r => (VersionedTable.rowCount(path(v, r.name)).getOrElse(Long.MaxValue),
+        r.dimensions.size))
+      .headOption
+
+  /** The rollup's live snapshot, filtered by the (dim-level) WHERE. */
+  private def readFiltered(v: MetricView, r: MatViewSpec, where: Option[String]): DataFrame = {
+    val spark = SparkSession.active
+    val pre = VersionedTable.read(spark, path(v, r.name))
+    where.fold(pre)(w => pre.filter(Expander.dimFilter(spark, identityDims(v), w)))
   }
 
   private def identityDims(v: MetricView): MetricViewSpec =

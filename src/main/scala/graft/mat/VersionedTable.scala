@@ -49,16 +49,51 @@ object VersionedTable {
   // per call (ConstrProbe) and routed queries resolve several rollups
   // per construction. A refresh flips the pointer to a NEW path —
   // a different cache key — so staleness is impossible by construction.
+  // The same immutability lets the split count be computed once here.
   private val relations = scala.collection.concurrent.TrieMap[
     (SparkSession, String), DataFrame]()
 
-  /** Read the live snapshot. The returned plan is pinned to the version
-    * directory it resolved — a concurrent write + pointer flip does not
-    * disturb it. */
+  /** Read the live snapshot, packed to its byte-derived split count
+    * ([[pack]]). The returned plan is pinned to the version directory it
+    * resolved — a concurrent write + pointer flip does not disturb it.
+    *
+    * A rollup snapshot is one small file, so it packs to ONE partition:
+    * `coalesce(1)`'s `SinglePartition` output already satisfies any
+    * aggregate's distribution, EnsureRequirements adds no Exchange, and
+    * a routed re-aggregation runs inside the scan's single task — one
+    * job instead of a map stage, a shuffle and a reduce stage.
+    * Multi-split snapshots (row-level baselines) keep their parallelism.
+    * Filters still reach the scan: predicate pushdown moves a Filter
+    * below the coalesce's Repartition, so data and partition filters
+    * land on the scan unchanged. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val p = currentPath(dir).getOrElse(
       sys.error(s"versioned table at $dir has no current version"))
-    relations.getOrElseUpdate((spark, p), spark.read.parquet(p))
+    relations.getOrElseUpdate((spark, p), pack(spark, spark.read.parquet(p)))
+  }
+
+  /** Pack a whole-directory file read into its byte-derived split count:
+    * `coalesce(max(ceil(bytes / maxPartitionBytes), min(files,
+    * parallelism)))` — a no-op once files are split-sized, ONE partition
+    * for a single small file, and at most `parallelism` tasks for many
+    * small files.
+    * Predicates above the result still push to the scan (pinned by
+    * VersionedTableSpec), so pruned reads may pack too. */
+  private[graft] def pack(spark: SparkSession, df: DataFrame): DataFrame = {
+    val files = df.inputFiles
+    if (files.isEmpty) df
+    else {
+      val targetSplit = math.max(1L,
+        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+          spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")))
+      val totalBytes = files.map(f =>
+        new java.io.File(new java.net.URI(f).getPath).length()).sum
+      val n = math.max(
+        (totalBytes + targetSplit - 1) / targetSplit,
+        math.min(files.length.toLong,
+          spark.sparkContext.defaultParallelism.toLong)).toInt
+      df.coalesce(math.max(1, n))
+    }
   }
 
   /** Write `df` as the next version and atomically flip the pointer. */

@@ -137,21 +137,14 @@ private[graft] object BucketStore {
       // (maxSplitBytes = min(maxPartitionBytes, max(openCost,
       // bytesPerCore))), so single-file fixture scans fragmented and
       // the suite's total task count ROSE 6022->7041. Instead, pack
-      // HERE, where the explicit file list is known: coalesce to
-      // max(real split count by bytes, parallelism bounded by file
-      // count). At 100 TB store files are split-sized and the byte
-      // term dominates — the coalesce is a no-op; at fixture scale it
-      // bounds a whole-store read to <= defaultParallelism tasks while
-      // narrow downstream work (gram builds) keeps full parallelism.
-      val targetSplit = math.max(1L,
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")))
-      val totalBytes = files.map(f => new java.io.File(f).length()).sum
-      val n = math.max(
-        (totalBytes + targetSplit - 1) / targetSplit,
-        math.min(files.size.toLong,
-          spark.sparkContext.defaultParallelism.toLong)).toInt
-      Some(df.coalesce(math.max(1, n)))
+      // HERE, where the explicit file list is known
+      // ([[graft.mat.VersionedTable.pack]]: real split count by bytes,
+      // at least parallelism bounded by file count). At 100 TB store
+      // files are split-sized and the byte term dominates — the
+      // coalesce is a no-op; at fixture scale it bounds a whole-store
+      // read to <= defaultParallelism tasks while narrow downstream
+      // work (gram builds) keeps full parallelism.
+      Some(graft.mat.VersionedTable.pack(spark, df))
     }
 
   /** Exact-count check: the snapshot was committed whole and is only
@@ -197,32 +190,6 @@ private[graft] object BucketStore {
     val sch = dirSchemas.getOrElseUpdate((spark, dir),
       spark.read.parquet(dir).schema)
     spark.read.schema(sch).parquet(dir)
-  }
-
-  /** [[readExact]]'s small-file task packing for a DIRECTORY-shaped
-    * read (r19): coalesce to max(byte-derived split count, parallelism
-    * bounded by file count) — a no-op once files are split-sized. ONLY
-    * legal on reads with NO partition-pruning predicate above them
-    * (a filter cannot push through the coalesce's Repartition to the
-    * scan, so packing a pruned read would silently un-prune it —
-    * callers with wbucket/__cell/dbucket literal predicates must NOT
-    * pack). Call AFTER checkPlannedListing (inputFiles is the same
-    * eagerly-built index either way). */
-  def packWholeDirRead(spark: SparkSession, df: DataFrame): DataFrame = {
-    val files = df.inputFiles
-    if (files.isEmpty) df
-    else {
-      val targetSplit = math.max(1L,
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")))
-      val totalBytes = files.map(f =>
-        new java.io.File(new java.net.URI(f).getPath).length()).sum
-      val n = math.max(
-        (totalBytes + targetSplit - 1) / targetSplit,
-        math.min(files.length.toLong,
-          spark.sparkContext.defaultParallelism.toLong)).toInt
-      df.coalesce(math.max(1, n))
-    }
   }
 
   /** Validate a directory-shaped read's OWN planned listing against

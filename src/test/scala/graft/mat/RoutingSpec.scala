@@ -160,6 +160,45 @@ class RoutingSpec extends SparkSpec {
     assert(cube.collect().map(_.toSeq).toSet == direct.collect().map(_.toSeq).toSet)
   }
 
+  /** Shuffle exchanges of the executed plan, looking inside AQE. */
+  private def shuffles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    def of(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = p.collect {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => of(a.executedPlan)
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => Seq(e.nodeName)
+    }.flatten
+    of(df.queryExecution.executedPlan)
+  }
+
+  /** Rows of `df` and the Spark jobs its collect ran. */
+  private def collectCounting(df: org.apache.spark.sql.DataFrame) = {
+    val counter = new graft.measure.JobCounter(spark)
+    try {
+      counter.take()
+      val rows = df.collect()
+      (rows, counter.take().jobs)
+    } finally counter.close()
+  }
+
+  test("routed query over a one-split rollup runs as one job with no shuffle") {
+    val routed = mat.get("mv_order_metrics")
+      .query(Seq("market_segment"), Seq("total_revenue", "total_orders"))
+    val (rows, jobs) = collectCounting(routed)
+    assert(shuffles(routed).isEmpty, routed.queryExecution.executedPlan.toString)
+    assert(jobs == 1, s"routed query ran $jobs jobs")
+    val direct = plain.get("mv_order_metrics")
+      .query(Seq("market_segment"), Seq("total_revenue", "total_orders"))
+    assert(rows.map(_.toSeq).toSet == direct.collect().map(_.toSeq).toSet)
+  }
+
+  test("CUBE over rollup-covered dims runs as one job") {
+    val cube = mat.get("mv_order_metrics")
+      .queryCube(Seq("market_segment", "order_status"),
+        Seq("total_revenue", "total_orders"))
+    val (_, jobs) = collectCounting(cube)
+    assert(jobs == 1, s"routed cube ran $jobs jobs")
+    assert(shuffles(cube).isEmpty, cube.queryExecution.executedPlan.toString)
+  }
+
   test("auto-domained percentile measure routes correctly (profile-derived [lo, hi), r9)") {
     // graft_percentile_auto(total_price, 0.5, 1024) declares NO domain:
     // [lo, hi) derives from the observed min/max at measure resolution,

@@ -1,0 +1,65 @@
+package graft.mat
+
+import graft.SparkSpec
+import java.nio.file.Files
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
+
+/** Snapshot reads packed to their byte-derived split count
+  * ([[VersionedTable.pack]]): one small file reads as one partition,
+  * multi-split snapshots keep their parallelism, predicates still reach
+  * the scan, and a pointer flip is seen by the next read. */
+class VersionedTableSpec extends SparkSpec {
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  test("a filter over a packed, partitioned snapshot reaches the scan") {
+    val dir = s"${tmp("graft-vt-part")}/t"
+    spark.range(0, 40).selectExpr("id", "cast(id % 4 as int) as p")
+      .write.partitionBy("p").parquet(dir)
+    val packed = VersionedTable.pack(spark, spark.read.parquet(dir))
+      .filter("p = 1 and id > 20")
+    val plan = packed.queryExecution.sparkPlan
+    assert(plan.collect { case c: CoalesceExec => c }.nonEmpty, plan.toString)
+    val scan = plan.collect { case f: FileSourceScanExec => f }.head
+    assert(scan.partitionFilters.exists(_.references.exists(_.name == "p")),
+      s"partition predicate not on the scan:\n$plan")
+    assert(scan.metadata("PushedFilters").contains("GreaterThan(id,20)"),
+      s"data predicate not pushed:\n$plan")
+    assert(packed.collect().map(_.getLong(0)).sorted.toSeq == (21L until 40L by 4L))
+  }
+
+  test("a one-file snapshot reads as a single partition") {
+    val dir = tmp("graft-vt-one")
+    VersionedTable.write(spark.range(0, 10).coalesce(1).toDF("id"), dir)
+    val df = VersionedTable.read(spark, dir)
+    assert(df.rdd.getNumPartitions == 1)
+    assert(df.queryExecution.sparkPlan.outputPartitioning ==
+      org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
+  }
+
+  test("a snapshot of several files above the split size keeps more than one partition") {
+    // own session: the split size is read per session, and the shared
+    // spec session must keep its 8m
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+    val dir = tmp("graft-vt-multi")
+    VersionedTable.write(s.range(0, 20000, 1, 2).selectExpr("id", "rand(7) as r"), dir)
+    val df = VersionedTable.read(s, dir)
+    val files = df.inputFiles
+    assert(files.length == 2)
+    assert(files.forall(f => new java.io.File(new java.net.URI(f).getPath).length() > 16 * 1024))
+    assert(df.rdd.getNumPartitions > 1)
+    assert(df.count() == 20000)
+  }
+
+  test("after the pointer flips, the next read sees the new version's rows") {
+    val dir = tmp("graft-vt-flip")
+    VersionedTable.write(spark.range(0, 10).coalesce(1).toDF("id"), dir)
+    assert(VersionedTable.read(spark, dir).count() == 10)
+    VersionedTable.write(spark.range(0, 25).coalesce(1).toDF("id"), dir)
+    assert(VersionedTable.currentVersion(dir).contains("v2"))
+    assert(VersionedTable.read(spark, dir).collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 25L))
+  }
+}
