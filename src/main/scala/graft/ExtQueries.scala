@@ -1313,10 +1313,10 @@ object ExtQueries {
     docs.stat.approxQuantile("doc_id", Array(0.25, 0.5, 0.75), 0.01)
       .map(_.toLong).toSeq
 
-  // every staging registry, so [[clearStaging]] can reset them all —
-  // keep in sync with the `stagedTempDir` call sites
+  // every per-JVM staging registry, so [[clearStaging]] can reset them
+  // all — keep in sync with the `stagedTempDir` call sites
   private lazy val stagingRegistries = Seq(
-    stagedDriftStore, stagedEvents, stagedIncSegs, stagedPairs,
+    stagedDriftStore, stagedIncSegs, stagedPairs,
     stagedIncIndex, stagedDsirStore, stagedBm25Idx, stagedBm25Inc,
     stagedClusters, stagedIncSpans, stagedIncClusters, stagedStreamCur,
     stagedLiveMetrics, stagedIvf, stagedIvfInc, stagedFpStore)
@@ -1326,16 +1326,20 @@ object ExtQueries {
     * fresh temp dir. This is the bench's dedicated stage-measurement
     * lever (VERDICT r11 tasks 1/5): per-stage costs are re-measured
     * n≥5 times by clearing between reps, instead of being n=1 samples
-    * inside a contended full sweep. Deletes the old temp dirs. */
-  def clearStaging(): Unit = stagingRegistries.foreach { reg =>
-    // FileUtils, not an uncloseable Files.walk stream: the walk held
-    // directory handles open (16 registries × stage reps leaked fds
-    // each bench pass — ADVICE r12; fd exhaustion is also the prime
-    // suspect behind the r12 soak's null listFiles)
-    reg.values().forEach { p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+    * inside a contended full sweep. Deletes the old temp dirs; the
+    * [[stageEvents]] copy, which other JVMs read, only leaves the map. */
+  def clearStaging(): Unit = {
+    stagingRegistries.foreach { reg =>
+      // FileUtils, not an uncloseable Files.walk stream: the walk held
+      // directory handles open (16 registries × stage reps leaked fds
+      // each bench pass — ADVICE r12; fd exhaustion is also the prime
+      // suspect behind the r12 soak's null listFiles)
+      reg.values().forEach { p =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+      }
+      reg.clear()
     }
-    reg.clear()
+    stagedEvents.clear()
   }
 
   private def stagedTempDir(

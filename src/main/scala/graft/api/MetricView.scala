@@ -193,14 +193,17 @@ final class MetricView(
     * needs (a daily chart with missing days reads as data loss; a
     * carry-forward balance must repeat, not vanish).
     *
-    * Mechanics: evaluate the query normally, then LEFT-join it onto
-    * (distinct other-dim combos) × (dense calendar). The calendar spans
-    * the observed [min, max] of the date dim over the (filtered)
-    * row-level relation — one narrow column scan, same posture as the
-    * auto-domain derivation. Fills: `zeroFill` measures coalesce to 0
-    * in their native type; `ffill` measures carry the last non-null
-    * value forward per combo in date order (the right rule for
-    * cumulative/semiadditive measures); untouched measures stay null.
+    * Mechanics: one lazy plan over the query result. It groups by the
+    * other dims into one row per combo holding a `date -> struct(measures)`
+    * map and the combo's date range; an unpartitioned window takes the
+    * global [lo, hi] (the date dim is a group key, so no second source
+    * scan); `explode(sequence(lo, hi, step))` emits the calendar and each
+    * period looks itself up in the map. Construction runs no Spark
+    * action, and over a one-partition rollup read a routed spine is one
+    * job. Fills: `zeroFill` measures coalesce to 0 in their native type;
+    * `ffill` measures carry the last non-null value forward per combo
+    * in date order (the right rule for cumulative/semiadditive
+    * measures); untouched measures stay null. NULL-date result rows drop.
     *
     * Contract: the date dim's values must sit AT the grain (day dates
     * for `day`, month-start dates for `month`, year-start for `year`) —
@@ -208,9 +211,9 @@ final class MetricView(
     * values would not match the calendar and their rows would drop.
     *
     * Scale: the densified frame is (combos × periods) — result-grain,
-    * never fact-grain. The ffill window partitions by the combo dims;
-    * with no other dims the single partition holds one calendar of
-    * rows, bounded by the spine length. */
+    * never fact-grain. The bounds window and, with no other dims, the
+    * ffill window run in one partition, bounded by the combo count and
+    * the spine length. */
   def querySpine(
       dims: Seq[String],
       measures: Seq[String],
@@ -225,52 +228,33 @@ final class MetricView(
     (spine.zeroFill ++ spine.ffill).foreach { m =>
       require(measures.contains(m), s"fill rule for '$m' which is not queried") }
 
-    // cached: the result frame feeds the bounds derivation below, the
-    // combo distinct AND the densify join, and aliased subplans are
-    // not deduped by ReuseExchange — without the cache the source
-    // would scan three times. Registered for 2 actions: the internal
-    // bounds head() and the caller's terminal action (which consumes
-    // both remaining references in one plan). Result-grain rows, so
-    // the cache is small.
-    val result = graft.ops.Persists.cacheFor(query(dims, measures, where), 2)
-
-    // observed bounds from the CACHED result itself: the date dim is a
-    // group key, so its min/max over the result equals its min/max
-    // over the (filtered) rows — no second source scan; the 1-row
-    // collect is metadata and warms the cache for the joins below
-    val b = result.agg(min(col(spine.dateDim)).as("lo"),
-      max(col(spine.dateDim)).as("hi")).head()
-    if (b.isNullAt(0)) {
-      // no rows at all: nothing to densify. Drop the cache now — the
-      // joins that would have consumed the second registration never
-      // build, and recomputing an empty result is cheap (ADVICE r10).
-      result.unpersist()
-      return result
-    }
-
-    val cal = spark.range(1).select(
-      explode(sequence(lit(b.get(0)), lit(b.get(1)), step)).as(spine.dateDim))
+    val result = query(dims, measures, where)
     val others = dims.filterNot(_ == spine.dateDim)
-    val dense =
-      if (others.isEmpty) cal
-      else result.select(others.map(col): _*).distinct().crossJoin(cal)
-
-    // alias both sides: `dense` derives from `result` (the combos), so
-    // unqualified refs are ambiguous under Spark's self-join check
-    val dn = dense.alias("gspine_dense"); val rs = result.alias("gspine_res")
-    val cond = dims.map(d => col(s"gspine_dense.$d") <=> col(s"gspine_res.$d")).reduce(_ && _)
-    val joined = dn.join(rs, cond, "left")
-      .select(dims.map(d => col(s"gspine_dense.$d")) ++
-        measures.map(m => col(s"gspine_res.$m")): _*)
-
-    val zeroed = spine.zeroFill.foldLeft(joined) { (df, m) =>
-      df.withColumn(m, coalesce(col(m), lit(0).cast(df.schema(m).dataType))) }
+    val date = col(spine.dateDim)
+    // one row per combo: its dated measures and its date range (the
+    // null-date rows drop out of both; their combo still densifies)
+    val combos = result.groupBy(others.map(col): _*).agg(
+      map_from_entries(collect_list(
+        when(date.isNotNull, struct(date, struct(measures.map(col): _*))))).as("__spine_at"),
+      min(date).as("__spine_lo"), max(date).as("__spine_hi"))
+    val global = org.apache.spark.sql.expressions.Window.partitionBy()
+    val dense = combos
+      .select(others.map(col) ++ Seq(col("__spine_at"),
+        min(col("__spine_lo")).over(global).as("__spine_lo"),
+        max(col("__spine_hi")).over(global).as("__spine_hi")): _*)
+      .select(others.map(col) ++ Seq(col("__spine_at"),
+        explode(sequence(col("__spine_lo"), col("__spine_hi"), step)).as(spine.dateDim)): _*)
+    // fills compose like the rules read: zero first, then carry forward
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(others.map(col): _*).orderBy(col(spine.dateDim))
+      .partitionBy(others.map(col): _*).orderBy(date)
       .rowsBetween(Long.MinValue, 0)
-    val filled = spine.ffill.foldLeft(zeroed) { (df, m) =>
-      df.withColumn(m, last(col(m), ignoreNulls = true).over(w)) }
-    filled.select((dims ++ measures).map(col): _*)
+    dense.select(dims.map(col) ++ measures.map { m =>
+      val at = col("__spine_at").getItem(date).getField(m)
+      val zeroed =
+        if (spine.zeroFill.contains(m)) coalesce(at, lit(0).cast(result.schema(m).dataType))
+        else at
+      (if (spine.ffill.contains(m)) last(zeroed, ignoreNulls = true).over(w) else zeroed).as(m)
+    }: _*)
   }
 
   /** Null-safe equi-join of result parts on the dim columns. */
@@ -314,19 +298,21 @@ final class MetricView(
     * GROUPING() convention), so a dashboard reads one frame for the
     * detail grain, subtotals, and the grand total.
     *
-    * Two plans, chosen by rollup coverage:
-    *  - **all sets rollup-covered** → per-set [[query]] union: every
-    *    grain re-aggregates rollup partials (count/sum/HLL/topk/
-    *    histogram/variance partials are all summable), so k grains
-    *    cost k rollup-scale aggregates and the fact table is never
-    *    scanned — the multi-grain analogue of A10 routing.
-    *  - **otherwise** → ONE native grouping-sets pass over the
-    *    row-level relation (Spark's partial-aggregate grouping-set
-    *    expansion): one fact scan and one shuffle serve every grain
-    *    simultaneously; per-set delegation here would scan the fact
-    *    k times, exactly the 100 TB mistake.
-    * Window measures always take the per-set path (their frame depends
-    * on the grain; rollups never serve them anyway). */
+    * Three plans:
+    *  - **one rollup covers the union dims and the WHERE's dims**, no
+    *    measure windowed → read it ONCE, emit each row once per grain
+    *    (a generator over the grains' ids; dims whose bit is set read
+    *    null) and re-aggregate the summable partials in one aggregate
+    *    by (union dims, grouping_id) — the multi-grain analogue of A10
+    *    routing, one job. Not Spark's `groupingSets`: its Expand reports
+    *    unknown partitioning, so over the one-partition read it plans
+    *    an exchange; the generator keeps `SinglePartition`.
+    *  - **a windowed measure** → per-set [[query]] union (the frame
+    *    depends on the grain).
+    *  - **otherwise** (dims-only calls too) → ONE native grouping-sets
+    *    pass over the row-level relation: one fact scan and one shuffle
+    *    serve every grain; per-set delegation here would scan the fact
+    *    k times, exactly the 100 TB mistake. */
   def queryGroupingSets(
       sets: Seq[Seq[String]],
       measures: Seq[String],
@@ -337,42 +323,54 @@ final class MetricView(
     val ms = measures.map(spec.measure)
     sets.foreach(s => require(s.distinct == s, s"duplicate dim in grouping set $s"))
 
+    def bit(i: Int): Long = 1L << (unionDims.length - 1 - i)
     def gidOf(set: Seq[String]): Long =
-      unionDims.zipWithIndex.map { case (d, i) =>
-        if (set.contains(d)) 0L else 1L << (unionDims.length - 1 - i)
-      }.sum
+      unionDims.zipWithIndex.map { case (d, i) => if (set.contains(d)) 0L else bit(i) }.sum
 
-    val wd = where.toSeq.flatMap(whereDims)
-    val allRouted = ms.forall(!_.isWindowed) && catalog.materializer.exists(m =>
-      sets.forall(s => m.routeTarget(this, s, ms, wd).isDefined))
-    if (allRouted || ms.exists(_.isWindowed)) {
-      // per-set union; dim types come from the widest grain's schema
-      // (lazy — analysis only, no job)
-      val widest = query(unionDims, measures, where)
-      val dimType = unionDims.map(d => d -> widest.schema(d).dataType).toMap
-      val parts = sets.map { set =>
-        val q = if (set == unionDims) widest else query(set, measures, where)
-        val filled = unionDims.filterNot(set.contains).foldLeft(q)(
-          (df, d) => df.withColumn(d, lit(null).cast(dimType(d))))
-        filled.withColumn("grouping_id", lit(gidOf(set)))
+    val routed =
+      if (ms.isEmpty || ms.exists(_.isWindowed)) None
+      else catalog.materializer.flatMap(_.routedInput(
+        this, unionDims, ms, where, where.toSeq.flatMap(whereDims)))
+    routed match {
+      case Some((rows, aggCols)) =>
+        // one copy of each row per grain; `__gs_pos` keeps repeated
+        // sets apart (they repeat their rows, as the native pass does)
+        val perGrain = rows.select(col("*"),
+          posexplode(array(sets.map(s => lit(gidOf(s))): _*)).as(Seq("__gs_pos", "grouping_id")))
+        val gid = col("grouping_id")
+        perGrain
+          .groupBy(unionDims.zipWithIndex.map { case (d, i) =>
+            when((gid bitwiseAND bit(i)) === 0L, col(d)).as(d) } ++ Seq(gid, col("__gs_pos")): _*)
+          .agg(aggCols.head, aggCols.tail: _*)
           .select(((unionDims :+ "grouping_id") ++ measures).map(col): _*)
-      }
-      parts.reduce(_ unionByName _)
-    } else {
-      val (rows, dimFor, mExpr) = rowsFor(unionDims, ms, where)
-      val aggCols = ms.map(m => GraftBridge.column(mExpr(m.expr)).as(m.name))
-      // materialize dim exprs as named columns first: groupingSets
-      // matches set entries against the grouping columns by attribute,
-      // so both must reference the SAME resolved column (fresh .as()
-      // aliases would read as distinct grouping expressions)
-      val withDims = unionDims.foldLeft(rows)(
-        (df, d) => df.withColumn(s"__gs_$d", dimFor(d)))
-      withDims.groupingSets(
-          sets.map(_.map(d => col(s"__gs_$d"))),
-          unionDims.map(d => col(s"__gs_$d")): _*)
-        .agg(grouping_id().as("grouping_id"), aggCols: _*)
-        .select(unionDims.map(d => col(s"__gs_$d").as(d))
-          ++ (col("grouping_id") +: measures.map(col)): _*)
+      case None if ms.exists(_.isWindowed) =>
+        // per-set union; dim types come from the widest grain's schema
+        // (lazy — analysis only, no job)
+        val widest = query(unionDims, measures, where)
+        val dimType = unionDims.map(d => d -> widest.schema(d).dataType).toMap
+        val parts = sets.map { set =>
+          val q = if (set == unionDims) widest else query(set, measures, where)
+          val filled = unionDims.filterNot(set.contains).foldLeft(q)(
+            (df, d) => df.withColumn(d, lit(null).cast(dimType(d))))
+          filled.withColumn("grouping_id", lit(gidOf(set)))
+            .select(((unionDims :+ "grouping_id") ++ measures).map(col): _*)
+        }
+        parts.reduce(_ unionByName _)
+      case None =>
+        val (rows, dimFor, mExpr) = rowsFor(unionDims, ms, where)
+        val aggCols = ms.map(m => GraftBridge.column(mExpr(m.expr)).as(m.name))
+        // materialize dim exprs as named columns first: groupingSets
+        // matches set entries against the grouping columns by attribute,
+        // so both must reference the SAME resolved column (fresh .as()
+        // aliases would read as distinct grouping expressions)
+        val withDims = unionDims.foldLeft(rows)(
+          (df, d) => df.withColumn(s"__gs_$d", dimFor(d)))
+        withDims.groupingSets(
+            sets.map(_.map(d => col(s"__gs_$d"))),
+            unionDims.map(d => col(s"__gs_$d")): _*)
+          .agg(grouping_id().as("grouping_id"), aggCols: _*)
+          .select(unionDims.map(d => col(s"__gs_$d").as(d))
+            ++ (col("grouping_id") +: measures.map(col)): _*)
     }
   }
 

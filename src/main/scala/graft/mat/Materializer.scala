@@ -4,7 +4,7 @@ import graft.api.MetricView
 import graft.plan.Expander
 import graft.spec._
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Builds and routes to materialized metric-view tables (reference
@@ -154,34 +154,34 @@ final class Materializer(workDir: String, resolve: String => DataFrame) {
       neededPartials.forall(stored.contains)
     }.map(r => readFiltered(v, r, where))
 
-  /** The rollup a plain-measure query routes to (reference A10,
-    * README.md:399-431), chosen without building any plan: eligible iff
-    * it covers the query dims, the WHERE's dims, and every requested
-    * measure (all decomposable, none windowed). */
-  def routeTarget(
-      v: MetricView,
-      dims: Seq[String],
-      measures: Seq[Measure],
-      whereDims: Seq[String]): Option[MatViewSpec] =
-    cheapestCovering(v, dims ++ whereDims)(r =>
-      measures.forall(m => r.measures.contains(m.name) &&
-        !m.isWindowed && v.decomposed(m).isDefined))
-
-  /** Routed plan: [[routeTarget]]'s rollup, where-filtered, with every
-    * measure re-aggregated from its stored partials to `dims`. */
+  /** Routed plan: [[routedInput]] re-aggregated to `dims`. */
   def route(
       v: MetricView,
       dims: Seq[String],
       measures: Seq[Measure],
       where: Option[String],
       whereDims: Seq[String]): Option[DataFrame] =
-    routeTarget(v, dims, measures, whereDims).map { r =>
-      val aggCols = measures.map { m =>
-        v.decomposed(m).get.reaggregate(identity).as(m.name)
-      }
-      readFiltered(v, r, where)
-        .groupBy(dims.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+    routedInput(v, dims, measures, where, whereDims).map { case (rows, aggCols) =>
+      rows.groupBy(dims.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
     }
+
+  /** A routed plan's input (reference A10, README.md:399-431): the
+    * rollup covering the query dims, the WHERE's dims and every measure
+    * (all decomposable, none windowed), where-filtered, plus each
+    * measure's re-aggregation column over its stored partials. */
+  def routedInput(
+      v: MetricView,
+      dims: Seq[String],
+      measures: Seq[Measure],
+      where: Option[String],
+      whereDims: Seq[String]): Option[(DataFrame, Seq[Column])] =
+    cheapestCovering(v, dims ++ whereDims)(r =>
+      measures.forall(m => r.measures.contains(m.name) &&
+        !m.isWindowed && v.decomposed(m).isDefined))
+      .map { r =>
+        (readFiltered(v, r, where),
+          measures.map(m => v.decomposed(m).get.reaggregate(identity).as(m.name)))
+      }
 
   /** Smallest built aggregated rollup whose dims cover `needed` and that
     * `serves` accepts — by ACTUAL row count (recorded at build time,

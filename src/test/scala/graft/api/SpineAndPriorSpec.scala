@@ -93,6 +93,54 @@ class SpineAndPriorSpec extends SparkSpec {
     }
   }
 
+  test("empty filtered result densifies to no rows, with or without other dims") {
+    val cat = catalogFor(Seq(("a", "2020-01-01", 1L), ("b", "2020-01-03", 2L)))
+    val spine = SpineSpec("d", "day", zeroFill = Seq("total"), ffill = Seq("cum"))
+    assert(cat.get("mv").querySpine(Seq("grp", "d"), Seq("total", "cum"), spine,
+      where = Some("grp = 'none'")).collect().isEmpty)
+    assert(cat.get("mv").querySpine(Seq("d"), Seq("total", "cum"), spine,
+      where = Some("grp = 'none'")).collect().isEmpty)
+  }
+
+  test("result rows with a NULL date drop; their combo still densifies") {
+    // a: day 1 plus a NULL-date row; b: day 3; c: only a NULL-date row
+    val cat = catalogFor(Seq(("a", "2020-01-01", 1L), ("a", null, 5L),
+      ("b", "2020-01-03", 2L), ("c", null, 4L)))
+    val out = cat.get("mv").querySpine(Seq("grp", "d"), Seq("total", "avg_v"),
+        SpineSpec("d", "day", zeroFill = Seq("total")))
+      .orderBy("grp", "d").collect()
+      .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2), Option(r.get(3))))
+    assert(out.toSeq == Seq(
+      ("a", "2020-01-01", 1L, Some(1.0)), ("a", "2020-01-02", 0L, None), ("a", "2020-01-03", 0L, None),
+      ("b", "2020-01-01", 0L, None), ("b", "2020-01-02", 0L, None), ("b", "2020-01-03", 2L, Some(2.0)),
+      ("c", "2020-01-01", 0L, None), ("c", "2020-01-02", 0L, None), ("c", "2020-01-03", 0L, None)))
+  }
+
+  test("day spine with no other dims fills zero, carries ffill and leaves the rest null") {
+    val cat = catalogFor(Seq(
+      ("a", "2020-01-02", 5L), ("b", "2020-01-02", 1L), ("a", "2020-01-05", 7L)))
+    val out = cat.get("mv").querySpine(Seq("d"), Seq("total", "cum", "avg_v"),
+        SpineSpec("d", "day", zeroFill = Seq("total"), ffill = Seq("cum")))
+      .orderBy("d").collect()
+      .map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2), Option(r.get(3))))
+    assert(out.toSeq == Seq(
+      ("2020-01-02", 6L, 6L, Some(3.0)), ("2020-01-03", 0L, 6L, None),
+      ("2020-01-04", 0L, 6L, None), ("2020-01-05", 7L, 13L, Some(7.0))))
+  }
+
+  test("month spine densifies every combo and carries ffill across months") {
+    val cat = catalogFor(Seq(("a", "2020-01-01", 2L), ("b", "2020-03-01", 5L)))
+    val out = cat.get("mv").querySpine(Seq("grp", "d"), Seq("total", "cum"),
+        SpineSpec("d", "month", zeroFill = Seq("total"), ffill = Seq("cum")))
+      .orderBy("grp", "d").collect()
+      .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2), Option(r.get(3))))
+    assert(out.toSeq == Seq(
+      ("a", "2020-01-01", 2L, Some(2L)), ("a", "2020-02-01", 0L, Some(2L)),
+      ("a", "2020-03-01", 0L, Some(2L)),
+      ("b", "2020-01-01", 0L, None), ("b", "2020-02-01", 0L, None),
+      ("b", "2020-03-01", 5L, Some(5L))))
+  }
+
   private val priorYaml =
     """version: 0.1
       |source: series

@@ -12,9 +12,9 @@ class RoutingSpec extends SparkSpec {
   private def mat = SparkEntry.matCatalog(spark, sfDir)
 
   /** Root paths of every file scan in the optimized plan (full, not the
-    * truncated plan-string rendering). Cached subplans (querySpine
-    * persists its result) hide their scans inside InMemoryRelation —
-    * traversed too, so the gate sees through the cache. */
+    * truncated plan-string rendering). A cached subplan would hide its
+    * scans inside an InMemoryRelation, so those are traversed too and
+    * the gate sees through any cache. */
   private def scans(df: org.apache.spark.sql.DataFrame): String = {
     def fromPhysical(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
       p.collect {
@@ -160,14 +160,24 @@ class RoutingSpec extends SparkSpec {
     assert(cube.collect().map(_.toSeq).toSet == direct.collect().map(_.toSeq).toSet)
   }
 
-  /** Shuffle exchanges of the executed plan, looking inside AQE. */
-  private def shuffles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    def of(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = p.collect {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => of(a.executedPlan)
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => Seq(e.nodeName)
-    }.flatten
+  /** Nodes of the executed plan, looking inside AQE and its query
+    * stages (a stage is a leaf that wraps its own plan). */
+  private def executedNodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    def of(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+      p.collect {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => of(a.executedPlan)
+        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => of(s.plan)
+        case n => Seq(n)
+      }.flatten
     of(df.queryExecution.executedPlan)
   }
+
+  /** Shuffle exchanges of the executed plan. */
+  private def shuffles(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    executedNodes(df).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.nodeName
+    }
 
   /** Rows of `df` and the Spark jobs its collect ran. */
   private def collectCounting(df: org.apache.spark.sql.DataFrame) = {
@@ -197,6 +207,26 @@ class RoutingSpec extends SparkSpec {
     val (_, jobs) = collectCounting(cube)
     assert(jobs == 1, s"routed cube ran $jobs jobs")
     assert(shuffles(cube).isEmpty, cube.queryExecution.executedPlan.toString)
+    // every grain re-aggregates ONE read of the rollup
+    val read = executedNodes(cube).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.relation.location.rootPaths
+    }.flatten.map(_.toString)
+    assert(read.size == 1 && read.head.contains("revenue_by_segment"), read.mkString("\n"))
+  }
+
+  test("routed spine runs as one job with no shuffle") {
+    def spine(c: graft.api.MetricViewCatalog) = c.get("mv_orders_simple")
+      .querySpine(Seq("order_status", "order_date"),
+        Seq("order_count", "total_revenue"),
+        graft.api.SpineSpec("order_date", "day",
+          zeroFill = Seq("order_count"), ffill = Seq("total_revenue")),
+        where = Some("order_date >= date'1995-03-01' AND order_date < date'1995-05-01'"))
+    val routed = spine(mat)
+    val (rows, jobs) = collectCounting(routed)
+    assert(shuffles(routed).isEmpty, routed.queryExecution.executedPlan.toString)
+    assert(jobs == 1, s"routed spine ran $jobs jobs")
+    assert(rows.nonEmpty)
+    assert(rows.map(_.toSeq).toSet == spine(plain).collect().map(_.toSeq).toSet)
   }
 
   test("auto-domained percentile measure routes correctly (profile-derived [lo, hi), r9)") {

@@ -241,6 +241,22 @@ class SqlMeasureSpec extends SparkSpec {
     assert(sql.collect().map(_.toSeq).toSeq == api.collect().map(_.toSeq).toSeq)
   }
 
+  test("graft_spine TVF: parsing and analysis run no Spark job") {
+    init()
+    val text =
+      """SELECT * FROM graft_spine('mv_order_metrics', 'order_date', 'day',
+        |  'market_segment,order_date', 'total_revenue,cumulative_revenue',
+        |  'total_revenue', 'cumulative_revenue', 'order_status = ''O''')""".stripMargin
+    val counter = new graft.measure.JobCounter(spark)
+    try {
+      counter.take()
+      val df = spark.sql(text)
+      df.queryExecution.assertAnalyzed()
+      assert(counter.take().jobs == 0)
+      assert(df.collect().nonEmpty)
+    } finally counter.close()
+  }
+
   test("graft_spine TVF: bad arguments fail loudly") {
     init()
     val e = intercept[Exception] {

@@ -447,4 +447,12 @@ class StreamingSpec extends SparkSpec {
       .count(_.getName.endsWith(".parquet"))
     assert(parts == 1, s"staged dir $staged has $parts parquet files")
   }
+
+  test("clearStaging keeps the cross-JVM staged events copy") {
+    // another JVM that memoized this path before the clear still reads it
+    val staged = graft.ExtQueries.stageEvents(s, sfDir)
+    graft.ExtQueries.clearStaging()
+    assert(new java.io.File(staged, "_SUCCESS").exists(), s"$staged lost its _SUCCESS")
+    assert(graft.ExtQueries.stageEvents(s, sfDir) == staged)
+  }
 }
