@@ -2691,6 +2691,13 @@ object ExtQueries {
   private[graft] def clusterKeyed(s: SparkSession, dir: String): DataFrame =
     clusterKeyedOf(Tables.documents(s, dir))
 
+  /** [[clusterKeyedOf]] plus each doc's ingest-time `quality_score`, the
+    * column the label store carries so canonicalization never re-reads
+    * document text (the incremental cluster and stream daemon input). */
+  private[graft] def qualityKeyedOf(df: DataFrame): DataFrame =
+    clusterKeyedOf(df).join(
+      TextOps.textStats(df).select(col("doc_id"), col("quality_score")), "doc_id")
+
   /** Cluster labels staged once per (JVM, dir) — the minhash-pairs
     * staging pattern: q_dedup_clusters' FIRST run pays the full
     * connected-components compute + staging (the honest pipeline
@@ -2913,9 +2920,7 @@ object ExtQueries {
       // quality rides INTO the store (computed once per doc at ingest,
       // r9) so canonicalization is a view over the slim store — the
       // incremental manifest below never re-touches document text
-      val quality = TextOps.textStats(Tables.documents(s, dir))
-        .select(col("doc_id"), col("quality_score"))
-      val keyed = clusterKeyed(s, dir).join(quality, "doc_id")
+      val keyed = qualityKeyedOf(Tables.documents(s, dir))
       val t0 = System.nanoTime()
       IncrementalClusters.writeState(
         keyed.filter(col("doc_id") % 10 =!= 7), "doc_id", Seq("k1", "k2"),
@@ -3032,50 +3037,28 @@ object ExtQueries {
 
   /** The FULL ingest daemon end-to-end (r12 — this query used to drive
     * only the dedup+clusters families; it now drains
-    * [[graft.streaming.ContinuousIngest]] with ALL EIGHT): docs with
+    * [[graft.streaming.ContinuousIngest]] with ALL NINE): docs with
     * `doc_id % 4 = 0` are the offline-built corpus state — band index,
     * cluster label store (quality carried), drift profile, span state,
-    * segment keepers, BM25 inverted index, DSIR model, and the corpus
-    * metric-view rollup — and the REST arrive as a stream of three
-    * document batches (a file source with `maxFilesPerTrigger=1`) that
-    * fold into every family per microbatch, sharing ONE persisted
-    * token frame (VERDICT r11 task 3). The output is the curation
-    * funnel over the stream-maintained label store, hash-oracled by
-    * the SAME batch curation SQL; the other families' fold==rebuild
-    * contracts are gated by ContinuousIngestSpec and their own oracle
-    * queries. Stage split: offline builds (index_state_feed) vs the
-    * 3-batch drain (stream_fold), plus per-family clocks. */
+    * segment keepers, BM25 inverted index, DSIR model, fingerprint
+    * store, and the corpus metric-view rollup — and the REST arrive as
+    * a stream of three document batches (a file source with
+    * `maxFilesPerTrigger=1`) that fold into every family per
+    * microbatch, sharing ONE persisted token frame (VERDICT r11 task 3).
+    * The output is the curation funnel over the stream-maintained label
+    * store, hash-oracled by the SAME batch curation SQL; the other
+    * families' fold==rebuild contracts are gated by ContinuousIngestSpec
+    * and their own oracle queries. Stage split: offline builds
+    * (index_state_feed) vs the 3-batch drain (stream_fold), plus
+    * per-family clocks. */
   // private[graft] (r18): DaemonStatusContentSpec re-reads the staged
   // daemon's ledger files independently to field-gate q_daemon_status
   private[graft] def streamCurState(s: SparkSession, dir: String): String =
     stagedTempDir(stagedStreamCur, dir, "graft_stream_cur") { p =>
       val docs = Tables.documents(s, dir)
-      val keyedOf = (df: DataFrame) => clusterKeyedOf(df)
-        .join(TextOps.textStats(df).select(col("doc_id"), col("quality_score")), "doc_id")
       val t0 = System.nanoTime()
-      val corpus = docs.filter(col("doc_id") % 4 === 0)
-      graft.ops.IncrementalDedup.writeIndex(corpus, s"$p/index")
-      graft.ops.IncrementalClusters.writeState(keyedOf(corpus), "doc_id",
-        Seq("k1", "k2"), s"$p/state", carryCols = Seq("quality_score"))
-      graft.ops.DriftStore.writeProfile(corpus, s"$p/drift")
-      graft.ops.IncrementalSpans.writeState(
-        corpus.select("doc_id", "text"), s"$p/spans")
-      graft.ops.IncrementalSegments.writeState(
-        corpus.select("doc_id", "source", "text"), s"$p/segs")
-      graft.ops.Bm25Index.writeState(
-        corpus.select("doc_id", "source", "text"), s"$p/bm25")
-      val dsirPred = col("lang") === "en"
-      graft.ops.DsirStore.writeCounts(corpus, dsirPred, s"$p/dsir")
-      // ninth family (r13): fingerprint state for the leakage/diff cards
-      graft.ops.FingerprintStore.writeState(
-        corpus.select("doc_id", "source", "text"), s"$p/fps")
-      // metrics family: the corpus view's rollup, seeded offline
-      val cat = new graft.api.MetricViewCatalog(s,
-        { case "documents" => docs; case n => sys.error(s"no source $n") },
-        Some(s"$p/metrics"))
-      val mv = cat.createOrReplace("mv_corpus", graft.spec.Specs.corpusMetrics)
-      val im = cat.incremental.get
-      im.foldBatch(mv, corpus, foldId = Some("seed"))
+      val daemon = streamCurLayout(p)
+        .seed(docs.filter(col("doc_id") % 4 === 0), docs)
       SparkEntry.catalog(s, dir).bind() // restore the session's DDL target
       // the stream feed: one file per arrival batch, raw document rows
       (1 to 3).foreach(i => docs.filter(col("doc_id") % 4 === i)
@@ -3086,12 +3069,7 @@ object ExtQueries {
         .parquet(s"$p/feed/b*")
       graft.streaming.Folds.FamilyClock.enabled = true
       val nBatches =
-        try graft.streaming.ContinuousIngest.run(stream,
-          s"$p/index", s"$p/state", s"$p/pairs", s"$p/drift", s"$p/spans",
-          keyedOf, metrics = Some((mv, im)),
-          segmentsRoot = Some(s"$p/segs"), bm25Root = Some(s"$p/bm25"),
-          dsir = Some((s"$p/dsir", dsirPred)),
-          fingerprints = Some(s"$p/fps"))
+        try graft.streaming.ContinuousIngest.run(stream, daemon)
         finally graft.streaming.Folds.FamilyClock.enabled = false
       require(nBatches >= 3, s"expected >=3 microbatches, got $nBatches")
       stageTimings("q_stream_curation") = Seq(
@@ -3100,10 +3078,14 @@ object ExtQueries {
         graft.streaming.Folds.FamilyClock.drain() // per-family split
     }
 
+  /** The staged daemon's layout: all nine families, quality carried. */
+  private def streamCurLayout(p: String) =
+    graft.streaming.ContinuousIngest.Layout(p, qualityKeyedOf)
+
   def streamCuration(s: SparkSession, dir: String): DataFrame = {
     val path = streamCurState(s, dir)
     curationFunnel(s, dir,
-      manifestFrom(IncrementalClusters.readLabels(s, s"$path/state")
+      manifestFrom(IncrementalClusters.readLabels(s, streamCurLayout(path).state)
         .select("doc_id", "component", "quality_score"))
         .select(col("doc_id"), col("quality_score"), col("is_canonical")))
   }
@@ -3115,30 +3097,22 @@ object ExtQueries {
     * caught up to batch X" dashboard. Ledger truth, not clocks; the
     * per-family wall clocks stay a bench surface (stage split). No SQL
     * oracle: the ledgers are commit-protocol text files, not tables —
-    * the driver's rows-check + DaemonStatusSpec gate it. */
-  def daemonStatus(s: SparkSession, dir: String): DataFrame = {
-    val p = streamCurState(s, dir)
-    graft.streaming.ContinuousIngest.status(s, Map(
-      "dedup_index" -> s"$p/index",
-      "clusters" -> s"$p/state/labels",
-      "drift" -> s"$p/drift",
-      "spans" -> s"$p/spans",
-      "segments" -> s"$p/segs",
-      "bm25" -> s"$p/bm25",
-      "dsir" -> s"$p/dsir",
-      "fingerprints" -> s"$p/fps"))
-  }
+    * the rows-only check + DaemonStatusContentSpec gate it. */
+  def daemonStatus(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.ContinuousIngest.status(s,
+      streamCurLayout(streamCurState(s, dir)).roots)
 
   /** The same ledger dashboard through the SQL TVF surface (r13 —
     * VERDICT r12 task 7: the one rows-only query gets the SQL-parity
     * story every other surface has): `graft_daemon_status(rootsCsv)`
     * over the drained daemon's state roots. Rows-only like its
-    * DataFrame twin; SqlDaemonStatusSpec gates SQL == DataFrame. */
+    * DataFrame twin; DaemonStatusContentSpec gates SQL == DataFrame. */
   def sqlDaemonStatus(s: SparkSession, dir: String): DataFrame = {
-    val p = streamCurState(s, dir)
+    val roots = streamCurLayout(streamCurState(s, dir)).roots.toSeq.sorted
+      .map { case (family, root) => s"$family=$root" }.mkString(",")
     s.sql(
       s"""SELECT family, applied_folds, last_fold_id
-         |FROM graft_daemon_status('dedup_index=$p/index,clusters=$p/state/labels,drift=$p/drift,spans=$p/spans,segments=$p/segs,bm25=$p/bm25,dsir=$p/dsir,fingerprints=$p/fps')
+         |FROM graft_daemon_status('$roots')
          |ORDER BY family""".stripMargin)
   }
 

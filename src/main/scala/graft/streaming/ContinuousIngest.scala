@@ -33,7 +33,7 @@ import org.apache.spark.sql.streaming.Trigger
   * inherits correctness from the parts: after the stream drains, the
   * labels equal batch CC over everything, the drift profile equals a
   * whole-corpus profile, and the span table equals a batch re-gram —
-  * all spec-gated here in one pass. This is the operational shape of
+  * all spec-gated in ContinuousIngestSpec's one drain. This is the operational shape of
   * the whole library at 100 TB: offline builds once, then one
   * always-on stream paying O(batch + touched) per arrival, with every
   * derived artifact (curation funnel, manifest, drift card, span
@@ -53,6 +53,11 @@ import org.apache.spark.sql.streaming.Trigger
   * guards or double-counting the drift profile. The batch itself is
   * persisted once and every family's fold reads the cache, not the
   * source files.
+  *
+  * This daemon is the only streaming entry point for the state
+  * families; their batch folds stay callable on their own. Where each
+  * family lives under a daemon root and how it is seeded is decided
+  * once, by [[ContinuousIngest.Layout]].
   */
 object ContinuousIngest {
 
@@ -63,11 +68,9 @@ object ContinuousIngest {
     * "has every family caught up to batch X?"). Deterministic
     * (content-derived fold ids), unlike the per-family wall clocks,
     * which stay a bench-only surface ([[Folds.FamilyClock]]).
-    * `roots` maps family name → that family's ledger-bearing root:
-    * the band-index path for dedup (plain `_applied_folds` file), the
-    * `<state>/labels` subroot for clusters, the SnapshotRoot for
-    * drift / spans / segments / bm25 / dsir (ledger rides the live
-    * version dir). Families without a ledger yet report 0/null. */
+    * `roots` maps family name → that family's ledger-bearing root
+    * ([[Layout.roots]] for a daemon root). Families without a ledger
+    * yet report 0/null. */
   def status(spark: org.apache.spark.sql.SparkSession,
       roots: Map[String, String]): DataFrame = {
     import scala.jdk.CollectionConverters._
@@ -97,174 +100,237 @@ object ContinuousIngest {
           org.apache.spark.sql.types.StringType))))
   }
 
-  /** Drain `stream`, maintaining dedup (index + labels + pairs log),
-    * drift profile, and span state; returns the number of non-empty
-    * batches. All state roots must exist (offline writeState /
-    * writeIndex / writeProfile first). Pass `checkpoint` for
-    * restart-exactly-once file-source progress.
-    *
-    * `metrics` (r11) adds a fifth family: a corpus METRIC VIEW whose
-    * aggregated rollups fold per microbatch
-    * ([[IncrementalMaterializer.foldBatch]] — partial-merge, ledger-
-    * guarded like every other family), so MEASURE() dashboard queries
-    * route to a stream-maintained rollup instead of rescanning the
-    * corpus — the live-metrics face of the daemon. */
-  def run(stream: DataFrame, indexPath: String, clusterPath: String,
-      pairsLog: String, driftRoot: String, spansRoot: String,
-      keyedOf: DataFrame => DataFrame,
-      spanN: Int = 8, spanBuckets: Int = 64, nBuckets: Int = 64,
-      checkpoint: Option[String] = None,
-      metrics: Option[(graft.api.MetricView, IncrementalMaterializer)] = None,
-      /** sixth family (r11): segment-level keeper state — streaming
-        * boilerplate removal (IncrementalSegments.applyDelta per
-        * batch; same ledger/retry contract as the siblings). */
-      segmentsRoot: Option[String] = None,
-      segmentN: Int = 16,
-      /** seventh family (r11): the BM25 inverted index — streaming
-        * lexical-search serving ([[graft.ops.Bm25Index.applyDelta]];
-        * purely additive tables, so its fold==rebuild holds under any
-        * batch order; same ledger/retry contract). */
-      bm25Root: Option[String] = None,
-      /** eighth family (late r11): the DSIR importance model — each
-        * batch's hashed-ngram bucket counts fold into the stored
-        * (b, tc, rc) model ([[graft.ops.DsirStore.applyDelta]] —
-        * element-wise sums, exact under any order), so candidate
-        * scoring always runs against a model that has seen the whole
-        * corpus. The Column is the target predicate (the caller's
-        * cross-fold contract). */
-      dsir: Option[(String, org.apache.spark.sql.Column)] = None,
-      /** ninth family (r13, VERDICT r12 task 5): the per-document
-        * fingerprint store serving the split-leakage and corpus-diff
-        * cards ([[graft.ops.FingerprintStore.applyDelta]] — pure
-        * per-document rows, so fold==rebuild holds under any order;
-        * same ledger/retry contract). */
-      fingerprints: Option[String] = None): Long = {
+  /** The optional families; the four core ones (dedup band index +
+    * pairs log, cluster labels, drift, spans) are always carried. */
+  val OptionalFamilies: Set[String] =
+    Set("metrics", "segments", "bm25", "dsir", "fingerprints")
+
+  /** The DSIR family's target predicate: importance toward English. */
+  val DsirTarget: org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.col("lang") === "en"
+
+  /** The corpus metric view the metrics family folds. */
+  val MetricsView = "mv_corpus"
+
+  /** The daemon's state layout — the ONE place that decides which
+    * family lives at which subpath of a daemon root, how every family
+    * is seeded offline from a corpus ([[seed]]), and which
+    * ledger-bearing root [[status]] reads per family ([[roots]]).
+    * Seed and fold read the same bucket parameters, so a store is never
+    * folded under a layout it was not written with; span grams (8
+    * tokens) and segment windows (16) are those families' defaults on
+    * both sides. `keyedOf` derives
+    * the cluster fold's input from raw documents — (doc_id, k1, k2),
+    * then any carried columns, which ride into the label store.
+    * `optional` picks the [[OptionalFamilies]] the daemon carries
+    * (default: all, i.e. nine families). */
+  final case class Layout(root: String, keyedOf: DataFrame => DataFrame,
+      optional: Set[String] = OptionalFamilies, spanBuckets: Int = 64,
+      nBuckets: Int = 64) {
+    require(optional.subsetOf(OptionalFamilies),
+      s"unknown families: ${optional diff OptionalFamilies}")
+    val index = s"$root/index"
+    val state = s"$root/state"
+    val pairs = s"$root/pairs"
+    val drift = s"$root/drift"
+    val spans = s"$root/spans"
+    val segs = s"$root/segs"
+    val bm25 = s"$root/bm25"
+    val dsir = s"$root/dsir"
+    val fps = s"$root/fps"
+    val metrics = s"$root/metrics"
+
+    /** family → ledger-bearing root for [[status]]: the band-index path
+      * for dedup (plain `_applied_folds` file), the `<state>/labels`
+      * subroot for clusters, the SnapshotRoot for the rest. The metrics
+      * rollups keep their ledgers per rollup and are not listed. */
+    def roots: Map[String, String] = (Seq(
+      "dedup_index" -> index, "clusters" -> s"$state/labels",
+      "drift" -> drift, "spans" -> spans) ++ Seq(
+      "segments" -> segs, "bm25" -> bm25, "dsir" -> dsir,
+      "fingerprints" -> fps).filter(f => optional(f._1))).toMap
+
+    /** Offline build of every carried family from `corpus` (doc_id,
+      * source, lang, text, n_chars); `documents` backs the metrics
+      * catalog's `documents` source. Writes replace any state at `root`. */
+    def seed(corpus: DataFrame, documents: DataFrame): Seeded = {
+      graft.ops.IncrementalDedup.writeIndex(corpus, index)
+      val keyed = keyedOf(corpus)
+      graft.ops.IncrementalClusters.writeState(keyed, "doc_id",
+        Seq("k1", "k2"), state, nBuckets,
+        carryCols = keyed.columns.toSeq.diff(Seq("doc_id", "k1", "k2")))
+      graft.ops.DriftStore.writeProfile(corpus, drift)
+      graft.ops.IncrementalSpans.writeState(
+        corpus.select("doc_id", "text"), spans, nBuckets = spanBuckets)
+      val docs = corpus.select("doc_id", "source", "text")
+      if (optional("segments"))
+        graft.ops.IncrementalSegments.writeState(docs, segs, nBuckets = nBuckets)
+      if (optional("bm25")) graft.ops.Bm25Index.writeState(docs, bm25, nBuckets)
+      if (optional("dsir")) graft.ops.DsirStore.writeCounts(corpus, DsirTarget, dsir)
+      if (optional("fingerprints"))
+        graft.ops.FingerprintStore.writeState(docs, fps)
+      Seeded(this, Option.when(optional("metrics")) {
+        val cat = new graft.api.MetricViewCatalog(corpus.sparkSession,
+          { case "documents" => documents; case n => sys.error(s"no source $n") },
+          Some(metrics))
+        val mv = cat.createOrReplace(MetricsView, graft.spec.Specs.corpusMetrics)
+        cat.incremental.get.foldBatch(mv, corpus, foldId = Some("seed"))
+        cat
+      })
+    }
+  }
+
+  /** A seeded daemon: its [[Layout]] plus, when the layout carries the
+    * metrics family, the catalog holding [[MetricsView]]. */
+  final case class Seeded(layout: Layout,
+      catalog: Option[graft.api.MetricViewCatalog]) {
+    def metrics: Option[(graft.api.MetricView, IncrementalMaterializer)] =
+      catalog.map(c => (c.get(MetricsView), c.incremental.get))
+  }
+
+  /** Drain `stream` through [[fold]], one call per microbatch, under
+    * `Trigger.AvailableNow`; returns the number of non-empty batches.
+    * Every store of `daemon` must exist ([[Layout.seed]] first). Pass
+    * `checkpoint` for restart-exactly-once file-source progress. */
+  def run(stream: DataFrame, daemon: Seeded,
+      checkpoint: Option[String] = None): Long = {
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     val q = Folds.withCheckpoint(stream.writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        // ONE persisted frame carries the batch's token arrays (raw +
-        // lowered) to every family — dedup keys, spans, segments, bm25,
-        // dsir and the quality scorer all used to re-split the same
-        // text inside their own fold plans, the daemon's largest
-        // repeated per-batch CPU (r12, VERDICT r11 task 3). The fold id
-        // aggregates only the id column, so the extra columns do not
-        // perturb batch identity.
-        val b = graft.ops.TextOps.withSharedTokens(batch.toDF()).persist()
-        try Folds.contentFoldId(b).foreach { fid =>
-          batches.incrementAndGet()
-          // the families are independent (own state roots, own
-          // ledgers) — fan them out when the session has headroom
-          // (r11; Folds.launch runs inline on small sessions): on a
-          // retry each family skips or re-runs individually, so
-          // concurrency does not change the crash contract, only the
-          // wall clock
-          import scala.concurrent.Await
-          import scala.concurrent.duration.Duration
-          val spark = b.sparkSession
-          // guardless families (drift/dsir: pure merge-rewrites;
-          // metrics: ledger-gated rollup fold) launch as before
-          val others = Seq(
-            Folds.launch(spark)(Folds.FamilyClock.time("drift") {
-              graft.ops.DriftStore.applyDelta(spark, driftRoot,
-                b, foldId = Some(fid))
-            })) ++ metrics.map { case (v, im) =>
-            Folds.launch(spark)(Folds.FamilyClock.time("metrics") {
-              im.foldBatch(v, b, foldId = Some(fid))
-            })
-          } ++ dsir.map { case (dr, pred) =>
-            Folds.launch(spark)(Folds.FamilyClock.time("dsir") {
-              graft.ops.DsirStore.applyDelta(spark, dr,
-                b, pred, foldId = Some(fid))
-            })
-          }
-          // id-guarded families fold through ONE combined guard collect
-          // (r14, VERDICT r13 task 4): each prepare launches its
-          // pre-guard appends and hands back its guard legs; the union
-          // collects in a single driver round-trip, then the commits
-          // (remaining appends + ledger + pointer flip) fan out
-          // concurrently. Per-family ledgers/crash contracts unchanged
-          // — a retry still skips committed families individually.
-          val guarded = scala.collection.mutable.ArrayBuffer[
-            (String, Option[graft.ops.GuardedFold])]()
-          try {
-            // the clusters fold stays OUT of the combined collect
-            // (r15, VERDICT r14 task 5 — MEASURED, then reverted): its
-            // legs fit the GuardedFold row shape (the micro graph as
-            // one edge/did row each, prepareClustersFold), but fusing
-            // them RAISED the per-batch fixed cost 5.74 → 8.93 s
-            // (BENCH_DAEMONFLOOR_r15): the micro-graph legs are VOLUME
-            // work — broadcast joins over the keys index and label
-            // store — not round-trip overhead, so the combined collect
-            // barrier serialized the four cheap families' commits
-            // behind them, while the separate clusters round-trip was
-            // already fully overlapped with the probe on the session's
-            // fan-out headroom. Fuse cheap guard legs; keep expensive
-            // legs on their own overlapped round-trip.
-            guarded += "spans" -> graft.ops.IncrementalSpans.prepareFold(
-              spark, spansRoot, b, spanN, spanBuckets, foldId = Some(fid))
-            segmentsRoot.foreach(sr => guarded += "segments" ->
-              graft.ops.IncrementalSegments.prepareFold(spark, sr,
-                b, segmentN, nBuckets, foldId = Some(fid)))
-            bm25Root.foreach(br => guarded += "bm25" ->
-              graft.ops.Bm25Index.prepareFold(spark, br,
-                b, nBuckets, foldId = Some(fid)))
-            fingerprints.foreach(fr => guarded += "fingerprints" ->
-              graft.ops.FingerprintStore.prepareFold(spark, fr,
-                b, foldId = Some(fid)))
-          } catch { case e: Throwable =>
-            // a prepare-time refusal (manifest guard, params mismatch)
-            // must not exit the batch with folds still in flight: abort
-            // the already-prepared families (await their pre-guard
-            // appends, drop partial next versions) and settle the
-            // guardless futures before rethrowing — the stream's retry
-            // would otherwise overlap live folds on the same roots
-            guarded.foreach { case (_, g) =>
-              g.foreach(x => try x.abort() catch { case _: Throwable => () })
-            }
-            others.foreach(f =>
-              try { Await.ready(f, Duration.Inf); () }
-              catch { case _: Throwable => () })
-            throw e
-          }
-          val guardedLive = guarded.toSeq.collect { case (f, Some(g)) => (f, g) }
-          val guardedF = Folds.launch(spark) {
-            val collected = Folds.FamilyClock.time("guard_collect") {
-              graft.ops.GuardedFold.collectAll(guardedLive)
-            }
-            val commits = guardedLive.zip(collected).map {
-              case ((fam, _), (g, meta)) =>
-                Folds.launch(spark)(Folds.FamilyClock.time(fam) {
-                  g.commit(meta)
-                })
-            }
-            // settle every commit before surfacing the first failure:
-            // a bare Await.result would rethrow on the first failed
-            // family commit while later futures are still flipping
-            // snapshots on live roots, so a stream retry could overlap
-            // an in-flight fold on the same root (same seam as the
-            // outer finally's `others :+ guardedF` settle)
-            commits.foreach(f =>
-              try { Await.ready(f, Duration.Inf); () }
-              catch { case _: Throwable => () })
-            commits.foreach(Await.result(_, Duration.Inf))
-          }
-          try ContinuousDedup.processBatch(b, indexPath, clusterPath,
-            pairsLog, keyedOf, nBuckets = nBuckets, foldId = Some(fid))
-          finally {
-            // settle EVERY future before surfacing the first failure:
-            // Await.result alone would rethrow on the first failed
-            // family and leave later ones in flight across the retry
-            val all = others :+ guardedF
-            all.foreach(f =>
-              try { Await.ready(f, Duration.Inf); () }
-              catch { case _: Throwable => () })
-            all.foreach(Await.result(_, Duration.Inf))
-          }
-        } finally b.unpersist()
+        if (fold(daemon, batch.toDF())) { batches.incrementAndGet(); () }
       }, checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     batches.get()
+  }
+
+  /** Fold one arrival batch into every family `daemon` carries; false
+    * for an empty batch. The metrics family folds the corpus view's
+    * aggregated rollups ([[IncrementalMaterializer.foldBatch]] —
+    * partial-merge, ledger-guarded like every other family), so
+    * MEASURE() dashboard queries route to a stream-maintained rollup
+    * instead of rescanning the corpus. */
+  private[graft] def fold(daemon: Seeded, batch: DataFrame): Boolean = {
+    val l = daemon.layout
+    // ONE persisted frame carries the batch's token arrays (raw +
+    // lowered) to every family — dedup keys, spans, segments, bm25,
+    // dsir and the quality scorer all used to re-split the same
+    // text inside their own fold plans, the daemon's largest
+    // repeated per-batch CPU (r12, VERDICT r11 task 3). The fold id
+    // aggregates only the id column, so the extra columns do not
+    // perturb batch identity.
+    val b = graft.ops.TextOps.withSharedTokens(batch).persist()
+    try Folds.contentFoldId(b).exists { fid =>
+      // the families are independent (own state roots, own
+      // ledgers) — fan them out when the session has headroom
+      // (r11; Folds.launch runs inline on small sessions): on a
+      // retry each family skips or re-runs individually, so
+      // concurrency does not change the crash contract, only the
+      // wall clock
+      import scala.concurrent.Await
+      import scala.concurrent.duration.Duration
+      val spark = b.sparkSession
+      // guardless families (drift/dsir: pure merge-rewrites;
+      // metrics: ledger-gated rollup fold) launch as before
+      val others = Seq(
+        Folds.launch(spark)(Folds.FamilyClock.time("drift") {
+          graft.ops.DriftStore.applyDelta(spark, l.drift,
+            b, foldId = Some(fid))
+        })) ++ daemon.metrics.map { case (v, im) =>
+        Folds.launch(spark)(Folds.FamilyClock.time("metrics") {
+          im.foldBatch(v, b, foldId = Some(fid))
+        })
+      } ++ Option.when(l.optional("dsir")) {
+        Folds.launch(spark)(Folds.FamilyClock.time("dsir") {
+          graft.ops.DsirStore.applyDelta(spark, l.dsir,
+            b, DsirTarget, foldId = Some(fid))
+        })
+      }
+      // id-guarded families fold through ONE combined guard collect
+      // (r14, VERDICT r13 task 4): each prepare launches its
+      // pre-guard appends and hands back its guard legs; the union
+      // collects in a single driver round-trip, then the commits
+      // (remaining appends + ledger + pointer flip) fan out
+      // concurrently. Per-family ledgers/crash contracts unchanged
+      // — a retry still skips committed families individually.
+      val guarded = scala.collection.mutable.ArrayBuffer[
+        (String, Option[graft.ops.GuardedFold])]()
+      try {
+        // the clusters fold stays OUT of the combined collect
+        // (r15, VERDICT r14 task 5 — MEASURED, then reverted): its
+        // legs fit the GuardedFold row shape (the micro graph as
+        // one edge/did row each, prepareClustersFold), but fusing
+        // them RAISED the per-batch fixed cost 5.74 → 8.93 s
+        // (BENCH_DAEMONFLOOR_r15): the micro-graph legs are VOLUME
+        // work — broadcast joins over the keys index and label
+        // store — not round-trip overhead, so the combined collect
+        // barrier serialized the four cheap families' commits
+        // behind them, while the separate clusters round-trip was
+        // already fully overlapped with the probe on the session's
+        // fan-out headroom. Fuse cheap guard legs; keep expensive
+        // legs on their own overlapped round-trip.
+        guarded += "spans" -> graft.ops.IncrementalSpans.prepareFold(
+          spark, l.spans, b, nBuckets = l.spanBuckets, foldId = Some(fid))
+        if (l.optional("segments")) guarded += "segments" ->
+          graft.ops.IncrementalSegments.prepareFold(spark, l.segs,
+            b, nBuckets = l.nBuckets, foldId = Some(fid))
+        if (l.optional("bm25")) guarded += "bm25" ->
+          graft.ops.Bm25Index.prepareFold(spark, l.bm25,
+            b, l.nBuckets, foldId = Some(fid))
+        if (l.optional("fingerprints")) guarded += "fingerprints" ->
+          graft.ops.FingerprintStore.prepareFold(spark, l.fps,
+            b, foldId = Some(fid))
+      } catch { case e: Throwable =>
+        // a prepare-time refusal (manifest guard, params mismatch)
+        // must not exit the batch with folds still in flight: abort
+        // the already-prepared families (await their pre-guard
+        // appends, drop partial next versions) and settle the
+        // guardless futures before rethrowing — the stream's retry
+        // would otherwise overlap live folds on the same roots
+        guarded.foreach { case (_, g) =>
+          g.foreach(x => try x.abort() catch { case _: Throwable => () })
+        }
+        others.foreach(f =>
+          try { Await.ready(f, Duration.Inf); () }
+          catch { case _: Throwable => () })
+        throw e
+      }
+      val guardedLive = guarded.toSeq.collect { case (f, Some(g)) => (f, g) }
+      val guardedF = Folds.launch(spark) {
+        val collected = Folds.FamilyClock.time("guard_collect") {
+          graft.ops.GuardedFold.collectAll(guardedLive)
+        }
+        val commits = guardedLive.zip(collected).map {
+          case ((fam, _), (g, meta)) =>
+            Folds.launch(spark)(Folds.FamilyClock.time(fam) {
+              g.commit(meta)
+            })
+        }
+        // settle every commit before surfacing the first failure:
+        // a bare Await.result would rethrow on the first failed
+        // family commit while later futures are still flipping
+        // snapshots on live roots, so a stream retry could overlap
+        // an in-flight fold on the same root (same seam as the
+        // outer finally's `others :+ guardedF` settle)
+        commits.foreach(f =>
+          try { Await.ready(f, Duration.Inf); () }
+          catch { case _: Throwable => () })
+        commits.foreach(Await.result(_, Duration.Inf))
+      }
+      try ContinuousDedup.processBatch(b, l.index, l.state,
+        l.pairs, l.keyedOf, nBuckets = l.nBuckets, foldId = Some(fid))
+      finally {
+        // settle EVERY future before surfacing the first failure:
+        // Await.result alone would rethrow on the first failed
+        // family and leave later ones in flight across the retry
+        val all = others :+ guardedF
+        all.foreach(f =>
+          try { Await.ready(f, Duration.Inf); () }
+          catch { case _: Throwable => () })
+        all.foreach(Await.result(_, Duration.Inf))
+      }
+      true
+    } finally b.unpersist()
   }
 }

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * replacing a separate `isEmpty` action. */
 private[graft] object Folds {
 
-  /** `Some((foldId, rows))` for a non-empty batch, `None` for empty. */
+  /** `Some(foldId)` for a non-empty batch — the id embeds the batch's
+    * min id, max id and row count — and `None` for an empty one. */
   def contentFoldId(batch: DataFrame, idCol: String = "doc_id"): Option[String] = {
     val r = batch.agg(
       min(col(idCol).cast("long")).as("lo"),

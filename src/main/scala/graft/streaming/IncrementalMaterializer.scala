@@ -161,18 +161,6 @@ final class IncrementalMaterializer(
       }
   }
 
-  /** Streaming driver for the partition-aware fold — same shape as
-    * [[maintain]], rewriting only touched partitions per micro-batch. */
-  def maintainPartitioned(v: MetricView, stream: DataFrame, partitionCol: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        foldBatchPartitioned(v, batch.toDF(), partitionCol))
-      .option("checkpointLocation", s"$checkpointDir/${v.name}_bypart")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   /** Maintain the rollups from a streaming source of new rows: drains
     * available input (Trigger.AvailableNow) and folds each micro-batch.
     * The checkpoint remembers which files were already folded, so the

@@ -128,9 +128,7 @@ object StageProbe {
       for (r <- 1 to reps) {
         val p = tmp("probe_clusters")
         println(s" rep $r")
-        val quality = graft.ops.TextOps.textStats(docs)
-          .select(col("doc_id"), col("quality_score"))
-        val keyed = graft.ExtQueries.clusterKeyedOf(docs).join(quality, "doc_id")
+        val keyed = graft.ExtQueries.qualityKeyedOf(docs)
         timed("write_state") { graft.ops.IncrementalClusters.writeState(
           keyed.filter(col("doc_id") % 10 =!= 7), "doc_id", Seq("k1", "k2"),
           p, carryCols = Seq("quality_score")) }
@@ -182,33 +180,11 @@ object StageProbe {
       currentFamily = "daemonfloor"
       println(s"== daemon fixed-cost floor: 1 vs 3 microbatches (n=$reps) ==")
       val allDocs = graft.model.Tables.documents(spark, sfDir)
-      val keyedOf = (df: org.apache.spark.sql.DataFrame) =>
-        graft.ExtQueries.clusterKeyedOf(df)
-          .join(graft.ops.TextOps.textStats(df)
-            .select(col("doc_id"), col("quality_score")), "doc_id")
       def drain(nBatches: Int): Double = {
         val p = tmp("probe_floor")
-        val corpus = allDocs.filter(col("doc_id") % 4 === 0)
-        graft.ops.IncrementalDedup.writeIndex(corpus, s"$p/index")
-        graft.ops.IncrementalClusters.writeState(keyedOf(corpus), "doc_id",
-          Seq("k1", "k2"), s"$p/state", carryCols = Seq("quality_score"))
-        graft.ops.DriftStore.writeProfile(corpus, s"$p/drift")
-        graft.ops.IncrementalSpans.writeState(
-          corpus.select("doc_id", "text"), s"$p/spans")
-        graft.ops.IncrementalSegments.writeState(
-          corpus.select("doc_id", "source", "text"), s"$p/segs")
-        graft.ops.Bm25Index.writeState(
-          corpus.select("doc_id", "source", "text"), s"$p/bm25")
-        val dsirPred = col("lang") === "en"
-        graft.ops.DsirStore.writeCounts(corpus, dsirPred, s"$p/dsir")
-        graft.ops.FingerprintStore.writeState(
-          corpus.select("doc_id", "source", "text"), s"$p/fps")
-        val cat = new graft.api.MetricViewCatalog(spark,
-          { case "documents" => allDocs; case n => sys.error(s"no source $n") },
-          Some(s"$p/metrics"))
-        val mv = cat.createOrReplace("mv_corpus", graft.spec.Specs.corpusMetrics)
-        val im = cat.incremental.get
-        im.foldBatch(mv, corpus, foldId = Some("seed"))
+        val daemon = graft.streaming.ContinuousIngest
+          .Layout(p, graft.ExtQueries.qualityKeyedOf)
+          .seed(allDocs.filter(col("doc_id") % 4 === 0), allDocs)
         if (nBatches == 1)
           allDocs.filter(col("doc_id") % 4 =!= 0)
             .coalesce(1).write.parquet(s"$p/feed/b1")
@@ -218,12 +194,7 @@ object StageProbe {
           .option("maxFilesPerTrigger", 1).parquet(s"$p/feed/b*")
         var n = 0L
         val t = measure.seconds {
-          n = graft.streaming.ContinuousIngest.run(stream,
-            s"$p/index", s"$p/state", s"$p/pairs", s"$p/drift", s"$p/spans",
-            keyedOf, metrics = Some((mv, im)),
-            segmentsRoot = Some(s"$p/segs"), bm25Root = Some(s"$p/bm25"),
-            dsir = Some((s"$p/dsir", dsirPred)),
-            fingerprints = Some(s"$p/fps"))
+          n = graft.streaming.ContinuousIngest.run(stream, daemon)
         }
         require(n == nBatches, s"expected $nBatches batches, got $n")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))

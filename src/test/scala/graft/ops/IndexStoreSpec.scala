@@ -109,6 +109,8 @@ class IndexStoreSpec extends SparkSpec {
       compactedEver ||= IvfIndex.lastCompactedCells > 0
     }
     assert(compactedEver, "30 folds at compactAt=2 never triggered a compaction")
+    assert(SnapshotRoot.currentVersion(s"$base/inc") != "v1",
+      "compaction never rolled the live layout past v1 across 30 folds")
     // bounded live layout: every cell dir holds at most compactAt
     // files (an append can push a cell to compactAt+1, but the fold's
     // own compaction pass then rewrites it)

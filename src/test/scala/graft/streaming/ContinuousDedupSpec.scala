@@ -2,68 +2,19 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.model.Tables
-import graft.ops.{ConnectedComponents, IncrementalClusters, IncrementalDedup, MinHashLSH}
+import graft.ops.{ConnectedComponents, IncrementalClusters, IncrementalDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Streaming continuous dedup (r10): a document stream drained under
-  * foreachBatch + AvailableNow maintains the band index, the pairs
-  * log, and the cluster label store — and the maintained state equals
-  * what the BATCH pipeline computes over the union. That equivalence
-  * is the whole contract: it is what lets q_stream_curation reuse the
-  * batch curation oracle. */
+/** The dedup family's per-batch fold ([[ContinuousDedup.processBatch]])
+  * outside the daemon: the externalized-clusters contract. The
+  * stream-level dedup checks (labels, pairs log, absorbed index ==
+  * the batch pipeline over the union) ride ContinuousIngestSpec's
+  * drain. */
 class ContinuousDedupSpec extends SparkSpec {
 
   private def keyedOf(df: DataFrame): DataFrame =
     graft.ExtQueries.clusterKeyedOf(df)
-
-  test("3 microbatches maintain index + labels + pairs == batch pipeline over the union") {
-    val docs = Tables.documents(spark, sfDir)
-    val corpus = docs.filter(col("doc_id") % 4 === 0)
-    val streamed = docs.filter(col("doc_id") % 4 =!= 0)
-    val p = java.nio.file.Files.createTempDirectory("graft-cont-dedup").toString
-    IncrementalDedup.writeIndex(corpus, s"$p/index")
-    IncrementalClusters.writeState(keyedOf(corpus), "doc_id", Seq("k1", "k2"), s"$p/state")
-    (1 to 3).foreach(i => docs.filter(col("doc_id") % 4 === i)
-      .coalesce(1).write.parquet(s"$p/feed/b$i"))
-
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$p/feed/b*")
-    val nBatches = ContinuousDedup.run(stream, s"$p/index", s"$p/state",
-      s"$p/pairs", keyedOf)
-    assert(nBatches == 3, s"expected 3 microbatches, got $nBatches")
-
-    // labels after the stream == batch CC over ALL documents (per-fold
-    // equivalence composes batch by batch)
-    val got = IncrementalClusters.readLabels(spark, s"$p/state")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val keyedAll = keyedOf(docs)
-    val edges = ConnectedComponents.keyEdges(keyedAll, "doc_id", Seq("k1", "k2"))
-    val expected = ConnectedComponents.run(
-      keyedAll.select(col("doc_id").as("id")), edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expected,
-      s"label diff: ${(expected.toSet diff got.toSet).take(5)} / ${(got.toSet diff expected.toSet).take(5)}")
-
-    // the pairs log == batch candidate pairs restricted to pairs
-    // involving >=1 streamed doc: every pair lands in the batch of its
-    // LATER member, whose probe sees the earlier member through the
-    // index (the absorb-after-match order contract)
-    val streamedIds = streamed.select("doc_id").collect().map(_.getLong(0)).toSet
-    val logged = spark.read.parquet(s"$p/pairs")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val batchPairs = MinHashLSH.candidatePairs(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .filter(t => streamedIds(t._1) || streamedIds(t._2)).toSet
-    assert(logged == batchPairs,
-      s"pair diff: ${(batchPairs diff logged).take(5)} / ${(logged diff batchPairs).take(5)}")
-
-    // the index absorbed every streamed doc: a LATER probe matches
-    // against streamed content through the index alone
-    val bandedIds = spark.read.parquet(s"$p/index/banded")
-      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(streamedIds.subsetOf(bandedIds))
-  }
 
   test("processBatch(clusters=false) + an external fused fold == the default path") {
     // the externalized-clusters contract (r15): a caller passing

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.model.Tables
-import graft.ops.{ConnectedComponents, DriftStore, DupSpans, IncrementalClusters, IncrementalDedup, IncrementalSpans, SnapshotRoot}
+import graft.ops.{ConnectedComponents, DriftStore, DupSpans, IncrementalClusters, IncrementalSpans, SnapshotRoot}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,13 +29,18 @@ class ContinuousFaultInjectionSpec extends SparkSpec {
   private def keyedOf(df: DataFrame): DataFrame =
     graft.ExtQueries.clusterKeyedOf(df)
 
-  private def statusOf(p: String): Map[String, (Long, String)] =
-    ContinuousIngest.status(spark, Map(
-      "dedup_index" -> s"$p/index", "clusters" -> s"$p/state/labels",
-      "drift" -> s"$p/drift", "spans" -> s"$p/spans",
-      "segments" -> s"$p/segs", "bm25" -> s"$p/bm25",
-      "dsir" -> s"$p/dsir", "fingerprints" -> s"$p/fps"))
+  private def statusOf(l: ContinuousIngest.Layout): Map[String, (Long, String)] =
+    ContinuousIngest.status(spark, l.roots)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
+
+  /** Drain the `feed` under the daemon root, checkpointed so a retry
+    * resumes after the last committed batch. */
+  private def drain(daemon: ContinuousIngest.Seeded): Long = {
+    val p = daemon.layout.root
+    val stream = spark.readStream.schema(Tables.documents(spark, sfDir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$p/feed/b*")
+    ContinuousIngest.run(stream, daemon, checkpoint = Some(s"$p/ckpt"))
+  }
 
   test("a deleted committed file fails the NEXT batch at its ledger; restore -> retry drains to batch equality") {
     val docs = Tables.documents(spark, sfDir)
@@ -44,50 +49,22 @@ class ContinuousFaultInjectionSpec extends SparkSpec {
     val p = java.nio.file.Files.createTempDirectory("graft-faultinj").toString
 
     // offline seeds, one per family (the ContinuousIngestSpec setup)
-    IncrementalDedup.writeIndex(corpus, s"$p/index")
-    IncrementalClusters.writeState(keyedOf(corpus), "doc_id", Seq("k1", "k2"),
-      s"$p/state", nBuckets = 16)
-    DriftStore.writeProfile(corpus, s"$p/drift")
-    IncrementalSpans.writeState(corpus.select("doc_id", "text"), s"$p/spans",
-      n = 8, nBuckets = 16)
-    graft.ops.IncrementalSegments.writeState(
-      corpus.select("doc_id", "source", "text"), s"$p/segs", nBuckets = 16)
-    graft.ops.Bm25Index.writeState(
-      corpus.select("doc_id", "source", "text"), s"$p/bm25", nBuckets = 16)
-    val dsirPred = col("lang") === "en"
-    graft.ops.DsirStore.writeCounts(corpus, dsirPred, s"$p/dsir")
-    graft.ops.FingerprintStore.writeState(
-      corpus.select("doc_id", "source", "text"), s"$p/fps")
-    val cat = new graft.api.MetricViewCatalog(spark,
-      { case "documents" => all; case n => sys.error(s"no source $n") },
-      Some(s"$p/metrics"))
-    val mv = cat.createOrReplace("mv_corpus", graft.spec.Specs.corpusMetrics)
-    val im = cat.incremental.get
-    im.foldBatch(mv, corpus, foldId = Some("seed"))
-
-    def drain(): Long = {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$p/feed/b*")
-      ContinuousIngest.run(stream, s"$p/index", s"$p/state",
-        s"$p/pairs", s"$p/drift", s"$p/spans", keyedOf,
-        spanN = 8, spanBuckets = 16, nBuckets = 16,
-        checkpoint = Some(s"$p/ckpt"), metrics = Some((mv, im)),
-        segmentsRoot = Some(s"$p/segs"), bm25Root = Some(s"$p/bm25"),
-        dsir = Some((s"$p/dsir", dsirPred)), fingerprints = Some(s"$p/fps"))
-    }
+    val daemon = ContinuousIngest.Layout(p, keyedOf, spanBuckets = 16,
+      nBuckets = 16).seed(corpus, all)
+    val l = daemon.layout
 
     // ---- batch 1 drains clean
     docs.filter(col("doc_id") % 4 === 1).coalesce(1).write.parquet(s"$p/feed/b1")
-    assert(drain() == 1)
+    assert(drain(daemon) == 1)
     val fid1 = Folds.contentFoldId(docs.filter(col("doc_id") % 4 === 1)).get
-    val st1 = statusOf(p)
+    val st1 = statusOf(l)
     assert(st1.values.forall(_ == ((1L, fid1))), s"after batch 1: $st1")
-    val bm25VerBefore = SnapshotRoot.currentVersion(s"$p/bm25")
+    val bm25VerBefore = SnapshotRoot.currentVersion(l.bm25)
 
     // ---- tamper BETWEEN microbatches: one committed postings data
     // file vanishes from the live bm25 snapshot
     val postings = new java.io.File(
-      s"${SnapshotRoot.currentDir(s"$p/bm25")}/postings")
+      s"${SnapshotRoot.currentDir(l.bm25)}/postings")
     val victim = SnapshotRoot.listDir(postings)
       .filter(_.isDirectory).flatMap(SnapshotRoot.listDir)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -98,7 +75,7 @@ class ContinuousFaultInjectionSpec extends SparkSpec {
     // ---- the NEXT batch must fail loudly (manifest short-listing)...
     docs.filter(col("doc_id") % 4 === 2).coalesce(1).write.parquet(s"$p/feed/b2")
     docs.filter(col("doc_id") % 4 === 3).coalesce(1).write.parquet(s"$p/feed/b3")
-    val e = intercept[Exception] { drain() }
+    val e = intercept[Exception] { drain(daemon) }
     def chain(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
       else Option(t.getMessage).toSeq ++ chain(t.getCause)
@@ -110,10 +87,10 @@ class ContinuousFaultInjectionSpec extends SparkSpec {
     // every other family either committed batch 2 through its ledger
     // or didn't run — never a third state
     val fid2 = Folds.contentFoldId(docs.filter(col("doc_id") % 4 === 2)).get
-    val st2 = statusOf(p)
+    val st2 = statusOf(l)
     assert(st2("bm25") == ((1L, fid1)),
       s"tampered family must not advance: ${st2("bm25")}")
-    assert(SnapshotRoot.currentVersion(s"$p/bm25") == bm25VerBefore,
+    assert(SnapshotRoot.currentVersion(l.bm25) == bm25VerBefore,
       "tampered family's snapshot pointer must not move")
     st2.foreach { case (fam, s) =>
       assert(s == ((1L, fid1)) || s == ((2L, fid2)),
@@ -122,24 +99,24 @@ class ContinuousFaultInjectionSpec extends SparkSpec {
 
     // ---- restore the file: the retry drains b2 AND b3
     java.nio.file.Files.move(stash, victim.toPath)
-    assert(drain() == 2)
+    assert(drain(daemon) == 2)
     val fid3 = Folds.contentFoldId(docs.filter(col("doc_id") % 4 === 3)).get
-    val st3 = statusOf(p)
+    val st3 = statusOf(l)
     assert(st3.values.forall(_ == ((3L, fid3))), s"after the retry: $st3")
 
     // ---- final-state equality with a batch rebuild (the soak's
     // contract): the tampered family and three witnesses
     assert(graft.ops.Bm25Index
-      .scoresFromState(spark, s"$p/bm25", "dup merge stream", nBuckets = 16)
+      .scoresFromState(spark, l.bm25, "dup merge stream", nBuckets = 16)
       .collect().map(_.toSeq).toSet ==
       graft.ops.Bm25.scores(all.select("doc_id", "source", "text"),
         "dup merge stream").collect().map(_.toSeq).toSet,
       "bm25 state after tamper+retry == batch scoring over the union")
-    assert(IncrementalSpans.readSpans(spark, s"$p/spans")
+    assert(IncrementalSpans.readSpans(spark, l.spans)
       .collect().map(_.toSeq).toSet ==
       DupSpans.duplicateSpans(all, n = 8).collect().map(_.toSeq).toSet)
     val keyedAll = keyedOf(all)
-    assert(IncrementalClusters.readLabels(spark, s"$p/state")
+    assert(IncrementalClusters.readLabels(spark, l.state)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       ConnectedComponents.run(
         keyedAll.select(col("doc_id").as("id")),
@@ -148,7 +125,7 @@ class ContinuousFaultInjectionSpec extends SparkSpec {
     def profRows(df: DataFrame) = df.select("source", "lang", "c", "h")
       .collect().map(r => s"${r.getString(0)}|${r.getString(1)}|${r.getLong(2)}|" +
         r.getSeq[Long](3).mkString(",")).toSet
-    assert(profRows(DriftStore.profile(spark, s"$p/drift")) ==
+    assert(profRows(DriftStore.profile(spark, l.drift)) ==
       profRows(DriftStore.profileOf(all)))
 
     graft.ops.Persists.releaseAll()
@@ -165,68 +142,50 @@ class ContinuousFaultInjectionSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.filter(col("doc_id") % 4 === 0)
     val p = java.nio.file.Files.createTempDirectory("graft-faultinj-drift").toString
-    IncrementalDedup.writeIndex(corpus, s"$p/index")
-    IncrementalClusters.writeState(keyedOf(corpus), "doc_id", Seq("k1", "k2"),
-      s"$p/state", nBuckets = 16)
-    DriftStore.writeProfile(corpus, s"$p/drift")
-    IncrementalSpans.writeState(corpus.select("doc_id", "text"), s"$p/spans",
-      n = 8, nBuckets = 16)
-
-    def drain(): Long = {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$p/feed/b*")
-      ContinuousIngest.run(stream, s"$p/index", s"$p/state",
-        s"$p/pairs", s"$p/drift", s"$p/spans", keyedOf,
-        spanN = 8, spanBuckets = 16, nBuckets = 16,
-        checkpoint = Some(s"$p/ckpt"))
-    }
-    def statusOf4(): Map[String, (Long, String)] =
-      ContinuousIngest.status(spark, Map(
-        "dedup_index" -> s"$p/index", "clusters" -> s"$p/state/labels",
-        "drift" -> s"$p/drift", "spans" -> s"$p/spans"))
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
-
+    val daemon = ContinuousIngest.Layout(p, keyedOf, optional = Set.empty,
+      spanBuckets = 16, nBuckets = 16).seed(corpus, docs)
+    val l = daemon.layout
     docs.filter(col("doc_id") % 4 === 1).coalesce(1).write.parquet(s"$p/feed/b1")
-    assert(drain() == 1)
+    assert(drain(daemon) == 1)
     val fid1 = Folds.contentFoldId(docs.filter(col("doc_id") % 4 === 1)).get
-    assert(statusOf4().values.forall(_ == ((1L, fid1))))
-    val driftVerBefore = SnapshotRoot.currentVersion(s"$p/drift")
+    assert(statusOf(l).values.forall(_ == ((1L, fid1))))
+    val driftVerBefore = SnapshotRoot.currentVersion(l.drift)
 
     val victim = SnapshotRoot.listDir(
-      new java.io.File(SnapshotRoot.currentDir(s"$p/drift")))
+      new java.io.File(SnapshotRoot.currentDir(l.drift)))
       .filter(f => f.isFile && f.getName.endsWith(".parquet")).head
     val stash = java.nio.file.Paths.get(p, "stashed_" + victim.getName)
     java.nio.file.Files.move(victim.toPath, stash)
 
     docs.filter(col("doc_id") % 4 === 2).coalesce(1).write.parquet(s"$p/feed/b2")
     docs.filter(col("doc_id") % 4 === 3).coalesce(1).write.parquet(s"$p/feed/b3")
-    val e = intercept[Exception] { drain() }
+    val e = intercept[Exception] { drain(daemon) }
     def chain(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
       else Option(t.getMessage).toSeq ++ chain(t.getCause)
     assert(chain(e).exists(_.contains("manifest")),
       s"expected a manifest refusal, got: ${chain(e)}")
     val fid2 = Folds.contentFoldId(docs.filter(col("doc_id") % 4 === 2)).get
-    val st2 = statusOf4()
+    val st2 = statusOf(l)
     assert(st2("drift") == ((1L, fid1)),
       s"tampered drift store must not advance: ${st2("drift")}")
-    assert(SnapshotRoot.currentVersion(s"$p/drift") == driftVerBefore)
+    assert(SnapshotRoot.currentVersion(l.drift) == driftVerBefore)
     st2.foreach { case (fam, s) =>
       assert(s == ((1L, fid1)) || s == ((2L, fid2)),
         s"family $fam in a state its ledger doesn't record: $s")
     }
 
     java.nio.file.Files.move(stash, victim.toPath)
-    assert(drain() == 2)
+    assert(drain(daemon) == 2)
     val fid3 = Folds.contentFoldId(docs.filter(col("doc_id") % 4 === 3)).get
-    assert(statusOf4().values.forall(_ == ((3L, fid3))))
+    assert(statusOf(l).values.forall(_ == ((3L, fid3))))
     def profRows(df: DataFrame) = df.select("source", "lang", "c", "h")
       .collect().map(r => s"${r.getString(0)}|${r.getString(1)}|${r.getLong(2)}|" +
         r.getSeq[Long](3).mkString(",")).toSet
-    assert(profRows(DriftStore.profile(spark, s"$p/drift")) ==
+    assert(profRows(DriftStore.profile(spark, l.drift)) ==
       profRows(DriftStore.profileOf(docs)),
       "drift profile after tamper+retry == whole-corpus profile")
-    assert(IncrementalSpans.readSpans(spark, s"$p/spans")
+    assert(IncrementalSpans.readSpans(spark, l.spans)
       .collect().map(_.toSeq).toSet ==
       DupSpans.duplicateSpans(docs, n = 8).collect().map(_.toSeq).toSet)
 
@@ -245,39 +204,18 @@ class ContinuousFaultInjectionSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.filter(col("doc_id") % 4 === 0)
     val p = java.nio.file.Files.createTempDirectory("graft-faultinj-segs").toString
-    IncrementalDedup.writeIndex(corpus, s"$p/index")
-    IncrementalClusters.writeState(keyedOf(corpus), "doc_id", Seq("k1", "k2"),
-      s"$p/state", nBuckets = 16)
-    DriftStore.writeProfile(corpus, s"$p/drift")
-    IncrementalSpans.writeState(corpus.select("doc_id", "text"), s"$p/spans",
-      n = 8, nBuckets = 16)
-    graft.ops.IncrementalSegments.writeState(
-      corpus.select("doc_id", "source", "text"), s"$p/segs", nBuckets = 16)
-
-    def drain(): Long = {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$p/feed/b*")
-      ContinuousIngest.run(stream, s"$p/index", s"$p/state",
-        s"$p/pairs", s"$p/drift", s"$p/spans", keyedOf,
-        spanN = 8, spanBuckets = 16, nBuckets = 16,
-        checkpoint = Some(s"$p/ckpt"), segmentsRoot = Some(s"$p/segs"))
-    }
-    def statusOf5(): Map[String, (Long, String)] =
-      ContinuousIngest.status(spark, Map(
-        "dedup_index" -> s"$p/index", "clusters" -> s"$p/state/labels",
-        "drift" -> s"$p/drift", "spans" -> s"$p/spans",
-        "segments" -> s"$p/segs"))
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
-
+    val daemon = ContinuousIngest.Layout(p, keyedOf, optional = Set("segments"),
+      spanBuckets = 16, nBuckets = 16).seed(corpus, docs)
+    val l = daemon.layout
     docs.filter(col("doc_id") % 4 === 1).coalesce(1).write.parquet(s"$p/feed/b1")
-    assert(drain() == 1)
+    assert(drain(daemon) == 1)
     val fid1 = Folds.contentFoldId(docs.filter(col("doc_id") % 4 === 1)).get
-    assert(statusOf5().values.forall(_ == ((1L, fid1))))
-    val segsVerBefore = SnapshotRoot.currentVersion(s"$p/segs")
+    assert(statusOf(l).values.forall(_ == ((1L, fid1))))
+    val segsVerBefore = SnapshotRoot.currentVersion(l.segs)
 
     // tamper the docs table — the GUARD input, not a rewrite input
     val docsDir = new java.io.File(
-      s"${SnapshotRoot.currentDir(s"$p/segs")}/docs")
+      s"${SnapshotRoot.currentDir(l.segs)}/docs")
     val victim = SnapshotRoot.listDir(docsDir)
       .filter(_.isDirectory).flatMap(SnapshotRoot.listDir)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -287,33 +225,33 @@ class ContinuousFaultInjectionSpec extends SparkSpec {
 
     docs.filter(col("doc_id") % 4 === 2).coalesce(1).write.parquet(s"$p/feed/b2")
     docs.filter(col("doc_id") % 4 === 3).coalesce(1).write.parquet(s"$p/feed/b3")
-    val e = intercept[Exception] { drain() }
+    val e = intercept[Exception] { drain(daemon) }
     def chain(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
       else Option(t.getMessage).toSeq ++ chain(t.getCause)
     assert(chain(e).exists(_.contains("manifest")),
       s"expected a manifest refusal, got: ${chain(e)}")
     val fid2 = Folds.contentFoldId(docs.filter(col("doc_id") % 4 === 2)).get
-    val st2 = statusOf5()
+    val st2 = statusOf(l)
     assert(st2("segments") == ((1L, fid1)),
       s"tampered segments store must not advance: ${st2("segments")}")
-    assert(SnapshotRoot.currentVersion(s"$p/segs") == segsVerBefore)
+    assert(SnapshotRoot.currentVersion(l.segs) == segsVerBefore)
     st2.foreach { case (fam, s) =>
       assert(s == ((1L, fid1)) || s == ((2L, fid2)),
         s"family $fam in a state its ledger doesn't record: $s")
     }
 
     java.nio.file.Files.move(stash, victim.toPath)
-    assert(drain() == 2)
+    assert(drain(daemon) == 2)
     val fid3 = Folds.contentFoldId(docs.filter(col("doc_id") % 4 === 3)).get
-    assert(statusOf5().values.forall(_ == ((3L, fid3))))
+    assert(statusOf(l).values.forall(_ == ((3L, fid3))))
     // final-state equality: one keeper per distinct fingerprint and the
     // kept-segment total equals the batch dedup's over the union
-    val keepers = graft.ops.IncrementalSegments.readKeepers(spark, s"$p/segs")
+    val keepers = graft.ops.IncrementalSegments.readKeepers(spark, l.segs)
       .collect()
     assert(keepers.map(_.getString(0)).distinct.length == keepers.length)
     val incKept = graft.ops.IncrementalSegments
-      .dedupFromState(spark, s"$p/segs")
+      .dedupFromState(spark, l.segs)
       .agg(sum("kept_segments")).head().getLong(0)
     val batchKept = graft.ops.SegmentDedup.dedup(docs,
         graft.ops.SegmentDedup.tokenWindows(col("text"), 16), sep = " ")

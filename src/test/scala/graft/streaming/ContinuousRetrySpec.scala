@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.model.Tables
-import graft.ops.{ConnectedComponents, DriftStore, DupSpans, IncrementalClusters, IncrementalDedup, IncrementalSpans}
+import graft.ops.{ConnectedComponents, DriftStore, DupSpans, IncrementalClusters, IncrementalSpans}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,34 +31,25 @@ class ContinuousRetrySpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") % 4 === 0)
     val delta = docs.filter(col("doc_id") % 4 === 1)
     val p = java.nio.file.Files.createTempDirectory("graft-retry").toString
-    IncrementalDedup.writeIndex(corpus, s"$p/index")
-    IncrementalClusters.writeState(keyedOf(corpus), "doc_id", Seq("k1", "k2"), s"$p/state")
-    DriftStore.writeProfile(corpus, s"$p/drift")
-    IncrementalSpans.writeState(corpus.select("doc_id", "text"), s"$p/spans",
-      n = 8, nBuckets = 16)
+    val daemon = ContinuousIngest.Layout(p, keyedOf, optional = Set.empty,
+      spanBuckets = 16).seed(corpus, docs)
+    val l = daemon.layout
 
-    val fid = Folds.contentFoldId(delta).get
-    def foldAll(): Unit = {
-      ContinuousDedup.processBatch(delta, s"$p/index", s"$p/state",
-        s"$p/pairs", keyedOf, foldId = Some(fid))
-      DriftStore.applyDelta(spark, s"$p/drift", delta, foldId = Some(fid))
-      IncrementalSpans.applyDelta(spark, s"$p/spans", delta, 8, 16,
-        foldId = Some(fid))
-    }
+    def foldAll(): Unit = assert(ContinuousIngest.fold(daemon, delta))
     foldAll()
-    val labels1 = labelMap(s"$p/state")
-    val prof1 = profRows(DriftStore.profile(spark, s"$p/drift"))
-    val spans1 = IncrementalSpans.readSpans(spark, s"$p/spans")
+    val labels1 = labelMap(l.state)
+    val prof1 = profRows(DriftStore.profile(spark, l.drift))
+    val spans1 = IncrementalSpans.readSpans(spark, l.spans)
       .collect().map(_.toSeq).toSet
-    val pairs1 = spark.read.parquet(s"$p/pairs")
+    val pairs1 = spark.read.parquet(l.pairs)
       .select("a_id", "b_id").collect().map(_.toSeq).toSeq
 
     foldAll() // the retry: every family must skip, nothing may throw
-    assert(labelMap(s"$p/state") == labels1)
-    assert(profRows(DriftStore.profile(spark, s"$p/drift")) == prof1)
-    assert(IncrementalSpans.readSpans(spark, s"$p/spans")
+    assert(labelMap(l.state) == labels1)
+    assert(profRows(DriftStore.profile(spark, l.drift)) == prof1)
+    assert(IncrementalSpans.readSpans(spark, l.spans)
       .collect().map(_.toSeq).toSet == spans1)
-    val pairs2 = spark.read.parquet(s"$p/pairs")
+    val pairs2 = spark.read.parquet(l.pairs)
       .select("a_id", "b_id").collect().map(_.toSeq).toSeq
     assert(pairs2.sortBy(_.toString) == pairs1.sortBy(_.toString),
       "pairs log must not grow on replay (fold-dir overwrite semantics)")
@@ -69,11 +60,9 @@ class ContinuousRetrySpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") % 4 === 0)
     val all = docs
     val p = java.nio.file.Files.createTempDirectory("graft-retry2").toString
-    IncrementalDedup.writeIndex(corpus, s"$p/index")
-    IncrementalClusters.writeState(keyedOf(corpus), "doc_id", Seq("k1", "k2"), s"$p/state")
-    DriftStore.writeProfile(corpus, s"$p/drift")
-    IncrementalSpans.writeState(corpus.select("doc_id", "text"), s"$p/spans",
-      n = 8, nBuckets = 16)
+    val daemon = ContinuousIngest.Layout(p, keyedOf, optional = Set.empty,
+      spanBuckets = 16).seed(corpus, docs)
+    val l = daemon.layout
     (1 to 3).foreach(i => docs.filter(col("doc_id") % 4 === i)
       .coalesce(1).write.parquet(s"$p/feed/b$i"))
 
@@ -82,14 +71,12 @@ class ContinuousRetrySpec extends SparkSpec {
     // describes (the r10 behavior was a permanent disjoint-ids throw)
     val b1 = docs.filter(col("doc_id") % 4 === 1)
     val fid1 = Folds.contentFoldId(b1).get
-    ContinuousDedup.processBatch(b1, s"$p/index", s"$p/state",
-      s"$p/pairs", keyedOf, foldId = Some(fid1))
+    ContinuousDedup.processBatch(b1, l.index, l.state, l.pairs, keyedOf,
+      foldId = Some(fid1))
 
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$p/feed/b*")
-    val n = ContinuousIngest.run(stream, s"$p/index", s"$p/state",
-      s"$p/pairs", s"$p/drift", s"$p/spans", keyedOf,
-      spanN = 8, spanBuckets = 16)
+    val n = ContinuousIngest.run(stream, daemon)
     assert(n == 3)
 
     // every family ends exactly where a crash-free run would
@@ -98,10 +85,10 @@ class ContinuousRetrySpec extends SparkSpec {
       keyedAll.select(col("doc_id").as("id")),
       ConnectedComponents.keyEdges(keyedAll, "doc_id", Seq("k1", "k2")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labelMap(s"$p/state") == expLabels)
-    assert(profRows(DriftStore.profile(spark, s"$p/drift")) ==
+    assert(labelMap(l.state) == expLabels)
+    assert(profRows(DriftStore.profile(spark, l.drift)) ==
       profRows(DriftStore.profileOf(all)))
-    assert(IncrementalSpans.readSpans(spark, s"$p/spans")
+    assert(IncrementalSpans.readSpans(spark, l.spans)
       .collect().map(_.toSeq).toSet ==
       DupSpans.duplicateSpans(all, n = 8).collect().map(_.toSeq).toSet)
   }

@@ -2,12 +2,13 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.model.Tables
-import graft.ops.{ConnectedComponents, DriftStore, DupSpans, IncrementalClusters, IncrementalDedup, IncrementalSegments, IncrementalSpans, SnapshotRoot}
+import graft.ops.{ConnectedComponents, DriftStore, DupSpans, IncrementalClusters, IncrementalSegments, IncrementalSpans, SnapshotRoot}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Long-run daemon soak (r11, VERDICT r10 task 7): 30 sequential
-  * microbatches through [[ContinuousIngest]]. The per-family 30-fold
+  * microbatches through [[ContinuousIngest.fold]], the daemon's
+  * per-batch fold over all nine families. The per-family 30-fold
   * specs already exist (clusters/spans); this gates the COMPOSED
   * daemon's steady state:
   *  - every store's file count stays bounded (compaction engages:
@@ -53,46 +54,16 @@ class ContinuousSoakSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.filter(col("doc_id") % 31 === 30)
     val p = java.nio.file.Files.createTempDirectory("graft-soak").toString
-    IncrementalDedup.writeIndex(corpus, s"$p/index")
-    IncrementalClusters.writeState(keyedOf(corpus), "doc_id", Seq("k1", "k2"),
-      s"$p/state", nBuckets = 16)
-    DriftStore.writeProfile(corpus, s"$p/drift")
-    IncrementalSpans.writeState(corpus.select("doc_id", "text"), s"$p/spans",
-      n = 8, nBuckets = 8)
-    IncrementalSegments.writeState(
-      corpus.select("doc_id", "source", "text"), s"$p/segs", nBuckets = 8)
-    graft.ops.Bm25Index.writeState(
-      corpus.select("doc_id", "source", "text"), s"$p/bm25", nBuckets = 8)
-    val dsirPred = col("lang") === "en"
-    graft.ops.DsirStore.writeCounts(corpus, dsirPred, s"$p/dsir")
-    graft.ops.FingerprintStore.writeState(
-      corpus.select("doc_id", "source", "text"), s"$p/fps")
-    // fifth family (r11): the corpus metrics rollup folds every batch
-    val cat = new graft.api.MetricViewCatalog(spark,
-      { case "documents" => docs; case n => sys.error(s"no source $n") },
-      Some(s"$p/metrics"))
-    val mv = cat.createOrReplace("mv_corpus", graft.spec.Specs.corpusMetrics)
-    val im = cat.incremental.get
-    im.foldBatch(mv, corpus, foldId = Some("seed"))
+    val daemon = ContinuousIngest.Layout(p, keyedOf, spanBuckets = 8,
+      nBuckets = 8).seed(corpus, docs)
+    val l = daemon.layout
+    val cat = daemon.catalog.get
+    val mv = cat.get(ContinuousIngest.MetricsView)
 
     val times = scala.collection.mutable.ArrayBuffer[Double]()
     (0 until 30).foreach { i =>
-      val b = docs.filter(col("doc_id") % 31 === i)
-      val fid = Folds.contentFoldId(b).get
       val t0 = System.nanoTime()
-      ContinuousDedup.processBatch(b, s"$p/index", s"$p/state", s"$p/pairs",
-        keyedOf, nBuckets = 16, foldId = Some(fid))
-      DriftStore.applyDelta(spark, s"$p/drift", b, foldId = Some(fid))
-      IncrementalSpans.applyDelta(spark, s"$p/spans", b, 8, 8, foldId = Some(fid))
-      im.foldBatch(mv, b, foldId = Some(fid))
-      IncrementalSegments.applyDelta(spark, s"$p/segs",
-        b.select("doc_id", "source", "text"), nBuckets = 8, foldId = Some(fid))
-      graft.ops.Bm25Index.applyDelta(spark, s"$p/bm25",
-        b.select("doc_id", "source", "text"), nBuckets = 8, foldId = Some(fid))
-      graft.ops.DsirStore.applyDelta(spark, s"$p/dsir", b, dsirPred,
-        foldId = Some(fid))
-      graft.ops.FingerprintStore.applyDelta(spark, s"$p/fps", b,
-        foldId = Some(fid))
+      assert(ContinuousIngest.fold(daemon, docs.filter(col("doc_id") % 31 === i)))
       times += (System.nanoTime() - t0) / 1e9
       // periodic hygiene between folds (suites run sequentially, so
       // this clobbers nothing live): 31 folds x 9 families on a
@@ -104,22 +75,22 @@ class ContinuousSoakSpec extends SparkSpec {
     }
 
     // ---- snapshot GC: every SnapshotRoot family retains <= 2 versions
-    assert(versionDirs(s"$p/spans").size <= 2, s"spans versions: ${versionDirs(s"$p/spans")}")
-    assert(versionDirs(s"$p/drift").size <= 2)
-    assert(versionDirs(s"$p/state/labels").size <= 2)
-    assert(versionDirs(s"$p/state/keys").size <= 2)
-    assert(versionDirs(s"$p/metrics/mv_corpus/by_source_lang").size <= 2,
+    assert(versionDirs(l.spans).size <= 2, s"spans versions: ${versionDirs(l.spans)}")
+    assert(versionDirs(l.drift).size <= 2)
+    assert(versionDirs(s"${l.state}/labels").size <= 2)
+    assert(versionDirs(s"${l.state}/keys").size <= 2)
+    assert(versionDirs(s"${l.metrics}/mv_corpus/by_source_lang").size <= 2,
       "metrics rollup versions must GC")
-    assert(versionDirs(s"$p/segs").size <= 2, "segment store versions must GC")
-    assert(versionDirs(s"$p/bm25").size <= 2, "bm25 index versions must GC")
-    assert(versionDirs(s"$p/dsir").size <= 2, "dsir model versions must GC")
-    assert(versionDirs(s"$p/fps").size <= 2, "fingerprint store versions must GC")
+    assert(versionDirs(l.segs).size <= 2, "segment store versions must GC")
+    assert(versionDirs(l.bm25).size <= 2, "bm25 index versions must GC")
+    assert(versionDirs(l.dsir).size <= 2, "dsir model versions must GC")
+    assert(versionDirs(l.fps).size <= 2, "fingerprint store versions must GC")
 
     // ---- compaction keeps file counts bounded under continuous folding
-    val keyFiles = filesUnder(SnapshotRoot.currentDir(s"$p/state/keys"))
+    val keyFiles = filesUnder(SnapshotRoot.currentDir(s"${l.state}/keys"))
     assert(keyFiles <= 33, s"cluster key index grew to $keyFiles files")
-    val spanCur = SnapshotRoot.currentDir(s"$p/spans")
-    val segCur = SnapshotRoot.currentDir(s"$p/segs")
+    val spanCur = SnapshotRoot.currentDir(l.spans)
+    val segCur = SnapshotRoot.currentDir(l.segs)
     for (table <- Seq("keepers", "docs")) {
       val worst = Option(new java.io.File(s"$segCur/$table").listFiles())
         .getOrElse(Array.empty).filter(_.isDirectory)
@@ -132,7 +103,7 @@ class ContinuousSoakSpec extends SparkSpec {
         .map(d => filesUnder(d.toString)).maxOption.getOrElse(0)
       assert(worst <= 17, s"span $table bucket grew to $worst files")
     }
-    val bm25Cur = SnapshotRoot.currentDir(s"$p/bm25")
+    val bm25Cur = SnapshotRoot.currentDir(l.bm25)
     for (table <- Seq("postings", "df", "doclen", "stats")) {
       val worst = Option(new java.io.File(s"$bm25Cur/$table").listFiles())
         .getOrElse(Array.empty).filter(_.isDirectory)
@@ -140,7 +111,7 @@ class ContinuousSoakSpec extends SparkSpec {
       assert(worst <= 17, s"bm25 $table bucket grew to $worst files")
     }
     val fpsWorst = Option(new java.io.File(
-        s"${SnapshotRoot.currentDir(s"$p/fps")}/fps").listFiles())
+        s"${SnapshotRoot.currentDir(l.fps)}/fps").listFiles())
       .getOrElse(Array.empty).filter(_.isDirectory)
       .map(d => filesUnder(d.toString)).maxOption.getOrElse(0)
     assert(fpsWorst <= 17, s"fingerprint bucket grew to $fpsWorst files")
@@ -159,21 +130,21 @@ class ContinuousSoakSpec extends SparkSpec {
       keyedAll.select(col("doc_id").as("id")),
       ConnectedComponents.keyEdges(keyedAll, "doc_id", Seq("k1", "k2")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(IncrementalClusters.readLabels(spark, s"$p/state")
+    assert(IncrementalClusters.readLabels(spark, l.state)
       .select("doc_id", "component")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expLabels)
     def profRows(df: DataFrame) = df.select("source", "lang", "c", "h")
       .collect().map(r => s"${r.getString(0)}|${r.getString(1)}|${r.getLong(2)}|" +
         r.getSeq[Long](3).mkString(",")).toSet
-    assert(profRows(DriftStore.profile(spark, s"$p/drift")) ==
+    assert(profRows(DriftStore.profile(spark, l.drift)) ==
       profRows(DriftStore.profileOf(docs)))
-    assert(IncrementalSpans.readSpans(spark, s"$p/spans")
+    assert(IncrementalSpans.readSpans(spark, l.spans)
       .collect().map(_.toSeq).toSet ==
       DupSpans.duplicateSpans(docs, n = 8).collect().map(_.toSeq).toSet)
     // 31-fold keeper state: one keeper per distinct segment, kept total
     // == batch dedup over everything (count equality holds under ANY
     // arrival order; identity needs id-ordered folds)
-    val incKept = IncrementalSegments.dedupFromState(spark, s"$p/segs")
+    val incKept = IncrementalSegments.dedupFromState(spark, l.segs)
       .agg(sum("kept_segments")).head().getLong(0)
     val batchKept = graft.ops.SegmentDedup.dedup(docs,
         graft.ops.SegmentDedup.tokenWindows(col("text"), 16), sep = " ")
@@ -182,7 +153,7 @@ class ContinuousSoakSpec extends SparkSpec {
     // 31-fold BM25 index == batch scoring over everything (additive
     // tables — exact under any arrival order, 30 compactions included)
     assert(graft.ops.Bm25Index
-      .scoresFromState(spark, s"$p/bm25", "dup merge stream", nBuckets = 8)
+      .scoresFromState(spark, l.bm25, "dup merge stream", nBuckets = 8)
       .collect().map(_.toSeq).toSet ==
       graft.ops.Bm25.scores(docs.select("doc_id", "source", "text"),
         "dup merge stream").collect().map(_.toSeq).toSet,
@@ -199,7 +170,7 @@ class ContinuousSoakSpec extends SparkSpec {
     val phrase = docs.orderBy("doc_id").select("text").head()
       .getString(0).toLowerCase.trim.split("\\s+").take(3).mkString(" ")
     val gotPhrase = graft.ops.Bm25Index
-      .phraseFromState(spark, s"$p/bm25", phrase, nBuckets = 8)
+      .phraseFromState(spark, l.bm25, phrase, nBuckets = 8)
       .collect().map(_.toSeq).toSet
     assert(gotPhrase.nonEmpty, s"probe phrase '$phrase' must hit")
     assert(gotPhrase == graft.ops.Bm25Index
@@ -207,7 +178,7 @@ class ContinuousSoakSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet,
       "31-fold positional phrase reads == batch index")
     assert(graft.ops.Bm25Index
-      .topKFromState(spark, s"$p/bm25", "dup merge stream", k = 10, nBuckets = 8)
+      .topKFromState(spark, l.bm25, "dup merge stream", k = 10, nBuckets = 8)
       .collect().map(_.toSeq).toSeq ==
       graft.ops.Bm25Index
         .topKFromState(spark, bm25Batch, "dup merge stream", k = 10, nBuckets = 8)
@@ -220,7 +191,7 @@ class ContinuousSoakSpec extends SparkSpec {
       .createTempDirectory("graft-soak-fps-batch").toString
     graft.ops.FingerprintStore.writeState(
       docs.select("doc_id", "source", "text"), fpsBatch)
-    assert(graft.ops.FingerprintStore.splitLeakageCard(spark, s"$p/fps")
+    assert(graft.ops.FingerprintStore.splitLeakageCard(spark, l.fps)
       .collect().toSeq ==
       graft.ops.FingerprintStore.splitLeakageCard(spark, fpsBatch)
         .collect().toSeq,
@@ -228,9 +199,9 @@ class ContinuousSoakSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(fpsBatch))
     // 31-fold DSIR model == one-shot fit over everything (element-wise
     // count sums — exact under any arrival order)
-    assert(graft.ops.DsirStore.scoresFromState(spark, s"$p/dsir", docs, dsirPred)
+    assert(graft.ops.DsirStore.scoresFromState(spark, l.dsir, docs, ContinuousIngest.DsirTarget)
       .collect().map(_.toSeq).toSet ==
-      graft.ops.Dsir.scores(docs, dsirPred).collect().map(_.toSeq).toSet,
+      graft.ops.Dsir.scores(docs, ContinuousIngest.DsirTarget).collect().map(_.toSeq).toSet,
       "31-fold dsir model == batch scores")
     cat.materializer.get.markBuilt(mv)
     assert(mv.query(Seq("source"), Seq("doc_count", "char_sum"))
