@@ -4,7 +4,9 @@ import graft.plan.{AggDecompose, Expander, WindowPlanner}
 import graft.spec._
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.GraftPlans
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 
 /** A registered metric view: the engine's queryable semantic object
@@ -231,30 +233,41 @@ final class MetricView(
     val result = query(dims, measures, where)
     val others = dims.filterNot(_ == spine.dateDim)
     val date = col(spine.dateDim)
+    // the densify stage is composed as one unresolved plan and analyzed
+    // once, over a stand-in leaf with the result's output attributes,
+    // then grafted onto the analyzed result: chaining DataFrame steps
+    // re-analyzed the growing plan at every step, and analyzing over
+    // the result itself re-walks the whole query plan in every rule
+    val inner = GraftBridge.logicalPlan(result)
+    val stub = LocalRelation(inner.output)
+    def named(cs: Seq[Column]): Seq[NamedExpression] =
+      cs.map(c => GraftBridge.expression(spark, c).asInstanceOf[NamedExpression])
+    def project(cs: Seq[Column])(child: LogicalPlan): LogicalPlan = Project(named(cs), child)
     // one row per combo: its dated measures and its date range (the
     // null-date rows drop out of both; their combo still densifies)
-    val combos = result.groupBy(others.map(col): _*).agg(
+    val combos = Aggregate(named(others.map(col)), named(others.map(col) ++ Seq(
       map_from_entries(collect_list(
         when(date.isNotNull, struct(date, struct(measures.map(col): _*))))).as("__spine_at"),
-      min(date).as("__spine_lo"), max(date).as("__spine_hi"))
+      min(date).as("__spine_lo"), max(date).as("__spine_hi"))), stub)
     val global = org.apache.spark.sql.expressions.Window.partitionBy()
-    val dense = combos
-      .select(others.map(col) ++ Seq(col("__spine_at"),
-        min(col("__spine_lo")).over(global).as("__spine_lo"),
-        max(col("__spine_hi")).over(global).as("__spine_hi")): _*)
-      .select(others.map(col) ++ Seq(col("__spine_at"),
-        explode(sequence(col("__spine_lo"), col("__spine_hi"), step)).as(spine.dateDim)): _*)
+    val bounded = project(others.map(col) ++ Seq(col("__spine_at"),
+      min(col("__spine_lo")).over(global).as("__spine_lo"),
+      max(col("__spine_hi")).over(global).as("__spine_hi")))(combos)
+    val dense = project(others.map(col) ++ Seq(col("__spine_at"),
+      explode(sequence(col("__spine_lo"), col("__spine_hi"), step)).as(spine.dateDim)))(bounded)
     // fills compose like the rules read: zero first, then carry forward
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(others.map(col): _*).orderBy(date)
       .rowsBetween(Long.MinValue, 0)
-    dense.select(dims.map(col) ++ measures.map { m =>
+    val filled = project(dims.map(col) ++ measures.map { m =>
       val at = col("__spine_at").getItem(date).getField(m)
       val zeroed =
         if (spine.zeroFill.contains(m)) coalesce(at, lit(0).cast(result.schema(m).dataType))
         else at
       (if (spine.ffill.contains(m)) last(zeroed, ignoreNulls = true).over(w) else zeroed).as(m)
-    }: _*)
+    })(dense)
+    GraftBridge.ofRows(spark, GraftPlans.graft(
+      GraftBridge.logicalPlan(GraftBridge.ofRows(spark, filled)), stub, inner))
   }
 
   /** Null-safe equi-join of result parts on the dim columns. */

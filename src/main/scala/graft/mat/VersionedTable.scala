@@ -57,15 +57,16 @@ object VersionedTable {
     * ([[pack]]). The returned plan is pinned to the version directory it
     * resolved — a concurrent write + pointer flip does not disturb it.
     *
-    * A rollup snapshot is one small file, so it packs to ONE partition:
-    * `coalesce(1)`'s `SinglePartition` output already satisfies any
-    * aggregate's distribution, EnsureRequirements adds no Exchange, and
-    * a routed re-aggregation runs inside the scan's single task — one
-    * job instead of a map stage, a shuffle and a reduce stage.
-    * Multi-split snapshots (row-level baselines) keep their parallelism.
-    * Filters still reach the scan: predicate pushdown moves a Filter
-    * below the coalesce's Repartition, so data and partition filters
-    * land on the scan unchanged. */
+    * A snapshot that fits in one split — a rollup, or a fixture-scale
+    * baseline of a few files — reads as ONE partition: `coalesce(1)`'s
+    * `SinglePartition` output already satisfies any aggregate's or
+    * window's distribution, EnsureRequirements adds no Exchange, and a
+    * routed re-aggregation, a DISTINCT over the baseline or a window
+    * over it runs inside the scan's single task — one job instead of a
+    * map stage, a shuffle and a reduce stage. Larger snapshots keep
+    * Spark's own split count. Filters still reach the scan: predicate
+    * pushdown moves a Filter below the coalesce's Repartition, so data
+    * and partition filters land on the scan unchanged. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val p = currentPath(dir).getOrElse(
       sys.error(s"versioned table at $dir has no current version"))
@@ -74,12 +75,17 @@ object VersionedTable {
 
   /** Pack a whole-directory file read into its byte-derived split count:
     * `coalesce(max(ceil(bytes / maxPartitionBytes), min(files,
-    * parallelism)))` — a no-op once files are split-sized, ONE partition
-    * for a single small file, and at most `parallelism` tasks for many
-    * small files.
-    * Predicates above the result still push to the scan (pinned by
-    * VersionedTableSpec), so pruned reads may pack too. */
-  private[graft] def pack(spark: SparkSession, df: DataFrame): DataFrame = {
+    * fileFloor)))`. With the default `fileFloor` of 1 that is Spark's
+    * own split count, ONE partition below one split: a floor of
+    * `min(files, parallelism)` here made every multi-file sub-split
+    * baseline read as several partitions, so each aggregate above it
+    * planned an Exchange that AQE ran as 2-3 jobs. Callers whose
+    * consumers are narrow per-row builds pass the parallelism as
+    * `fileFloor` to keep one task per file up to it (see
+    * [[graft.ops.BucketStore.packStore]]). Either way a no-op once files
+    * are split-sized. Predicates above the result still push to the scan
+    * (pinned by VersionedTableSpec), so pruned reads may pack too. */
+  private[graft] def pack(spark: SparkSession, df: DataFrame, fileFloor: Int = 1): DataFrame = {
     val files = df.inputFiles
     if (files.isEmpty) df
     else {
@@ -90,8 +96,7 @@ object VersionedTable {
         new java.io.File(new java.net.URI(f).getPath).length()).sum
       val n = math.max(
         (totalBytes + targetSplit - 1) / targetSplit,
-        math.min(files.length.toLong,
-          spark.sparkContext.defaultParallelism.toLong)).toInt
+        math.min(files.length.toLong, fileFloor.toLong)).toInt
       df.coalesce(math.max(1, n))
     }
   }

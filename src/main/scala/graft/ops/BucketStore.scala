@@ -126,26 +126,28 @@ private[graft] object BucketStore {
     else {
       val df = spark.read.option("basePath", basePath)
         .schema(schema).parquet(files: _*)
-      // Pack tiny store files into sensibly-sized tasks (r19, guide §6
-      // small files / VERDICT r18 task 3): a bucketed incremental
-      // store at fixture scale holds ~64 buckets x few-KB append files,
-      // and Spark's split packing charges each file the 4 MB
-      // openCostInBytes — so whole-store reads exploded into ~2-file
-      // tasks (q_passage_dedup_incremental: 774 scan tasks, pure
-      // scheduler overhead). Lowering openCostInBytes globally was
-      // probed and REJECTED: it is also the split-size FLOOR
-      // (maxSplitBytes = min(maxPartitionBytes, max(openCost,
-      // bytesPerCore))), so single-file fixture scans fragmented and
-      // the suite's total task count ROSE 6022->7041. Instead, pack
-      // HERE, where the explicit file list is known
-      // ([[graft.mat.VersionedTable.pack]]: real split count by bytes,
-      // at least parallelism bounded by file count). At 100 TB store
-      // files are split-sized and the byte term dominates — the
-      // coalesce is a no-op; at fixture scale it bounds a whole-store
-      // read to <= defaultParallelism tasks while narrow downstream
-      // work (gram builds) keeps full parallelism.
-      Some(graft.mat.VersionedTable.pack(spark, df))
+      Some(packStore(spark, df))
     }
+
+  /** Pack a whole-store read of tiny files into sensibly-sized tasks:
+    * [[graft.mat.VersionedTable.pack]] with a file floor of the
+    * parallelism, so the read runs `max(ceil(bytes / split), min(files,
+    * parallelism))` tasks. A bucketed incremental store at fixture scale
+    * holds ~64 buckets x few-KB append files, and Spark's split packing
+    * charges each file the 4 MB openCostInBytes, so unpacked whole-store
+    * reads exploded into ~2-file tasks (q_passage_dedup_incremental: 774
+    * scan tasks, pure scheduler overhead). Lowering openCostInBytes
+    * globally was probed and rejected: it is also the split-size floor
+    * (maxSplitBytes = min(maxPartitionBytes, max(openCost,
+    * bytesPerCore))), so single-file fixture scans fragmented and the
+    * suite's total task count rose 6022->7041. The file floor is kept
+    * here, not in the snapshot read, because these reads feed narrow
+    * per-row builds (gram builds, label projections, probe joins) that
+    * keep full parallelism only if the scan does; one partition would
+    * serialize them into one task. At 100 TB store files are
+    * split-sized and the byte term dominates — the coalesce is a no-op. */
+  private[graft] def packStore(spark: SparkSession, df: DataFrame): DataFrame =
+    graft.mat.VersionedTable.pack(spark, df, spark.sparkContext.defaultParallelism)
 
   /** Exact-count check: the snapshot was committed whole and is only
     * ever replaced whole (label rewrites, cell compactions). */

@@ -210,7 +210,7 @@ object IncrementalClusters {
     val dir = currentLabelsDir(path)
     // whole-table serve read, no pruning predicate above — pack the
     // per-bucket part files into parallelism-bounded tasks (r19)
-    val raw = graft.mat.VersionedTable.pack(spark, BucketStore.checkPlannedListing(
+    val raw = BucketStore.packStore(spark, BucketStore.checkPlannedListing(
       BucketStore.readLiveDir(spark, dir), dir, "labels"))
     val carried = raw.columns.filterNot(Set("doc_id", "component", "cbucket"))
     raw.select((col("doc_id").cast("long").as("doc_id") +:

@@ -332,7 +332,7 @@ object IncrementalDedup {
     // store's tiny append files into parallelism-bounded tasks (r19;
     // the index accumulates ~32 part files per absorbed batch, and
     // unpacked reads ran ~60 2-file tasks each per probe)
-    val cCensus = graft.mat.VersionedTable.pack(spark, BucketStore.checkPlannedListing(
+    val cCensus = BucketStore.packStore(spark, BucketStore.checkPlannedListing(
       BucketStore.readLiveDir(spark, s"$indexPath/census"), indexPath, "census",
       atLeast = true))
     val combined = Persists.cache(
@@ -354,7 +354,7 @@ object IncrementalDedup {
 
     // members of surviving delta-touched buckets: corpus index rows
     // (broadcast-semi-pruned — no index shuffle) ∪ the delta's own rows
-    val members = graft.mat.VersionedTable.pack(spark, BucketStore.checkPlannedListing(
+    val members = BucketStore.packStore(spark, BucketStore.checkPlannedListing(
         BucketStore.readLiveDir(spark, s"$indexPath/banded"), indexPath, "banded",
         atLeast = true))
       .join(bc(okBuckets), Seq("band", "bucket"), "left_semi")

@@ -66,6 +66,70 @@ class GraftTopKSpec extends SparkSpec {
     assert(whole == split)
   }
 
+  /** The state encoder as first written (DataOutputStream, big-endian,
+    * version 1): stored rollups hold these bytes. */
+  private def streamEncoded(st: GraftTopK.State): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.writeByte(1)
+    out.writeInt(st.capacity)
+    out.writeBoolean(st.evicted)
+    out.writeInt(st.counts.size)
+    val it = st.counts.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      val kb = e.getKey.getBytes("UTF-8")
+      out.writeInt(kb.length); out.write(kb)
+      out.writeLong(e.getValue()(0)); out.writeLong(e.getValue()(1))
+    }
+    out.flush(); bos.toByteArray
+  }
+
+  /** Random states, some past capacity (evicted) and some merged; few
+    * distinct counts, so ties are common at every k boundary. */
+  private def randomStates(seed: Long): Seq[GraftTopK.State] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until 40).map { i =>
+      val cap = 1 + rnd.nextInt(24)
+      def fill(): GraftTopK.State = {
+        val st = new GraftTopK.State(cap)
+        (0 until rnd.nextInt(80)).foreach { _ =>
+          val key = if (rnd.nextBoolean()) s"k${rnd.nextInt(30)}" else s"ü${rnd.nextInt(6)}-é"
+          GraftTopK.update(st, key)
+        }
+        st
+      }
+      if (i % 3 == 0) GraftTopK.mergeInto(fill(), fill()) else fill()
+    }
+  }
+
+  test("state bytes equal the stream encoder's, and decode back to the same state") {
+    randomStates(11).foreach { st =>
+      val bytes = GraftTopK.serialize(st)
+      assert(bytes.sameElements(streamEncoded(st)))
+      val back = GraftTopK.deserialize(bytes)
+      assert(back.capacity == st.capacity && back.evicted == st.evicted)
+      assert(back.counts.size == st.counts.size)
+      st.counts.forEach((k, v) => assert(back.counts.get(k).sameElements(v), k))
+      assert(GraftTopK.serialize(back).sameElements(bytes))
+    }
+  }
+
+  test("extract == the full-sort reference, ties at the k boundary included") {
+    randomStates(12).foreach { st =>
+      val entries = scala.jdk.CollectionConverters.MapHasAsScala(st.counts).asScala.toSeq
+        .map { case (item, c) => (item, c(0), c(1)) }
+        .sortBy { case (item, cnt, _) => (-cnt, item) }
+      for (k <- Seq(1, 2, 3, 5, 8, 100)) {
+        val got = GraftTopK.extract(GraftTopK.serialize(st), k).array.toSeq.map { r =>
+          val row = r.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+          (row.getUTF8String(0).toString, row.getLong(1), row.getLong(2))
+        }
+        assert(got == entries.take(k), s"k=$k")
+      }
+    }
+  }
+
   test("capacity mismatch between merged states fails loudly") {
     val a = new GraftTopK.State(4); val b = new GraftTopK.State(8)
     intercept[IllegalArgumentException] { GraftTopK.mergeInto(a, b) }

@@ -229,6 +229,40 @@ class RoutingSpec extends SparkSpec {
     assert(rows.map(_.toSeq).toSet == spine(plain).collect().map(_.toSeq).toSet)
   }
 
+  test("baseline-served DISTINCT, window and uncovered range each run as one job with no shuffle") {
+    // a materialized catalog whose baseline is several small files, as
+    // at sf0.1: the snapshot still fits one split, so it reads as one
+    // partition and each aggregate above it runs inside the scan's task
+    val work = java.nio.file.Files.createTempDirectory("graft-mat-multi").toString
+    val cat = new graft.api.MetricViewCatalog(spark, n => {
+      val df = graft.model.Models.resolve(spark, sfDir, n)
+      if (Set("stg_orders", "fct_orders")(n)) df.repartition(4) else df
+    }, Some(work))
+    graft.spec.Specs.all.foreach { case (name, yaml) => cat.createOrReplace(name, yaml) }
+    Seq("mv_orders_simple", "mv_order_metrics").foreach(v => cat.materializer.get.build(cat.get(v)))
+    val baseline = cat.materializer.get.baseline(cat.get("mv_orders_simple")).get
+    assert(baseline.inputFiles.length > 1, baseline.inputFiles.mkString("\n"))
+
+    val shapes: Seq[(String, graft.api.MetricViewCatalog => org.apache.spark.sql.DataFrame)] = Seq(
+      "distinct" -> (_.get("mv_orders_simple").query(Seq("order_priority"),
+        Seq("unique_customers"), Some("order_status = 'O'"))),
+      "window" -> (_.get("mv_order_metrics").query(Seq("order_date"),
+        Seq("trailing_7d_revenue"), Some("order_year = 1996"))),
+      "uncovered range" -> (_.get("mv_order_metrics").query(Seq("market_segment"),
+        Seq("total_revenue", "avg_order_value"),
+        Some("order_date >= date'1995-03-01' AND order_date < date'1995-03-31'"))))
+    shapes.foreach { case (name, q) =>
+      val df = q(cat)
+      assert(scans(df).contains(work), s"$name did not read the baseline:\n${scans(df)}")
+      val (rows, jobs) = collectCounting(df)
+      assert(shuffles(df).isEmpty, s"$name:\n${df.queryExecution.executedPlan}")
+      assert(jobs == 1, s"$name ran $jobs jobs")
+      assert(rows.nonEmpty, name)
+      assert(rows.map(_.toSeq).toSet == q(plain).collect().map(_.toSeq).toSet, name)
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+  }
+
   test("auto-domained percentile measure routes correctly (profile-derived [lo, hi), r9)") {
     // graft_percentile_auto(total_price, 0.5, 1024) declares NO domain:
     // [lo, hi) derives from the observed min/max at measure resolution,

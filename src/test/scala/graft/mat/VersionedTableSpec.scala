@@ -3,10 +3,13 @@ package graft.mat
 import graft.SparkSpec
 import java.nio.file.Files
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Snapshot reads packed to their byte-derived split count
-  * ([[VersionedTable.pack]]): one small file reads as one partition,
-  * multi-split snapshots keep their parallelism, predicates still reach
+  * ([[VersionedTable.pack]]): a snapshot within one split, one file or
+  * several, reads as one partition, multi-split snapshots keep their
+  * parallelism, predicates still reach
   * the scan, and a pointer flip is seen by the next read. */
 class VersionedTableSpec extends SparkSpec {
 
@@ -36,6 +39,29 @@ class VersionedTableSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions == 1)
     assert(df.queryExecution.sparkPlan.outputPartitioning ==
       org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
+  }
+
+  test("a multi-file snapshot within one split reads as a single partition") {
+    // a fixture-scale baseline: several small files, together far below
+    // the 8m split — one partition, so an aggregate above it plans no
+    // Exchange
+    val dir = tmp("graft-vt-sub")
+    VersionedTable.write(spark.range(0, 4000, 1, 4).selectExpr("id", "id % 7 as k"), dir)
+    val df = VersionedTable.read(spark, dir)
+    assert(df.inputFiles.length == 4)
+    assert(df.rdd.getNumPartitions == 1)
+    assert(df.queryExecution.sparkPlan.outputPartitioning ==
+      org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
+    val agg = df.groupBy("k").count()
+    assert(agg.collect().map(_.getLong(1)).sum == 4000)
+    val executed = agg.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(executed.collect {
+      case e: ShuffleExchangeLike => e
+      case e: ShuffleQueryStageExec => e
+    }.isEmpty, executed.toString)
   }
 
   test("a snapshot of several files above the split size keeps more than one partition") {

@@ -257,6 +257,24 @@ class BucketStoreSpec extends SparkSpec {
     Persists.releaseAll()
   }
 
+  test("readExact over many tiny files packs to min(files, parallelism) partitions") {
+    // a whole-store read feeds narrow per-row builds: it keeps one task
+    // per file up to the parallelism, unlike a snapshot read, which packs
+    // a sub-split directory into one partition
+    val par = spark.sparkContext.defaultParallelism
+    for (nFiles <- Seq(par - 1, 3 * par)) {
+      val dir = s"${java.nio.file.Files.createTempDirectory("bstore-pack")}/t"
+      rows(0 until 10 * nFiles).repartition(nFiles).write.parquet(dir)
+      val files = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
+      assert(files.size == nFiles)
+      val df = BucketStore.readExact(spark, schema, dir, files).get
+      assert(df.rdd.getNumPartitions == math.min(nFiles, par))
+      assert(df.count() == 10L * nFiles)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir).getParentFile)
+    }
+  }
+
   test("listDir: missing dir is empty, file target throws instead of null") {
     assert(SnapshotRoot.listDir(new java.io.File("/no/such/dir")).isEmpty)
     val f = java.nio.file.Files.createTempFile("notadir", ".txt")
