@@ -5,8 +5,7 @@ import graft.spec._
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
-import org.apache.spark.sql.catalyst.GraftPlans
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 
 /** A registered metric view: the engine's queryable semantic object
@@ -233,13 +232,10 @@ final class MetricView(
     val result = query(dims, measures, where)
     val others = dims.filterNot(_ == spine.dateDim)
     val date = col(spine.dateDim)
-    // the densify stage is composed as one unresolved plan and analyzed
-    // once, over a stand-in leaf with the result's output attributes,
-    // then grafted onto the analyzed result: chaining DataFrame steps
-    // re-analyzed the growing plan at every step, and analyzing over
-    // the result itself re-walks the whole query plan in every rule
+    // the densify stage is composed as one unresolved plan over the
+    // analyzed result and analyzed once: chaining DataFrame steps
+    // re-analyzed the growing plan at every step
     val inner = GraftBridge.logicalPlan(result)
-    val stub = LocalRelation(inner.output)
     def named(cs: Seq[Column]): Seq[NamedExpression] =
       cs.map(c => GraftBridge.expression(spark, c).asInstanceOf[NamedExpression])
     def project(cs: Seq[Column])(child: LogicalPlan): LogicalPlan = Project(named(cs), child)
@@ -248,7 +244,7 @@ final class MetricView(
     val combos = Aggregate(named(others.map(col)), named(others.map(col) ++ Seq(
       map_from_entries(collect_list(
         when(date.isNotNull, struct(date, struct(measures.map(col): _*))))).as("__spine_at"),
-      min(date).as("__spine_lo"), max(date).as("__spine_hi"))), stub)
+      min(date).as("__spine_lo"), max(date).as("__spine_hi"))), inner)
     val global = org.apache.spark.sql.expressions.Window.partitionBy()
     val bounded = project(others.map(col) ++ Seq(col("__spine_at"),
       min(col("__spine_lo")).over(global).as("__spine_lo"),
@@ -266,8 +262,7 @@ final class MetricView(
         else at
       (if (spine.ffill.contains(m)) last(zeroed, ignoreNulls = true).over(w) else zeroed).as(m)
     })(dense)
-    GraftBridge.ofRows(spark, GraftPlans.graft(
-      GraftBridge.logicalPlan(GraftBridge.ofRows(spark, filled)), stub, inner))
+    GraftBridge.ofRows(spark, filled)
   }
 
   /** Null-safe equi-join of result parts on the dim columns. */

@@ -160,7 +160,7 @@ object GraftTopK {
     into.heap = null // derived index is stale after a rewrite
     into.evicted = into.evicted || from.evicted
     if (merged.size > into.capacity) {
-      val keep = new Largest(into.capacity)
+      val keep = new Largest(into.capacity, merged.size)
       val it = merged.entrySet().iterator()
       while (it.hasNext) { val e = it.next(); keep.offer(e.getKey, e.getValue()(0), e.getValue()(1)) }
       keep.sorted().foreach(t => into.counts.put(t._1, Array(t._2, t._3)))
@@ -173,13 +173,17 @@ object GraftTopK {
     * (cnt desc, item asc): a k-bounded min-heap whose head is the worst
     * kept entry (the eviction order), so selecting from n entries costs
     * O(n log k) instead of a full sort. Items are unique, so the order
-    * is total and the selection equals the sorted prefix. */
-  private final class Largest(k: Int) {
+    * is total and the selection equals the sorted prefix. The heap is
+    * sized by `min(k, offered)`, the entries it can actually hold, so a
+    * caller's k far above the state's entry count allocates nothing
+    * for it. */
+  private final class Largest(k: Int, offered: Int) {
     private val order: java.util.Comparator[(String, Long, Long)] = (a, b) => {
       val c = java.lang.Long.compare(a._2, b._2)
       if (c != 0) c else b._1.compareTo(a._1)
     }
-    private val heap = new java.util.PriorityQueue[(String, Long, Long)](math.max(1, k), order)
+    private val heap = new java.util.PriorityQueue[(String, Long, Long)](
+      math.max(1, math.min(k, offered)), order)
 
     def offer(item: String, cnt: Long, err: Long): Unit = {
       val e = (item, cnt, err)
@@ -258,7 +262,8 @@ object GraftTopK {
     * the k largest as array<struct<item, cnt, err>>, selected straight
     * from the bytes (no counter map is built). */
   def extract(bytes: Array[Byte], k: Int): GenericArrayData = {
-    val top = new Largest(k)
+    // the entry count sits after the version, capacity and evicted fields
+    val top = new Largest(k, java.nio.ByteBuffer.wrap(bytes).getInt(6))
     decode(bytes)(top.offer)
     new GenericArrayData(top.sorted().map { case (item, cnt, err) =>
       new GenericInternalRow(Array[Any](UTF8String.fromString(item), cnt, err)): Any })
@@ -414,7 +419,9 @@ case class GraftTopKExtract(state: Expression, k: Expression)
       s"graft_topk_extract needs a binary state, got ${dt.simpleString}")
   }
 
-  @transient private lazy val kV: Int = k.eval().asInstanceOf[Number].intValue()
+  // a bigint k beyond int range asks for every entry, like Int.MaxValue
+  @transient private lazy val kV: Int =
+    math.min(k.eval().asInstanceOf[Number].longValue(), Int.MaxValue.toLong).toInt
 
   override def dataType: DataType =
     ArrayType(GraftTopK.entryType, containsNull = false)

@@ -64,28 +64,33 @@ object VersionedTable {
     * routed re-aggregation, a DISTINCT over the baseline or a window
     * over it runs inside the scan's single task — one job instead of a
     * map stage, a shuffle and a reduce stage. Larger snapshots keep
-    * Spark's own split count. Filters still reach the scan: predicate
-    * pushdown moves a Filter below the coalesce's Repartition, so data
-    * and partition filters land on the scan unchanged. */
+    * their byte split count, floored at one task per file up to the
+    * parallelism. Filters still reach the scan: predicate pushdown
+    * moves a Filter below the coalesce's Repartition, so data and
+    * partition filters land on the scan unchanged. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val p = currentPath(dir).getOrElse(
       sys.error(s"versioned table at $dir has no current version"))
     relations.getOrElseUpdate((spark, p), pack(spark, spark.read.parquet(p)))
   }
 
-  /** Pack a whole-directory file read into its byte-derived split count:
-    * `coalesce(max(ceil(bytes / maxPartitionBytes), min(files,
-    * fileFloor)))`. With the default `fileFloor` of 1 that is Spark's
-    * own split count, ONE partition below one split: a floor of
-    * `min(files, parallelism)` here made every multi-file sub-split
-    * baseline read as several partitions, so each aggregate above it
-    * planned an Exchange that AQE ran as 2-3 jobs. Callers whose
-    * consumers are narrow per-row builds pass the parallelism as
-    * `fileFloor` to keep one task per file up to it (see
-    * [[graft.ops.BucketStore.packStore]]). Either way a no-op once files
-    * are split-sized. Predicates above the result still push to the scan
-    * (pinned by VersionedTableSpec), so pruned reads may pack too. */
-  private[graft] def pack(spark: SparkSession, df: DataFrame, fileFloor: Int = 1): DataFrame = {
+  /** Pack a whole-directory file read into a split count derived from
+    * its bytes: ONE partition when the files fit in one split
+    * (`ceil(bytes / maxPartitionBytes) <= 1`), else
+    * `max(ceil(bytes / maxPartitionBytes), min(files, parallelism))` —
+    * a no-op once files are split-sized, and at most `parallelism`
+    * tasks for many small files. The one-split case drops the file
+    * floor because it made every multi-file sub-split baseline read as
+    * several partitions, so each aggregate or window above it planned
+    * an Exchange that AQE ran as 2-3 jobs. Above one split the floor
+    * stays, so a snapshot of many files keeps a task per file up to the
+    * parallelism. Callers whose consumers are narrow per-row builds pass
+    * `oneBelowSplit = false` to keep the file floor below one split too
+    * (see [[graft.ops.BucketStore.packStore]]). Predicates above the
+    * result still push to the scan (pinned by VersionedTableSpec), so
+    * pruned reads may pack too. */
+  private[graft] def pack(spark: SparkSession, df: DataFrame,
+      oneBelowSplit: Boolean = true): DataFrame = {
     val files = df.inputFiles
     if (files.isEmpty) df
     else {
@@ -94,10 +99,12 @@ object VersionedTable {
           spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")))
       val totalBytes = files.map(f =>
         new java.io.File(new java.net.URI(f).getPath).length()).sum
-      val n = math.max(
-        (totalBytes + targetSplit - 1) / targetSplit,
-        math.min(files.length.toLong, fileFloor.toLong)).toInt
-      df.coalesce(math.max(1, n))
+      val splits = (totalBytes + targetSplit - 1) / targetSplit
+      val n =
+        if (oneBelowSplit && splits <= 1) 1L
+        else math.max(splits, math.min(files.length.toLong,
+          spark.sparkContext.defaultParallelism.toLong))
+      df.coalesce(math.max(1, n.toInt))
     }
   }
 

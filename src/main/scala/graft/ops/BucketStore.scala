@@ -130,24 +130,25 @@ private[graft] object BucketStore {
     }
 
   /** Pack a whole-store read of tiny files into sensibly-sized tasks:
-    * [[graft.mat.VersionedTable.pack]] with a file floor of the
-    * parallelism, so the read runs `max(ceil(bytes / split), min(files,
-    * parallelism))` tasks. A bucketed incremental store at fixture scale
-    * holds ~64 buckets x few-KB append files, and Spark's split packing
-    * charges each file the 4 MB openCostInBytes, so unpacked whole-store
-    * reads exploded into ~2-file tasks (q_passage_dedup_incremental: 774
-    * scan tasks, pure scheduler overhead). Lowering openCostInBytes
-    * globally was probed and rejected: it is also the split-size floor
-    * (maxSplitBytes = min(maxPartitionBytes, max(openCost,
-    * bytesPerCore))), so single-file fixture scans fragmented and the
-    * suite's total task count rose 6022->7041. The file floor is kept
+    * [[graft.mat.VersionedTable.pack]] with its file floor kept below
+    * one split too, so the read runs `max(ceil(bytes / split),
+    * min(files, parallelism))` tasks. A bucketed incremental store at
+    * fixture scale holds ~64 buckets x few-KB append files, and Spark's
+    * split packing charges each file the 4 MB openCostInBytes, so
+    * unpacked whole-store reads exploded into ~2-file tasks
+    * (q_passage_dedup_incremental: 774 scan tasks, pure scheduler
+    * overhead). Lowering openCostInBytes globally was probed and
+    * rejected: it is also the split-size floor (maxSplitBytes =
+    * min(maxPartitionBytes, max(openCost, bytesPerCore))), so
+    * single-file fixture scans fragmented and the suite's total task
+    * count rose 6022->7041. The file floor is kept below one split
     * here, not in the snapshot read, because these reads feed narrow
     * per-row builds (gram builds, label projections, probe joins) that
     * keep full parallelism only if the scan does; one partition would
     * serialize them into one task. At 100 TB store files are
     * split-sized and the byte term dominates — the coalesce is a no-op. */
   private[graft] def packStore(spark: SparkSession, df: DataFrame): DataFrame =
-    graft.mat.VersionedTable.pack(spark, df, spark.sparkContext.defaultParallelism)
+    graft.mat.VersionedTable.pack(spark, df, oneBelowSplit = false)
 
   /** Exact-count check: the snapshot was committed whole and is only
     * ever replaced whole (label rewrites, cell compactions). */

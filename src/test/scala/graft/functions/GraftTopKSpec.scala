@@ -130,6 +130,26 @@ class GraftTopKSpec extends SparkSpec {
     }
   }
 
+  test("a k far above the entry count returns every entry, sized by the state") {
+    // the heap is sized by min(k, entries): a k of 2^31-1 on a five-entry
+    // state must neither allocate k slots nor drop entries
+    val st = new GraftTopK.State(1000000)
+    Seq("a", "b", "b", "c", "c", "c", "d", "e").foreach(GraftTopK.update(st, _))
+    val got = GraftTopK.extract(GraftTopK.serialize(st), Int.MaxValue).array.toSeq.map { r =>
+      val row = r.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      (row.getUTF8String(0).toString, row.getLong(1))
+    }
+    assert(got == Seq("c" -> 3L, "b" -> 2L, "a" -> 1L, "d" -> 1L, "e" -> 1L))
+    // through SQL, with k as an int literal and as a bigint beyond int
+    // range (clamped to Int.MaxValue rather than wrapped negative)
+    val df = Seq("a", "b", "b").toDF("k").agg(expr("graft_topk_agg(k, 1000000)").as("st"))
+    for (k <- Seq("2000000000", "3000000000")) {
+      val items = df.select(explode(expr(s"graft_topk_extract(st, $k)")).as("e"))
+        .select("e.item").collect().map(_.getString(0)).toSeq
+      assert(items == Seq("b", "a"), s"k=$k")
+    }
+  }
+
   test("capacity mismatch between merged states fails loudly") {
     val a = new GraftTopK.State(4); val b = new GraftTopK.State(8)
     intercept[IllegalArgumentException] { GraftTopK.mergeInto(a, b) }

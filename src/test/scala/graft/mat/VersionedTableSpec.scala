@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 /** Snapshot reads packed to their byte-derived split count
   * ([[VersionedTable.pack]]): a snapshot within one split, one file or
   * several, reads as one partition, multi-split snapshots keep their
-  * parallelism, predicates still reach
-  * the scan, and a pointer flip is seen by the next read. */
+  * parallelism (a task per file up to it), predicates still reach the
+  * scan, and a pointer flip is seen by the next read. */
 class VersionedTableSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
@@ -77,6 +77,25 @@ class VersionedTableSpec extends SparkSpec {
     assert(files.forall(f => new java.io.File(new java.net.URI(f).getPath).length() > 16 * 1024))
     assert(df.rdd.getNumPartitions > 1)
     assert(df.count() == 20000)
+  }
+
+  test("a snapshot of many files above one split keeps a task per file up to the parallelism") {
+    // above one split the file floor stays: 8 small files of 2-3 splits
+    // together read as min(files, parallelism) partitions, not as their
+    // 2-3 byte splits
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+    val dir = tmp("graft-vt-floor")
+    VersionedTable.write(s.range(0, 3000, 1, 8).selectExpr("id", "rand(7) as r"), dir)
+    val df = VersionedTable.read(s, dir)
+    val files = df.inputFiles
+    val bytes = files.map(f => new java.io.File(new java.net.URI(f).getPath).length()).sum
+    val splits = (bytes + 16 * 1024 - 1) / (16 * 1024)
+    val par = s.sparkContext.defaultParallelism
+    assert(files.length == 8)
+    assert(splits >= 2 && splits < math.min(files.length, par), s"$bytes bytes, $splits splits")
+    assert(df.rdd.getNumPartitions == math.min(files.length, par))
+    assert(df.count() == 3000)
   }
 
   test("after the pointer flips, the next read sees the new version's rows") {
