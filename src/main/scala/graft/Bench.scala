@@ -157,7 +157,7 @@ object Bench {
       readings.foreach { case (k, v) => per(k) = per.getOrElse(k, Vector.empty) :+ v }
     }
     for (_ <- 1 to stageRuns) {
-      ExtQueries.clearStaging()
+      Staging.clear()
       ExtQueries.stageTimings.clear()
       ExtQueries.stageCounters.clear()
       stageOwners.foreach { case (name, fn) =>

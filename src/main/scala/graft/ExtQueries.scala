@@ -127,8 +127,6 @@ object ExtQueries {
       .orderBy("source")
   }
 
-  private val stagedDriftStore = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Incremental drift monitoring ([[graft.ops.DriftStore]]): docs with
     * `doc_id % 10 = 7` play the freshly-arrived crawl batch (the
     * incremental-dedup split), the rest the already-profiled corpus.
@@ -137,7 +135,7 @@ object ExtQueries {
     * oracle is the batch drift SQL over the full corpus, so the hash
     * gate IS the fold==rebuild contract. */
   def driftIncremental(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedDriftStore, dir, "graft_drift_store") { p =>
+    val path = Staging.perJvm("graft_drift_store", dir) { p =>
       val docs = Tables.documents(s, dir)
       val t0 = System.nanoTime()
       graft.ops.DriftStore.writeProfile(docs.filter(col("doc_id") % 10 =!= 7), p)
@@ -660,10 +658,7 @@ object ExtQueries {
     * via `graft_phrase(root, phrase)` — same raw-text oracle, so the
     * hash gate proves SQL == index-derived == text-derived. */
   def sqlPhrase(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedBm25Idx, dir, "graft_bm25_idx") { p =>
-      Bm25Index.writeState(
-        Tables.documents(s, dir).select("doc_id", "source", "text"), s"$p/state")
-    }
+    val path = bm25IdxState(s, dir)
     s.sql(
       s"""SELECT doc_id, source, n_hits
          |FROM graft_phrase('$path/state', 'small query line')
@@ -676,10 +671,7 @@ object ExtQueries {
     * probe plan inherits the DataFrame path's bucket pruning. Same
     * oracle as q_bm25/q_bm25_indexed: SQL == indexed == batch. */
   def sqlBm25(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedBm25Idx, dir, "graft_bm25_idx") { p =>
-      Bm25Index.writeState(
-        Tables.documents(s, dir).select("doc_id", "source", "text"), s"$p/state")
-    }
+    val path = bm25IdxState(s, dir)
     s.sql(
       s"""SELECT rank, doc_id, source, n_terms, score FROM (
          |  SELECT doc_id, source, n_terms, score,
@@ -688,61 +680,20 @@ object ExtQueries {
          |) WHERE rank <= 15 ORDER BY rank""".stripMargin)
   }
 
-  /** Structured-Streaming surface in the driver contract: watermarked
-    * tumbling-window agg over events driven by Trigger.AvailableNow into
-    * a memory sink. The append-mode result IS deterministic — after the
-    * final (empty) AvailableNow batch the watermark settles at
-    * max(ts) - delay, and exactly the windows with
-    * `window_end <= watermark` have been emitted — so it is oracled as
-    * batch SQL with that cutoff (streaming == batch is additionally
-    * spec-tested in StreamingSpec). */
-  /** Staged copies of the events table for streaming reads, keyed by
-    * source dir — written once per JVM so repeated invocations (bench
-    * loops, verify) don't pay a full table re-write each call. */
-  private val stagedEvents = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stage as a SINGLE parquet file: the file stream source then has
-    * exactly one file, so Trigger.AvailableNow processes all data in
-    * one microbatch (initial watermark 0 → nothing is late, no state
-    * evicted mid-stream) followed by the final empty batch that
+  /** The events table staged as a SINGLE parquet file: the file stream
+    * source then has exactly one file, so Trigger.AvailableNow processes
+    * all data in one microbatch (initial watermark 0 → nothing is late,
+    * no state evicted mid-stream) followed by the final empty batch that
     * settles the watermark. That makes BOTH streaming queries' final
     * states order-independent and batch-split-independent — the
     * property the DuckDB oracle needs. (Scan parallelism is unharmed:
-    * the batch still splits by maxPartitionBytes.)
-    *
-    * The staged copy is shared ACROSS JVMs at a deterministic path
-    * keyed by (source dir, source mtime): per-JVM temp dirs re-wrote
-    * up to hundreds of MB per verify/bench/test JVM and accumulated in
-    * /tmp forever. The mtime in the key invalidates the copy when a
-    * (writable) fixture is regenerated; concurrent JVMs race benignly
-    * — each stages into its own temp dir and the atomic rename's loser
-    * just uses the winner's copy. */
+    * the batch still splits by maxPartitionBytes.) Shared across JVMs
+    * ([[Staging.shared]]): per-JVM copies re-wrote up to hundreds of MB
+    * per verify/bench/test JVM. */
   private[graft] def stageEvents(s: SparkSession, dir: String): String =
-    stagedEvents.computeIfAbsent(dir, { d =>
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val mtime = Files.getLastModifiedTime(Paths.get(s"$d/events.parquet")).toMillis
-      // full MD5 of the (dir, mtime) pair — a 32-bit key could collide
-      // across fixtures/regenerations and silently serve the wrong
-      // events table (r5 review finding)
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d:$mtime".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val target = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_stage_events_$key")
-      if (!Files.exists(target.resolve("_SUCCESS"))) {
-        val tmp = Files.createTempDirectory("graft_stage_tmp")
-        Tables.events(s, d).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException
-             | _: java.nio.file.DirectoryNotEmptyException
-             | _: java.nio.file.AccessDeniedException =>
-            // concurrent staging won the rename; drop the loser's copy
-            // instead of leaking it in /tmp
-            org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-        }
-      }
-      target.toString
-    })
+    Staging.shared("graft_stage_events", dir, "events.parquet") { p =>
+      Tables.events(s, dir).coalesce(1).write.mode("overwrite").parquet(p)
+    }
 
   /** State-store parallelism for the staged-fixture streaming queries
     * (r8): a streaming query's state-store count is frozen at first
@@ -754,6 +705,14 @@ object ExtQueries {
     * cluster sizes this ≈ cores via the session setting instead. */
   private val StreamParts = 8
 
+  /** Structured-Streaming surface in the driver contract: watermarked
+    * tumbling-window agg over events driven by Trigger.AvailableNow into
+    * a memory sink. The append-mode result IS deterministic — after the
+    * final (empty) AvailableNow batch the watermark settles at
+    * max(ts) - delay, and exactly the windows with
+    * `window_end <= watermark` have been emitted — so it is oracled as
+    * batch SQL with that cutoff (streaming == batch is additionally
+    * spec-tested in StreamingSpec). */
   def streamWindow(s: SparkSession, dir: String): DataFrame = {
     val events = Tables.events(s, dir)
     val tmp = stageEvents(s, dir)
@@ -1197,8 +1156,6 @@ object ExtQueries {
         sum(length(col("new_text"))).as("kept_chars"))
       .orderBy("source")
 
-  private val stagedIncSegs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Incremental segment dedup ([[graft.ops.IncrementalSegments]]):
     * state built on the first id-quartile of the corpus, three folds
     * absorb the rest IN ID ORDER (the regime where first-observed ==
@@ -1206,7 +1163,7 @@ object ExtQueries {
     * keeper store — gated by the SAME oracle SQL as the batch query:
     * the hash match IS the fold == rebuild contract. */
   def passageDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedIncSegs, dir, "graft_inc_segs") { p =>
+    val path = Staging.perJvm("graft_inc_segs", dir) { p =>
       val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
       val t = quartileSplits(docs)
       val t0 = System.nanoTime()
@@ -1269,22 +1226,6 @@ object ExtQueries {
       |       CAST(sum(length(new_text)) AS BIGINT) AS kept_chars
       |FROM j GROUP BY source ORDER BY source""".stripMargin
 
-  /** MinHash candidate pairs staged to parquet once per source dir:
-    * q_dedup_minhash and q_ngram_jaccard both consume the same
-    * banding + verify pipeline — the most expensive text stage in the
-    * suite — and recomputing it per query doubled that cost whenever
-    * both ran (VERDICT r4). Same once-per-JVM staging pattern as
-    * [[stagedEvents]]; the first evaluation pays the pipeline, repeats
-    * replay the (tiny, pairs-only) parquet — visible as a fast tail in
-    * the bench's per-run arrays. */
-  private val stagedPairs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The shared per-(JVM, dir) staging idiom: build an artifact once
-    * into a fresh temp dir, replay thereafter. Per-JVM on purpose
-    * (cross-JVM reuse would let a bench record a previous process's
-    * replay as the pipeline cost) — so clean up on exit instead of
-    * accumulating a dir per JVM in /tmp. One definition, four users
-    * (minhash pairs, cluster labels ×2, the inc-dedup index). */
   /** Per-query staging-STAGE timings (seconds), recorded by staging
     * closures that conflate a one-time offline state build with the
     * recurring per-delta work. Bench surfaces these in its JSON so the
@@ -1313,48 +1254,16 @@ object ExtQueries {
     docs.stat.approxQuantile("doc_id", Array(0.25, 0.5, 0.75), 0.01)
       .map(_.toLong).toSeq
 
-  // every per-JVM staging registry, so [[clearStaging]] can reset them
-  // all — keep in sync with the `stagedTempDir` call sites
-  private lazy val stagingRegistries = Seq(
-    stagedDriftStore, stagedIncSegs, stagedPairs,
-    stagedIncIndex, stagedDsirStore, stagedBm25Idx, stagedBm25Inc,
-    stagedClusters, stagedIncSpans, stagedIncClusters, stagedStreamCur,
-    stagedLiveMetrics, stagedIvf, stagedIvfInc, stagedFpStore)
-
-  /** Drop every per-(JVM, dir) staged artifact so the NEXT invocation
-    * of each staged query re-runs its full staging pipeline into a
-    * fresh temp dir. This is the bench's dedicated stage-measurement
-    * lever (VERDICT r11 tasks 1/5): per-stage costs are re-measured
-    * n≥5 times by clearing between reps, instead of being n=1 samples
-    * inside a contended full sweep. Deletes the old temp dirs; the
-    * [[stageEvents]] copy, which other JVMs read, only leaves the map. */
-  def clearStaging(): Unit = {
-    stagingRegistries.foreach { reg =>
-      // FileUtils, not an uncloseable Files.walk stream: the walk held
-      // directory handles open (16 registries × stage reps leaked fds
-      // each bench pass — ADVICE r12; fd exhaustion is also the prime
-      // suspect behind the r12 soak's null listFiles)
-      reg.values().forEach { p =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-      }
-      reg.clear()
-    }
-    stagedEvents.clear()
-  }
-
-  private def stagedTempDir(
-      registry: java.util.concurrent.ConcurrentHashMap[String, String],
-      dir: String, prefix: String)(build: String => Unit): String =
-    registry.computeIfAbsent(dir, { _ =>
-      val p = java.nio.file.Files.createTempDirectory(prefix)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)))
-      build(p.toString)
-      p.toString
-    })
-
+  /** MinHash candidate pairs staged to parquet once per source dir:
+    * q_dedup_minhash and q_ngram_jaccard both consume the same
+    * banding + verify pipeline — the most expensive text stage in the
+    * suite — and recomputing it per query doubled that cost whenever
+    * both ran (VERDICT r4). Staged once per (JVM, dir)
+    * ([[Staging.perJvm]]); the first evaluation pays the pipeline, repeats
+    * replay the (tiny, pairs-only) parquet — visible as a fast tail in
+    * the bench's per-run arrays. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedPairs, dir, "graft_minhash_pairs") { p =>
+    val path = Staging.perJvm("graft_minhash_pairs", dir) { p =>
       val t0 = System.nanoTime()
       MinHashLSH.candidatePairs(Tables.documents(s, dir))
         .write.mode("overwrite").parquet(p)
@@ -1494,13 +1403,11 @@ object ExtQueries {
       |WHERE p.a_id % 10 = 7 OR p.b_id % 10 = 7
       |ORDER BY jaccard DESC, a_id, b_id LIMIT 20""".stripMargin
 
-  private val stagedIncIndex = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM corpus index build for [[dedupIncremental]] (the
     * "offline index job"; same per-JVM temp staging + cleanup as
     * [[minhashPairs]]). */
   private def stageIncIndex(s: SparkSession, dir: String): String =
-    stagedTempDir(stagedIncIndex, dir, "graft_inc_index") { p =>
+    Staging.perJvm("graft_inc_index", dir) { p =>
       IncrementalDedup.writeIndex(
         Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 7), p)
     }
@@ -1944,8 +1851,7 @@ object ExtQueries {
     * delta's gram bloom (the span fold's own trick); at result grain
     * the plain join is already gram-hash-bucket-prunable. */
   def noveltyIncremental(s: SparkSession, dir: String): DataFrame = {
-    dupSpansIncremental(s, dir) // ensure the staged fold-built state
-    val path = stagedIncSpans.get(dir)
+    val path = incSpansState(s, dir)
     val n = 8
     val dgs = Tables.documents(s, dir)
       .filter(col("doc_id") % 10 === 7)
@@ -2080,15 +1986,13 @@ object ExtQueries {
       |       CAST(max(doc_id) AS BIGINT) AS max_id
       |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  private val stagedFpStore = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Maintained fingerprint state ([[graft.ops.FingerprintStore]],
     * r12 — VERDICT r11 task 8): built on the `%10 != 7` docs, the rest
     * folds in, shared by the two state-served cards below. Text is
     * hashed once per document at ingest; the cards read fixed-width
     * stored rows. */
   private def fpState(s: SparkSession, dir: String): String =
-    stagedTempDir(stagedFpStore, dir, "graft_fp_store") { p =>
+    Staging.perJvm("graft_fp_store", dir) { p =>
       val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
       val t0 = System.nanoTime()
       graft.ops.FingerprintStore.writeState(
@@ -2112,7 +2016,7 @@ object ExtQueries {
     * re-hash — its own state, built + folded), the new side hashes
     * fresh. Same oracle SQL as q_corpus_diff. */
   def corpusDiffIncremental(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedFpStore, s"$dir#oldv", "graft_fp_oldv") { p =>
+    val path = Staging.perJvm("graft_fp_oldv", dir) { p =>
       val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
       val oldV = docs.filter(col("doc_id") % 10 =!= 3)
       val t0 = System.nanoTime()
@@ -2178,8 +2082,6 @@ object ExtQueries {
         |ORDER BY doc_id, chunk_id""".stripMargin)
   }
 
-  private val stagedDsirStore = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Incremental DSIR ([[graft.ops.DsirStore]]): the model counts fold
     * in three deterministic arrival batches (`doc_id % 3`), then the
     * full pool is scored FROM THE STORE. Oracle = the batch q_dsir SQL
@@ -2187,7 +2089,7 @@ object ExtQueries {
     * element-wise count sums make it hold under any arrival order). */
   def dsirIncremental(s: SparkSession, dir: String): DataFrame = {
     val pred = col("lang") === "en"
-    val path = stagedTempDir(stagedDsirStore, dir, "graft_dsir_store") { p =>
+    val path = Staging.perJvm("graft_dsir_store", dir) { p =>
       val docs = Tables.documents(s, dir)
       val t0 = System.nanoTime()
       DsirStore.writeCounts(docs.filter(col("doc_id") % 3 === 0), pred, s"$p/s")
@@ -2235,8 +2137,13 @@ object ExtQueries {
       .orderBy("rank")
   }
 
-  private val stagedBm25Idx = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val stagedBm25Inc = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The corpus BM25 index, staged once per (JVM, dir) and shared by
+    * the indexed, top-k, phrase and SQL-TVF cards. */
+  private def bm25IdxState(s: SparkSession, dir: String): String =
+    Staging.perJvm("graft_bm25_idx", dir) { p =>
+      Bm25Index.writeState(
+        Tables.documents(s, dir).select("doc_id", "source", "text"), s"$p/state")
+    }
 
   /** BM25 served from the persisted inverted index
     * ([[graft.ops.Bm25Index]], staged once per JVM/dir): the probe
@@ -2244,10 +2151,7 @@ object ExtQueries {
     * by the SAME oracle SQL as the batch query: the hash match proves
     * indexed == batch. */
   def bm25Indexed(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedBm25Idx, dir, "graft_bm25_idx") { p =>
-      Bm25Index.writeState(
-        Tables.documents(s, dir).select("doc_id", "source", "text"), s"$p/state")
-    }
+    val path = bm25IdxState(s, dir)
     bm25Card(Bm25Index.scoresFromState(s, s"$path/state", Bm25Probe))
   }
 
@@ -2256,8 +2160,13 @@ object ExtQueries {
     * maintained store — same oracle SQL, so the hash gate IS the
     * fold == rebuild contract (exact under ANY arrival order: every
     * index table is purely additive). */
-  def bm25Incremental(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedBm25Inc, dir, "graft_bm25_inc") { p =>
+  def bm25Incremental(s: SparkSession, dir: String): DataFrame =
+    bm25Card(Bm25Index.scoresFromState(s, s"${bm25IncState(s, dir)}/state", Bm25Probe))
+
+  /** The fold-built index behind [[bm25Incremental]], shared by the
+    * phrase and TF-IDF cards over the same maintained state. */
+  private def bm25IncState(s: SparkSession, dir: String): String =
+    Staging.perJvm("graft_bm25_inc", dir) { p =>
       val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
       val t = quartileSplits(docs)
       val t0 = System.nanoTime()
@@ -2283,8 +2192,6 @@ object ExtQueries {
         "fold_compacted_buckets" ->
           (graft.ops.BucketStore.compactedBuckets.sum() - c0))
     }
-    bm25Card(Bm25Index.scoresFromState(s, s"$path/state", Bm25Probe))
-  }
 
   /** Exact top-15 via MaxScore dynamic pruning
     * ([[graft.ops.Bm25Index.topKFromState]]): the probe mixes one rare
@@ -2294,10 +2201,7 @@ object ExtQueries {
     * changes nothing while only fully scoring the rare term's
     * matches. */
   def bm25TopK(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedBm25Idx, dir, "graft_bm25_idx") { p =>
-      Bm25Index.writeState(
-        Tables.documents(s, dir).select("doc_id", "source", "text"), s"$p/state")
-    }
+    val path = bm25IdxState(s, dir)
     val top = Bm25Index.topKFromState(s, s"$path/state", Bm25TopKProbe, k = 15)
     bm25Card(top)
   }
@@ -2311,8 +2215,7 @@ object ExtQueries {
     * oracle as q_phrase_search, so the hash gate proves the positional
     * postings survive the fold path occurrence-for-occurrence too. */
   def phraseSearchIncremental(s: SparkSession, dir: String): DataFrame = {
-    bm25Incremental(s, dir) // ensure the staged fold-built index exists
-    val path = stagedBm25Inc.get(dir)
+    val path = bm25IncState(s, dir)
     Bm25Index.phraseFromState(s, s"$path/state", "small query line")
       .orderBy(col("n_hits").desc, col("doc_id"))
   }
@@ -2326,8 +2229,7 @@ object ExtQueries {
     * contract), so the hash gate proves index-served == recompute
     * across the writeState + 3-folds build. */
   def tfidfIncremental(s: SparkSession, dir: String): DataFrame = {
-    bm25Incremental(s, dir) // ensure the staged fold-built index exists
-    val path = stagedBm25Inc.get(dir)
+    val path = bm25IncState(s, dir)
     Bm25Index.tfidfFromState(s, s"$path/state").orderBy("doc_id", "rk")
   }
 
@@ -2336,8 +2238,7 @@ object ExtQueries {
     * k)`, same raw-text oracle — the hash gate proves SQL ==
     * index-served == recompute. */
   def sqlTfidf(s: SparkSession, dir: String): DataFrame = {
-    bm25Incremental(s, dir) // ensure the staged fold-built index exists
-    val path = stagedBm25Inc.get(dir)
+    val path = bm25IncState(s, dir)
     s.sql(
       s"""SELECT doc_id, rk, word, score
          |FROM graft_tfidf('$path/state', 3)
@@ -2376,10 +2277,7 @@ object ExtQueries {
     * hits from RAW TEXT (a token-trigram scan), so the hash gate
     * proves index-derived == text-derived occurrence-for-occurrence. */
   def phraseSearch(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedBm25Idx, dir, "graft_bm25_idx") { p =>
-      Bm25Index.writeState(
-        Tables.documents(s, dir).select("doc_id", "source", "text"), s"$p/state")
-    }
+    val path = bm25IdxState(s, dir)
     Bm25Index.phraseFromState(s, s"$path/state", "small query line")
       .orderBy(col("n_hits").desc, col("doc_id"))
   }
@@ -2668,14 +2566,6 @@ object ExtQueries {
       |ORDER BY shared_prints DESC, a_id, b_id
       |LIMIT 20""".stripMargin
 
-  /** Duplicate-cluster resolution: transitively merge docs linked by
-    * shared structural keys (first-3-words, last-3-words) into
-    * connected components; each doc gets its cluster's canonical id
-    * (min doc_id — the survivor a dedup stage keeps) + cluster size.
-    * Oracled: DuckDB computes the same fixpoint with a recursive CTE
-    * (min reachable label over the symmetric edge set). */
-  private val stagedClusters = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The cluster graph's structural keys: first-3-words and
     * last-3-words of each document (shared by the batch and the
     * incremental cluster queries — key identity is (column, value)).
@@ -2705,7 +2595,7 @@ object ExtQueries {
     * the downstream canonicalization step — replays the parquet
     * instead of re-running the fixpoint. */
   private def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedClusters, dir, "graft_dedup_clusters") { p =>
+    val path = Staging.perJvm("graft_dedup_clusters", dir) { p =>
       val tcc0 = System.nanoTime()
       val keyed = clusterKeyed(s, dir)
       val edges = ConnectedComponents.keyEdges(keyed, "doc_id", Seq("k1", "k2"))
@@ -2735,6 +2625,12 @@ object ExtQueries {
     graft.ops.BucketStore.readLiveDir(s, path)
   }
 
+  /** Duplicate-cluster resolution: transitively merge docs linked by
+    * shared structural keys (first-3-words, last-3-words) into
+    * connected components; each doc gets its cluster's canonical id
+    * (min doc_id — the survivor a dedup stage keeps) + cluster size.
+    * Oracled: DuckDB computes the same fixpoint with a recursive CTE
+    * (min reachable label over the symmetric edge set). */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     clusterLabels(s, dir).orderBy("doc_id")
 
@@ -2771,8 +2667,6 @@ object ExtQueries {
       |FROM islands GROUP BY doc_id, island
       |ORDER BY doc_id, span_start""".stripMargin
 
-  private val stagedIncSpans = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Incremental span maintenance end-to-end ([[graft.ops
     * .IncrementalSpans]]): docs with `doc_id % 10 = 7` play the
     * freshly-arrived batch, the rest the already-indexed corpus. The
@@ -2780,8 +2674,14 @@ object ExtQueries {
     * the query replays the maintained span store — the oracle is the
     * BATCH span SQL over the full corpus, so the hash gate IS the
     * fold==rebuild contract. */
-  def dupSpansIncremental(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedIncSpans, dir, "graft_inc_spans") { p =>
+  def dupSpansIncremental(s: SparkSession, dir: String): DataFrame =
+    graft.ops.IncrementalSpans.readSpans(s, incSpansState(s, dir))
+      .orderBy("doc_id", "span_start")
+
+  /** The fold-built span state behind [[dupSpansIncremental]], whose
+    * gram-df store also serves [[noveltyIncremental]]. */
+  private def incSpansState(s: SparkSession, dir: String): String =
+    Staging.perJvm("graft_inc_spans", dir) { p =>
       val docs = Tables.documents(s, dir)
       val t0 = System.nanoTime()
       graft.ops.IncrementalSpans.writeState(
@@ -2793,8 +2693,6 @@ object ExtQueries {
         "write_state" -> (t1 - t0) / 1e9,
         "fold" -> (System.nanoTime() - t1) / 1e9)
     }
-    graft.ops.IncrementalSpans.readSpans(s, path).orderBy("doc_id", "span_start")
-  }
 
   /** Span-coverage corpus card: per source, how much token mass sits
     * inside exact-substring duplicate spans — the "what fraction of
@@ -2900,8 +2798,6 @@ object ExtQueries {
       .orderBy("source_a", "source_b")
   }
 
-  private val stagedIncClusters = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Incremental cluster maintenance end-to-end (r9): docs with
     * `doc_id % 10 = 7` play the freshly-arrived delta (the
     * [[dedupIncremental]] split), the rest the already-labeled corpus.
@@ -2916,7 +2812,7 @@ object ExtQueries {
     * applyDelta(delta) equals batch CC over corpus ∪ delta = all
     * documents, so the hash gate proves incremental == batch. */
   private def incClusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedIncClusters, dir, "graft_inc_clusters") { p =>
+    val path = Staging.perJvm("graft_inc_clusters", dir) { p =>
       // quality rides INTO the store (computed once per doc at ingest,
       // r9) so canonicalization is a view over the slim store — the
       // incremental manifest below never re-touches document text
@@ -3033,8 +2929,6 @@ object ExtQueries {
       .select("doc_id", "source", "stage")
   }
 
-  private val stagedStreamCur = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The FULL ingest daemon end-to-end (r12 — this query used to drive
     * only the dedup+clusters families; it now drains
     * [[graft.streaming.ContinuousIngest]] with ALL NINE): docs with
@@ -3054,7 +2948,7 @@ object ExtQueries {
   // private[graft] (r18): DaemonStatusContentSpec re-reads the staged
   // daemon's ledger files independently to field-gate q_daemon_status
   private[graft] def streamCurState(s: SparkSession, dir: String): String =
-    stagedTempDir(stagedStreamCur, dir, "graft_stream_cur") { p =>
+    Staging.perJvm("graft_stream_cur", dir) { p =>
       val docs = Tables.documents(s, dir)
       val t0 = System.nanoTime()
       val daemon = streamCurLayout(p)
@@ -3116,8 +3010,6 @@ object ExtQueries {
          |ORDER BY family""".stripMargin)
   }
 
-  private val stagedLiveMetrics = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Catalog hosting the corpus metric view over a staged feed dir;
     * cheap to reconstruct — build state (markBuilt + rollup versions +
     * stream checkpoint) lives on disk under `$p/work`. Re-binds the
@@ -3149,7 +3041,7 @@ object ExtQueries {
     * partials. The oracle computes the same numbers from the raw
     * corpus — fold == rebuild composed with routing, hash-gated. */
   def liveMetrics(s: SparkSession, dir: String): DataFrame = {
-    val path = stagedTempDir(stagedLiveMetrics, dir, "graft_live_metrics") { p =>
+    val path = Staging.perJvm("graft_live_metrics", dir) { p =>
       val docs = Tables.documents(s, dir)
       (0 to 2).foreach(i => docs.filter(col("doc_id") % 3 === i)
         .coalesce(1).write.parquet(s"$p/feed/b$i"))
@@ -3442,38 +3334,17 @@ object ExtQueries {
       .orderBy("query_id", "rank")
   }
 
-  private val stagedIvf = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Idempotently train + persist the IVF index artifacts for `dir`'s
     * embeddings table (the "offline index job"): model text file +
-    * cell-partitioned parquet layout, keyed by (dir, mtime) like
-    * [[stageEvents]], atomic-rename so concurrent stagings agree. */
+    * cell-partitioned parquet layout, shared across JVMs like
+    * [[stageEvents]]. */
   private[graft] def stageIvfIndex(s: SparkSession, dir: String): String =
-    stagedIvf.computeIfAbsent(dir, { d =>
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val mtime = Files.getLastModifiedTime(Paths.get(s"$d/embeddings.parquet")).toMillis
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"ivf:$d:$mtime".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val target = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_stage_ivf_$key")
-      if (!Files.exists(target.resolve("ivf_centroids.txt"))) {
-        val tmp = Files.createTempDirectory("graft_stage_ivf_tmp")
-        val emb = Tables.embeddings(s, d)
-        val model = IvfIndex.train(emb)
-        IndexStore.saveIvf(model, tmp.toString)
-        IvfIndex.writeIndexed(emb, s"$tmp/layout", model)
-        try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException
-             | _: java.nio.file.DirectoryNotEmptyException
-             | _: java.nio.file.AccessDeniedException =>
-            org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-        }
-      }
-      target.toString
-    })
-
-  private val stagedIvfInc = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Staging.shared("graft_stage_ivf", dir, "embeddings.parquet") { p =>
+      val emb = Tables.embeddings(s, dir)
+      val model = IvfIndex.train(emb)
+      IndexStore.saveIvf(model, p)
+      IvfIndex.writeIndexed(emb, s"$p/layout", model)
+    }
 
   /** Incremental ANN index maintenance end-to-end (r10, VERDICT r9
     * task 1): embeddings with `vec_id % 10 = 7` play the freshly-
@@ -3492,7 +3363,7 @@ object ExtQueries {
     * pillar). Staged once per (JVM, dir); the train/fold stage split
     * is recorded for the bench artifact. */
   def annIvfIncremental(s: SparkSession, dir: String): DataFrame = {
-    val staged = stagedTempDir(stagedIvfInc, dir, "graft_ivf_inc") { p =>
+    val staged = Staging.perJvm("graft_ivf_inc", dir) { p =>
       val emb = Tables.embeddings(s, dir)
       val corpus = emb.filter(col("vec_id") % 10 =!= 7)
       val t0 = System.nanoTime()

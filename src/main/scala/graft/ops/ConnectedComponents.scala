@@ -95,10 +95,6 @@ object ConnectedComponents {
   def run(nodes: DataFrame, edges: DataFrame, maxIter: Int = 50,
           checkEvery: Int = 2, deltaThreshold: Long = 100000): DataFrame = {
     require(checkEvery >= 1)
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    val tRun0 = System.nanoTime()
-    def mark(label: String): Unit = if (debug)
-      println(f"[cc] $label at ${(System.nanoTime() - tRun0) / 1e9}%.2f s")
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
@@ -140,7 +136,6 @@ object ConnectedComponents {
     // LogicalRDD over the persisted iterate — the RDD reads the cache
     // lazily; within a window the plan holds ≤ 2^checkEvery copies of
     // that flat root, which is bounded and tiny.
-    mark("init plans built")
     // NO flatten on the init labels: flatten's toRdd pays full
     // physical planning + driver codegen of the (uncached) upstream
     // pipeline — ~1.5 s at sf0.1 — which window 1's action would then
@@ -202,11 +197,7 @@ object ConnectedComponents {
         .select(col("id"), col("component"),
           (col("component") < col("prev")).as("__changed"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val tw0 = System.nanoTime()
       changed = upd.filter(col("__changed")).count()
-      if (debug)
-        println(f"[cc] frontier round ${iter + 1}: " +
-          f"${(System.nanoTime() - tw0) / 1e9}%.2f s, changed=$changed")
       persisted.unpersist(false)
       persisted = upd
       // each round references the previous iterate TWICE (frontier
@@ -258,19 +249,13 @@ object ConnectedComponents {
       val next = cur
       // ONE action materializes (and caches) all `steps` rounds and
       // reads off the final round's convergence bit
-      mark(s"window to ${iter + steps}: plans built")
-      val tw0 = System.nanoTime()
       changed = next.filter(col("__changed")).count()
-      if (debug)
-        println(f"[cc] window rounds ${iter + 1}-${iter + steps}: " +
-          f"${(System.nanoTime() - tw0) / 1e9}%.2f s, changed=$changed")
       windowCaches.dropRight(1).foreach(_.unpersist(false))
       persisted.unpersist(false)
       persisted = next
       // __changed rides along so a following frontier round can read
       // its frontier straight off the flat root
       labels = org.apache.spark.sql.GraftBridge.flatten(next)
-      mark(s"window to ${iter + steps}: flatten done")
       iter += steps
       frontierReady = true
      }

@@ -298,10 +298,6 @@ object IncrementalClusters {
       nBuckets: Int = 64, compactKeysAt: Int = 32,
       microCcDriverLimit: Long = 4000000L,
       foldId: Option[String] = None): Option[GuardedFold] = {
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    val t0 = System.nanoTime()
-    def mark(l: String): Unit = if (dbg)
-      println(f"[inccc] $l at ${(System.nanoTime() - t0) / 1e9}%.2f s")
     requireParams(path, nBuckets, keyCols)
     val labelsRoot = s"$path/labels"
     val keysRoot = s"$path/keys"
@@ -417,7 +413,6 @@ object IncrementalClusters {
         .join(broadcast(hit.select("kidx", "k")), Seq("kidx", "k"), "left_anti"),
       actions = 2)
 
-    mark("pre-collect")
     // 5. ONE fused action (r10): a tagged-union collect returns the
     // (delta-bounded) micro graph, the delta id list, and every scalar
     // the fold needs — the new-key append gate and the delta-contract
@@ -542,7 +537,6 @@ object IncrementalClusters {
           stats.filter(_.getString(0) == "bucket").map(_.getLong(1).toInt).toSeq.sorted,
           stat("new_keys"))
       }
-    mark("fused-collect")
     lastTouchedBuckets = touched.size
     if (touched.isEmpty) { // empty delta: nothing to fold
       cleanupCaches()
@@ -646,7 +640,6 @@ object IncrementalClusters {
       rewritten.repartition(col("cbucket"))
         .write.partitionBy("cbucket").parquet(stage.toString)
     } catch { case scala.util.control.NonFatal(err) => rollbackKeyAppend(err) }
-    mark("stage-write")
     try {
     // ...then the next snapshot assembles WITHOUT touching the live
     // one: staged touched buckets move in (an emptied touched bucket
@@ -700,18 +693,14 @@ object IncrementalClusters {
     if (appendedKeyFiles.nonEmpty)
       BucketStore.recordManifest(curKeysDir, "keys",
         BucketStore.countFlatData(curKeysDir))
-    mark("key-append")
     // the fold ledger commits WITH the flip (written into the next
     // version dir first — the DriftStore atomicity pattern)
     java.nio.file.Files.write(
       nextDir.toPath.resolve("_applied_folds"),
       (appliedLedger ++ foldId).mkString("\n").getBytes("UTF-8"))
     SnapshotRoot.flipAndGc(labelsRoot, nextV)
-    mark("snapshot-flip")
     cleanupCaches()
-    mark("unpersist")
-    compactKeys(spark, keysRoot, compactKeysAt, dbg)
-    mark("keys-compact")
+    compactKeys(spark, keysRoot, compactKeysAt)
     }
     } catch { case e: Throwable =>
       // commit failure: the pointer never flipped (the store stays on
@@ -738,11 +727,10 @@ object IncrementalClusters {
     * pointer-flip contract as the label swap. Target file count tracks
     * data volume (~64 MB each), not the session's task width. */
   private def compactKeys(spark: SparkSession, keysRoot: String,
-      threshold: Int, dbg: Boolean = false): Unit = {
+      threshold: Int): Unit = {
     val cur = new java.io.File(SnapshotRoot.currentDir(keysRoot))
     val parts = SnapshotRoot.listDir(cur)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    if (dbg) println(s"[inccc] keys files: ${parts.length} (threshold $threshold)")
     if (parts.length <= threshold) return
     // a compaction reads the whole live index — refuse a short listing
     // rather than commit a truncated next version (r14)

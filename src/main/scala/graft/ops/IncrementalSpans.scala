@@ -197,10 +197,6 @@ object IncrementalSpans {
   private[graft] def prepareFold(spark: SparkSession, root: String,
       delta: DataFrame, n: Int = 8, nBuckets: Int = 64,
       foldId: Option[String] = None): Option[GuardedFold] = {
-    val dbg = sys.env.contains("GRAFT_SPANS_DEBUG")
-    val tStart = System.nanoTime()
-    def mark(l: String): Unit = if (dbg)
-      println(f"[incspans] $l at ${(System.nanoTime() - tStart) / 1e9}%.2f s")
     val cur = SnapshotRoot.currentDir(root)
     val applied = ledgerOf(cur)
     if (foldId.exists(applied.contains)) return None // replayed: no-op
@@ -231,10 +227,6 @@ object IncrementalSpans {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    def timed[T](l: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      try f finally mark(f"$l took ${(System.nanoTime - t0) / 1e9}%.2f")
-    }
     def append(table: String, bucketCol: String, deltaRows: DataFrame,
         compact: DataFrame => DataFrame, schema: org.apache.spark.sql.types.StructType): Unit =
       BucketStore.append(spark, cur, nextDir, table, bucketCol,
@@ -257,19 +249,19 @@ object IncrementalSpans {
     // rare duplicate pair row; readers distinct/semi-join, harmless)
     val deltaPairs = dgs.select(xxhash64(col("g")).as("gh"), col("doc_id"))
     val appends = Seq(
-      Future(timed("w-grams")(append("grams", "gbucket",
+      Future(append("grams", "gbucket",
         deltaPairs.withColumn("gbucket", gbucket(col("gh"), nBuckets)),
-        identity, gramsSchema))),
-      Future(timed("w-gramdf")(append("gramdf", "gbucket",
+        identity, gramsSchema)),
+      Future(append("gramdf", "gbucket",
         dgs.select(col("g"), lit(1L).as("df"))
           .withColumn("gbucket", gbucket(xxhash64(col("g")), nBuckets)),
         rows => rows.groupBy("g", "gbucket").agg(sum("df").as("df"))
           .select("g", "df", "gbucket"),
-        gramdfSchema))),
-      Future(timed("w-docs")(append("docs", "dbucket",
+        gramdfSchema)),
+      Future(append("docs", "dbucket",
         d.select("doc_id", "text") // never persist shared token columns
           .withColumn("dbucket", dbucket(col("doc_id"), nBuckets)),
-        identity, docsSchema))))
+        identity, docsSchema)))
 
     def cleanup(): Unit = {
       try appends.foreach(f => Await.ready(f, Duration.Inf))
@@ -322,7 +314,6 @@ object IncrementalSpans {
           .select(lit("touched").as("t"), lit(0L).as("a"), lit(0L).as("b"),
             col("arr")))
       Some(GuardedFold(legs, meta => try {
-      mark("guard-collect")
       val stats = GuardedFold.one(meta, "stats")
       require(stats.getLong(1) == stats.getLong(2),
         s"delta has ${stats.getLong(1)} rows but ${stats.getLong(2)} distinct " +
@@ -364,12 +355,6 @@ object IncrementalSpans {
         .groupBy("g").agg(sum("df").as("df"))
       val newSpans = Persists.cacheFor(
         spansFrom(affGrams, newDf.filter(col("df") >= 2), n), 64)
-      if (dbg) { // dissect: materialize the re-derive apart from the write
-        val t0 = System.nanoTime()
-        val (nt, ns) = (touchedDocs.count(), newSpans.count())
-        mark(f"newSpans compute took ${(System.nanoTime - t0) / 1e9}%.2f " +
-          s"(touched=$nt spans=$ns)")
-      }
 
       // the spans table alone needs delete+insert semantics (affected
       // docs' old rows must go), so it keeps the rewrite-touched-
@@ -398,11 +383,10 @@ object IncrementalSpans {
         .select("doc_id", "span_start", "span_end", "n_docs_max")
         .unionByName(newSpans)
         .withColumn("dbucket", dbucket(col("doc_id"), nBuckets))
-      timed("w-spans")(BucketStore.rewrite(cur, nextDir, "spans", "dbucket",
-        spanBuckets.toIndexedSeq, touchedSpanRows))
+      BucketStore.rewrite(cur, nextDir, "spans", "dbucket",
+        spanBuckets.toIndexedSeq, touchedSpanRows)
 
       appends.foreach(Await.result(_, Duration.Inf))
-      mark("writes-done")
 
       // the ledger commits WITH the flip: written into the next
       // version dir before the pointer moves (the DriftStore

@@ -214,13 +214,6 @@ object StreamingOps {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      // measurement aid (r19, guide §1): per-microbatch duration split
-      // — where the replay's fixed cost goes (planning vs WAL commit vs
-      // addBatch). Opt-in; never on in the driver-contract mains.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream] $sinkName batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durations=${p.durationMs}"))
     } finally {
       statePartitions.foreach(_ =>
         spark.conf.set("spark.sql.shuffle.partitions", prev))

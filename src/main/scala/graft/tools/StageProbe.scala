@@ -225,7 +225,7 @@ object StageProbe {
       currentFamily = "streamcur"
       println(s"== stream_curation (n=$reps) ==")
       for (r <- 1 to reps) {
-        graft.ExtQueries.clearStaging()
+        graft.Staging.clear()
         graft.ExtQueries.stageTimings.clear()
         println(s" rep $r")
         timed("total") { measure.sink(graft.ExtQueries.streamCuration(spark, sfDir)) }

@@ -451,8 +451,17 @@ class StreamingSpec extends SparkSpec {
   test("clearStaging keeps the cross-JVM staged events copy") {
     // another JVM that memoized this path before the clear still reads it
     val staged = graft.ExtQueries.stageEvents(s, sfDir)
-    graft.ExtQueries.clearStaging()
+    graft.Staging.clear()
     assert(new java.io.File(staged, "_SUCCESS").exists(), s"$staged lost its _SUCCESS")
     assert(graft.ExtQueries.stageEvents(s, sfDir) == staged)
+  }
+
+  test("clearStaging keeps the cross-JVM staged IVF index") {
+    // the IVF index sits at the same kind of shared path as the events copy
+    val staged = graft.ExtQueries.stageIvfIndex(s, sfDir)
+    graft.Staging.clear()
+    assert(new java.io.File(staged, "ivf_centroids.txt").exists(),
+      s"$staged lost its ivf_centroids.txt")
+    assert(graft.ExtQueries.stageIvfIndex(s, sfDir) == staged)
   }
 }
