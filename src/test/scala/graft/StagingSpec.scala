@@ -14,12 +14,6 @@ class StagingSpec extends AnyFunSuite {
   private def marked(p: String): Unit =
     Files.writeString(new File(p, "built").toPath, "x")
 
-  private def withSourceDir[T](f: String => T): T = {
-    val dir = Files.createTempDirectory("staging_src")
-    Files.writeString(dir.resolve("source.txt"), "x")
-    try f(dir.toString) finally FileUtils.deleteQuietly(dir.toFile)
-  }
-
   test("the same (name, dir) returns the same path without rebuilding") {
     var builds = 0
     val a = Staging.perJvm("staging_spec_once", "/d") { p => builds += 1; marked(p) }
@@ -37,25 +31,29 @@ class StagingSpec extends AnyFunSuite {
   }
 
   test("clear deletes per-JVM dirs, keeps shared ones, and the next call rebuilds") {
-    withSourceDir { dir =>
-      var sharedBuilds = 0
-      def shared() = Staging.shared("staging_spec_shared", dir, "source.txt") { p =>
-        sharedBuilds += 1; marked(p)
-      }
-      val jvm1 = Staging.perJvm("staging_spec_jvm1", dir)(marked)
-      val jvm2 = Staging.perJvm("staging_spec_jvm2", dir)(marked)
-      val sh = shared()
-      try {
-        Staging.clear()
-        assert(!new File(jvm1).exists() && !new File(jvm2).exists())
-        assert(new File(sh, "built").exists())
-        val again = Staging.perJvm("staging_spec_jvm1", dir)(marked)
-        assert(again != jvm1)
-        assert(new File(again, "built").exists())
-        // the shared copy is still on disk, so forgetting it costs no rebuild
-        assert(shared() == sh)
-        assert(sharedBuilds == 1)
-      } finally FileUtils.deleteQuietly(new File(sh))
+    val src = Files.createTempDirectory("staging_src")
+    Files.writeString(src.resolve("source.txt"), "x")
+    val dir = src.toString
+    var sharedBuilds = 0
+    def shared() = Staging.shared("staging_spec_shared", dir, "source.txt") { p =>
+      sharedBuilds += 1; marked(p)
+    }
+    val jvm1 = Staging.perJvm("staging_spec_jvm1", dir)(marked)
+    val jvm2 = Staging.perJvm("staging_spec_jvm2", dir)(marked)
+    val sh = shared()
+    try {
+      Staging.clear()
+      assert(!new File(jvm1).exists() && !new File(jvm2).exists())
+      assert(new File(sh, "built").exists())
+      val again = Staging.perJvm("staging_spec_jvm1", dir)(marked)
+      assert(again != jvm1)
+      assert(new File(again, "built").exists())
+      // the shared copy is still on disk, so forgetting it costs no rebuild
+      assert(shared() == sh)
+      assert(sharedBuilds == 1)
+    } finally {
+      FileUtils.deleteQuietly(new File(sh))
+      FileUtils.deleteQuietly(src.toFile)
     }
   }
 
