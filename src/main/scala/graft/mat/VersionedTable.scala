@@ -1,18 +1,14 @@
 package graft.mat
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import graft.ops.SnapshotRoot
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.jdk.CollectionConverters._
 
-/** Versioned parquet table with an atomically-flipped current-version
-  * pointer — the engine's stand-in for a transactional table format
-  * (which is what a 100 TB deployment would use for its rollup/baseline
-  * caches).
-  *
-  * Layout: `<dir>/v<N>/` complete parquet snapshots plus `<dir>/_current`
-  * containing the live version name. A writer materializes the NEXT
-  * version directory in full and only then flips `_current` with an
-  * atomic rename, so:
+/** Versioned parquet table — a rollup or baseline snapshot committed
+  * through [[graft.ops.SnapshotRoot]], the engine's stand-in for a
+  * transactional table format (which is what a 100 TB deployment would
+  * use for its rollup/baseline caches). A writer materializes the NEXT
+  * version in full and only then flips the pointer, so:
   *
   *  - a reader that resolved the pointer before the flip keeps reading
   *    the previous, complete snapshot — the reference's `mode: relaxed`
@@ -22,18 +18,14 @@ import scala.jdk.CollectionConverters._
   *    `mode("overwrite")` deletes the directory before rewriting it —
   *    a concurrent scan mid-overwrite fails or returns partial rows).
   *
-  * Old versions are garbage-collected on write, keeping one previous
-  * snapshot for in-flight readers.
+  * On top of the commit protocol this object keeps what a rollup
+  * needs: the per-version relation cache, split packing and the
+  * `_rowcount` stat.
   */
 object VersionedTable {
 
-  private def pointer(dir: String): Path = Paths.get(dir, "_current")
-
   /** The live version name (e.g. "v3"), if the table exists. */
-  def currentVersion(dir: String): Option[String] =
-    if (Files.exists(pointer(dir)))
-      Some(new String(Files.readAllBytes(pointer(dir))).trim)
-    else None
+  def currentVersion(dir: String): Option[String] = SnapshotRoot.liveVersion(dir)
 
   def exists(dir: String): Boolean = currentVersion(dir).isDefined
 
@@ -108,46 +100,23 @@ object VersionedTable {
     }
   }
 
-  /** Write `df` as the next version and atomically flip the pointer. */
-  def write(df: DataFrame, dir: String, extras: Map[String, String] = Map.empty): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val curN = currentVersion(dir).map(versionNumber).getOrElse(0L)
-    val next = s"v${curN + 1}"
-    df.write.mode("overwrite").parquet(s"$dir/$next")
-    // caller metadata ("_"-prefixed, invisible to the parquet reader)
-    // lands INSIDE the version dir before the flip — atomic with the
-    // data, the DriftStore ledger pattern (e.g. applied-fold ledgers)
-    extras.foreach { case (name, content) =>
-      require(name.startsWith("_"), s"extra file '$name' must be _-prefixed")
-      Files.write(Paths.get(dir, next, name), content.getBytes)
-    }
-    // snapshot stats, captured while the version is being produced: the
-    // count-star re-read is answered from parquet footer metadata (no
-    // row scan), and routing uses it to pick the CHEAPEST covering
-    // rollup by actual size rather than by dimension count. Stored
-    // inside the version dir ("_"-prefixed files are invisible to the
-    // parquet reader), so stats flip atomically with the data.
-    val rows = df.sparkSession.read.parquet(s"$dir/$next").count()
-    Files.write(Paths.get(dir, next, "_rowcount"), rows.toString.getBytes)
-    val tmp = Paths.get(dir, "_current.tmp")
-    Files.write(tmp, next.getBytes)
-    Files.move(tmp, pointer(dir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    // GC: drop snapshots older than the one just superseded (that one
-    // stays for readers that resolved the pointer before the flip)
-    listVersions(dir).filter(versionNumber(_) < curN)
-      .foreach { v =>
-        deleteRecursively(Paths.get(dir, v))
-        evict(s"$dir/$v") // a later destroy+rebuild could reuse the name
-      }
-  }
-
-  /** Drop cached relations for a version path that no longer exists —
-    * destroy+rebuild restarts numbering at v1, so a stale entry under a
-    * reused path would serve the OLD snapshot's file index. */
-  private def evict(pathPrefix: String): Unit =
-    relations.keys.filter(_._2.startsWith(pathPrefix))
-      .foreach(relations.remove)
+  /** Write `df` as the next version and commit it: `foldId` lands in
+    * the version's fold ledger, and a `foldId` already there no-ops
+    * without evaluating `df`. Cached relations of the versions the GC
+    * deletes are evicted (a later destroy+rebuild could reuse a name). */
+  def write(df: => DataFrame, dir: String, foldId: Option[String] = None): Unit =
+    SnapshotRoot.fold(dir, foldId) { next =>
+      val frame = df
+      frame.write.mode("overwrite").parquet(next.dir)
+      // snapshot stats, captured while the version is being produced:
+      // the count-star re-read is answered from parquet footer metadata
+      // (no row scan), and routing uses it to pick the CHEAPEST covering
+      // rollup by actual size rather than by dimension count. Stored
+      // inside the version dir ("_"-prefixed files are invisible to the
+      // parquet reader), so stats flip atomically with the data.
+      val rows = frame.sparkSession.read.parquet(next.dir).count()
+      Files.write(Paths.get(next.dir, "_rowcount"), rows.toString.getBytes)
+    }.foreach(v => relations.keys.filter(_._2 == s"$dir/$v").foreach(relations.remove))
 
   /** Row count of the live snapshot, if its write recorded one (tables
     * written before stats existed simply report None — routing then
@@ -156,26 +125,12 @@ object VersionedTable {
     currentPath(dir).map(p => Paths.get(p, "_rowcount")).filter(Files.exists(_))
       .map(p => new String(Files.readAllBytes(p)).trim.toLong)
 
-  /** Remove the table entirely (spec invalidation). */
+  /** Remove the table entirely (spec invalidation). Numbering restarts
+    * at v1 on rebuild, so every cached relation under `dir` goes too —
+    * a stale entry under a reused path would serve the OLD snapshot's
+    * file index. */
   def destroy(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p)) deleteRecursively(p)
-    evict(s"$dir/") // numbering restarts at v1 on rebuild
-  }
-
-  private def versionNumber(v: String): Long = v.drop(1).toLong
-
-  private def listVersions(dir: String): Seq[String] = {
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) Nil
-    else Files.list(p).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.matches("v\\d+")).toSeq
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toSeq.foreach(deleteRecursively)
-    Files.deleteIfExists(p)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    relations.keys.filter(_._2.startsWith(s"$dir/")).foreach(relations.remove)
   }
 }

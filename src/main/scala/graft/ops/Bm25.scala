@@ -193,20 +193,12 @@ object Bm25Index {
 
   /** The bucket count the index at `root` was built with — for
     * callers (the SQL TVF) that identify an index by path alone. */
-  def storedBuckets(root: String): Int = {
-    val p = java.nio.file.Paths.get(root, "_params")
-    require(java.nio.file.Files.exists(p), s"no bm25 index at $root")
-    new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      .trim.stripPrefix("nBuckets=").toInt
-  }
+  def storedBuckets(root: String): Int =
+    SnapshotRoot.params(root).stripPrefix("nBuckets=").toInt
 
-  private def requireSameParams(root: String, nBuckets: Int): Unit = {
-    val p = java.nio.file.Paths.get(root, "_params")
-    val stored = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-    require(stored == paramsLine(nBuckets),
-      s"bm25-index params mismatch: store has '$stored', caller wants " +
-        s"'${paramsLine(nBuckets)}' — a mismatched bucket count probes the wrong dirs")
-  }
+  private def requireSameParams(root: String, nBuckets: Int): Unit =
+    SnapshotRoot.requireParams(root, paramsLine(nBuckets),
+      "a mismatched bucket count probes the wrong dirs")
 
   /** The four index tables for a batch of docs (no store read). The tf
     * frame is cached for the four table writes (the fold posture —
@@ -249,32 +241,22 @@ object Bm25Index {
   /** Batch-build the index from `docs` (doc_id, source, text). */
   def writeState(docs: DataFrame, root: String, nBuckets: Int = 64): Unit = {
     val (postings, dfP, doclen, stats) = derive(docs, nBuckets)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val v1 = s"$root/v1"
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Seq(
-      Future(Bucketing.writePartitioned(postings, s"$v1/postings", Seq("wbucket"))),
-      Future(Bucketing.writePartitioned(dfP, s"$v1/df", Seq("wbucket"))),
-      Future(Bucketing.writePartitioned(doclen, s"$v1/doclen", Seq("dbucket"))),
-      Future(Bucketing.writePartitioned(stats, s"$v1/stats", Seq("sbucket"))))
-      .foreach(Await.result(_, Duration.Inf))
-    // guard the FIRST fold too (r13): record each table's commit
-    // manifest at init, not only from the first append on
-    Seq("postings", "df", "doclen", "stats")
-      .foreach(BucketStore.initManifest(v1, _))
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_params"),
-      paramsLine(nBuckets).getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_current"),
-      "v1".getBytes("UTF-8"))
-  }
-
-  private def ledgerOf(dir: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(dir, "_applied_folds")
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).toSeq
-    else Seq.empty[String]
+    SnapshotRoot.seed(root) { v1 =>
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      Seq(
+        Future(Bucketing.writePartitioned(postings, s"$v1/postings", Seq("wbucket"))),
+        Future(Bucketing.writePartitioned(dfP, s"$v1/df", Seq("wbucket"))),
+        Future(Bucketing.writePartitioned(doclen, s"$v1/doclen", Seq("dbucket"))),
+        Future(Bucketing.writePartitioned(stats, s"$v1/stats", Seq("sbucket"))))
+        .foreach(Await.result(_, Duration.Inf))
+      // guard the FIRST fold too (r13): record each table's commit
+      // manifest at init, not only from the first append on
+      Seq("postings", "df", "doclen", "stats")
+        .foreach(BucketStore.initManifest(v1, _))
+      SnapshotRoot.writeParams(root, paramsLine(nBuckets))
+    }
   }
 
   /** Fold one arrival batch (doc_id, source, text): guard (delta-
@@ -296,58 +278,29 @@ object Bm25Index {
       delta: DataFrame, nBuckets: Int = 64,
       foldId: Option[String] = None): Option[GuardedFold] = {
     requireSameParams(root, nBuckets)
-    val cur = SnapshotRoot.currentDir(root)
-    val applied = ledgerOf(cur)
-    if (foldId.exists(applied.contains)) return None // replayed: no-op
-
-    val d = Persists.cacheFor(
-      TextOps.keepTokens(delta, "doc_id", "source", "text"), 64)
-    // ONE fused guard collect (r13, VERDICT r12 task 4 — was two
-    // serialized driver round-trips): delta-contract stats + the
-    // id-overlap guard as a tagged union. The overlap leg semi-joins
-    // the whole doclen store against the broadcast delta ids instead
-    // of dbucket-literal pruning — a realistic delta's ids hash into
-    // every bucket, so the pruning bought nothing while forcing the
-    // stats collect to complete first (the FingerprintStore posture).
-    val legs = d.agg(count(lit(1)).as("a"),
-        count_distinct(col("doc_id")).as("b"))
-      .select(lit("stats").as("t"), col("a"), col("b"), GuardedFold.noArr)
-      .unionByName(BucketStore.readChecked(spark, doclenSchema, cur, "doclen")
-        .join(broadcast(d.select("doc_id")), Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)).as("a"))
-        .select(lit("overlap").as("t"), col("a"), lit(0L).as("b"),
-          GuardedFold.noArr))
-    Some(GuardedFold(legs, meta => {
-      val dstats = GuardedFold.one(meta, "stats")
-      require(dstats.getLong(1) == dstats.getLong(2),
-        s"delta has ${dstats.getLong(1)} rows but ${dstats.getLong(2)} distinct doc ids")
-      require(GuardedFold.one(meta, "overlap").getLong(1) == 0L,
-        s"${GuardedFold.one(meta, "overlap").getLong(1)} delta doc_id(s) already present — " +
-          "delta ids must be new")
-
-      val (postings, dfP, doclen, stats) = derive(d, nBuckets)
-      val next = SnapshotRoot.nextVersion(root)
-      val nextDir = s"$root/$next"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(nextDir))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(nextDir))
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Seq(
-        Future(BucketStore.append(spark, cur, nextDir, "postings", "wbucket",
-          postings, identity, postingsSchema)),
-        Future(BucketStore.append(spark, cur, nextDir, "df", "wbucket",
-          dfP, sumDf, dfSchema)),
-        Future(BucketStore.append(spark, cur, nextDir, "doclen", "dbucket",
-          doclen, identity, doclenSchema)),
-        Future(BucketStore.append(spark, cur, nextDir, "stats", "sbucket",
-          stats, sumStats, statsSchema)))
-        .foreach(Await.result(_, Duration.Inf))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(nextDir, "_applied_folds"),
-        (applied ++ foldId).mkString("\n").getBytes("UTF-8"))
-      SnapshotRoot.flipAndGc(root, next)
-    }))
+    SnapshotRoot.begin(root, foldId).map { fold =>
+      val cur = fold.liveDir
+      val d = Persists.cacheFor(
+        TextOps.keepTokens(delta, "doc_id", "source", "text"), 64)
+      // ONE fused guard collect (r13, VERDICT r12 task 4 — was two
+      // serialized driver round-trips). The overlap leg semi-joins the
+      // whole doclen store against the broadcast delta ids instead of
+      // dbucket-literal pruning — a realistic delta's ids hash into
+      // every bucket, so the pruning bought nothing while forcing the
+      // stats collect to complete first.
+      GuardedFold.newIds(fold, d,
+          BucketStore.readChecked(spark, doclenSchema, cur, "doclen")) { _ =>
+        val (postings, dfP, doclen, stats) = derive(d, nBuckets)
+        fold.async(BucketStore.append(spark, cur, fold.dir, "postings", "wbucket",
+          postings, identity, postingsSchema))
+        fold.async(BucketStore.append(spark, cur, fold.dir, "df", "wbucket",
+          dfP, sumDf, dfSchema))
+        fold.async(BucketStore.append(spark, cur, fold.dir, "doclen", "dbucket",
+          doclen, identity, doclenSchema))
+        fold.async(BucketStore.append(spark, cur, fold.dir, "stats", "sbucket",
+          stats, sumStats, statsSchema))
+      }
+    }
   }
 
   /** Score `query` from the maintained index — [[Bm25.scores]] output,

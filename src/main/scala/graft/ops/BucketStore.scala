@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Both stage under `_`-prefixed dirs inside the NEXT version dir, so
   * a crash anywhere leaves the current snapshot untouched (the caller
-  * flips the pointer last — the SnapshotRoot contract). */
+  * commits the [[SnapshotRoot.Fold]] last). Metadata-scale flat stores
+  * instead rewrite whole per fold ([[seedFlat]], [[mergeFold]]). */
 private[graft] object BucketStore {
 
   /** Telemetry: total oversized-bucket compactions performed by
@@ -107,6 +108,31 @@ private[graft] object BucketStore {
     * BucketStore table layout (label/cell/keys stores). */
   def recordManifest(versionDir: String, table: String, count: Int): Unit =
     writeManifest(versionDir, table, count)
+
+  /** Seed a metadata-scale flat store at `root`: `df` as one file in
+    * `v1`, with its commit manifest — [[mergeFold]] reads the whole live
+    * table, so the first fold is guarded against a short listing too. */
+  def seedFlat(root: String, table: String, df: DataFrame): Unit =
+    SnapshotRoot.seed(root) { v1 =>
+      df.repartition(1).write.parquet(v1)
+      recordManifest(v1, table, countFlatData(v1))
+    }
+
+  /** Fold a [[seedFlat]] store by rewriting it whole: one file in the
+    * next version holding `merge` of the live rows (the merge folds the
+    * delta in). The live rows are read from EXACTLY the manifest-checked
+    * files ([[readExact]] rationale): the merge REPLACES the store, so a
+    * silently short listing would truncate it permanently. A `foldId`
+    * already in the ledger no-ops — the rows carry no document identity,
+    * so a replayed batch would otherwise double-count. */
+  def mergeFold(spark: SparkSession, root: String, table: String,
+      foldId: Option[String])(merge: DataFrame => DataFrame): Unit =
+    SnapshotRoot.fold(root, foldId) { next =>
+      val live = dataFiles(new java.io.File(next.liveDir)).map(_.toString).toIndexedSeq
+      requireManifest(next.liveDir, table, live.length)
+      merge(spark.read.parquet(live: _*)).repartition(1).write.parquet(next.dir)
+      recordManifest(next.dir, table, countFlatData(next.dir))
+    }
 
   /** Read EXACTLY the given data files — never a fresh directory
     * listing. `spark.read.parquet(dir)` does its OWN listing, and that

@@ -42,67 +42,20 @@ object DriftStore {
 
   /** Initialize the store from a full corpus scan (the one-time
     * baseline build — an offline job at scale). */
-  def writeProfile(docs: DataFrame, root: String): Unit = {
-    SnapshotRoot.initRoot(root, profileOf(docs).repartition(1), Nil)
-    // commit manifest at init (r14): the merge-rewrite fold reads the
-    // WHOLE live profile through Spark's directory listing, so a
-    // silently short listing would drop profile rows into the next
-    // version — the same truncation class the id-guarded stores refuse
-    BucketStore.recordManifest(s"$root/v1", "profile",
-      BucketStore.countFlatData(s"$root/v1"))
-  }
+  def writeProfile(docs: DataFrame, root: String): Unit =
+    BucketStore.seedFlat(root, "profile", profileOf(docs))
 
   /** Fold a delta batch: one delta scan, merged with the stored
     * profile by (sum, graft_hist_merge) — exact, so sequential folds
     * compose and order never matters. Commits as the next snapshot
-    * version with an atomic pointer flip; a leftover partial next
-    * directory from a crashed fold is cleared first (the SnapshotRoot
-    * contract every sibling writer follows — without it the store
-    * would wedge on 'path already exists' forever after one crash).
-    *
-    * `foldId`: the profile rows carry no document identity, so a
-    * REPLAYED batch (stream restart, rerun over the same feed) would
-    * silently double-count — unlike the id-guarded folds
-    * (IncrementalDedup/Clusters/Spans), which fail loudly. Callers
-    * with a replay-able source pass a stable batch id; ids already
-    * recorded in the live snapshot's ledger no-op (idempotent replay).
-    * The ledger is written INTO the next version dir before the flip,
-    * so it commits atomically with the data. */
+    * version ([[BucketStore.mergeFold]]). `foldId`: callers with a
+    * replay-able source pass a stable batch id; a replayed id no-ops. */
   def applyDelta(spark: SparkSession, root: String, delta: DataFrame,
-      foldId: Option[String] = None): Unit = {
-    val cur = SnapshotRoot.currentDir(root)
-    val ledgerOf = (dir: String) => {
-      val p = java.nio.file.Paths.get(dir, "_applied_folds")
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).toSeq
-      else Seq.empty[String]
-    }
-    val applied = ledgerOf(cur)
-    if (foldId.exists(applied.contains)) return // replay: already folded
-
-    // manifest guard (r14): refuse the merge if the live profile's
-    // fresh listing disagrees with the count the committing fold
-    // recorded — a short listing here would silently drop rows
-    val liveFiles = SnapshotRoot.listDir(new java.io.File(cur))
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(_.toString).toIndexedSeq
-    BucketStore.checkManifest(cur, "profile", liveFiles.length)
-    // read EXACTLY the manifest-checked files (BucketStore.readExact
-    // rationale): this merge REPLACES the whole profile, so a silently
-    // short spark.read listing would truncate it permanently
-    val merged = spark.read.parquet(liveFiles: _*).unionByName(profileOf(delta))
-      .groupBy("source", "lang")
-      .agg(sum("c").as("c"), expr("graft_hist_merge(h)").as("h"))
-    val next = SnapshotRoot.nextVersion(root)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$root/$next"))
-    merged.repartition(1).write.parquet(s"$root/$next")
-    BucketStore.recordManifest(s"$root/$next", "profile",
-      BucketStore.countFlatData(s"$root/$next"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/$next", "_applied_folds"),
-      (applied ++ foldId).mkString("\n").getBytes("UTF-8"))
-    SnapshotRoot.flipAndGc(root, next)
-  }
+      foldId: Option[String] = None): Unit =
+    BucketStore.mergeFold(spark, root, "profile", foldId)(
+      _.unionByName(profileOf(delta))
+        .groupBy("source", "lang")
+        .agg(sum("c").as("c"), expr("graft_hist_merge(h)").as("h")))
 
   /** The live profile (readers pin the resolved snapshot; Spark's
     * planned listing is manifest-checked — VERDICT r15 task 2). */

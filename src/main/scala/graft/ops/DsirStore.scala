@@ -15,40 +15,30 @@ import org.apache.spark.sql.functions._
   * fold==rebuild holds by construction (q_dsir_incremental hash-gates
   * it against the batch SQL). Like [[DriftStore]], the store is
   * metadata-scale, so each fold rewrites it whole into the next
-  * [[SnapshotRoot]] version (atomic pointer flip, one superseded
-  * version retained, GC); a replayed batch no-ops via the fold-id
-  * ledger committed inside the version directory.
+  * [[SnapshotRoot]] version ([[BucketStore.mergeFold]]); a replayed
+  * batch no-ops.
   *
   * The target predicate is the caller's contract: folds must tag
   * deltas with the SAME predicate the store was initialized with
   * (it cannot be serialized — it is an arbitrary Column). The bucket
-  * count IS stored and enforced (`_params`, the [[Bm25Index]] guard
-  * pattern): a mismatched B would hash features into different
-  * buckets and silently corrupt the model. */
+  * count IS stored and enforced ([[SnapshotRoot.requireParams]]): a
+  * mismatched B would hash features into different buckets and
+  * silently corrupt the model. */
 object DsirStore {
 
   private def paramsLine(buckets: Int) = s"dsir v1 buckets=$buckets"
 
-  private def requireSameParams(root: String, buckets: Int): Unit = {
-    val p = java.nio.file.Paths.get(root, "_params")
-    val stored = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-    require(stored == paramsLine(buckets),
-      s"dsir-store params mismatch: store has '$stored', caller wants " +
-        s"'${paramsLine(buckets)}' — mismatched buckets corrupt the model")
-  }
+  private def requireSameParams(root: String, buckets: Int): Unit =
+    SnapshotRoot.requireParams(root, paramsLine(buckets),
+      "mismatched buckets corrupt the model")
 
   /** Initialize from a corpus scan (the one-time model fit). */
   def writeCounts(docs: DataFrame, targetPred: Column, root: String,
       buckets: Int = 4096, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val dbc = Dsir.docBucketCounts(docs, targetPred, buckets, idCol, textCol, Nil)
-    SnapshotRoot.initRoot(root, Dsir.modelOf(dbc).repartition(1), Nil)
-    // commit manifest at init (r14, the DriftStore rule): the fold's
-    // merge-rewrite reads the whole live model — refuse short listings
-    BucketStore.recordManifest(s"$root/v1", "model",
-      BucketStore.countFlatData(s"$root/v1"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_params"),
-      paramsLine(buckets).getBytes("UTF-8"))
+    BucketStore.seedFlat(root, "model", Dsir.modelOf(dbc))
+    SnapshotRoot.writeParams(root, paramsLine(buckets))
   }
 
   /** Fold a delta batch's counts into the stored model — one delta
@@ -58,36 +48,10 @@ object DsirStore {
       targetPred: Column, buckets: Int = 4096, idCol: String = "doc_id",
       textCol: String = "text", foldId: Option[String] = None): Unit = {
     requireSameParams(root, buckets)
-    val cur = SnapshotRoot.currentDir(root)
-    val ledger = java.nio.file.Paths.get(cur, "_applied_folds")
-    val applied =
-      if (java.nio.file.Files.exists(ledger))
-        java.nio.file.Files.readAllLines(ledger).toArray(Array.empty[String]).toSeq
-      else Seq.empty[String]
-    if (foldId.exists(applied.contains)) return // replay: already folded
-
-    // manifest guard (r14): a short listing of the live model would
-    // silently drop bucket counts into the merged next version
-    val liveFiles = SnapshotRoot.listDir(new java.io.File(cur))
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(_.toString).toIndexedSeq
-    BucketStore.checkManifest(cur, "model", liveFiles.length)
-    val deltaModel = Dsir.modelOf(
-      Dsir.docBucketCounts(delta, targetPred, buckets, idCol, textCol, Nil))
-    // read EXACTLY the manifest-checked files (BucketStore.readExact
-    // rationale): the merge REPLACES the whole model — a silently
-    // short spark.read listing would truncate it permanently
-    val merged = spark.read.parquet(liveFiles: _*).unionByName(deltaModel)
-      .groupBy("b").agg(sum("tc").as("tc"), sum("rc").as("rc"))
-    val next = SnapshotRoot.nextVersion(root)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$root/$next"))
-    merged.repartition(1).write.parquet(s"$root/$next")
-    BucketStore.recordManifest(s"$root/$next", "model",
-      BucketStore.countFlatData(s"$root/$next"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/$next", "_applied_folds"),
-      (applied ++ foldId).mkString("\n").getBytes("UTF-8"))
-    SnapshotRoot.flipAndGc(root, next)
+    BucketStore.mergeFold(spark, root, "model", foldId)(
+      _.unionByName(Dsir.modelOf(
+          Dsir.docBucketCounts(delta, targetPred, buckets, idCol, textCol, Nil)))
+        .groupBy("b").agg(sum("tc").as("tc"), sum("rc").as("rc")))
   }
 
   /** The live model counts (readers pin the resolved snapshot; Spark's

@@ -27,8 +27,9 @@ import org.apache.spark.sql.types._
   * TEXT is read exactly once per document, at ingest. Folds are pure
   * O(delta) appends ([[BucketStore.append]] — hard-links + O(delta)
   * file moves, per-bucket compaction), with the engine's standard
-  * new-ids guard and applied-fold ledger, so the store drops into
-  * [[graft.streaming.ContinuousIngest]] as another family unchanged.
+  * new-ids guard ([[GuardedFold.newIds]]) and fold ledger, so the
+  * store drops into [[graft.streaming.ContinuousIngest]] as another
+  * family unchanged.
   *
   * Equivalence contract (the oracle gates): after any fold sequence
   * covering the corpus, [[splitLeakageCard]] equals the batch card
@@ -69,21 +70,11 @@ object FingerprintStore {
 
   /** Offline build: fingerprint state for `docs` at `root` (the table
     * lives under `v<N>/fps` like every BucketStore-managed root). */
-  def writeState(docs: DataFrame, root: String, nBuckets: Int = 64): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    Bucketing.writePartitioned(rows(docs, nBuckets), s"$root/v1/fps",
-      Seq("dbucket"))
-    BucketStore.initManifest(s"$root/v1", "fps") // first-fold guard (r13)
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_current"),
-      "v1".getBytes("UTF-8"))
-  }
-
-  private def ledgerOf(dir: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(dir, "_applied_folds")
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).toSeq
-    else Seq.empty[String]
-  }
+  def writeState(docs: DataFrame, root: String, nBuckets: Int = 64): Unit =
+    SnapshotRoot.seed(root) { v1 =>
+      Bucketing.writePartitioned(rows(docs, nBuckets), s"$v1/fps", Seq("dbucket"))
+      BucketStore.initManifest(v1, "fps") // first-fold guard (r13)
+    }
 
   /** Fold one arrival batch (doc_id, source, text): new-ids guard
     * (broadcast semi over the store), then one O(delta) append. */
@@ -97,41 +88,18 @@ object FingerprintStore {
   private[graft] def prepareFold(spark: SparkSession, root: String,
       delta: DataFrame, nBuckets: Int = 64,
       foldId: Option[String] = None): Option[GuardedFold] = {
-    val cur = SnapshotRoot.currentDir(root)
-    val applied = ledgerOf(cur)
-    if (foldId.exists(applied.contains)) return None // replayed: no-op
-
-    val d = Persists.cacheFor(rows(delta, nBuckets), 2)
-    // ONE fused guard collect: delta-contract stats + the id-overlap
-    // guard (broadcast semi over the store — a realistic delta's ids
-    // hash into every bucket, so literal pruning bought nothing)
-    val legs = d.agg(count(lit(1)).as("a"),
-        count_distinct(col("doc_id")).as("b"))
-      .select(lit("stats").as("t"), col("a"), col("b"), GuardedFold.noArr)
-      .unionByName(BucketStore.readChecked(spark, schema, cur, "fps")
-        .join(broadcast(d.select("doc_id")), Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)).as("a"))
-        .select(lit("overlap").as("t"), col("a"), lit(0L).as("b"),
-          GuardedFold.noArr))
-    Some(GuardedFold(legs, meta => {
-      val stats = GuardedFold.one(meta, "stats")
-      require(stats.getLong(1) == stats.getLong(2),
-        s"delta has ${stats.getLong(1)} rows but ${stats.getLong(2)} distinct doc ids")
-      require(GuardedFold.one(meta, "overlap").getLong(1) == 0L,
-        s"${GuardedFold.one(meta, "overlap").getLong(1)} delta doc_id(s) already present — " +
-          "delta ids must be new")
-
-      val next = SnapshotRoot.nextVersion(root)
-      val nextDir = s"$root/$next"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(nextDir))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(nextDir))
-      BucketStore.append(spark, cur, nextDir, "fps", "dbucket", d,
-        identity, schema)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(nextDir, "_applied_folds"),
-        (applied ++ foldId).mkString("\n").getBytes("UTF-8"))
-      SnapshotRoot.flipAndGc(root, next)
-    }))
+    SnapshotRoot.begin(root, foldId).map { fold =>
+      val cur = fold.liveDir
+      val d = Persists.cacheFor(rows(delta, nBuckets), 2)
+      // the overlap guard is a broadcast semi over the store — a
+      // realistic delta's ids hash into every bucket, so literal
+      // pruning bought nothing
+      GuardedFold.newIds(fold, d,
+          BucketStore.readChecked(spark, schema, cur, "fps")) { _ =>
+        BucketStore.append(spark, cur, fold.dir, "fps", "dbucket", d,
+          identity, schema)
+      }
+    }
   }
 
   /** The live fingerprint table (manifest-checked exact read — a

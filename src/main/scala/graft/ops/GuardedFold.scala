@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** A store fold split at its guard collect (r14, VERDICT r13 task 4).
@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * version) and rethrows — no family commits, every store stays on its
   * complete live snapshot, and the stream's retry re-runs the batch
   * under the per-family ledgers exactly as before. A failed commit
-  * cleans up inside its own closure (each store's existing contract).
+  * abandons its own next version ([[SnapshotRoot.Fold.abandon]]).
   */
 private[graft] final case class GuardedFold(
     legs: DataFrame,
@@ -58,6 +58,35 @@ private[graft] object GuardedFold {
     require(rs.length == 1,
       s"guard tag '$t' expected exactly one row, got ${rs.length}")
     rs.head
+  }
+
+  /** The fold of an id-keyed store into `fold`'s next version. The
+    * guard collects two legs over the delta's `doc_id`s — "stats" (rows,
+    * distinct ids, and `statsArr` for the store's own use) and
+    * "overlap" (ids already in `store`) — plus the store's `extra`
+    * legs. The commit refuses a delta whose ids are not distinct and
+    * new, then runs `body` and commits `fold`; any failure, in the
+    * commit or the collect, abandons the next version. */
+  def newIds(fold: SnapshotRoot.Fold, delta: DataFrame, store: DataFrame,
+      statsArr: Column = noArr, extra: Seq[DataFrame] = Nil)(
+      body: Map[String, Array[Row]] => Unit): GuardedFold = {
+    val legs = (delta.agg(count(lit(1)).as("a"),
+          count_distinct(col("doc_id")).as("b"), statsArr.as("arr"))
+        .select(lit("stats").as("t"), col("a"), col("b"), col("arr")) +:
+      store.join(broadcast(delta.select("doc_id")), Seq("doc_id"), "left_semi")
+        .agg(count(lit(1)).as("a"))
+        .select(lit("overlap").as("t"), col("a"), lit(0L).as("b"), noArr) +:
+      extra).reduce(_.unionByName(_))
+    GuardedFold(legs, meta => fold.orAbandon {
+      val stats = one(meta, "stats")
+      require(stats.getLong(1) == stats.getLong(2),
+        s"delta has ${stats.getLong(1)} rows but ${stats.getLong(2)} distinct doc ids")
+      val overlap = one(meta, "overlap").getLong(1)
+      require(overlap == 0L,
+        s"$overlap delta doc_id(s) already present — delta ids must be new")
+      body(meta)
+      fold.commit()
+    }, abort = () => fold.abandon())
   }
 
   /** One store folding alone: collect its own legs, then commit —

@@ -14,11 +14,7 @@ import org.apache.spark.sql.functions._
   * batch touches only the clusters it actually connects to.
   *
   * Persisted state (written once by [[writeState]], the offline job).
-  * Both stores are VERSIONED ROOTS since r10 — a `_current` pointer
-  * file names the live snapshot directory, the
-  * [[graft.mat.VersionedTable]] contract (write the next snapshot in
-  * full, flip the pointer last with an atomic rename, GC all but the
-  * superseded version):
+  * Both stores are [[SnapshotRoot]] versioned roots since r10:
   *  - `labels/v<N>/` — (doc_id, component, carried…), Hive-partitioned
   *    by `cbucket = pmod(component, nBuckets)`. Partitioning by the
   *    COMPONENT hash is the load-bearing choice: every row of a
@@ -42,16 +38,9 @@ import org.apache.spark.sql.functions._
   * in — a crash between the two lost buckets. Now the next snapshot
   * directory is built in full first (touched buckets move in from the
   * staging write; untouched bucket files are HARD-LINKED — a metadata
-  * op per file, O(nBuckets), never a data copy, and links share the
-  * inode so the bytes and mtime stay identical), and only then does
-  * the `_current` pointer flip. A crash anywhere before the flip
-  * leaves readers on the complete old snapshot; a leftover partial
-  * next-version directory is deleted and rebuilt by the next fold. A
-  * reader that resolved the pointer before a fold keeps reading its
-  * pinned, complete snapshot (one superseded version is retained, as
-  * in VersionedTable). At 100 TB the same contract rides a
-  * transactional table format's snapshot commit; the pointer file is
-  * this engine's stand-in.
+  * op per file, O(nBuckets), never a data copy) and committed through
+  * [[SnapshotRoot]], so a crash anywhere before the pointer flip
+  * leaves readers on the complete old snapshot.
   *
   * Per-delta-batch cost ([[applyDelta]]), by stage:
   *  1. delta key explosion + per-key delta-min window: O(delta);
@@ -126,8 +115,7 @@ object IncrementalClusters {
   @volatile private[graft] var lastMicroCcOnDriver: Boolean = false
 
   // ----------------------------------------------- versioned roots
-  // (the snapshot machinery lives in [[SnapshotRoot]], shared with the
-  // IVF cell layout since r10)
+  // (the snapshot machinery lives in [[SnapshotRoot]])
 
   /** Live labels snapshot directory (spec + staging observability). */
   private[graft] def currentLabelsDir(path: String): String =
@@ -173,16 +161,17 @@ object IncrementalClusters {
     // repartition by the partition column first: a default-partitioned
     // frame writes |tasks|×|buckets| tiny files (measured 12 s of a
     // 19 s writeState at sf0.1); clustered, each bucket dir gets one
-    SnapshotRoot.initRoot(s"$path/labels",
-      withCarry.select((col("id").as("doc_id") +: col("component") +:
-          carryCols.map(col) :+
-          pmod(col("component"), lit(nBuckets.toLong)).cast("int").as("cbucket")): _*)
-        .repartition(col("cbucket")),
-      Seq("cbucket"))
-    // commit manifest at init (r14, VERDICT r13 task 1): the FIRST fold
-    // is guarded against silent listing truncation too
-    BucketStore.recordManifest(s"$path/labels/v1", "labels",
-      BucketStore.countPartitionedData(s"$path/labels/v1"))
+    SnapshotRoot.seed(s"$path/labels") { v1 =>
+      Bucketing.writePartitioned(
+        withCarry.select((col("id").as("doc_id") +: col("component") +:
+            carryCols.map(col) :+
+            pmod(col("component"), lit(nBuckets.toLong)).cast("int").as("cbucket")): _*)
+          .repartition(col("cbucket")),
+        v1, Seq("cbucket"))
+      // commit manifest at init (r14, VERDICT r13 task 1): the FIRST
+      // fold is guarded against silent listing truncation too
+      BucketStore.recordManifest(v1, "labels", BucketStore.countPartitionedData(v1))
+    }
     // size the initial key-index layout like compactKeys does (~64 MB
     // files): the groupBy otherwise lands one file per shuffle task,
     // and a small corpus then starts AT the compaction threshold — the
@@ -192,11 +181,11 @@ object IncrementalClusters {
       keyRows(corpus, idCol, keyCols)
         .groupBy("kidx", "k").agg(min("doc_id").as("min_id")), 2)
     val keyFiles = math.max(1L, keys.count() / 2500000L).toInt
-    SnapshotRoot.initRoot(s"$path/keys", keys.repartition(keyFiles), Nil)
-    BucketStore.recordManifest(s"$path/keys/v1", "keys",
-      BucketStore.countFlatData(s"$path/keys/v1"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(path).resolve("params"),
-      paramsLine(nBuckets, keyCols).getBytes("UTF-8"))
+    SnapshotRoot.seed(s"$path/keys") { v1 =>
+      keys.repartition(keyFiles).write.parquet(v1)
+      BucketStore.recordManifest(v1, "keys", BucketStore.countFlatData(v1))
+    }
+    SnapshotRoot.writeParams(path, paramsLine(nBuckets, keyCols))
   }
 
   /** The current label table (doc_id, component, carried…, cbucket),
@@ -226,17 +215,10 @@ object IncrementalClusters {
   private def paramsLine(nBuckets: Int, keyCols: Seq[String]): String =
     s"nBuckets=$nBuckets keyCols=${keyCols.mkString(",")} layout=versioned"
 
-  private def requireParams(path: String, nBuckets: Int, keyCols: Seq[String]): Unit = {
-    val p = java.nio.file.Paths.get(path).resolve("params")
-    require(java.nio.file.Files.exists(p),
-      s"no params file at $path — not a writeState artifact")
-    val stored = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-    val probe = paramsLine(nBuckets, keyCols)
-    require(stored == probe,
-      s"cluster state at $path was built with [$stored] but probed with " +
-        s"[$probe] — a mismatched bucket count would scatter components " +
-        "across wrong partitions; rebuild or re-probe")
-  }
+  private def requireParams(path: String, nBuckets: Int, keyCols: Seq[String]): Unit =
+    SnapshotRoot.requireParams(path, paramsLine(nBuckets, keyCols),
+      "a mismatched bucket count would scatter components across wrong " +
+        "partitions; rebuild or re-probe")
 
   /** Driver-side min-label union-find over the micro graph — the exact
     * fixpoint [[ConnectedComponents.run]] computes, without its per-
@@ -305,13 +287,10 @@ object IncrementalClusters {
     // replayed batch (retrying stream whose LATER family crashed): the
     // ledger in the live label snapshot says this fold already
     // committed — no-op instead of tripping the disjoint-ids guard
-    val appliedLedger = {
-      val p = java.nio.file.Paths.get(currentLabelsDir(path), "_applied_folds")
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).toSeq
-      else Seq.empty[String]
+    val labelFold = SnapshotRoot.begin(labelsRoot, foldId) match {
+      case Some(f) => f
+      case None => return None
     }
-    if (foldId.exists(appliedLedger.contains)) return None // replayed: no-op
 
     // manifest guard FIRST (r14, VERDICT r13 task 1): both live stores
     // get their plan-build file listings pinned below (`hit` reads the
@@ -320,15 +299,15 @@ object IncrementalClusters {
     // label table commits whole → exact count; the key index is
     // live-appended → the listing may exceed a stale manifest from a
     // crash window (tolerated duplicates), never fall short.
-    BucketStore.checkManifest(currentLabelsDir(path), "labels",
-      BucketStore.countPartitionedData(currentLabelsDir(path)))
+    BucketStore.checkManifest(labelFold.liveDir, "labels",
+      BucketStore.countPartitionedData(labelFold.liveDir))
     BucketStore.checkManifestAtLeast(curKeysDir, "keys",
       BucketStore.countFlatData(curKeysDir))
 
     // prepare-time failure cleanup (r15, review): a throw after any
     // cacheFor registration below (readLabels plan-build IO, the
     // carried-column require) must not leak the registered caches
-    // across a daemon retry — the IncrementalSegments posture
+    // across a daemon retry
     val registered = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def cacheReg(df: DataFrame, actions: Int): DataFrame = {
       val c = Persists.cacheFor(df, actions); registered += c; c
@@ -547,7 +526,7 @@ object IncrementalClusters {
     // (BucketStore.readExact rationale: a silently short listing here
     // would drop carried label rows from the rewritten buckets
     // permanently); untouched bucket directories are never opened
-    val curLabelsDir = currentLabelsDir(path)
+    val curLabelsDir = labelFold.liveDir
     // count-validate the COMMIT-TIME listing against the labels
     // manifest immediately before enumerating (ADVICE r15 medium):
     // a file (or whole bucket dir, which listDir reads as empty) lost
@@ -582,13 +561,9 @@ object IncrementalClusters {
     // ONE Spark write job: the rewritten rows land directory-shaped in
     // a scratch dir (repartition by cbucket → one file per touched
     // bucket, not |tasks|×|buckets| tiny files)...
-    val curLabels = new java.io.File(currentLabelsDir(path))
-    val nextV = s"v${curLabels.getName.drop(1).toLong + 1}"
-    val nextDir = new java.io.File(s"$labelsRoot/$nextV")
-    // a leftover partial next-version dir from a crashed fold is
-    // rebuilt from scratch — the pointer never reached it
-    org.apache.commons.io.FileUtils.deleteQuietly(nextDir)
-    val stage = new java.io.File(s"$labelsRoot/.stage_$nextV")
+    val curLabels = new java.io.File(curLabelsDir)
+    val nextDir = new java.io.File(labelFold.dir)
+    val stage = new java.io.File(s"$labelsRoot/.stage_${nextDir.getName}")
     org.apache.commons.io.FileUtils.deleteQuietly(stage)
     // key append BEFORE the label flip (r11): with a fold ledger, a
     // crash after the flip must not lose this delta's keys — a retry
@@ -693,12 +668,7 @@ object IncrementalClusters {
     if (appendedKeyFiles.nonEmpty)
       BucketStore.recordManifest(curKeysDir, "keys",
         BucketStore.countFlatData(curKeysDir))
-    // the fold ledger commits WITH the flip (written into the next
-    // version dir first — the DriftStore atomicity pattern)
-    java.nio.file.Files.write(
-      nextDir.toPath.resolve("_applied_folds"),
-      (appliedLedger ++ foldId).mkString("\n").getBytes("UTF-8"))
-    SnapshotRoot.flipAndGc(labelsRoot, nextV)
+    labelFold.commit()
     cleanupCaches()
     compactKeys(spark, keysRoot, compactKeysAt)
     }
@@ -706,12 +676,13 @@ object IncrementalClusters {
       // commit failure: the pointer never flipped (the store stays on
       // its complete live snapshot). Failures up to the labels-manifest
       // record rolled the live key append back above; past the keys-
-      // manifest re-record only two local file writes remain (ledger,
-      // pointer) whose failure leaves appended keys that a RETRY
-      // tolerates (duplicate key rows serve min_id lookups) and whose
-      // next fold's at-least manifest check still passes. Release the
-      // caches and surface the error to the fold's retry contract.
-      cleanupCaches(); throw e
+      // manifest re-record only the ledger and pointer writes remain,
+      // whose failure leaves appended keys that a RETRY tolerates
+      // (duplicate key rows serve min_id lookups) and whose next
+      // fold's at-least manifest check still passes. Drop the partial
+      // next version, release the caches and surface the error to the
+      // fold's retry contract.
+      labelFold.abandon(); cleanupCaches(); throw e
     }, abort = () => cleanupCaches()))
     } catch { case e: Throwable =>
       // prepare-time failure with caches already registered: release
@@ -737,18 +708,16 @@ object IncrementalClusters {
     BucketStore.checkManifestAtLeast(cur.toString, "keys", parts.length)
     val targetFiles = math.max(1,
       math.ceil(parts.map(_.length).sum / (64.0 * 1024 * 1024)).toInt)
-    val nextV = s"v${cur.getName.drop(1).toLong + 1}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$keysRoot/$nextV"))
-    // read EXACTLY the manifest-checked listing's files, not a fresh
-    // spark.read directory listing — Spark's own listing can silently
-    // go short the same way File.listFiles can (the r15 soak loss
-    // class; see BucketStore.readExact), and this rewrite REPLACES the
-    // whole index, so a short read would truncate it permanently
-    spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
-      .repartition(targetFiles)
-      .write.parquet(s"$keysRoot/$nextV")
-    BucketStore.recordManifest(s"$keysRoot/$nextV", "keys",
-      BucketStore.countFlatData(s"$keysRoot/$nextV"))
-    SnapshotRoot.flipAndGc(keysRoot, nextV)
+    SnapshotRoot.fold(keysRoot) { next =>
+      // read EXACTLY the manifest-checked listing's files, not a fresh
+      // spark.read directory listing — Spark's own listing can silently
+      // go short the same way File.listFiles can (the r15 soak loss
+      // class; see BucketStore.readExact), and this rewrite REPLACES the
+      // whole index, so a short read would truncate it permanently
+      spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
+        .repartition(targetFiles)
+        .write.parquet(next.dir)
+      BucketStore.recordManifest(next.dir, "keys", BucketStore.countFlatData(next.dir))
+    }
   }
 }

@@ -164,7 +164,7 @@ object IncrementalDedup {
       salt: String = "", foldId: Option[String] = None,
       preBanded: Option[DataFrame] = None): Unit = {
     requireSameParams(indexPath, k, bands, w, seed, salt)
-    if (foldId.exists(appliedFolds(indexPath).contains)) return // replayed batch
+    if (foldId.exists(SnapshotRoot.liveLedger(indexPath).contains)) return // replayed batch
     val layoutFile = java.nio.file.Paths.get(indexPath).resolve("layout")
     require(java.nio.file.Files.exists(layoutFile),
       s"no layout file at $indexPath — rebuild the index with writeIndex (r9 layout)")
@@ -211,21 +211,8 @@ object IncrementalDedup {
     // mid-absorb still needs an index rebuild — the ledger closes the
     // common cross-family retry window, not that one; the versioned
     // folds (clusters/spans/drift) are fully atomic)
-    foldId.foreach(commitFold(indexPath, _))
+    foldId.foreach(SnapshotRoot.appendLedger(indexPath, _))
   }
-
-  /** Append a completed fold id to the index ledger. Exposed for
-    * callers that sequence the commit after OTHER same-family work
-    * finishes (ContinuousDedup r11: the pairs-log write overlaps the
-    * absorb, and the id must commit only once BOTH landed — a ledger
-    * written by the absorb alone would make a retry skip a probe whose
-    * pairs never hit disk). */
-  def commitFold(indexPath: String, foldId: String): Unit =
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(indexPath).resolve("_applied_folds"),
-      (foldId + "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
 
   /** The slim banded frame of `delta` under the default hash family —
     * the shared input of [[deltaPairsGuarded]] and [[applyDelta]]
@@ -239,14 +226,6 @@ object IncrementalDedup {
       MinHashLSH.sigTable(delta, textCol, idCol, k, w, seed, salt), k, bands, salt)
       .select(col("__id").as("doc_id"), col("__band").as("band"),
         col("__bucket").as("bucket"))
-
-  /** Batch ids already absorbed into the index at `indexPath`. */
-  def appliedFolds(indexPath: String): Set[String] = {
-    val p = java.nio.file.Paths.get(indexPath).resolve("_applied_folds")
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).toSet
-    else Set.empty
-  }
 
   /** Near-dup candidate pairs INVOLVING the delta, verified with exact
     * Jaccard. Output (a_id, b_id, jaccard), a_id < b_id — the batch

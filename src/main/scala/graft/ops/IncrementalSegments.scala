@@ -19,8 +19,8 @@ import org.apache.spark.sql.types._
   * keepers + the delta docs. Both tables are append-only
   * ([[BucketStore.append]]: hard-link + O(delta) file moves,
   * per-bucket compaction) under one [[SnapshotRoot]] — a single
-  * pointer flip commits keepers and docs together, and an
-  * applied-fold ledger makes replayed batches no-op.
+  * pointer flip commits keepers and docs together, and a replayed
+  * batch no-ops.
   *
   * Keeper contract — FIRST OBSERVED wins: fold order first, then
   * (doc_id, pos) within a fold. This is the streaming-native rule
@@ -53,13 +53,9 @@ object IncrementalSegments {
 
   private def paramsLine(n: Int, nBuckets: Int) = s"n=$n nBuckets=$nBuckets"
 
-  private def requireSameParams(root: String, n: Int, nBuckets: Int): Unit = {
-    val p = java.nio.file.Paths.get(root, "_params")
-    val stored = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-    require(stored == paramsLine(n, nBuckets),
-      s"segment-state params mismatch: store has '$stored', caller wants " +
-        s"'${paramsLine(n, nBuckets)}' — a mismatched window silently matches nothing")
-  }
+  private def requireSameParams(root: String, n: Int, nBuckets: Int): Unit =
+    SnapshotRoot.requireParams(root, paramsLine(n, nBuckets),
+      "a mismatched window silently matches nothing")
 
   /** Batch-build the state from `docs` (doc_id, source, text). */
   def writeState(docs: DataFrame, root: String, n: Int = 16,
@@ -68,28 +64,18 @@ object IncrementalSegments {
     val keepers = segs.groupBy("fp")
       .agg(min(struct(col("doc_id"), col("pos"))).as("k"))
       .select(col("fp"), col("k.doc_id").as("doc_id"), col("k.pos").as("pos"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val v1 = s"$root/v1"
-    Bucketing.writePartitioned(
-      keepers.withColumn("fbucket", fbucket(col("fp"), nBuckets)),
-      s"$v1/keepers", Seq("fbucket"))
-    Bucketing.writePartitioned(
-      docs.select(col("doc_id"), col("source"), col("text"))
-        .withColumn("dbucket", dbucket(col("doc_id"), nBuckets)),
-      s"$v1/docs", Seq("dbucket"))
-    // guard the FIRST fold too (r13)
-    Seq("keepers", "docs").foreach(BucketStore.initManifest(v1, _))
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_params"),
-      paramsLine(n, nBuckets).getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_current"),
-      "v1".getBytes("UTF-8"))
-  }
-
-  private def ledgerOf(dir: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(dir, "_applied_folds")
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).toSeq
-    else Seq.empty[String]
+    SnapshotRoot.seed(root) { v1 =>
+      Bucketing.writePartitioned(
+        keepers.withColumn("fbucket", fbucket(col("fp"), nBuckets)),
+        s"$v1/keepers", Seq("fbucket"))
+      Bucketing.writePartitioned(
+        docs.select(col("doc_id"), col("source"), col("text"))
+          .withColumn("dbucket", dbucket(col("doc_id"), nBuckets)),
+        s"$v1/docs", Seq("dbucket"))
+      // guard the FIRST fold too (r13)
+      Seq("keepers", "docs").foreach(BucketStore.initManifest(v1, _))
+      SnapshotRoot.writeParams(root, paramsLine(n, nBuckets))
+    }
   }
 
   /** Fold one arrival batch (doc_id, source, text). */
@@ -105,99 +91,51 @@ object IncrementalSegments {
       delta: DataFrame, n: Int = 16, nBuckets: Int = 64,
       foldId: Option[String] = None): Option[GuardedFold] = {
     requireSameParams(root, n, nBuckets)
-    val cur = SnapshotRoot.currentDir(root)
-    val applied = ledgerOf(cur)
-    if (foldId.exists(applied.contains)) return None // replayed: no-op
+    SnapshotRoot.begin(root, foldId).map { fold =>
+      val cur = fold.liveDir
+      val d = Persists.cacheFor(
+        TextOps.keepTokens(delta, "doc_id", "source", "text"), 64)
+      // within-delta keeper candidates — the same skew-immune partial
+      // min as the batch path
+      val cand = Persists.cacheFor(
+        segsOf(d, n).groupBy("fp")
+          .agg(min(struct(col("doc_id"), col("pos"))).as("k"))
+          .withColumn("fbucket", fbucket(col("fp"), nBuckets)), 64)
 
-    val d = Persists.cacheFor(
-      TextOps.keepTokens(delta, "doc_id", "source", "text"), 64)
-    // within-delta keeper candidates — the same skew-immune partial min
-    // as the batch path
-    val cand = Persists.cacheFor(
-      segsOf(d, n).groupBy("fp")
-        .agg(min(struct(col("doc_id"), col("pos"))).as("k"))
-        .withColumn("fbucket", fbucket(col("fp"), nBuckets)), 64)
+      // the docs append depends only on the cached delta, so it starts
+      // CONCURRENTLY with the guard collect (r12) — files staged in the
+      // unflipped next version are not an observable mutation
+      fold.async(BucketStore.append(spark, cur, fold.dir, "docs", "dbucket",
+        d.select("doc_id", "source", "text") // shared token cols stay out
+          .withColumn("dbucket", dbucket(col("doc_id"), nBuckets)),
+        identity, docsSchema))
 
-    // next snapshot dir first: the docs append depends only on the
-    // cached delta, so it launches CONCURRENTLY with the guard collect
-    // (r12, the IncrementalSpans posture — staging files in the
-    // unflipped next version is not an observable mutation; a guard
-    // failure deletes the partial dir and the pointer never moves)
-    val next = SnapshotRoot.nextVersion(root)
-    val nextDir = s"$root/$next"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(nextDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(nextDir))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val docsAppend = Future(BucketStore.append(spark, cur, nextDir,
-      "docs", "dbucket",
-      d.select("doc_id", "source", "text") // shared token cols stay out
-        .withColumn("dbucket", dbucket(col("doc_id"), nBuckets)),
-      identity, docsSchema))
-
-    def cleanup(): Unit = {
-      try Await.ready(docsAppend, Duration.Inf)
-      catch { case _: Throwable => () }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(nextDir))
-    }
-    try {
-    // ONE fused collect (r12; the overlap guard was a separate
-    // serialized action): delta-contract stats, the delta's
-    // fingerprint buckets (keeper-store read pruning), and the
-    // id-overlap guard — a broadcast semi over the docs store (no
-    // literal pruning: a realistic delta's ids hash into every
-    // bucket, and the semi's broadcast build is the same either way)
-    val legs = d.agg(count(lit(1)).as("a"),
-        count_distinct(col("doc_id")).as("b"),
-        lit(null).cast("array<int>").as("arr"))
-      .select(lit("stats").as("t"), col("a"), col("b"), col("arr"))
-      .unionByName(cand
-        .agg(collect_set(col("fbucket")).as("arr"))
-        .select(lit("fb").as("t"), lit(0L).as("a"), lit(0L).as("b"), col("arr")))
-      .unionByName(BucketStore.readChecked(spark, docsSchema, cur, "docs")
-        .join(broadcast(d.select("doc_id")), Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)).as("a"))
-        .select(lit("overlap").as("t"), col("a"), lit(0L).as("b"),
-          lit(null).cast("array<int>").as("arr")))
-
-    Some(GuardedFold(legs, meta => try {
-      val stats = GuardedFold.one(meta, "stats")
-      require(stats.getLong(1) == stats.getLong(2),
-        s"delta has ${stats.getLong(1)} rows but ${stats.getLong(2)} distinct doc ids")
-      val fBuckets = GuardedFold.one(meta, "fb").getSeq[Int](3)
-      val overlap = GuardedFold.one(meta, "overlap").getLong(1)
-      require(overlap == 0L,
-        s"$overlap delta doc_id(s) already present — delta ids must be new")
-
-      // claims: candidate fingerprints the (bucket-pruned) store has
-      // not seen — the store streams, the delta broadcasts. A short
-      // listing here would under-detect "seen" and append duplicate
-      // keeper claims, so the read is manifest-checked + exact-files
-      val store = BucketStore.readChecked(spark, keepersSchema, cur, "keepers")
-        .filter(col("fbucket").isin(fBuckets.map(Integer.valueOf): _*))
-      val seen = store.join(broadcast(cand.select("fp")), Seq("fp"), "left_semi")
-        .select("fp")
-      val claims = cand.join(seen, Seq("fp"), "left_anti")
-        .select(col("fp"), col("k.doc_id").as("doc_id"),
-          col("k.pos").as("pos"), col("fbucket"))
-      BucketStore.append(spark, cur, nextDir, "keepers", "fbucket",
-        claims, identity, keepersSchema)
-
-      Await.result(docsAppend, Duration.Inf)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(nextDir, "_applied_folds"),
-        (applied ++ foldId).mkString("\n").getBytes("UTF-8"))
-      SnapshotRoot.flipAndGc(root, next)
-    } catch { case e: Throwable => cleanup(); throw e },
-      abort = () => cleanup()))
-    } catch { case e: Throwable =>
-      // prepare-time failure (plan analysis — the legs' store read
-      // lists files at plan-build time and can throw) with the docs
-      // append in flight: await it and drop the partial next version,
-      // the IncrementalSpans posture — otherwise the leaked append
-      // races a retry's deleteQuietly on the same nextDir
-      cleanup(); throw e
+      // the legs' store read lists files at plan-build time and can
+      // throw with the docs append in flight
+      fold.orAbandon {
+        // ONE fused collect (r12): the new-ids legs plus the delta's
+        // fingerprint buckets (keeper-store read pruning)
+        GuardedFold.newIds(fold, d,
+            BucketStore.readChecked(spark, docsSchema, cur, "docs"),
+            extra = Seq(cand.agg(collect_set(col("fbucket")).as("arr"))
+              .select(lit("fb").as("t"), lit(0L).as("a"), lit(0L).as("b"),
+                col("arr")))) { meta =>
+          val fBuckets = GuardedFold.one(meta, "fb").getSeq[Int](3)
+          // claims: candidate fingerprints the (bucket-pruned) store has
+          // not seen — the store streams, the delta broadcasts. A short
+          // listing here would under-detect "seen" and append duplicate
+          // keeper claims, so the read is manifest-checked + exact-files
+          val store = BucketStore.readChecked(spark, keepersSchema, cur, "keepers")
+            .filter(col("fbucket").isin(fBuckets.map(Integer.valueOf): _*))
+          val seen = store.join(broadcast(cand.select("fp")), Seq("fp"), "left_semi")
+            .select("fp")
+          val claims = cand.join(seen, Seq("fp"), "left_anti")
+            .select(col("fp"), col("k.doc_id").as("doc_id"),
+              col("k.pos").as("pos"), col("fbucket"))
+          BucketStore.append(spark, cur, fold.dir, "keepers", "fbucket",
+            claims, identity, keepersSchema)
+        }
+      }
     }
   }
 

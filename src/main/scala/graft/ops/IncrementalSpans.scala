@@ -79,14 +79,13 @@ import org.apache.spark.sql.functions._
   * Equivalence contract (the oracle gate): after any fold sequence,
   * `spans` equals [[DupSpans.duplicateSpans]] over the union of
   * everything ever written — q_dup_spans_incremental runs the BATCH
-  * span SQL. Delta ids must be new and unique (enforced loudly before
-  * any mutation, the IncrementalClusters guard).
+  * span SQL. Delta ids must be unique and absent from the store
+  * (enforced loudly before any mutation, [[GuardedFold.newIds]]).
   *
   * `foldId` (r11, the ContinuousIngest retry contract): a caller
   * folding under a retrying stream passes a stable batch identity;
-  * ids recorded in the live snapshot's `_applied_folds` ledger no-op
-  * (the ledger commits atomically with the pointer flip, the
-  * [[DriftStore]] pattern), so a multi-family batch whose LATER
+  * ids recorded in the live snapshot's fold ledger no-op
+  * ([[SnapshotRoot.begin]]), so a multi-family batch whose LATER
   * family crashed can re-run this fold without tripping the new-ids
   * guard.
   */
@@ -137,27 +136,27 @@ object IncrementalSpans {
       dgs.groupBy("g").agg(count(lit(1)).as("df")), 64)
     val spans = spansFrom(g, df.filter(col("df") >= 2), n)
 
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val v1 = s"$root/v1"
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Seq(
-      Future(Bucketing.writePartitioned(
-        dgs.select(xxhash64(col("g")).as("gh"), col("doc_id"))
-          .withColumn("gbucket", gbucket(col("gh"), nBuckets)), s"$v1/grams", Seq("gbucket"))),
-      Future(Bucketing.writePartitioned(
-        df.withColumn("gbucket", gbucket(xxhash64(col("g")), nBuckets)), s"$v1/gramdf", Seq("gbucket"))),
-      Future(Bucketing.writePartitioned(
-        d.withColumn("dbucket", dbucket(col("doc_id"), nBuckets)), s"$v1/docs", Seq("dbucket"))),
-      Future(Bucketing.writePartitioned(
-        spans.withColumn("dbucket", dbucket(col("doc_id"), nBuckets)), s"$v1/spans", Seq("dbucket"))))
-      .foreach(Await.result(_, Duration.Inf))
-    // guard the FIRST fold too (r13)
-    Seq("grams", "gramdf", "docs", "spans")
-      .foreach(BucketStore.initManifest(v1, _))
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_current"),
-      "v1".getBytes("UTF-8"))
+    SnapshotRoot.seed(root) { v1 =>
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      Seq(
+        Future(Bucketing.writePartitioned(
+          dgs.select(xxhash64(col("g")).as("gh"), col("doc_id"))
+            .withColumn("gbucket", gbucket(col("gh"), nBuckets)), s"$v1/grams", Seq("gbucket"))),
+        Future(Bucketing.writePartitioned(
+          df.withColumn("gbucket", gbucket(xxhash64(col("g")), nBuckets)),
+          s"$v1/gramdf", Seq("gbucket"))),
+        Future(Bucketing.writePartitioned(
+          d.withColumn("dbucket", dbucket(col("doc_id"), nBuckets)), s"$v1/docs", Seq("dbucket"))),
+        Future(Bucketing.writePartitioned(
+          spans.withColumn("dbucket", dbucket(col("doc_id"), nBuckets)),
+          s"$v1/spans", Seq("dbucket"))))
+        .foreach(Await.result(_, Duration.Inf))
+      // guard the FIRST fold too (r13)
+      Seq("grams", "gramdf", "docs", "spans")
+        .foreach(BucketStore.initManifest(v1, _))
+    }
   }
 
   /** The live (g, df) gram doc-frequency table — append-only partials
@@ -176,13 +175,6 @@ object IncrementalSpans {
         SnapshotRoot.currentDir(root), "spans")
       .select("doc_id", "span_start", "span_end", "n_docs_max")
 
-  private def ledgerOf(dir: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(dir, "_applied_folds")
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.readAllLines(p).toArray(Array.empty[String]).toSeq
-    else Seq.empty[String]
-  }
-
   /** Fold one delta batch (see object scaladoc). */
   def applyDelta(spark: SparkSession, root: String, delta: DataFrame,
       n: Int = 8, nBuckets: Int = 64, foldId: Option[String] = None): Unit =
@@ -196,213 +188,165 @@ object IncrementalSpans {
     * with whichever guard collect (own or combined) follows. */
   private[graft] def prepareFold(spark: SparkSession, root: String,
       delta: DataFrame, n: Int = 8, nBuckets: Int = 64,
-      foldId: Option[String] = None): Option[GuardedFold] = {
-    val cur = SnapshotRoot.currentDir(root)
-    val applied = ledgerOf(cur)
-    if (foldId.exists(applied.contains)) return None // replayed: no-op
+      foldId: Option[String] = None): Option[GuardedFold] =
+    SnapshotRoot.begin(root, foldId).map { fold =>
+      val cur = fold.liveDir
+      // shared-token columns (if the daemon attached them) survive the
+      // narrowing select so gramsOf/docGramSets skip the re-split
+      val d = Persists.cacheFor(TextOps.keepTokens(delta, "doc_id", "text"), 64)
+      val dg = Persists.cacheFor(gramsOf(d, n), 64)
+      // per-doc distinct gram stream — NARROW (array_distinct in-row):
+      // serves df accounting, the store append and the match set without
+      // any corpus- or delta-wide distinct shuffle (r11)
+      val dgs = Persists.cacheFor(DupSpans.docGramSets(d, n), 64)
 
-    // shared-token columns (if the daemon attached them) survive the
-    // narrowing select so gramsOf/docGramSets skip the re-split
-    val d = Persists.cacheFor(TextOps.keepTokens(delta, "doc_id", "text"), 64)
-    val dg = Persists.cacheFor(gramsOf(d, n), 64)
-    // per-doc distinct gram stream — NARROW (array_distinct in-row):
-    // serves df accounting, the store append and the match set without
-    // any corpus- or delta-wide distinct shuffle (r11)
-    val dgs = Persists.cacheFor(DupSpans.docGramSets(d, n), 64)
+      // the three APPEND-ONLY table writes (grams / gramdf / docs —
+      // pure O(delta), independent of the affected set) launch
+      // concurrently with the guard collect below (r12: they used to
+      // wait behind two serialized collects + the span re-derive,
+      // stretching the fold's critical path by their full cost). Files
+      // staged in the unflipped next version are not an observable
+      // mutation; a guard failure abandons it.
+      def append(table: String, bucketCol: String, deltaRows: DataFrame,
+          compact: DataFrame => DataFrame, schema: org.apache.spark.sql.types.StructType): Unit =
+        fold.async(BucketStore.append(spark, cur, fold.dir, table, bucketCol,
+          deltaRows, compact, schema))
 
-    // next snapshot dir first: the three APPEND-ONLY table writes
-    // (grams / gramdf / docs — pure O(delta), independent of the
-    // affected set) launch concurrently with the guard collect below
-    // (r12: they used to wait behind two serialized collects + the
-    // span re-derive, stretching the fold's critical path by their
-    // full cost). Staging files in the next version dir are not an
-    // observable mutation — the store IS the `_current` pointer, which
-    // only flips after every guard passed; a guard failure deletes the
-    // partial next dir and leaves readers on the complete snapshot.
-    val next = SnapshotRoot.nextVersion(root)
-    val nextDir = s"$root/$next"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(nextDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(nextDir))
-
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    def append(table: String, bucketCol: String, deltaRows: DataFrame,
-        compact: DataFrame => DataFrame, schema: org.apache.spark.sql.types.StructType): Unit =
-      BucketStore.append(spark, cur, nextDir, table, bucketCol,
-        deltaRows, compact, schema)
-
-    // Append-only stores (grams / gramdf / docs): a delta's grams hash
-    // into EVERY bucket (millions of distinct grams per day-batch), so
-    // a rewrite-touched-buckets design would rewrite the corpus-scale
-    // gram store on every fold — the first sweep of this operator
-    // measured exactly that (3.8× fold cost at a 100× corpus). Instead
-    // the next snapshot hard-links every existing file and MOVES the
-    // delta's part files into the bucket dirs — O(delta) bytes written
-    // — and buckets whose file count passes `compactAt` are rolled up
-    // (gramdf partials summed, pair/doc files merged) in one extra
-    // partitioned write job, keeping file counts bounded under
-    // continuous folding (BucketStore's contract, shared with
-    // IncrementalSegments).
-    // per-doc distinct by construction — no shuffle before the
-    // bucket repartition (an intra-doc xxhash collision could leave a
-    // rare duplicate pair row; readers distinct/semi-join, harmless)
-    val deltaPairs = dgs.select(xxhash64(col("g")).as("gh"), col("doc_id"))
-    val appends = Seq(
-      Future(append("grams", "gbucket",
+      // Append-only stores (grams / gramdf / docs): a delta's grams hash
+      // into EVERY bucket (millions of distinct grams per day-batch), so
+      // a rewrite-touched-buckets design would rewrite the corpus-scale
+      // gram store on every fold — the first sweep of this operator
+      // measured exactly that (3.8× fold cost at a 100× corpus). Instead
+      // the next snapshot hard-links every existing file and MOVES the
+      // delta's part files into the bucket dirs — O(delta) bytes written
+      // — and buckets whose file count passes `compactAt` are rolled up
+      // (gramdf partials summed, pair/doc files merged) in one extra
+      // partitioned write job, keeping file counts bounded under
+      // continuous folding (BucketStore's contract, shared with
+      // IncrementalSegments).
+      // per-doc distinct by construction — no shuffle before the
+      // bucket repartition (an intra-doc xxhash collision could leave a
+      // rare duplicate pair row; readers distinct/semi-join, harmless)
+      val deltaPairs = dgs.select(xxhash64(col("g")).as("gh"), col("doc_id"))
+      append("grams", "gbucket",
         deltaPairs.withColumn("gbucket", gbucket(col("gh"), nBuckets)),
-        identity, gramsSchema)),
-      Future(append("gramdf", "gbucket",
+        identity, gramsSchema)
+      append("gramdf", "gbucket",
         dgs.select(col("g"), lit(1L).as("df"))
           .withColumn("gbucket", gbucket(xxhash64(col("g")), nBuckets)),
         rows => rows.groupBy("g", "gbucket").agg(sum("df").as("df"))
           .select("g", "df", "gbucket"),
-        gramdfSchema)),
-      Future(append("docs", "dbucket",
+        gramdfSchema)
+      append("docs", "dbucket",
         d.select("doc_id", "text") // never persist shared token columns
           .withColumn("dbucket", dbucket(col("doc_id"), nBuckets)),
-        identity, docsSchema)))
+        identity, docsSchema)
 
-    def cleanup(): Unit = {
-      try appends.foreach(f => Await.ready(f, Duration.Inf))
-      catch { case _: Throwable => () }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(nextDir))
-    }
-    try {
-      // ---- affected corpus docs: share ≥1 gram hash with the delta.
-      // The fixed-width hash store streams through a broadcast
-      // semi-join against the exact delta hash set. (A residual
-      // xxhash64 collision only widens the affected set — see the
-      // class doc.) r12 dropped the r11 bloom prefilter + literal
-      // bucket pruning on this scan: both required a PRIOR driver
-      // collect (serializing two scheduler round-trips into the
-      // critical path), the broadcast semi-join that removed the
-      // bloom's false positives was already paying the full delta
-      // hash-set broadcast, and a day-scale delta's grams hash into
-      // every bucket, so the `isin` pruned nothing. At a delta grain
-      // where the gram hash set outgrows a broadcast, the bloom
-      // becomes the ONLY filter (false-positive affected docs merely
-      // re-derive their spans bit-identically) — that variant restores
-      // the two-phase shape, it never reinstates the exact broadcast.
-      // no distinct on the semi's build: the broadcast build dedupes,
-      // and a semi never multiplies matched store rows
-      // manifest-checked exact read (VERDICT r15 task 1): a short grams
-      // listing MISSES affected docs — their stale spans would carry
-      // into the new snapshot unrewritten, silently
-      val dghSet = dgs.select(xxhash64(col("g")).as("gh"))
-      val touchedDocs = Persists.cacheFor(
-        BucketStore.readChecked(spark, gramsSchema, cur, "grams")
-          .join(broadcast(dghSet), Seq("gh"), "left_semi")
-          .select("doc_id").distinct(), 64)
-
-      // ---- ONE fused guard collect (r12; was two serialized jobs):
-      // a tagged union of the delta-contract stats, the id-overlap
-      // guard (docs store semi-joined against the broadcast delta ids
-      // — no literal pruning, see above), and the touched docs' bucket
-      // list — the leg that materializes the cached affected set.
-      val legs = d.agg(count(lit(1)).as("a"),
-          countDistinct(col("doc_id")).as("b"),
-          collect_set(dbucket(col("doc_id"), nBuckets)).as("arr"))
-        .select(lit("stats").as("t"), col("a"), col("b"), col("arr"))
-        .unionByName(BucketStore.readChecked(spark, docsSchema, cur, "docs")
-          .join(broadcast(d.select("doc_id")), Seq("doc_id"), "left_semi")
-          .agg(count(lit(1)).as("a"))
-          .select(lit("overlap").as("t"), col("a"), lit(0L).as("b"),
-            lit(null).cast("array<int>").as("arr")))
-        .unionByName(touchedDocs
-          .agg(collect_set(dbucket(col("doc_id"), nBuckets)).as("arr"))
-          .select(lit("touched").as("t"), lit(0L).as("a"), lit(0L).as("b"),
-            col("arr")))
-      Some(GuardedFold(legs, meta => try {
-      val stats = GuardedFold.one(meta, "stats")
-      require(stats.getLong(1) == stats.getLong(2),
-        s"delta has ${stats.getLong(1)} rows but ${stats.getLong(2)} distinct " +
-          "doc_id values — duplicate ids in one batch would corrupt the store")
-      val overlap = GuardedFold.one(meta, "overlap").getLong(1)
-      require(overlap == 0L,
-        s"$overlap delta doc_id(s) already present — delta ids must be new")
-      val dBucketsTouched =
-        Option(GuardedFold.one(meta, "touched").getSeq[Int](3)).getOrElse(Seq.empty).toArray
-      val dBucketsDelta = stats.getSeq[Int](3).toArray
-
-      // ---- re-derive spans for affected ∪ delta
-      // commit-phase reads feeding the span re-derive (their rows land
-      // in the rewrite): same exact-read posture as the rewrite itself
-      val affectedText = BucketStore.readChecked(spark, docsSchema, cur, "docs")
-        .filter(col("dbucket").isin(dBucketsTouched.map(Integer.valueOf): _*))
-        .join(touchedDocs, "doc_id").select("doc_id", "text")
-      val affGrams = Persists.cacheFor(gramsOf(affectedText, n).unionByName(dg), 64)
-
-      // post-delta df for every gram of the affected set: stored df
-      // (slim store streamed through a broadcast semi-join of the
-      // grams we need) + the delta's per-gram distinct-doc
-      // contribution. gramdf rows are PARTIAL increments (append-only
-      // store; the delta contributes one df=1 partial per (doc, gram)
-      // from the narrow per-doc distinct stream), so post-delta df is
-      // ONE sum over store ∪ delta partials — no per-delta
-      // pre-aggregate, no full-outer merge arithmetic (r11). The
-      // semi-join key is the gram HASH (8-byte broadcast, not
-      // affected-scale strings); a collision lets a stranger gram's
-      // partials through, but df still groups by the exact string and
-      // the island join downstream is string-keyed, so extras drop
-      // harmlessly — same correctness argument as the hash-keyed
-      // store.
-      val needed = affGrams.select(xxhash64(col("g")).as("gh")).distinct()
-      val newDf = BucketStore.readChecked(spark, gramdfSchema, cur, "gramdf")
-        .select(col("g"), col("df"))
-        .unionByName(dgs.select(col("g"), lit(1L).as("df")))
-        .join(broadcast(needed), xxhash64(col("g")) === col("gh"), "left_semi")
-        .groupBy("g").agg(sum("df").as("df"))
-      val newSpans = Persists.cacheFor(
-        spansFrom(affGrams, newDf.filter(col("df") >= 2), n), 64)
-
-      // the spans table alone needs delete+insert semantics (affected
-      // docs' old rows must go), so it keeps the rewrite-touched-
-      // buckets path; its touched set is O(affected ∪ delta docs)
-      val spanBuckets = (dBucketsTouched ++ dBucketsDelta).distinct.sorted
-      // this read FEEDS the rewrite (delete+insert) of the touched
-      // buckets — enumerate its files explicitly (BucketStore.readExact
-      // rationale: a silently short spark.read listing here would drop
-      // carried span rows into the rewritten buckets permanently).
-      // Count-validate THIS listing against the spans manifest (ADVICE
-      // r15): spans commits whole per version (rewrite), so the check
-      // is exact — matching the sibling stores' read-adjacent checks
-      BucketStore.checkManifest(cur, "spans",
-        BucketStore.countPartitionedData(s"$cur/spans"))
-      val touchedSpanFiles = spanBuckets.flatMap { b =>
-        SnapshotRoot.listDir(new java.io.File(s"$cur/spans/dbucket=$b"))
-          .filter(f => f.isFile && !f.getName.startsWith("_") &&
-            !f.getName.startsWith("."))
-          .map(_.toString)
-      }
-      val touchedSpanRows = BucketStore
-        .readExact(spark, spansSchema, s"$cur/spans", touchedSpanFiles)
-        .getOrElse(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], spansSchema))
-        .join(touchedDocs, Seq("doc_id"), "left_anti")
-        .select("doc_id", "span_start", "span_end", "n_docs_max")
-        .unionByName(newSpans)
-        .withColumn("dbucket", dbucket(col("doc_id"), nBuckets))
-      BucketStore.rewrite(cur, nextDir, "spans", "dbucket",
-        spanBuckets.toIndexedSeq, touchedSpanRows)
-
-      appends.foreach(Await.result(_, Duration.Inf))
-
-      // the ledger commits WITH the flip: written into the next
-      // version dir before the pointer moves (the DriftStore
-      // atomicity pattern)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(nextDir, "_applied_folds"),
-        (applied ++ foldId).mkString("\n").getBytes("UTF-8"))
-      SnapshotRoot.flipAndGc(root, next)
-      } catch { case e: Throwable =>
-        // guard failure / any error before the flip: the store stays on
-        // the complete current snapshot; drop the partial next version
-        cleanup(); throw e
-      }, abort = () => cleanup()))
-    } catch { case e: Throwable =>
       // prepare-time failure (plan analysis) with appends in flight
-      cleanup(); throw e
+      fold.orAbandon {
+        // ---- affected corpus docs: share ≥1 gram hash with the delta.
+        // The fixed-width hash store streams through a broadcast
+        // semi-join against the exact delta hash set. (A residual
+        // xxhash64 collision only widens the affected set — see the
+        // class doc.) r12 dropped the r11 bloom prefilter + literal
+        // bucket pruning on this scan: both required a PRIOR driver
+        // collect (serializing two scheduler round-trips into the
+        // critical path), the broadcast semi-join that removed the
+        // bloom's false positives was already paying the full delta
+        // hash-set broadcast, and a day-scale delta's grams hash into
+        // every bucket, so the `isin` pruned nothing. At a delta grain
+        // where the gram hash set outgrows a broadcast, the bloom
+        // becomes the ONLY filter (false-positive affected docs merely
+        // re-derive their spans bit-identically) — that variant restores
+        // the two-phase shape, it never reinstates the exact broadcast.
+        // no distinct on the semi's build: the broadcast build dedupes,
+        // and a semi never multiplies matched store rows
+        // manifest-checked exact read (VERDICT r15 task 1): a short grams
+        // listing MISSES affected docs — their stale spans would carry
+        // into the new snapshot unrewritten, silently
+        val dghSet = dgs.select(xxhash64(col("g")).as("gh"))
+        val touchedDocs = Persists.cacheFor(
+          BucketStore.readChecked(spark, gramsSchema, cur, "grams")
+            .join(broadcast(dghSet), Seq("gh"), "left_semi")
+            .select("doc_id").distinct(), 64)
+
+        // ---- ONE fused guard collect (r12; was two serialized jobs):
+        // the new-ids legs (docs store semi-joined against the broadcast
+        // delta ids — no literal pruning, see above; the stats leg also
+        // carries the delta's doc buckets) and the touched docs' bucket
+        // list — the leg that materializes the cached affected set.
+        GuardedFold.newIds(fold, d,
+            BucketStore.readChecked(spark, docsSchema, cur, "docs"),
+            statsArr = collect_set(dbucket(col("doc_id"), nBuckets)),
+            extra = Seq(touchedDocs
+              .agg(collect_set(dbucket(col("doc_id"), nBuckets)).as("arr"))
+              .select(lit("touched").as("t"), lit(0L).as("a"), lit(0L).as("b"),
+                col("arr")))) { meta =>
+          val dBucketsTouched =
+            Option(GuardedFold.one(meta, "touched").getSeq[Int](3)).getOrElse(Seq.empty).toArray
+          val dBucketsDelta = GuardedFold.one(meta, "stats").getSeq[Int](3).toArray
+
+          // ---- re-derive spans for affected ∪ delta
+          // commit-phase reads feeding the span re-derive (their rows land
+          // in the rewrite): same exact-read posture as the rewrite itself
+          val affectedText = BucketStore.readChecked(spark, docsSchema, cur, "docs")
+            .filter(col("dbucket").isin(dBucketsTouched.map(Integer.valueOf): _*))
+            .join(touchedDocs, "doc_id").select("doc_id", "text")
+          val affGrams = Persists.cacheFor(gramsOf(affectedText, n).unionByName(dg), 64)
+
+          // post-delta df for every gram of the affected set: stored df
+          // (slim store streamed through a broadcast semi-join of the
+          // grams we need) + the delta's per-gram distinct-doc
+          // contribution. gramdf rows are PARTIAL increments (append-only
+          // store; the delta contributes one df=1 partial per (doc, gram)
+          // from the narrow per-doc distinct stream), so post-delta df is
+          // ONE sum over store ∪ delta partials — no per-delta
+          // pre-aggregate, no full-outer merge arithmetic (r11). The
+          // semi-join key is the gram HASH (8-byte broadcast, not
+          // affected-scale strings); a collision lets a stranger gram's
+          // partials through, but df still groups by the exact string and
+          // the island join downstream is string-keyed, so extras drop
+          // harmlessly — same correctness argument as the hash-keyed
+          // store.
+          val needed = affGrams.select(xxhash64(col("g")).as("gh")).distinct()
+          val newDf = BucketStore.readChecked(spark, gramdfSchema, cur, "gramdf")
+            .select(col("g"), col("df"))
+            .unionByName(dgs.select(col("g"), lit(1L).as("df")))
+            .join(broadcast(needed), xxhash64(col("g")) === col("gh"), "left_semi")
+            .groupBy("g").agg(sum("df").as("df"))
+          val newSpans = Persists.cacheFor(
+            spansFrom(affGrams, newDf.filter(col("df") >= 2), n), 64)
+
+          // the spans table alone needs delete+insert semantics (affected
+          // docs' old rows must go), so it keeps the rewrite-touched-
+          // buckets path; its touched set is O(affected ∪ delta docs)
+          val spanBuckets = (dBucketsTouched ++ dBucketsDelta).distinct.sorted
+          // this read FEEDS the rewrite (delete+insert) of the touched
+          // buckets — enumerate its files explicitly (BucketStore.readExact
+          // rationale: a silently short spark.read listing here would drop
+          // carried span rows into the rewritten buckets permanently).
+          // Count-validate THIS listing against the spans manifest (ADVICE
+          // r15): spans commits whole per version (rewrite), so the check
+          // is exact — matching the sibling stores' read-adjacent checks
+          BucketStore.checkManifest(cur, "spans",
+            BucketStore.countPartitionedData(s"$cur/spans"))
+          val touchedSpanFiles = spanBuckets.flatMap { b =>
+            SnapshotRoot.listDir(new java.io.File(s"$cur/spans/dbucket=$b"))
+              .filter(f => f.isFile && !f.getName.startsWith("_") &&
+                !f.getName.startsWith("."))
+              .map(_.toString)
+          }
+          val touchedSpanRows = BucketStore
+            .readExact(spark, spansSchema, s"$cur/spans", touchedSpanFiles)
+            .getOrElse(spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], spansSchema))
+            .join(touchedDocs, Seq("doc_id"), "left_anti")
+            .select("doc_id", "span_start", "span_end", "n_docs_max")
+            .unionByName(newSpans)
+            .withColumn("dbucket", dbucket(col("doc_id"), nBuckets))
+          BucketStore.rewrite(cur, fold.dir, "spans", "dbucket",
+            spanBuckets.toIndexedSeq, touchedSpanRows)
+        }
+      }
     }
-  }
 }

@@ -135,14 +135,15 @@ object IvfIndex {
     * running query. */
   def writeIndexed(corpus: DataFrame, path: String, model: Model,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    SnapshotRoot.initRoot(path,
-      corpus.withColumn("__cell", cellExpr(col(vecCol), model))
-        .repartition(col("__cell")),
-      Seq("__cell"))
-    // commit manifest at init (r14, VERDICT r13 task 1): folds and
-    // compactions refuse a silently short listing of the cell layout
-    BucketStore.recordManifest(s"$path/v1", "cells",
-      BucketStore.countPartitionedData(s"$path/v1"))
+    SnapshotRoot.seed(path) { v1 =>
+      Bucketing.writePartitioned(
+        corpus.withColumn("__cell", cellExpr(col(vecCol), model))
+          .repartition(col("__cell")),
+        v1, Seq("__cell"))
+      // commit manifest at init (r14, VERDICT r13 task 1): folds and
+      // compactions refuse a silently short listing of the cell layout
+      BucketStore.recordManifest(v1, "cells", BucketStore.countPartitionedData(v1))
+    }
   }
 
   /** Fold a delta embedding batch into a [[writeIndexed]] layout using
@@ -221,74 +222,73 @@ object IvfIndex {
     // short listing before assembling a truncated next version (r14)
     BucketStore.checkManifestAtLeast(cur.toString, "cells",
       cellDirs.map(parquets(_).length).sum)
-    val nextV = SnapshotRoot.nextVersion(path)
-    val nextDir = new java.io.File(s"$path/$nextV")
-    org.apache.commons.io.FileUtils.deleteQuietly(nextDir)
-    val stage = new java.io.File(s"$path/.stage_$nextV")
-    org.apache.commons.io.FileUtils.deleteQuietly(stage)
-    // one write job for ALL oversized cells: read only those dirs
-    // (explicit multi-path read keeps partition discovery on the live
-    // snapshot's schema), re-cluster so each compacted cell gets a
-    // file count tracking its byte volume (~64 MB each), not the
-    // session's task width — the writeState small-file rule
-    val perCellFiles = oversized.map { d =>
-      val bytes = parquets(d).map(_.length).sum
-      d.getName.stripPrefix("__cell=").toInt ->
-        math.max(1, math.ceil(bytes / (64.0 * 1024 * 1024)).toInt)
-    }.toMap
-    // FILE-level enumeration from the (manifest-checked) listing above
-    // — a directory-path read lets Spark re-list inside each cell dir,
-    // and that listing can silently go short (the r15 soak loss class;
-    // BucketStore.readExact rationale). Explicit paths turn a miss
-    // into a loud FileNotFoundException.
-    spark.read.option("basePath", cur.toString)
-      .parquet(oversized.flatMap(parquets(_)).map(_.toString).toIndexedSeq: _*)
-      .withColumn("__slice", pmod(xxhash64(col(idCol)),
-        element_at(typedLit(perCellFiles), col("__cell"))))
-      .repartition(col("__cell"), col("__slice"))
-      .drop("__slice")
-      .write.partitionBy("__cell").parquet(stage.toString)
-    java.nio.file.Files.createDirectories(nextDir.toPath)
-    val oversizedNames = oversized.map(_.getName).toSet
-    // per-cell expected counts captured as the assembly runs feed the
-    // post-assembly invariant below (r14, VERDICT r13 task 1)
-    val expected = scala.collection.mutable.Map[String, Int]()
-    cellDirs.filterNot(d => oversizedNames.contains(d.getName))
-      .foreach { d =>
-        expected(d.getName) = parquets(d).length
-        SnapshotRoot.linkDirInto(d, new java.io.File(nextDir, d.getName))
+    SnapshotRoot.fold(path) { next =>
+      val nextDir = new java.io.File(next.dir)
+      val stage = new java.io.File(s"$path/.stage_${nextDir.getName}")
+      org.apache.commons.io.FileUtils.deleteQuietly(stage)
+      // one write job for ALL oversized cells: read only those dirs
+      // (explicit multi-path read keeps partition discovery on the live
+      // snapshot's schema), re-cluster so each compacted cell gets a
+      // file count tracking its byte volume (~64 MB each), not the
+      // session's task width — the writeState small-file rule
+      val perCellFiles = oversized.map { d =>
+        val bytes = parquets(d).map(_.length).sum
+        d.getName.stripPrefix("__cell=").toInt ->
+          math.max(1, math.ceil(bytes / (64.0 * 1024 * 1024)).toInt)
+      }.toMap
+      // FILE-level enumeration from the (manifest-checked) listing above
+      // — a directory-path read lets Spark re-list inside each cell dir,
+      // and that listing can silently go short (the r15 soak loss class;
+      // BucketStore.readExact rationale). Explicit paths turn a miss
+      // into a loud FileNotFoundException.
+      spark.read.option("basePath", cur.toString)
+        .parquet(oversized.flatMap(parquets(_)).map(_.toString).toIndexedSeq: _*)
+        .withColumn("__slice", pmod(xxhash64(col(idCol)),
+          element_at(typedLit(perCellFiles), col("__cell"))))
+        .repartition(col("__cell"), col("__slice"))
+        .drop("__slice")
+        .write.partitionBy("__cell").parquet(stage.toString)
+      java.nio.file.Files.createDirectories(nextDir.toPath)
+      val oversizedNames = oversized.map(_.getName).toSet
+      // per-cell expected counts captured as the assembly runs feed the
+      // post-assembly invariant below (r14, VERDICT r13 task 1)
+      val expected = scala.collection.mutable.Map[String, Int]()
+      cellDirs.filterNot(d => oversizedNames.contains(d.getName))
+        .foreach { d =>
+          expected(d.getName) = parquets(d).length
+          SnapshotRoot.linkDirInto(d, new java.io.File(nextDir, d.getName))
+        }
+      SnapshotRoot.listDir(stage)
+        .filter(f => f.isDirectory && f.getName.startsWith("__cell="))
+        .foreach { d =>
+          expected(d.getName) = parquets(d).length
+          java.nio.file.Files.move(d.toPath, nextDir.toPath.resolve(d.getName))
+        }
+      org.apache.commons.io.FileUtils.deleteQuietly(stage)
+      // every oversized cell held data (it passed the threshold), so its
+      // compacted rewrite MUST have staged a directory — a missing one
+      // means the stage write or its listing lost the cell
+      oversizedNames.foreach { c =>
+        require(expected.contains(c),
+          s"compaction staged no directory for oversized cell $c — " +
+            "refusing to commit a snapshot that would drop it")
       }
-    SnapshotRoot.listDir(stage)
-      .filter(f => f.isDirectory && f.getName.startsWith("__cell="))
-      .foreach { d =>
-        expected(d.getName) = parquets(d).length
-        java.nio.file.Files.move(d.toPath, nextDir.toPath.resolve(d.getName))
+      // carried cells must arrive intact, compacted cells with exactly
+      // their staged counts — fail HERE, before the pointer can flip
+      val outCounts = SnapshotRoot.listDir(nextDir)
+        .filter(d => d.isDirectory && d.getName.startsWith("__cell="))
+        .map(d => d.getName -> parquets(d).length).toMap
+      require(outCounts.keySet == expected.keySet,
+        s"cell assembly invariant violated: assembled cells " +
+          s"${outCounts.keySet.toSeq.sorted} != expected ${expected.keySet.toSeq.sorted}")
+      expected.foreach { case (c, want) =>
+        require(outCounts(c) == want,
+          s"cell assembly invariant violated for $c: assembled " +
+            s"${outCounts(c)} data files, expected $want")
       }
-    org.apache.commons.io.FileUtils.deleteQuietly(stage)
-    // every oversized cell held data (it passed the threshold), so its
-    // compacted rewrite MUST have staged a directory — a missing one
-    // means the stage write or its listing lost the cell
-    oversizedNames.foreach { c =>
-      require(expected.contains(c),
-        s"compaction staged no directory for oversized cell $c — " +
-          "refusing to commit a snapshot that would drop it")
+      BucketStore.recordManifest(nextDir.toString, "cells",
+        outCounts.valuesIterator.sum)
     }
-    // carried cells must arrive intact, compacted cells with exactly
-    // their staged counts — fail HERE, before the pointer can flip
-    val outCounts = SnapshotRoot.listDir(nextDir)
-      .filter(d => d.isDirectory && d.getName.startsWith("__cell="))
-      .map(d => d.getName -> parquets(d).length).toMap
-    require(outCounts.keySet == expected.keySet,
-      s"cell assembly invariant violated: assembled cells " +
-        s"${outCounts.keySet.toSeq.sorted} != expected ${expected.keySet.toSeq.sorted}")
-    expected.foreach { case (c, want) =>
-      require(outCounts(c) == want,
-        s"cell assembly invariant violated for $c: assembled " +
-          s"${outCounts(c)} data files, expected $want")
-    }
-    BucketStore.recordManifest(nextDir.toString, "cells",
-      outCounts.valuesIterator.sum)
-    SnapshotRoot.flipAndGc(path, nextV)
   }
 
   /** ANN top-k against a [[writeIndexed]] layout. The probe cell set is

@@ -72,7 +72,7 @@ object ContinuousDedup {
     if (foldId.isEmpty && batch.isEmpty) return
     val spark = batch.sparkSession
     val indexDone = foldId.exists(
-      graft.ops.IncrementalDedup.appliedFolds(indexPath).contains)
+      graft.ops.SnapshotRoot.liveLedger(indexPath).contains)
     // the CLUSTER fold is independent of the index family (different
     // state root, own ledger) — run it concurrently with probe+absorb
     // when the session has fan-out headroom (r11: the probe dominates
@@ -117,11 +117,12 @@ object ContinuousDedup {
         })
         try Folds.FamilyClock.time("dedup_absorb") {
           // ledger committed below by THIS caller, after the pairs
-          // write also lands (IncrementalDedup.commitFold scaladoc)
+          // write also lands: a ledger written by the absorb alone
+          // would make a retry skip a probe whose pairs never hit disk
           graft.ops.IncrementalDedup.applyDelta(spark, indexPath, batch,
             textCol, idCol, foldId = None, preBanded = Some(banded))
         } finally Await.result(writeF, Duration.Inf)
-        foldId.foreach(graft.ops.IncrementalDedup.commitFold(indexPath, _))
+        foldId.foreach(graft.ops.SnapshotRoot.appendLedger(indexPath, _))
       }
     } finally Await.result(clustersF, Duration.Inf)
   }

@@ -63,9 +63,9 @@ object ContinuousIngest {
 
   /** Daemon introspection (r12 — VERDICT r11 missing-3): one row per
     * state family with its applied-fold ledger depth and last fold id,
-    * read from the LIVE snapshot's `_applied_folds` (the same files
-    * the replay guards consult, so this is the daemon's ground truth —
-    * "has every family caught up to batch X?"). Deterministic
+    * read from the LIVE ledger ([[graft.ops.SnapshotRoot.liveLedger]],
+    * the one the replay guards consult, so this is the daemon's ground
+    * truth — "has every family caught up to batch X?"). Deterministic
     * (content-derived fold ids), unlike the per-family wall clocks,
     * which stay a bench-only surface ([[Folds.FamilyClock]]).
     * `roots` maps family name → that family's ledger-bearing root
@@ -74,20 +74,8 @@ object ContinuousIngest {
   def status(spark: org.apache.spark.sql.SparkSession,
       roots: Map[String, String]): DataFrame = {
     import scala.jdk.CollectionConverters._
-    def ledgerAt(root: String): java.nio.file.Path = {
-      val versioned = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "_current"))
-      if (versioned) java.nio.file.Paths.get(
-        graft.ops.SnapshotRoot.currentDir(root), "_applied_folds")
-      else java.nio.file.Paths.get(root, "_applied_folds")
-    }
     val rows = roots.toSeq.sortBy(_._1).map { case (family, root) =>
-      val ledger = ledgerAt(root)
-      val ids =
-        if (java.nio.file.Files.exists(ledger))
-          java.nio.file.Files.readAllLines(ledger).asScala.toSeq
-            .filter(_.nonEmpty)
-        else Seq.empty[String]
+      val ids = graft.ops.SnapshotRoot.liveLedger(root)
       Row(family, ids.length.toLong, ids.lastOption.orNull)
     }
     spark.createDataFrame(rows.asJava,
@@ -141,7 +129,7 @@ object ContinuousIngest {
     val metrics = s"$root/metrics"
 
     /** family → ledger-bearing root for [[status]]: the band-index path
-      * for dedup (plain `_applied_folds` file), the `<state>/labels`
+      * for dedup (an append-in-place ledger), the `<state>/labels`
       * subroot for clusters, the SnapshotRoot for the rest. The metrics
       * rollups keep their ledgers per rollup and are not listed. */
     def roots: Map[String, String] = (Seq(

@@ -69,21 +69,6 @@ final class IncrementalMaterializer(
     merged.groupBy(mv.dimensions.map(col): _*).agg(mergeAggs.head, mergeAggs.tail: _*)
   }
 
-  /** Applied-fold ids recorded with a rollup's live snapshot — the
-    * replay guard for daemon use (the DriftStore ledger pattern: the
-    * ledger commits atomically with the snapshot flip, so a fold that
-    * died mid-write leaves the previous snapshot AND its ledger). */
-  def appliedFolds(view: String, mv: String): Set[String] =
-    ledgerOf(rollupPath(view, mv))
-
-  private def ledgerOf(path: String): Set[String] =
-    VersionedTable.currentPath(path)
-      .map(p => java.nio.file.Paths.get(p, "_folds"))
-      .filter(java.nio.file.Files.exists(_))
-      .map(p => new String(java.nio.file.Files.readAllBytes(p))
-        .split("\n").filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-
   /** Fold one micro-batch of new source rows into every aggregated
     * rollup of the view. The merged snapshot lands in a fresh version
     * directory (reading the old snapshot while writing the new one is
@@ -95,17 +80,12 @@ final class IncrementalMaterializer(
     v.spec.materialization.toSeq.flatMap(_.materializedViews).filter(_.isAggregated)
       .foreach { mv =>
         val path = rollupPath(v.name, mv.name)
-        val applied = ledgerOf(path)
-        if (!foldId.exists(applied.contains)) {
+        VersionedTable.write({
           val fresh = batchPartials(v, mv, batch)
-          val updated =
-            if (VersionedTable.exists(path))
-              merge(v, mv, Seq(VersionedTable.read(spark, path), fresh))
-            else fresh
-          VersionedTable.write(updated, path, extras = foldId
-            .map(f => Map("_folds" -> (applied + f).mkString("\n")))
-            .getOrElse(Map.empty))
-        }
+          if (VersionedTable.exists(path))
+            merge(v, mv, Seq(VersionedTable.read(spark, path), fresh))
+          else fresh
+        }, path, foldId)
       }
   }
 

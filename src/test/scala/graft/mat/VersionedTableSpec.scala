@@ -1,7 +1,7 @@
 package graft.mat
 
 import graft.SparkSpec
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -96,6 +96,23 @@ class VersionedTableSpec extends SparkSpec {
     assert(splits >= 2 && splits < math.min(files.length, par), s"$bytes bytes, $splits splits")
     assert(df.rdd.getNumPartitions == math.min(files.length, par))
     assert(df.count() == 3000)
+  }
+
+  test("destroy closes every directory handle it opens") {
+    // a leaked directory stream holds its fd until the JVM exits, and
+    // every rollup rewrite GCs a superseded version: a long-running
+    // daemon would walk into the process fd limit
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd")
+    val dir = tmp("graft-vt-fds")
+    (0 until 200).foreach(i => Files.createDirectories(Paths.get(dir, "v1", s"d$i")))
+    Files.write(Paths.get(dir, "_current"), "v1".getBytes("UTF-8"))
+    val before = fds.list().length
+    VersionedTable.destroy(dir)
+    System.gc()
+    val after = fds.list().length
+    assert(!Files.exists(Paths.get(dir)))
+    assert(after - before < 50, s"destroy of 200 directories left ${after - before} more open fds")
   }
 
   test("after the pointer flips, the next read sees the new version's rows") {

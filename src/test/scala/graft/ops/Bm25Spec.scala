@@ -67,6 +67,35 @@ class Bm25Spec extends SparkSpec {
     assert(e.getMessage.contains("manifest"))
   }
 
+  test("a postings file lost BETWEEN collect and commit refuses the fold and leaves no partial version") {
+    // the commit's four appends run concurrently: the postings append
+    // refuses on its manifest while the other three are still writing
+    // into the next version — the refused fold must wait them out and
+    // drop that version, so neither a partial v2 nor a late write
+    // survives the failure
+    val root = java.nio.file.Files.createTempDirectory("graft-bm25-lost").toString + "/s"
+    Bm25Index.writeState(tiny, root, nBuckets = 8)
+    val g = Bm25Index.prepareFold(spark, root,
+      Seq((10L, "srcA", "cat fish owl")).toDF("doc_id", "source", "text"), nBuckets = 8)
+    assert(g.isDefined)
+    val dispatched = GuardedFold.collectAll(Seq("bm25" -> g.get))
+    val cur = SnapshotRoot.currentDir(root)
+    val victims = SnapshotRoot.listDir(new java.io.File(s"$cur/postings"))
+      .filter(_.isDirectory).flatMap(d => SnapshotRoot.listDir(d))
+      .filter(_.getName.endsWith(".parquet"))
+    assert(victims.nonEmpty, "fixture must produce committed postings")
+    assert(victims.head.delete())
+    val e = intercept[IllegalArgumentException] {
+      dispatched.foreach { case (gf, meta) => gf.commit(meta) }
+    }
+    assert(e.getMessage.contains("manifest"), e.getMessage)
+    assert(SnapshotRoot.currentDir(root) == cur,
+      "a refused commit must leave the pointer on the old snapshot")
+    assert(!new java.io.File(s"$root/v2").exists,
+      "a refused commit must not leave a partial next version behind")
+    Persists.releaseAll()
+  }
+
   test("tfidfFromState == lowered TF-IDF recompute over token-bearing docs") {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
     val root = java.nio.file.Files.createTempDirectory("graft-bm25-tfidf").toString + "/s"

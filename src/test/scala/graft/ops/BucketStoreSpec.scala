@@ -23,15 +23,11 @@ class BucketStoreSpec extends SparkSpec {
   private def rows(ids: Range): DataFrame =
     ids.map(i => (i.toLong, i.toLong * 10, i % 4)).toDF("id", "v", "b")
 
-  private def fold(root: String, delta: DataFrame): Unit = {
-    val cur = SnapshotRoot.currentDir(root)
-    val next = SnapshotRoot.nextVersion(root)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$root/$next"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/$next"))
-    BucketStore.append(spark, cur, s"$root/$next", "t", "b", delta,
-      identity, schema)
-    SnapshotRoot.flipAndGc(root, next)
-  }
+  private def fold(root: String, delta: DataFrame): Unit =
+    SnapshotRoot.fold(root) { next =>
+      BucketStore.append(spark, next.liveDir, next.dir, "t", "b", delta,
+        identity, schema)
+    }
 
   test("append commits a manifest; a fold over a short listing fails loudly") {
     val root = java.nio.file.Files.createTempDirectory("bstore").toString

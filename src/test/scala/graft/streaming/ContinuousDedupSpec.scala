@@ -36,7 +36,7 @@ class ContinuousDedupSpec extends SparkSpec {
     ContinuousDedup.processBatch(delta, s"$p/index", s"$p/state",
       s"$p/pairs", keyedOf, foldId = Some(fid), clusters = false)
     // probe/absorb advanced; the clusters family did NOT
-    assert(IncrementalDedup.appliedFolds(s"$p/index").contains(fid))
+    assert(graft.ops.SnapshotRoot.liveLedger(s"$p/index").contains(fid))
     val labelsBefore = IncrementalClusters.readLabels(spark, s"$p/state")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val keyedCorpus = keyedOf(corpus)
