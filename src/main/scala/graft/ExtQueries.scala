@@ -1,5 +1,6 @@
 package graft
 
+import graft.QueryDef.{oracled, rowsOnly}
 import graft.model.Tables
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -9,6 +10,187 @@ import org.apache.spark.sql.functions._
   * dedup / text analysis / sessionization as first-class operators, and
   * TPC-H-shaped aggregations as bench headliners). */
 object ExtQueries {
+
+  // ---------------------------------------------------- shared oracle blocks
+  // Each operator the oracles re-derive is ONE SQL generator — source
+  // relation and carried columns in, named CTEs out (the burstCteSql
+  // pattern) — and every oracle that needs it composes the block. The
+  // blocks keep their own literal marker, stopword and pattern lists:
+  // they never read TextOps or Pii, so the oracle stays an independent
+  // reference.
+
+  /** The engine's whitespace class spelled out (TextOps.WhitespaceRe:
+    * RE2's \s lacks \x0B, Java's includes it). */
+  private val WsSql = """'[ \t\n\x0B\f\r]+'"""
+
+  /** TextOps.tokensOf(lowered = true): `text`'s lower-cased whitespace
+    * tokens. */
+  private val lowerTokensSql = s"string_split_regex(lower(trim(text)), $WsSql)"
+
+  /** CTE `$alias` = (doc_id, source, extra*, t): the [[lowerTokensSql]]
+    * of every document with non-blank text. */
+  private def tokensCte(alias: String, extra: Seq[String] = Nil): String =
+    s"""$alias AS (
+       |  SELECT doc_id, source, ${extra.map(_ + ", ").mkString}$lowerTokensSql AS t
+       |  FROM documents WHERE length(trim(text)) > 0
+       |)""".stripMargin
+
+  /** TextOps.textStats' quality score over `src`'s `text`: CTE `$alias`
+    * = (carry*, token_count, extra*, punct_ratio, digit_ratio,
+    * stopword_ratio, quality_score). `extra` are further stat columns
+    * over `text` and its whitespace tokens `tk`. */
+  private def qualityCtes(alias: String, src: String, carry: Seq[String],
+      extra: Seq[String] = Nil): String = {
+    val c = carry.mkString(", ")
+    raw"""${alias}_tk AS (
+       |  SELECT *, string_split_regex(trim(text), $WsSql) AS tk FROM $src
+       |), ${alias}_st AS (
+       |  SELECT $c, len(tk) AS token_count,${extra.map("\n         " + _ + ",").mkString}
+       |         round(CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / length(text), 6) AS punct_ratio,
+       |         round(CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text), 6) AS digit_ratio,
+       |         round(CAST(len(list_filter(tk, w -> list_contains(['the','a','an','of','and','or','is','are','in','on','to','it','this','that','with','for','as','at','by','be'], w))) AS DOUBLE) / len(tk), 6) AS stopword_ratio
+       |  FROM ${alias}_tk
+       |), $alias AS (
+       |  SELECT *, round(least(1.0, greatest(0.0,
+       |           0.15 * ln(1.0 + token_count)
+       |           - 2.0 * punct_ratio - 2.0 * digit_ratio
+       |           - abs(stopword_ratio - 0.35))), 6) AS quality_score
+       |  FROM ${alias}_st
+       |)""".stripMargin
+  }
+
+  /** TextOps.langId over `src`'s `text`: CTE `$alias` = (carry*,
+    * lang_pred). Same marker sets, same `score / (|tokens|+1)`
+    * arithmetic, same strict-improvement argmax (the first language in
+    * [en,de,fr,es,zh] order attaining the max wins; the max must clear
+    * the 0.005 'und' floor). */
+  private def langIdCtes(alias: String, src: String, carry: Seq[String]): String = {
+    val c = carry.mkString(", ")
+    val markers = Seq(
+      "en" -> "'the','a','of','and','is','to','in','that','it','for'",
+      "de" -> "'der','die','das','und','ist','nicht','mit','ein','zu','den'",
+      "fr" -> "'le','la','les','et','est','un','une','des','que','pour'",
+      "es" -> "'el','la','los','las','y','es','un','una','que','por'")
+    val scores = markers.map { case (l, ws) =>
+      s"CAST(len(list_filter(tk, w -> list_contains([$ws], w))) AS DOUBLE) / (len(tk)+1) AS s_$l"
+    } :+ "CAST(cjk AS DOUBLE) / tlen * 10.0 AS s_zh"
+    val best = "greatest(s_en, s_de, s_fr, s_es, s_zh)"
+    val argmax = markers.map { case (l, _) => s"WHEN s_$l = $best THEN '$l'" }
+    raw"""${alias}_s AS (
+       |  SELECT $c,
+       |    ${scores.mkString(",\n    ")}
+       |  FROM (SELECT $c,
+       |          string_split_regex(trim(lower(text)), $WsSql) AS tk,
+       |          length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]', '', 'g')) AS cjk,
+       |          greatest(length(text), 1) AS tlen
+       |        FROM $src)
+       |), $alias AS (
+       |  SELECT $c,
+       |    CASE WHEN $best <= 0.005 THEN 'und'
+       |         ${argmax.mkString("\n         ")}
+       |         ELSE 'zh' END AS lang_pred
+       |  FROM ${alias}_s
+       |)""".stripMargin
+  }
+
+  /** TextOps.repetitionStats over `src` (doc_id, text): CTE `$alias` =
+    * (doc_id, n_words, dup_word_ratio, top_word_ratio,
+    * adjacent_dup_count, flagged). */
+  private def repetitionCtes(alias: String, src: String): String =
+    raw"""${alias}_w AS (
+      |  SELECT doc_id, string_split_regex(trim(text), $WsSql) AS ws FROM $src
+      |), ${alias}_b AS (
+      |  SELECT doc_id, len(ws) AS n_words,
+      |         round(1.0 - CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws), 6) AS dup_word_ratio,
+      |         len(list_filter(range(2, len(ws) + 1), i -> ws[i] = ws[i-1])) AS adjacent_dup_count
+      |  FROM ${alias}_w
+      |), ${alias}_top AS (
+      |  SELECT doc_id, max(cnt) AS top FROM (
+      |    SELECT doc_id, word, count(*) AS cnt
+      |    FROM (SELECT doc_id, unnest(ws) AS word FROM ${alias}_w) GROUP BY doc_id, word
+      |  ) GROUP BY doc_id
+      |), $alias AS (
+      |  SELECT doc_id, n_words, dup_word_ratio, top_word_ratio, adjacent_dup_count,
+      |         (dup_word_ratio > 0.8 OR top_word_ratio > 0.2) AS flagged
+      |  FROM (SELECT b.*, round(CAST(t.top AS DOUBLE) / b.n_words, 6) AS top_word_ratio
+      |        FROM ${alias}_b b JOIN ${alias}_top t USING (doc_id))
+      |)""".stripMargin
+
+  /** Decontamination.scan over `documents`: distinct space-split
+    * word-4-grams per doc, the eval set is `doc_id % 50 = 0`, and CTE
+    * `$alias` = (doc_id, n_hit_ngrams) counts each other doc's grams
+    * found in the eval set (docs without a hit are absent). */
+  private def decontamHitsCtes(alias: String): String =
+    s"""${alias}_w AS (
+      |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+      |), ${alias}_g AS (
+      |  SELECT DISTINCT doc_id, array_to_string(ws[i:i+3], ' ') AS gram
+      |  FROM ${alias}_w, LATERAL (SELECT unnest(range(1, greatest(len(ws) - 2, 1))) AS i) t
+      |), ${alias}_eval AS (
+      |  SELECT DISTINCT gram FROM ${alias}_g WHERE doc_id % 50 = 0
+      |), $alias AS (
+      |  SELECT g.doc_id, count(*) AS n_hit_ngrams
+      |  FROM ${alias}_g g JOIN ${alias}_eval USING (gram)
+      |  WHERE g.doc_id % 50 <> 0
+      |  GROUP BY 1
+      |)""".stripMargin
+
+  /** The synthetic-PII injection (every 10th doc gains an email, every
+    * 7th a phone, every 13th an IP, derived from doc_id) as a SQL
+    * expression over `doc_id` and `text` — [[withSyntheticPii]]'s
+    * recipe. The fixture corpus holds no PII, and zero counts would
+    * make the cross-engine regex check vacuous. */
+  private val piiInjectedSql: String =
+    """concat_ws(' ',
+      |    CASE WHEN doc_id % 10 = 0 THEN 'contact user' || CAST(doc_id AS VARCHAR) || '@example.com now' END,
+      |    CASE WHEN doc_id % 7 = 0 THEN 'call 555-123-4567' END,
+      |    CASE WHEN doc_id % 13 = 0 THEN 'from 10.0.0.1' END,
+      |    text)""".stripMargin
+
+  /** The oracle's PII patterns (RE2 syntax, in the engine's order) with
+    * each one's redaction tag. */
+  private val piiPatternsSql = Seq(
+    """'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'""" -> "'[EMAIL]'",
+    """'\b\d{3}[-.]\d{3}[-.]\d{4}\b'""" -> "'[PHONE]'",
+    """'\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'""" -> "'[IP]'")
+
+  private def piiCountSql(pattern: String, text: String): String =
+    s"len(regexp_extract_all($text, $pattern))"
+
+  /** The engine side of [[piiInjectedSql]]: `text` with the synthetic
+    * PII prepended, over the frame's `doc_id`. */
+  private def withSyntheticPii(text: org.apache.spark.sql.Column) =
+    concat_ws(" ",
+      when(col("doc_id") % 10 === 0,
+        concat(lit("contact user"), col("doc_id").cast("string"), lit("@example.com now"))),
+      when(col("doc_id") % 7 === 0, lit("call 555-123-4567")),
+      when(col("doc_id") % 13 === 0, lit("from 10.0.0.1")),
+      text)
+
+  /** Cosine of two embedding columns with the engine's exact
+    * left-to-right dot fold ([[dotFold]]). */
+  private def cosSql(a: String, b: String): String =
+    s"${dotFold(a, b)} / (sqrt(${dotFold(a, a)}) * sqrt(${dotFold(b, b)}))"
+
+  /** The ANN top-5 card over a `scored(query_id, neighbor_id, cos_raw)`
+    * CTE: rank by (cosine desc, neighbor asc), keep 5 per query. */
+  private val annTop5Sql: String =
+    """ranked AS (
+      |  SELECT query_id, neighbor_id, cos_raw,
+      |         row_number() OVER (PARTITION BY query_id
+      |                            ORDER BY cos_raw DESC, neighbor_id ASC) AS rank
+      |  FROM scored
+      |)
+      |SELECT query_id, rank, neighbor_id, round(cos_raw, 6) AS cosine
+      |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** Sampling.splitAssign's md5 bucket: the first four hex digits of
+    * md5(CAST(`e` AS VARCHAR)) as an integer, mod `m`. */
+  private def md5ModSql(e: String, m: Int): String =
+    (1 to 4).map { i =>
+      val digit = s"(instr('0123456789abcdef', substr(md5(CAST($e AS VARCHAR)),$i,1))-1)"
+      if (i < 4) s"$digit * ${1 << (4 * (4 - i))}" else digit
+    }.mkString("(", "\n        + ", s") % $m")
 
   // ------------------------------------------------------------ text analysis
 
@@ -30,30 +212,17 @@ object ExtQueries {
         "avg_token_len", "punct_ratio", "digit_ratio", "stopword_ratio",
         "quality_score")
 
-  val textStatsSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, text,
-      |         string_split_regex(trim(text), '[ \t\n\x0B\f\r]+') AS tk
-      |  FROM documents
-      |), stats AS (
-      |  SELECT doc_id,
-      |         len(tk) AS token_count,
-      |         len(regexp_extract_all(text, '''(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^ \t\n\x0B\f\r\p{L}\p{N}]+')) AS bpe_token_count,
-      |         length(text) AS char_count,
-      |         round(CAST(list_sum(list_transform(tk, w -> length(w))) AS DOUBLE) / len(tk), 6) AS avg_token_len,
-      |         round(CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / length(text), 6) AS punct_ratio,
-      |         round(CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text), 6) AS digit_ratio,
-      |         round(CAST(len(list_filter(tk, w -> list_contains(['the','a','an','of','and','or','is','are','in','on','to','it','this','that','with','for','as','at','by','be'], w))) AS DOUBLE) / len(tk), 6) AS stopword_ratio
-      |  FROM toks
-      |)
-      |SELECT doc_id, token_count, bpe_token_count,
-      |       char_count, avg_token_len, punct_ratio,
-      |       digit_ratio, stopword_ratio,
-      |       round(least(1.0, greatest(0.0,
-      |         0.15 * ln(1.0 + token_count)
-      |         - 2.0 * punct_ratio - 2.0 * digit_ratio
-      |         - abs(stopword_ratio - 0.35))), 6) AS quality_score
-      |FROM stats ORDER BY doc_id""".stripMargin
+  val textStatsSql: String = {
+    val extra = Seq(
+      """len(regexp_extract_all(text, '''(?:[sdmt]|ll|ve|re)| ?\p{L}+| ?\p{N}+| ?[^ \t\n\x0B\f\r\p{L}\p{N}]+')) AS bpe_token_count""",
+      "length(text) AS char_count",
+      "round(CAST(list_sum(list_transform(tk, w -> length(w))) AS DOUBLE) / len(tk), 6) AS avg_token_len")
+    s"""WITH ${qualityCtes("stats", "documents", Seq("doc_id"), extra)}
+       |SELECT doc_id, token_count, bpe_token_count,
+       |       char_count, avg_token_len, punct_ratio,
+       |       digit_ratio, stopword_ratio, quality_score
+       |FROM stats ORDER BY doc_id""".stripMargin
+  }
 
   /** Content fingerprinting (md5 over normalized text) + exact dedup. */
   def dedupExact(s: SparkSession, dir: String): DataFrame =
@@ -137,13 +306,12 @@ object ExtQueries {
   def driftIncremental(s: SparkSession, dir: String): DataFrame = {
     val path = Staging.perJvm("graft_drift_store", dir) { p =>
       val docs = Tables.documents(s, dir)
-      val t0 = System.nanoTime()
-      graft.ops.DriftStore.writeProfile(docs.filter(col("doc_id") % 10 =!= 7), p)
-      val t1 = System.nanoTime()
-      graft.ops.DriftStore.applyDelta(s, p, docs.filter(col("doc_id") % 10 === 7))
-      stageTimings("q_drift_incremental") = Seq(
-        "write_profile" -> (t1 - t0) / 1e9,
-        "fold" -> (System.nanoTime() - t1) / 1e9)
+      timeStages("q_drift_incremental") { stage =>
+        stage("write_profile")(
+          graft.ops.DriftStore.writeProfile(docs.filter(col("doc_id") % 10 =!= 7), p))
+        stage("fold")(
+          graft.ops.DriftStore.applyDelta(s, p, docs.filter(col("doc_id") % 10 === 7)))
+      }
     }
     driftFromProfile(graft.ops.DriftStore.profile(s, path))
   }
@@ -362,34 +530,9 @@ object ExtQueries {
       .select("doc_id", "text").orderBy("doc_id")
       .select(col("doc_id"), TextOps.langId(col("text")).as("lang_pred"))
 
-  /** DuckDB re-expression of TextOps.langId: same marker sets, same
-    * `score / (|tokens|+1)` arithmetic, same strict-improvement argmax
-    * (first language in [en,de,fr,es,zh] order attaining the max wins;
-    * max must clear the 0.005 'und' floor). */
   val langIdSql: String =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |         string_split_regex(trim(lower(text)), '[ \t\n\x0B\f\r]+') AS tk,
-      |         length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]', '', 'g')) AS cjk,
-      |         greatest(length(text), 1) AS tlen
-      |  FROM documents
-      |), s AS (
-      |  SELECT doc_id,
-      |    CAST(len(list_filter(tk, w -> list_contains(['the','a','of','and','is','to','in','that','it','for'], w))) AS DOUBLE) / (len(tk)+1) AS s_en,
-      |    CAST(len(list_filter(tk, w -> list_contains(['der','die','das','und','ist','nicht','mit','ein','zu','den'], w))) AS DOUBLE) / (len(tk)+1) AS s_de,
-      |    CAST(len(list_filter(tk, w -> list_contains(['le','la','les','et','est','un','une','des','que','pour'], w))) AS DOUBLE) / (len(tk)+1) AS s_fr,
-      |    CAST(len(list_filter(tk, w -> list_contains(['el','la','los','las','y','es','un','una','que','por'], w))) AS DOUBLE) / (len(tk)+1) AS s_es,
-      |    CAST(cjk AS DOUBLE) / tlen * 10.0 AS s_zh
-      |  FROM t
-      |)
-      |SELECT doc_id,
-      |  CASE WHEN greatest(s_en, s_de, s_fr, s_es, s_zh) <= 0.005 THEN 'und'
-      |       WHEN s_en = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'en'
-      |       WHEN s_de = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'de'
-      |       WHEN s_fr = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'fr'
-      |       WHEN s_es = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'es'
-      |       ELSE 'zh' END AS lang_pred
-      |FROM s ORDER BY doc_id""".stripMargin
+    s"""WITH ${langIdCtes("lp", "documents", Seq("doc_id"))}
+       |SELECT doc_id, lang_pred FROM lp ORDER BY doc_id""".stripMargin
 
   /** TF-IDF top-3 terms per document (keyword extraction — the
     * "characterize each doc by its distinguishing terms" profiling
@@ -414,8 +557,13 @@ object ExtQueries {
   }
 
   val tfidfTopTermsSql: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\x0B\f\r]+') AS ws FROM documents
+    tfidfSql(s"SELECT doc_id, string_split_regex(trim(text), $WsSql) AS ws FROM documents")
+
+  /** TF-IDF top-3 terms per document over `words` (doc_id, ws): the
+    * corpus is `words`' rows. */
+  private def tfidfSql(words: String): String =
+    s"""WITH w AS (
+      |  $words
       |), u AS (
       |  SELECT doc_id, unnest(ws) AS word FROM w
       |), tf AS (
@@ -423,7 +571,7 @@ object ExtQueries {
       |), dfreq AS (
       |  SELECT word, count(*) AS df FROM tf GROUP BY 1
       |), n AS (
-      |  SELECT count(*) AS n_docs FROM documents
+      |  SELECT count(*) AS n_docs FROM w
       |), scored AS (
       |  SELECT tf.doc_id, tf.word,
       |         round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfreq.df), 6) AS score
@@ -443,25 +591,10 @@ object ExtQueries {
     TextOps.repetitionStats(Tables.documents(s, dir)).orderBy("doc_id")
 
   val repetitionSql: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\x0B\f\r]+') AS ws FROM documents
-      |), base AS (
-      |  SELECT doc_id, len(ws) AS n_words,
-      |         round(1.0 - CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws), 6) AS dup_word_ratio,
-      |         len(list_filter(range(2, len(ws) + 1), i -> ws[i] = ws[i-1])) AS adjacent_dup_count
-      |  FROM w
-      |), u AS (
-      |  SELECT doc_id, unnest(ws) AS word FROM w
-      |), c AS (
-      |  SELECT doc_id, max(cnt) AS top FROM (
-      |    SELECT doc_id, word, count(*) AS cnt FROM u GROUP BY doc_id, word
-      |  ) GROUP BY doc_id
-      |)
-      |SELECT b.doc_id, b.n_words, b.dup_word_ratio,
-      |       round(CAST(c.top AS DOUBLE) / b.n_words, 6) AS top_word_ratio,
-      |       b.adjacent_dup_count,
-      |       (b.dup_word_ratio > 0.8 OR round(CAST(c.top AS DOUBLE) / b.n_words, 6) > 0.2) AS flagged
-      |FROM base b JOIN c USING (doc_id) ORDER BY b.doc_id""".stripMargin
+    s"""WITH ${repetitionCtes("rep", "documents")}
+       |SELECT doc_id, n_words, dup_word_ratio, top_word_ratio,
+       |       adjacent_dup_count, flagged
+       |FROM rep ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------- sessionization
 
@@ -475,18 +608,7 @@ object ExtQueries {
       .orderBy("user_id", "session_idx")
 
   val sessionizeSql: String =
-    """WITH flagged AS (
-      |  SELECT user_id, ts, event_id, value, event_type,
-      |         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-      |                OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-      |              THEN 1 ELSE 0 END AS is_new
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      |), sessioned AS (
-      |  SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-      |  FROM flagged
-      |)
+    s"""WITH ${sessionsCte("sessioned", 1800000000L, "", Seq("value", "event_type"))}
       |SELECT user_id, session_idx,
       |       min(ts) AS session_start, max(ts) AS session_end,
       |       count(*) AS n_events,
@@ -526,24 +648,32 @@ object ExtQueries {
       .orderBy("user_id", "session_idx")
   }
 
-  /** Shared oracle CTE: the 48 h-gap burst windows for one event type
-    * (the sessionize oracle's derivation, filtered and with µs gap
-    * 172800000000). */
-  private def burstCteSql(eventType: String, alias: String): String =
+  /** Sessionize re-derived over the `events` rows passing `where`: CTE
+    * `$alias` = (user_id, ts, carry*, session_idx), a user's session
+    * ending wherever the gap to their previous event exceeds `gapUs`
+    * microseconds. */
+  private def sessionsCte(alias: String, gapUs: Long, where: String,
+      carry: Seq[String]): String = {
+    val c = carry.map(", " + _).mkString
     s"""$alias AS (
-      |  SELECT user_id,
+      |  SELECT user_id, ts$c,
       |         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx,
-      |         ts
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
       |  FROM (
-      |    SELECT user_id, ts, event_id,
+      |    SELECT user_id, ts, event_id$c,
       |           CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-      |                  OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 172800000000
+      |                  OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > $gapUs
       |                THEN 1 ELSE 0 END AS is_new
-      |    FROM events WHERE event_type = '$eventType'
+      |    FROM events $where
       |    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
       |  )
-      |), ${alias}w AS (
+      |)""".stripMargin
+  }
+
+  /** Shared oracle CTE: the 48 h-gap burst windows for one event type. */
+  private def burstCteSql(eventType: String, alias: String): String =
+    s"""${sessionsCte(alias, 172800000000L, s"WHERE event_type = '$eventType'", Nil)},
+      |${alias}w AS (
       |  SELECT user_id, session_idx, min(ts) AS session_start, max(ts) AS session_end
       |  FROM $alias GROUP BY 1, 2
       |)""".stripMargin
@@ -695,6 +825,10 @@ object ExtQueries {
       Tables.events(s, dir).coalesce(1).write.mode("overwrite").parquet(p)
     }
 
+  /** The staged events as a file stream. */
+  private def eventStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(Tables.events(s, dir).schema).parquet(stageEvents(s, dir))
+
   /** State-store parallelism for the staged-fixture streaming queries
     * (r8): a streaming query's state-store count is frozen at first
     * start from shuffle.partitions, and EVERY store pays per-batch
@@ -714,12 +848,10 @@ object ExtQueries {
     * batch SQL with that cutoff (streaming == batch is additionally
     * spec-tested in StreamingSpec). */
   def streamWindow(s: SparkSession, dir: String): DataFrame = {
-    val events = Tables.events(s, dir)
-    val tmp = stageEvents(s, dir)
     val sink = s"stream_win_${math.abs(dir.hashCode)}"
     graft.streaming.StreamingOps.runAvailableNow(
       graft.streaming.StreamingOps.windowedValue(
-        s.readStream.schema(events.schema).parquet(tmp))
+        eventStream(s, dir))
         .select(col("window_start"), col("event_type"), col("n_events"),
           col("total_value").cast("double").as("total_value")),
       sink, statePartitions = Some(StreamParts))
@@ -749,12 +881,10 @@ object ExtQueries {
     * per (window, type) with the engine's binning/interpolation
     * arithmetic, so the streaming sketch is hash-gated end-to-end. */
   def streamPercentile(s: SparkSession, dir: String): DataFrame = {
-    val events = Tables.events(s, dir)
-    val tmp = stageEvents(s, dir)
     val sink = s"stream_pct_${math.abs(dir.hashCode)}"
     graft.streaming.StreamingOps.runAvailableNow(
       graft.streaming.StreamingOps.windowedPercentile(
-        s.readStream.schema(events.schema).parquet(tmp)),
+        eventStream(s, dir)),
       sink, statePartitions = Some(StreamParts))
     s.table(sink).orderBy("window_start", "event_type")
   }
@@ -785,12 +915,10 @@ object ExtQueries {
     * (per-window distinct users ≪ capacity), so fully hash-oracled
     * with the same watermark-cutoff determinism as q_stream_window. */
   def streamTopK(s: SparkSession, dir: String): DataFrame = {
-    val events = Tables.events(s, dir)
-    val tmp = stageEvents(s, dir)
     val sink = s"stream_topk_${math.abs(dir.hashCode)}"
     graft.streaming.StreamingOps.runAvailableNow(
       graft.streaming.StreamingOps.windowedTopK(
-        s.readStream.schema(events.schema).parquet(tmp)),
+        eventStream(s, dir)),
       sink, statePartitions = Some(StreamParts))
     s.table(sink).orderBy("window_start", "event_type", "top_user")
   }
@@ -826,10 +954,8 @@ object ExtQueries {
     * DISTINCT in DuckDB. Dedup emits on arrival (append mode needs no
     * window close), so no watermark cutoff applies. */
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val events = Tables.events(s, dir)
-    val tmp = stageEvents(s, dir)
     val sink = s"stream_dedup_${math.abs(dir.hashCode)}"
-    val keyed = s.readStream.schema(events.schema).parquet(tmp)
+    val keyed = eventStream(s, dir)
       .select(date_trunc("hour", col("ts")).as("ts"),
         col("user_id"), col("event_type"))
     graft.streaming.StreamingOps.runAvailableNow(
@@ -857,10 +983,8 @@ object ExtQueries {
     * so with single-batch AvailableNow the result equals the batch
     * join — which is exactly what the oracle states. */
   def streamJoin(s: SparkSession, dir: String): DataFrame = {
-    val events = Tables.events(s, dir)
-    val tmp = stageEvents(s, dir)
     val sink = s"stream_join_${math.abs(dir.hashCode)}"
-    val src = s.readStream.schema(events.schema).parquet(tmp)
+    val src = eventStream(s, dir)
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
         col("ts").as("p_ts"), col("value").as("purchase_value"))
@@ -905,19 +1029,7 @@ object ExtQueries {
   }
 
   val decontamSql: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-      |), g AS (
-      |  SELECT DISTINCT doc_id, array_to_string(ws[i:i+3], ' ') AS gram
-      |  FROM w, LATERAL (SELECT unnest(range(1, greatest(len(ws) - 2, 1))) AS i) t
-      |), bench AS (
-      |  SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0
-      |), hits AS (
-      |  SELECT g.doc_id, count(*) AS n_hit_ngrams
-      |  FROM g JOIN bench USING (gram)
-      |  WHERE g.doc_id % 50 <> 0
-      |  GROUP BY 1
-      |)
+    s"""WITH ${decontamHitsCtes("hits")}
       |SELECT d.doc_id, coalesce(h.n_hit_ngrams, 0) AS n_hit_ngrams,
       |       coalesce(h.n_hit_ngrams, 0) > 0 AS contaminated
       |FROM (SELECT doc_id FROM documents WHERE doc_id % 50 <> 0) d
@@ -959,9 +1071,7 @@ object ExtQueries {
   }
 
   lazy val decontamSemanticSql: String = {
-    val cos = s"${dotFold("c.embedding", "ev.embedding")} / " +
-      s"(sqrt(${dotFold("c.embedding", "c.embedding")}) * " +
-      s"sqrt(${dotFold("ev.embedding", "ev.embedding")}))"
+    val cos = cosSql("c.embedding", "ev.embedding")
     s"""WITH ev AS (
        |  SELECT vec_id AS eval_id, embedding FROM embeddings WHERE vec_id % 50 = 0
        |), hit AS (
@@ -1165,22 +1275,15 @@ object ExtQueries {
   def passageDedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val path = Staging.perJvm("graft_inc_segs", dir) { p =>
       val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-      val t = quartileSplits(docs)
-      val t0 = System.nanoTime()
-      graft.ops.IncrementalSegments.writeState(
-        docs.filter(col("doc_id") < t(0)), s"$p/state")
-      val tState = System.nanoTime()
-      Seq(
-        docs.filter(col("doc_id") >= t(0) && col("doc_id") < t(1)),
-        docs.filter(col("doc_id") >= t(1) && col("doc_id") < t(2)),
-        docs.filter(col("doc_id") >= t(2)))
-        .zipWithIndex.foreach { case (b, i) =>
+      val (first, later) = quartileBatches(docs)
+      timeStages("q_passage_dedup_incremental") { stage =>
+        stage("write_state")(
+          graft.ops.IncrementalSegments.writeState(first, s"$p/state"))
+        stage("fold")(later.zipWithIndex.foreach { case (b, i) =>
           graft.ops.IncrementalSegments.applyDelta(s, s"$p/state", b,
             foldId = Some(s"b$i"))
-        }
-      stageTimings("q_passage_dedup_incremental") = Seq(
-        "write_state" -> (tState - t0) / 1e9,
-        "fold" -> (System.nanoTime() - tState) / 1e9)
+        })
+      }
     }
     passageCard(graft.ops.IncrementalSegments.dedupFromState(s, s"$path/state"))
   }
@@ -1234,6 +1337,26 @@ object ExtQueries {
   val stageTimings =
     scala.collection.concurrent.TrieMap[String, Seq[(String, Double)]]()
 
+  /** One staging closure's clock: `stage(label) { ... }` runs the block
+    * timed by [[graft.measure.seconds]] and keeps the label in run
+    * order. */
+  private final class StageClock {
+    private[ExtQueries] val timings = Seq.newBuilder[(String, Double)]
+    def apply[T](label: String)(f: => T): T = {
+      var out: Option[T] = None
+      timings += label -> graft.measure.seconds { out = Some(f) }
+      out.get
+    }
+  }
+
+  /** Runs a staging closure's stages on one [[StageClock]] and, once
+    * all of them completed, records them as `query`'s [[stageTimings]]. */
+  private def timeStages(query: String)(body: StageClock => Unit): Unit = {
+    val clock = new StageClock
+    body(clock)
+    stageTimings(query) = clock.timings.result()
+  }
+
   /** Per-query staging COUNTERS (counts, not seconds) — kept apart
     * from [[stageTimings]] so artifact consumers summing or comparing
     * stage seconds never misread a bucket count as a duration
@@ -1254,6 +1377,16 @@ object ExtQueries {
     docs.stat.approxQuantile("doc_id", Array(0.25, 0.5, 0.75), 0.01)
       .map(_.toLong).toSeq
 
+  /** `docs` split at [[quartileSplits]]: the first quartile (the state
+    * build) and the three later ones (the folds), in id order. */
+  private def quartileBatches(docs: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    val t = quartileSplits(docs)
+    (docs.filter(col("doc_id") < t(0)), Seq(
+      docs.filter(col("doc_id") >= t(0) && col("doc_id") < t(1)),
+      docs.filter(col("doc_id") >= t(1) && col("doc_id") < t(2)),
+      docs.filter(col("doc_id") >= t(2))))
+  }
+
   /** MinHash candidate pairs staged to parquet once per source dir:
     * q_dedup_minhash and q_ngram_jaccard both consume the same
     * banding + verify pipeline — the most expensive text stage in the
@@ -1264,14 +1397,13 @@ object ExtQueries {
     * the bench's per-run arrays. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
     val path = Staging.perJvm("graft_minhash_pairs", dir) { p =>
-      val t0 = System.nanoTime()
-      MinHashLSH.candidatePairs(Tables.documents(s, dir))
-        .write.mode("overwrite").parquet(p)
       // the staging pipeline is the honest q_dedup_minhash cost; sweep
       // samples after the first replay the staged parquet (r12: the
       // bench's dedicated stage pass re-measures this n≥5)
-      stageTimings("q_dedup_minhash") = Seq(
-        "pipeline" -> (System.nanoTime() - t0) / 1e9)
+      timeStages("q_dedup_minhash") { stage =>
+        stage("pipeline")(MinHashLSH.candidatePairs(Tables.documents(s, dir))
+          .write.mode("overwrite").parquet(p))
+      }
     }
     // staged artifact is written once per JVM and immutable after —
     // memoized-schema read skips per-run footer inference (r19)
@@ -1370,12 +1502,15 @@ object ExtQueries {
        |)""".stripMargin
   }
 
-  val dedupMinhashSql: String = minhashPairsCtes +
-    """
+  val dedupMinhashSql: String = minhashTopSql(pairFilter = None)
+
+  /** The top-20 verified minhash pairs passing `pairFilter`. */
+  private def minhashTopSql(pairFilter: Option[String]): String = minhashPairsCtes +
+    s"""
       |SELECT p.a_id, p.b_id,
       |       round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
       |             / len(list_distinct(list_concat(sa.sh, sb.sh))), 6) AS jaccard
-      |FROM pairs p JOIN sh sa ON sa.doc_id = p.a_id JOIN sh sb ON sb.doc_id = p.b_id
+      |FROM pairs p JOIN sh sa ON sa.doc_id = p.a_id JOIN sh sb ON sb.doc_id = p.b_id${pairFilter.fold("")("\nWHERE " + _)}
       |ORDER BY jaccard DESC, a_id, b_id LIMIT 20""".stripMargin
 
   /** Incremental dedup against a persisted corpus index (r8): docs with
@@ -1394,14 +1529,8 @@ object ExtQueries {
       .limit(20)
   }
 
-  val dedupIncrementalSql: String = minhashPairsCtes +
-    """
-      |SELECT p.a_id, p.b_id,
-      |       round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-      |             / len(list_distinct(list_concat(sa.sh, sb.sh))), 6) AS jaccard
-      |FROM pairs p JOIN sh sa ON sa.doc_id = p.a_id JOIN sh sb ON sb.doc_id = p.b_id
-      |WHERE p.a_id % 10 = 7 OR p.b_id % 10 = 7
-      |ORDER BY jaccard DESC, a_id, b_id LIMIT 20""".stripMargin
+  val dedupIncrementalSql: String =
+    minhashTopSql(Some("p.a_id % 10 = 7 OR p.b_id % 10 = 7"))
 
   /** Once-per-JVM corpus index build for [[dedupIncremental]] (the
     * "offline index job"; same per-JVM temp staging + cleanup as
@@ -1502,14 +1631,7 @@ object ExtQueries {
       |           AS cos_raw
       |  FROM embeddings q, embeddings c
       |  WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id
-      |), ranked AS (
-      |  SELECT query_id, neighbor_id, cos_raw,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY cos_raw DESC, neighbor_id ASC) AS rank
-      |  FROM scored
-      |)
-      |SELECT query_id, rank, neighbor_id, round(cos_raw, 6) AS cosine
-      |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+      |), """.stripMargin + annTop5Sql
 
   /** LSH-bucketed ANN. Fully oracled since r7: the Gaussian hyperplanes
     * are driver-side constants from spec-fixed java.util.Random (the
@@ -1540,6 +1662,15 @@ object ExtQueries {
       s"list_transform(list_zip($v, $p), pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE))), " +
       s"(acc, x) -> acc + x)"
 
+  /** The engine's exact left-to-right Σ (v_i − c_i)² fold (KMeans and
+    * IvfIndex `nearest`). */
+  private def sqDistSql(v: String, c: String): String =
+    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
+      s"list_transform(list_zip($v, $c), pr -> " +
+      s"(CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE)) * " +
+      s"(CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE)))), " +
+      s"(acc, x) -> acc + x)"
+
   /** Per-table bucket: Σ_b (sign(v·plane[t][b]) << b) — mirrors
     * Similarity.bucketExpr with 1-based SQL indexing. */
   private def bucketFold(bits: Int, vec: String, planesIdx: String): String =
@@ -1547,9 +1678,7 @@ object ExtQueries {
       s"CASE WHEN ${dotFold(vec, s"$planesIdx[b]")} > 0 " +
       s"THEN (CAST(1 AS BIGINT) << (b - 1)) ELSE CAST(0 AS BIGINT) END)) AS BIGINT)"
 
-  val annLshSql: String = {
-    val cos = s"${dotFold("q.embedding", "c.embedding")} / " +
-      s"(sqrt(${dotFold("q.embedding", "q.embedding")}) * sqrt(${dotFold("c.embedding", "c.embedding")}))"
+  val annLshSql: String =
     s"""WITH params AS (
        |  SELECT ${planesLiteral(16, 5, 64, 42L)}::DOUBLE[][][] AS planes
        |), tabs AS (
@@ -1562,19 +1691,17 @@ object ExtQueries {
        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
        |  FROM cb q JOIN cb c ON q.tbl = c.tbl AND q.bucket = c.bucket
        |  WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id
-       |), scored AS (
-       |  SELECT cand.query_id, cand.neighbor_id, $cos AS cos_raw
+       |), $annScoredSql, """.stripMargin + annTop5Sql
+
+  /** The `scored` CTE over ANN `cand(query_id, neighbor_id)` pairs:
+    * each pair's exact cosine. */
+  private def annScoredSql: String =
+    s"""scored AS (
+       |  SELECT cand.query_id, cand.neighbor_id,
+       |         ${cosSql("q.embedding", "c.embedding")} AS cos_raw
        |  FROM cand JOIN embeddings q ON q.vec_id = cand.query_id
        |            JOIN embeddings c ON c.vec_id = cand.neighbor_id
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos_raw DESC, neighbor_id ASC) AS rank
-       |  FROM scored
-       |)
-       |SELECT query_id, rank, neighbor_id, round(cos_raw, 6) AS cosine
-       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
+       |)""".stripMargin
 
   /** Embedding-cosine near-dup pairs (LSH candidates, exact verify):
     * top-20 most-similar pairs. */
@@ -1604,9 +1731,7 @@ object ExtQueries {
     * loudly via error() if the corpus ever outgrows the embedded tensor
     * (the ASCII-guard pattern: a wrong-scale oracle must not silently
     * mismatch). */
-  val embedNearDupSql: String = {
-    val cos = s"${dotFold("a.embedding", "b.embedding")} / " +
-      s"(sqrt(${dotFold("a.embedding", "a.embedding")}) * sqrt(${dotFold("b.embedding", "b.embedding")}))"
+  val embedNearDupSql: String =
     s"""WITH bitchk AS (
        |  SELECT CASE WHEN least(62, greatest(10, CAST(ceil(log2(count(*) / 2.0)) AS INT))) <> 10
        |              THEN CAST(error('embedNearDup oracle embeds a bits=10 tensor; corpus now needs bits='
@@ -1632,18 +1757,21 @@ object ExtQueries {
        |  FROM slim a JOIN slim b USING (tbl, bucket)
        |  WHERE a.vec_id < b.vec_id
        |)
-       |SELECT p.a_id, p.b_id, round($cos, 6) AS cosine
+       |SELECT p.a_id, p.b_id, round(${cosSql("a.embedding", "b.embedding")}, 6) AS cosine
        |FROM pairs p JOIN embeddings a ON a.vec_id = p.a_id
        |             JOIN embeddings b ON b.vec_id = p.b_id
        |ORDER BY cosine DESC, a_id, b_id LIMIT 20""".stripMargin
-  }
 
   /** Unigram-LM quality card (r11, [[graft.ops.UnigramLm]]): corpus-
     * trained mean token log-probability per document, rolled up per
     * source. The per-word log-probs are 6dp-fixed decimals and every
     * cross-row sum is exact decimal, so the scores hash-oracle. */
   def unigramQuality(s: SparkSession, dir: String): DataFrame =
-    UnigramLm.scores(Tables.documents(s, dir))
+    logpCard(UnigramLm.scores(Tables.documents(s, dir)))
+
+  /** Per-source card over per-doc LM scores (doc_id, source, logp). */
+  private def logpCard(scores: DataFrame): DataFrame =
+    scores
       .groupBy("source")
       .agg(count(lit(1)).as("docs"),
         min("logp").as("min_logp"),
@@ -1653,9 +1781,8 @@ object ExtQueries {
       .orderBy("source")
 
   val unigramQualitySql: String =
-    """WITH tk AS (
-      |  SELECT doc_id, source,
-      |         unnest(string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+')) AS w
+    s"""WITH tk AS (
+      |  SELECT doc_id, source, unnest($lowerTokensSql) AS w
       |  FROM documents WHERE length(trim(text)) > 0
       |), dwc AS (
       |  SELECT doc_id, source, w, count(*) AS c FROM tk GROUP BY 1, 2, 3
@@ -1666,37 +1793,18 @@ object ExtQueries {
       |), lp AS (
       |  SELECT w, CAST(round(ln(CAST(cw AS DOUBLE) / t), 6) AS DECIMAL(18,6)) AS lp
       |  FROM vocab, tot
-      |), ds AS (
-      |  SELECT doc_id, source,
-      |         round(CAST(sum(CAST(c AS DECIMAL(18,0)) * lp) AS DOUBLE)
-      |               / sum(c), 6) AS logp
-      |  FROM dwc JOIN lp USING (w) GROUP BY 1, 2
-      |)
-      |SELECT source, count(*) AS docs,
-      |       min(logp) AS min_logp, max(logp) AS max_logp,
-      |       round(CAST(sum(CAST(logp AS DECIMAL(18,6))) AS DOUBLE)
-      |             / count(*), 6) AS avg_logp
-      |FROM ds GROUP BY source ORDER BY source""".stripMargin
+      |)""".stripMargin + logpCardSql("dwc", "w")
 
   /** Bigram-LM quality ([[graft.ops.BigramLm]], r11): the order-1
     * perplexity filter's per-source card — same shape as the unigram
     * card so the two filters read side by side. */
   def bigramQuality(s: SparkSession, dir: String): DataFrame =
-    BigramLm.scores(Tables.documents(s, dir))
-      .groupBy("source")
-      .agg(count(lit(1)).as("docs"),
-        min("logp").as("min_logp"),
-        max("logp").as("max_logp"),
-        round(sum(col("logp").cast("decimal(18,6)")).cast("double")
-          / count(lit(1)), 6).as("avg_logp"))
-      .orderBy("source")
+    logpCard(BigramLm.scores(Tables.documents(s, dir)))
 
   val bigramQualitySql: String =
-    """WITH tk AS (
-      |  SELECT doc_id, source,
-      |         string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS t
-      |  FROM documents
-      |  WHERE len(string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+')) >= 2
+    s"""WITH tk AS (
+      |  SELECT doc_id, source, $lowerTokensSql AS t
+      |  FROM documents WHERE len($lowerTokensSql) >= 2
       |), bg AS (
       |  SELECT doc_id, source,
       |         unnest(list_transform(range(len(t) - 1), i -> t[i+1])) AS w1,
@@ -1712,11 +1820,17 @@ object ExtQueries {
       |  SELECT w1, w2,
       |         CAST(round(ln(CAST(cb AS DOUBLE) / ch), 6) AS DECIMAL(18,6)) AS lp
       |  FROM vocab JOIN hist USING (w1)
-      |), ds AS (
+      |)""".stripMargin + logpCardSql("dbc", "w1, w2")
+
+  /** The per-source LM quality card: each doc's logp is the
+    * count-weighted mean of `lp` over its `counts(doc_id, source, key*,
+    * c)` rows, joined on `key`. */
+  private def logpCardSql(counts: String, key: String): String =
+    s""", ds AS (
       |  SELECT doc_id, source,
       |         round(CAST(sum(CAST(c AS DECIMAL(18,0)) * lp) AS DOUBLE)
       |               / sum(c), 6) AS logp
-      |  FROM dbc JOIN lp USING (w1, w2) GROUP BY 1, 2
+      |  FROM $counts JOIN lp USING ($key) GROUP BY 1, 2
       |)
       |SELECT source, count(*) AS docs,
       |       min(logp) AS min_logp, max(logp) AS max_logp,
@@ -1739,11 +1853,7 @@ object ExtQueries {
       .limit(50)
 
   val dsirSelectSql: String =
-    """WITH tk AS (
-      |  SELECT doc_id, source, (lang = 'en') AS is_t,
-      |         string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS t
-      |  FROM documents WHERE length(trim(text)) > 0
-      |), feats AS (
+    raw"""WITH ${tokensCte("tk", Seq("(lang = 'en') AS is_t"))}, feats AS (
       |  SELECT doc_id, source, is_t, unnest(t) AS g FROM tk
       |  UNION ALL
       |  SELECT doc_id, source, is_t,
@@ -1752,10 +1862,7 @@ object ExtQueries {
       |  FROM tk WHERE len(t) >= 2
       |), fb AS (
       |  SELECT doc_id, source, is_t,
-      |         ((strpos('0123456789abcdef', substr(md5(g), 1, 1)) - 1) * 4096
-      |        + (strpos('0123456789abcdef', substr(md5(g), 2, 1)) - 1) * 256
-      |        + (strpos('0123456789abcdef', substr(md5(g), 3, 1)) - 1) * 16
-      |        + (strpos('0123456789abcdef', substr(md5(g), 4, 1)) - 1)) % 4096 AS b
+      |         ${md5ModSql("g", 4096)} AS b
       |  FROM feats
       |), dbc AS (
       |  SELECT doc_id, source, is_t, b, count(*) AS c FROM fb GROUP BY 1, 2, 3, 4
@@ -1791,21 +1898,31 @@ object ExtQueries {
     * with df == 1. One (doc, gram) collapse + one gram-grain df
     * aggregate — the exact-substring machinery's cost envelope. */
   def noveltyCard(s: SparkSession, dir: String): DataFrame = {
-    val n = 8
-    val d = Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), TextOps.tokens(col("text")).as("tk"))
-      .filter(size(col("tk")) >= n)
     // NOT cached (r18, measured): persisting the exploded gram frame
     // materializes corpus×grams rows to MEMORY_AND_DISK and reads them
     // back in both branches — recomputing the narrow per-row gram
     // build twice is cheaper than one spill write + two spill reads
     // (the q_dup_spans posture; shuffle/broadcast shape unchanged)
-    val dgs = d.select(col("doc_id"), col("source"),
-      explode(array_distinct(expr(
-        s"transform(sequence(0, size(tk) - $n), i -> array_join(slice(tk, i + 1, $n), ' '))")))
-        .as("g"))
-    val dfT = dgs.groupBy("g").agg(count(lit(1)).as("df"))
-    dgs.join(dfT, "g")
+    val dgs = docGrams(Tables.documents(s, dir))
+    noveltyFrom(dgs, dgs.groupBy("g").agg(count(lit(1)).as("df")))
+  }
+
+  /** Each doc's distinct 8-token grams (doc_id, source, g), for docs of
+    * at least 8 tokens. */
+  private def docGrams(docs: DataFrame): DataFrame = {
+    val n = 8
+    docs.select(col("doc_id"), col("source"), TextOps.tokens(col("text")).as("tk"))
+      .filter(size(col("tk")) >= n)
+      .select(col("doc_id"), col("source"),
+        explode(array_distinct(expr(
+          s"transform(sequence(0, size(tk) - $n), i -> array_join(slice(tk, i + 1, $n), ' '))")))
+          .as("g"))
+  }
+
+  /** The novelty card of `dgs` ([[docGrams]]) against gram document
+    * frequencies `df` (g, df). */
+  private def noveltyFrom(dgs: DataFrame, df: DataFrame): DataFrame =
+    dgs.join(df, "g")
       .groupBy("doc_id", "source")
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("df") === 1, 1L).otherwise(0L)).as("uniq"))
@@ -1815,14 +1932,17 @@ object ExtQueries {
         sum("uniq").as("unique_grams"),
         round(sum("uniq").cast("double") / sum("n_grams"), 6).as("novelty_frac"))
       .orderBy("source")
-  }
 
-  val noveltyCardSql: String =
-    """WITH tk AS (
+  val noveltyCardSql: String = noveltySql(docFilter = None)
+
+  /** The novelty card over the docs passing `docFilter`, with document
+    * frequencies always from the whole corpus. */
+  private def noveltySql(docFilter: Option[String]): String =
+    raw"""WITH tk AS (
       |  SELECT doc_id, source,
-      |         string_split_regex(trim(text), '[ \t\n\x0B\f\r]+') AS t
+      |         string_split_regex(trim(text), $WsSql) AS t
       |  FROM documents
-      |  WHERE len(string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')) >= 8
+      |  WHERE len(string_split_regex(trim(text), $WsSql)) >= 8
       |), g AS (
       |  SELECT DISTINCT doc_id, source,
       |         array_to_string(list_slice(t, i + 1, i + 8), ' ') AS g
@@ -1832,7 +1952,7 @@ object ExtQueries {
       |), per AS (
       |  SELECT doc_id, source, count(*) AS n_grams,
       |         sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS uniq
-      |  FROM g JOIN df USING (g) GROUP BY 1, 2
+      |  FROM g JOIN df USING (g)${docFilter.fold("")(" WHERE " + _)} GROUP BY 1, 2
       |)
       |SELECT source, count(*) AS docs_scored,
       |       CAST(sum(n_grams) AS BIGINT) AS total_grams,
@@ -1852,49 +1972,11 @@ object ExtQueries {
     * the plain join is already gram-hash-bucket-prunable. */
   def noveltyIncremental(s: SparkSession, dir: String): DataFrame = {
     val path = incSpansState(s, dir)
-    val n = 8
-    val dgs = Tables.documents(s, dir)
-      .filter(col("doc_id") % 10 === 7)
-      .select(col("doc_id"), col("source"), TextOps.tokens(col("text")).as("tk"))
-      .filter(size(col("tk")) >= n)
-      .select(col("doc_id"), col("source"),
-        explode(array_distinct(expr(
-          s"transform(sequence(0, size(tk) - $n), i -> array_join(slice(tk, i + 1, $n), ' '))")))
-          .as("g"))
-    dgs.join(IncrementalSpans.readGramDf(s, path), "g")
-      .groupBy("doc_id", "source")
-      .agg(count(lit(1)).as("n_grams"),
-        sum(when(col("df") === 1, 1L).otherwise(0L)).as("uniq"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("docs_scored"),
-        sum("n_grams").as("total_grams"),
-        sum("uniq").as("unique_grams"),
-        round(sum("uniq").cast("double") / sum("n_grams"), 6).as("novelty_frac"))
-      .orderBy("source")
+    noveltyFrom(docGrams(Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)),
+      IncrementalSpans.readGramDf(s, path))
   }
 
-  val noveltyIncrementalSql: String =
-    """WITH tk AS (
-      |  SELECT doc_id, source,
-      |         string_split_regex(trim(text), '[ \t\n\x0B\f\r]+') AS t
-      |  FROM documents
-      |  WHERE len(string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')) >= 8
-      |), g AS (
-      |  SELECT DISTINCT doc_id, source,
-      |         array_to_string(list_slice(t, i + 1, i + 8), ' ') AS g
-      |  FROM tk, unnest(range(len(t) - 7)) AS u(i)
-      |), df AS (
-      |  SELECT g, count(*) AS df FROM g GROUP BY g
-      |), per AS (
-      |  SELECT doc_id, source, count(*) AS n_grams,
-      |         sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS uniq
-      |  FROM g JOIN df USING (g) WHERE doc_id % 10 = 7 GROUP BY 1, 2
-      |)
-      |SELECT source, count(*) AS docs_scored,
-      |       CAST(sum(n_grams) AS BIGINT) AS total_grams,
-      |       CAST(sum(uniq) AS BIGINT) AS unique_grams,
-      |       round(CAST(sum(uniq) AS DOUBLE) / sum(n_grams), 6) AS novelty_frac
-      |FROM per GROUP BY source ORDER BY source""".stripMargin
+  val noveltyIncrementalSql: String = noveltySql(Some("doc_id % 10 = 7"))
 
   /** Split-leakage card (late r11): duplicate content spanning
     * train/val/test boundaries — THE eval-hygiene number (a test doc
@@ -1923,13 +2005,9 @@ object ExtQueries {
   }
 
   val splitLeakageSql: String =
-    """WITH f AS (
-      |  SELECT md5(array_to_string(list_slice(
-      |           string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+'), 1, 8), ' ')) AS fp,
-      |         ((instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),1,1))-1) * 4096
-      |        + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),2,1))-1) * 256
-      |        + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),3,1))-1) * 16
-      |        + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),4,1))-1)) % 100 AS pct
+    raw"""WITH f AS (
+      |  SELECT md5(array_to_string(list_slice($lowerTokensSql, 1, 8), ' ')) AS fp,
+      |         ${md5ModSql("doc_id", 100)} AS pct
       |  FROM documents WHERE length(trim(text)) > 0
       |), d AS (
       |  SELECT DISTINCT fp,
@@ -1949,16 +2027,21 @@ object ExtQueries {
     * md5-fingerprint full-outer join in DuckDB. */
   def corpusDiff(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val oldV = docs.filter(col("doc_id") % 10 =!= 3)
-    val newV = docs.filter(col("doc_id") % 10 =!= 4)
+    diffCard(CorpusDiff.diff(docs.filter(col("doc_id") % 10 =!= 3), newVersion(docs)))
+  }
+
+  /** The diff's new snapshot: drops `%10==4` and edits every `%7==0`
+    * text. */
+  private def newVersion(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 10 =!= 4)
       .withColumn("text", when(col("doc_id") % 7 === 0,
         concat(col("text"), lit(" v2"))).otherwise(col("text")))
-    CorpusDiff.diff(oldV, newV)
-      .groupBy("source", "status")
+
+  private def diffCard(diff: DataFrame): DataFrame =
+    diff.groupBy("source", "status")
       .agg(count(lit(1)).as("n_docs"),
         min("doc_id").as("min_id"), max("doc_id").as("max_id"))
       .orderBy("source", "status")
-  }
 
   val corpusDiffSql: String =
     """WITH oldv AS (
@@ -1994,15 +2077,18 @@ object ExtQueries {
   private def fpState(s: SparkSession, dir: String): String =
     Staging.perJvm("graft_fp_store", dir) { p =>
       val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-      val t0 = System.nanoTime()
-      graft.ops.FingerprintStore.writeState(
-        docs.filter(col("doc_id") % 10 =!= 7), s"$p/state")
-      val t1 = System.nanoTime()
-      graft.ops.FingerprintStore.applyDelta(s, s"$p/state",
-        docs.filter(col("doc_id") % 10 === 7), foldId = Some("b0"))
-      stageTimings("q_split_leakage_incremental") = Seq(
-        "write_state" -> (t1 - t0) / 1e9,
-        "fold" -> (System.nanoTime() - t1) / 1e9)
+      foldedFingerprints(s, "q_split_leakage_incremental", s"$p/state",
+        docs.filter(col("doc_id") % 10 =!= 7), docs.filter(col("doc_id") % 10 === 7))
+    }
+
+  /** A [[graft.ops.FingerprintStore]] built on `state` and folded with
+    * `delta`, its two stages timed under `query`. */
+  private def foldedFingerprints(s: SparkSession, query: String, root: String,
+      state: DataFrame, delta: DataFrame): Unit =
+    timeStages(query) { stage =>
+      stage("write_state")(graft.ops.FingerprintStore.writeState(state, root))
+      stage("fold")(
+        graft.ops.FingerprintStore.applyDelta(s, root, delta, foldId = Some("b0")))
     }
 
   /** Split-leakage card from the maintained store — gated by the SAME
@@ -2019,25 +2105,11 @@ object ExtQueries {
     val path = Staging.perJvm("graft_fp_oldv", dir) { p =>
       val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
       val oldV = docs.filter(col("doc_id") % 10 =!= 3)
-      val t0 = System.nanoTime()
-      graft.ops.FingerprintStore.writeState(
-        oldV.filter(col("doc_id") % 2 === 0), s"$p/state")
-      val t1 = System.nanoTime()
-      graft.ops.FingerprintStore.applyDelta(s, s"$p/state",
-        oldV.filter(col("doc_id") % 2 =!= 0), foldId = Some("b0"))
-      stageTimings("q_corpus_diff_incremental") = Seq(
-        "write_state" -> (t1 - t0) / 1e9,
-        "fold" -> (System.nanoTime() - t1) / 1e9)
+      foldedFingerprints(s, "q_corpus_diff_incremental", s"$p/state",
+        oldV.filter(col("doc_id") % 2 === 0), oldV.filter(col("doc_id") % 2 =!= 0))
     }
-    val docs = Tables.documents(s, dir)
-    val newV = docs.filter(col("doc_id") % 10 =!= 4)
-      .withColumn("text", when(col("doc_id") % 7 === 0,
-        concat(col("text"), lit(" v2"))).otherwise(col("text")))
-    graft.ops.FingerprintStore.diffAgainst(s, s"$path/state", newV)
-      .groupBy("source", "status")
-      .agg(count(lit(1)).as("n_docs"),
-        min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-      .orderBy("source", "status")
+    diffCard(graft.ops.FingerprintStore.diffAgainst(s, s"$path/state",
+      newVersion(Tables.documents(s, dir))))
   }
 
   /** Overlapping retrieval chunks ([[graft.ops.Chunking]], late r11):
@@ -2051,11 +2123,7 @@ object ExtQueries {
       .orderBy("doc_id", "chunk_id")
 
   val chunksExportSql: String =
-    """WITH tk AS (
-      |  SELECT doc_id, source,
-      |         string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS t
-      |  FROM documents WHERE length(trim(text)) > 0
-      |), ks AS (
+    s"""WITH ${tokensCte("tk")}, ks AS (
       |  SELECT doc_id, source, t, len(t) AS n,
       |         CAST(floor((greatest(len(t) - 64, 0) + 47) / 48.0) AS INT) AS k
       |  FROM tk
@@ -2091,16 +2159,13 @@ object ExtQueries {
     val pred = col("lang") === "en"
     val path = Staging.perJvm("graft_dsir_store", dir) { p =>
       val docs = Tables.documents(s, dir)
-      val t0 = System.nanoTime()
-      DsirStore.writeCounts(docs.filter(col("doc_id") % 3 === 0), pred, s"$p/s")
-      val t1 = System.nanoTime()
-      DsirStore.applyDelta(s, s"$p/s", docs.filter(col("doc_id") % 3 === 1),
-        pred, foldId = Some("b1"))
-      DsirStore.applyDelta(s, s"$p/s", docs.filter(col("doc_id") % 3 === 2),
-        pred, foldId = Some("b2"))
-      stageTimings("q_dsir_incremental") = Seq(
-        "write_counts" -> (t1 - t0) / 1e9,
-        "fold" -> (System.nanoTime() - t1) / 1e9)
+      timeStages("q_dsir_incremental") { stage =>
+        stage("write_counts")(
+          DsirStore.writeCounts(docs.filter(col("doc_id") % 3 === 0), pred, s"$p/s"))
+        stage("fold")(Seq(1, 2).foreach(i =>
+          DsirStore.applyDelta(s, s"$p/s", docs.filter(col("doc_id") % 3 === i),
+            pred, foldId = Some(s"b$i"))))
+      }
     }
     DsirStore.scoresFromState(s, s"$path/s", Tables.documents(s, dir), pred)
       .select(col("doc_id"), col("source"), col("n_feats"),
@@ -2168,29 +2233,24 @@ object ExtQueries {
   private def bm25IncState(s: SparkSession, dir: String): String =
     Staging.perJvm("graft_bm25_inc", dir) { p =>
       val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-      val t = quartileSplits(docs)
-      val t0 = System.nanoTime()
-      Bm25Index.writeState(docs.filter(col("doc_id") < t(0)), s"$p/state")
-      val tState = System.nanoTime()
+      val (first, later) = quartileBatches(docs)
       // count the bucket compactions that ride inside the folds (r14,
       // VERDICT r13 task 6): the fold samples spanned 5.8–16.6 s in the
       // r13 dedicated pass, and whether a rep crosses a compactAt
       // threshold is what separates the tails — recording the count IN
       // the stage split lets the artifact attribute its own variance.
-      val c0 = graft.ops.BucketStore.compactedBuckets.sum()
-      Seq(
-        docs.filter(col("doc_id") >= t(0) && col("doc_id") < t(1)),
-        docs.filter(col("doc_id") >= t(1) && col("doc_id") < t(2)),
-        docs.filter(col("doc_id") >= t(2)))
-        .zipWithIndex.foreach { case (b, i) =>
-          Bm25Index.applyDelta(s, s"$p/state", b, foldId = Some(s"b$i"))
+      var compacted = 0L
+      timeStages("q_bm25_incremental") { stage =>
+        stage("write_state")(Bm25Index.writeState(first, s"$p/state"))
+        stage("fold") {
+          val c0 = graft.ops.BucketStore.compactedBuckets.sum()
+          later.zipWithIndex.foreach { case (b, i) =>
+            Bm25Index.applyDelta(s, s"$p/state", b, foldId = Some(s"b$i"))
+          }
+          compacted = graft.ops.BucketStore.compactedBuckets.sum() - c0
         }
-      stageTimings("q_bm25_incremental") = Seq(
-        "write_state" -> (tState - t0) / 1e9,
-        "fold" -> (System.nanoTime() - tState) / 1e9)
-      stageCounters("q_bm25_incremental") = Seq(
-        "fold_compacted_buckets" ->
-          (graft.ops.BucketStore.compactedBuckets.sum() - c0))
+      }
+      stageCounters("q_bm25_incremental") = Seq("fold_compacted_buckets" -> compacted)
     }
 
   /** Exact top-15 via MaxScore dynamic pruning
@@ -2246,29 +2306,7 @@ object ExtQueries {
   }
 
   val tfidfIncrementalSql: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS ws
-      |  FROM documents WHERE length(trim(text)) > 0
-      |), u AS (
-      |  SELECT doc_id, unnest(ws) AS word FROM w
-      |), tf AS (
-      |  SELECT doc_id, word, count(*) AS tf FROM u GROUP BY 1, 2
-      |), dfreq AS (
-      |  SELECT word, count(*) AS df FROM tf GROUP BY 1
-      |), n AS (
-      |  SELECT count(*) AS n_docs FROM w
-      |), scored AS (
-      |  SELECT tf.doc_id, tf.word,
-      |         round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfreq.df), 6) AS score
-      |  FROM tf JOIN dfreq USING (word) CROSS JOIN n
-      |), ranked AS (
-      |  SELECT doc_id, word, score,
-      |         CAST(row_number() OVER (PARTITION BY doc_id
-      |           ORDER BY score DESC, word ASC) AS INT) AS rk
-      |  FROM scored
-      |)
-      |SELECT doc_id, rk, word, score FROM ranked
-      |WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin
+    tfidfSql(s"SELECT doc_id, $lowerTokensSql AS ws FROM documents WHERE length(trim(text)) > 0")
 
   /** Exact-phrase search from the positional index
     * ([[graft.ops.Bm25Index.phraseFromState]], r11): every document
@@ -2283,11 +2321,7 @@ object ExtQueries {
   }
 
   val phraseSearchSql: String =
-    """WITH tk AS (
-      |  SELECT doc_id, source,
-      |         string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS t
-      |  FROM documents WHERE length(trim(text)) > 0
-      |), hits AS (
+    s"""WITH ${tokensCte("tk")}, hits AS (
       |  SELECT doc_id, source,
       |         CAST(len(list_filter(range(len(t) - 2),
       |               i -> t[i+1] = 'small' AND t[i+2] = 'query'
@@ -2313,15 +2347,15 @@ object ExtQueries {
       |  SELECT * FROM (VALUES ${terms.map(t => s"('$t')").mkString(", ")}) AS t(w)
       |), tk AS (
       |  SELECT doc_id, source,
-      |         CAST(len(string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+')) AS BIGINT) AS dl,
-      |         unnest(string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+')) AS w
+      |         CAST(len($lowerTokensSql) AS BIGINT) AS dl,
+      |         unnest($lowerTokensSql) AS w
       |  FROM documents WHERE length(trim(text)) > 0
       |), tf AS (
       |  SELECT doc_id, source, dl, w, count(*) AS tf
       |  FROM tk JOIN q USING (w) GROUP BY 1, 2, 3, 4
       |), stats AS (
       |  SELECT count(*) AS n,
-      |         CAST(sum(CAST(len(string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+')) AS BIGINT)) AS BIGINT) AS tot
+      |         CAST(sum(CAST(len($lowerTokensSql) AS BIGINT)) AS BIGINT) AS tot
       |  FROM documents WHERE length(trim(text)) > 0
       |), df AS (
       |  SELECT w, count(*) AS df FROM tf GROUP BY 1
@@ -2379,9 +2413,7 @@ object ExtQueries {
         count(when(!col("kept"), 1)).as("dropped"))
       .orderBy("cell")
 
-  val semDedupSql: String = {
-    def cosRaw(x: String, y: String) =
-      s"${dotFold(x, y)} / (sqrt(${dotFold(x, x)}) * sqrt(${dotFold(y, y)}))"
+  val semDedupSql: String =
     s"""WITH ranked AS (
        |  SELECT vec_id, embedding
        |  FROM embeddings
@@ -2392,7 +2424,7 @@ object ExtQueries {
        |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS anum
        |  FROM ranked
        |), scored AS (
-       |  SELECT e.vec_id, a.anum, ${cosRaw("e.embedding", "a.a_emb")} AS c
+       |  SELECT e.vec_id, a.anum, ${cosSql("e.embedding", "a.a_emb")} AS c
        |  FROM embeddings e CROSS JOIN anchors a
        |), assign AS (
        |  SELECT vec_id, anum AS cell FROM (
@@ -2405,14 +2437,13 @@ object ExtQueries {
        |  FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
        |  JOIN embeddings ea ON ea.vec_id = a.vec_id
        |  JOIN embeddings eb ON eb.vec_id = b.vec_id
-       |  WHERE ${cosRaw("ea.embedding", "eb.embedding")} >= 0.42
+       |  WHERE ${cosSql("ea.embedding", "eb.embedding")} >= 0.42
        |)
        |SELECT cell, count(*) AS n_vecs,
        |       count(CASE WHEN d.vec_id IS NULL THEN 1 END) AS kept,
        |       count(d.vec_id) AS dropped
        |FROM assign LEFT JOIN dropped d USING (vec_id)
        |GROUP BY cell ORDER BY cell""".stripMargin
-  }
 
   /** Corpus cluster-mixture card: distributed Lloyd k-means (k=6,
     * 3 iterations) over the embeddings, then per-cluster size, exact-
@@ -2426,19 +2457,12 @@ object ExtQueries {
       .orderBy("cluster")
 
   lazy val kmeansCardSql: String = {
-    // the engine's exact left-to-right Σ(v_i − c_i)² fold
-    def d2(v: String, c: String) =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(list_zip($v, $c), pr -> " +
-        s"(CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE)) * " +
-        s"(CAST(pr[1] AS DOUBLE) - CAST(pr[2] AS DOUBLE)))), " +
-        s"(acc, x) -> acc + x)"
     val iters = (1 to 3).map { i =>
       s"""a$i AS (
          |  SELECT vec_id, embedding, cl FROM (
          |    SELECT e.vec_id, e.embedding, c.cl,
          |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY ${d2("e.embedding", "c.c")} ASC, c.cl ASC) AS rn
+         |             ORDER BY ${sqDistSql("e.embedding", "c.c")} ASC, c.cl ASC) AS rn
          |    FROM embeddings e CROSS JOIN c${i - 1} c) t WHERE rn = 1
          |), u$i AS (
          |  SELECT cl, j,
@@ -2463,9 +2487,9 @@ object ExtQueries {
        |), $iters, af AS (
        |  SELECT vec_id, label, cl, d2 FROM (
        |    SELECT e.vec_id, e.label, c.cl,
-       |           ${d2("e.embedding", "c.c")} AS d2,
+       |           ${sqDistSql("e.embedding", "c.c")} AS d2,
        |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY ${d2("e.embedding", "c.c")} ASC, c.cl ASC) AS rn
+       |             ORDER BY ${sqDistSql("e.embedding", "c.c")} ASC, c.cl ASC) AS rn
        |    FROM embeddings e CROSS JOIN c3 c) t WHERE rn = 1
        |), sz AS (
        |  SELECT cl AS cluster, count(*) AS size,
@@ -2596,30 +2620,31 @@ object ExtQueries {
     * instead of re-running the fixpoint. */
   private def clusterLabels(s: SparkSession, dir: String): DataFrame = {
     val path = Staging.perJvm("graft_dedup_clusters", dir) { p =>
-      val tcc0 = System.nanoTime()
-      val keyed = clusterKeyed(s, dir)
-      val edges = ConnectedComponents.keyEdges(keyed, "doc_id", Seq("k1", "k2"))
-      // checkEvery=1: keyEdges graphs are hub-shaped and hub-min init
-      // already pre-pays the first propagation round, so the bulk
-      // window needs ONE full round before the cheap frontier tail
-      // takes over (r8; 2 full rounds re-materialized labels that only
-      // 24 of 50k rows were still moving)
-      val comp = ConnectedComponents.run(
-        keyed.select(col("doc_id").as("id")), edges, checkEvery = 1)
-      // one shuffle total: repartition by component both CLUSTERS each
-      // component's rows for the manifest's downstream window AND lets
-      // the same partitioning serve the cluster_size window count — no
-      // separate groupBy stage, no broadcast build (r8; was
-      // groupBy + broadcast join, ~0.4 s slower and a driver collect)
-      val wComp = org.apache.spark.sql.expressions.Window.partitionBy("component")
-      comp.repartition(col("component"))
-        .select(col("id").as("doc_id"), col("component"),
-          count(lit(1)).over(wComp).as("cluster_size"))
-        .write.mode("overwrite").parquet(p)
       // the CC compute + staging write is the honest q_dedup_clusters
       // cost; sweep repeats replay the parquet (see q_dedup_minhash)
-      stageTimings("q_dedup_clusters") = Seq(
-        "cc_label" -> (System.nanoTime() - tcc0) / 1e9)
+      timeStages("q_dedup_clusters") { stage =>
+        stage("cc_label") {
+          val keyed = clusterKeyed(s, dir)
+          val edges = ConnectedComponents.keyEdges(keyed, "doc_id", Seq("k1", "k2"))
+          // checkEvery=1: keyEdges graphs are hub-shaped and hub-min init
+          // already pre-pays the first propagation round, so the bulk
+          // window needs ONE full round before the cheap frontier tail
+          // takes over (r8; 2 full rounds re-materialized labels that only
+          // 24 of 50k rows were still moving)
+          val comp = ConnectedComponents.run(
+            keyed.select(col("doc_id").as("id")), edges, checkEvery = 1)
+          // one shuffle total: repartition by component both CLUSTERS each
+          // component's rows for the manifest's downstream window AND lets
+          // the same partitioning serve the cluster_size window count — no
+          // separate groupBy stage, no broadcast build (r8; was
+          // groupBy + broadcast join, ~0.4 s slower and a driver collect)
+          val wComp = org.apache.spark.sql.expressions.Window.partitionBy("component")
+          comp.repartition(col("component"))
+            .select(col("id").as("doc_id"), col("component"),
+              count(lit(1)).over(wComp).as("cluster_size"))
+            .write.mode("overwrite").parquet(p)
+        }
+      }
     }
     // staged artifact is written once per JVM and immutable after (r19)
     graft.ops.BucketStore.readLiveDir(s, path)
@@ -2683,15 +2708,12 @@ object ExtQueries {
   private def incSpansState(s: SparkSession, dir: String): String =
     Staging.perJvm("graft_inc_spans", dir) { p =>
       val docs = Tables.documents(s, dir)
-      val t0 = System.nanoTime()
-      graft.ops.IncrementalSpans.writeState(
-        docs.filter(col("doc_id") % 10 =!= 7), p)
-      val t1 = System.nanoTime()
-      graft.ops.IncrementalSpans.applyDelta(
-        s, p, docs.filter(col("doc_id") % 10 === 7))
-      stageTimings("q_dup_spans_incremental") = Seq(
-        "write_state" -> (t1 - t0) / 1e9,
-        "fold" -> (System.nanoTime() - t1) / 1e9)
+      timeStages("q_dup_spans_incremental") { stage =>
+        stage("write_state")(graft.ops.IncrementalSpans.writeState(
+          docs.filter(col("doc_id") % 10 =!= 7), p))
+        stage("fold")(graft.ops.IncrementalSpans.applyDelta(
+          s, p, docs.filter(col("doc_id") % 10 === 7)))
+      }
     }
 
   /** Span-coverage corpus card: per source, how much token mass sits
@@ -2817,18 +2839,15 @@ object ExtQueries {
       // r9) so canonicalization is a view over the slim store — the
       // incremental manifest below never re-touches document text
       val keyed = qualityKeyedOf(Tables.documents(s, dir))
-      val t0 = System.nanoTime()
-      IncrementalClusters.writeState(
-        keyed.filter(col("doc_id") % 10 =!= 7), "doc_id", Seq("k1", "k2"),
-        p, carryCols = Seq("quality_score"))
-      val t1 = System.nanoTime()
-      IncrementalClusters.applyDelta(s, p,
-        keyed.filter(col("doc_id") % 10 === 7), "doc_id", Seq("k1", "k2"))
       // stage split for the bench artifact: the one-time offline batch
       // CC + bucketed write vs the recurring per-delta fold
-      stageTimings("q_dedup_clusters_incremental") = Seq(
-        "write_state" -> (t1 - t0) / 1e9,
-        "fold" -> (System.nanoTime() - t1) / 1e9)
+      timeStages("q_dedup_clusters_incremental") { stage =>
+        stage("write_state")(IncrementalClusters.writeState(
+          keyed.filter(col("doc_id") % 10 =!= 7), "doc_id", Seq("k1", "k2"),
+          p, carryCols = Seq("quality_score")))
+        stage("fold")(IncrementalClusters.applyDelta(s, p,
+          keyed.filter(col("doc_id") % 10 === 7), "doc_id", Seq("k1", "k2")))
+      }
     }
     IncrementalClusters.readLabels(s, path)
   }
@@ -2902,14 +2921,9 @@ object ExtQueries {
     val contam = decontam(s, dir).select(col("doc_id"), col("contaminated"))
     val rep = TextOps.repetitionStats(docs)
       .select(col("doc_id"), col("flagged").as("rep_flagged"))
-    // the q_pii injection recipe, verbatim — PII density is then a
-    // per-row regex count inside the same narrow pass as langId
-    val injected = concat_ws(" ",
-      when(col("doc_id") % 10 === 0,
-        concat(lit("contact user"), col("doc_id").cast("string"), lit("@example.com now"))),
-      when(col("doc_id") % 7 === 0, lit("call 555-123-4567")),
-      when(col("doc_id") % 13 === 0, lit("from 10.0.0.1")),
-      col("text"))
+    // the q_pii injection recipe — PII density is then a per-row regex
+    // count inside the same narrow pass as langId
+    val injected = withSyntheticPii(col("text"))
     val stage = when(!col("is_canonical"), "duplicate")
       .when(col("quality_score") < 0.25, "quality")
       .when(col("rep_flagged"), "repetition")
@@ -2950,26 +2964,28 @@ object ExtQueries {
   private[graft] def streamCurState(s: SparkSession, dir: String): String =
     Staging.perJvm("graft_stream_cur", dir) { p =>
       val docs = Tables.documents(s, dir)
-      val t0 = System.nanoTime()
-      val daemon = streamCurLayout(p)
-        .seed(docs.filter(col("doc_id") % 4 === 0), docs)
-      SparkEntry.catalog(s, dir).bind() // restore the session's DDL target
-      // the stream feed: one file per arrival batch, raw document rows
-      (1 to 3).foreach(i => docs.filter(col("doc_id") % 4 === i)
-        .coalesce(1).write.parquet(s"$p/feed/b$i"))
-      val t1 = System.nanoTime()
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$p/feed/b*")
-      graft.streaming.Folds.FamilyClock.enabled = true
-      val nBatches =
-        try graft.streaming.ContinuousIngest.run(stream, daemon)
-        finally graft.streaming.Folds.FamilyClock.enabled = false
-      require(nBatches >= 3, s"expected >=3 microbatches, got $nBatches")
-      stageTimings("q_stream_curation") = Seq(
-        "index_state_feed" -> (t1 - t0) / 1e9,
-        "stream_fold" -> (System.nanoTime() - t1) / 1e9) ++
-        graft.streaming.Folds.FamilyClock.drain() // per-family split
+      timeStages("q_stream_curation") { stage =>
+        val daemon = stage("index_state_feed") {
+          val daemon = streamCurLayout(p)
+            .seed(docs.filter(col("doc_id") % 4 === 0), docs)
+          SparkEntry.catalog(s, dir).bind() // restore the session's DDL target
+          // the stream feed: one file per arrival batch, raw document rows
+          (1 to 3).foreach(i => docs.filter(col("doc_id") % 4 === i)
+            .coalesce(1).write.parquet(s"$p/feed/b$i"))
+          daemon
+        }
+        stage("stream_fold") {
+          val stream = s.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(s"$p/feed/b*")
+          graft.streaming.Folds.FamilyClock.enabled = true
+          val nBatches =
+            try graft.streaming.ContinuousIngest.run(stream, daemon)
+            finally graft.streaming.Folds.FamilyClock.enabled = false
+          require(nBatches >= 3, s"expected >=3 microbatches, got $nBatches")
+        }
+        stage.timings ++= graft.streaming.Folds.FamilyClock.drain() // per-family split
+      }
     }
 
   /** The staged daemon's layout: all nine families, quality carried. */
@@ -3045,10 +3061,10 @@ object ExtQueries {
       val docs = Tables.documents(s, dir)
       (0 to 2).foreach(i => docs.filter(col("doc_id") % 3 === i)
         .coalesce(1).write.parquet(s"$p/feed/b$i"))
-      val t0 = System.nanoTime()
-      liveCatalog(s, p, dir).refresh("mv_corpus") // drains 3 microbatch folds
-      stageTimings("q_live_metrics") = Seq(
-        "stream_fold" -> (System.nanoTime() - t0) / 1e9)
+      timeStages("q_live_metrics") { stage =>
+        stage("stream_fold")( // drains 3 microbatch folds
+          liveCatalog(s, p, dir).refresh("mv_corpus"))
+      }
     }
     liveCatalog(s, path, dir).get("mv_corpus")
       .query(Seq("source"), Seq("doc_count", "char_sum", "char_p90"))
@@ -3146,22 +3162,8 @@ object ExtQueries {
   /** Cluster fixpoint + quality + per-cluster argmax CTEs — shared by
     * the manifest oracles and the curation oracle. */
   private val manifestCtes: String = clusterCtes +
-    """, qstats AS (
-      |  SELECT doc_id,
-      |         len(tk) AS token_count,
-      |         round(CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / length(text), 6) AS punct_ratio,
-      |         round(CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text), 6) AS digit_ratio,
-      |         round(CAST(len(list_filter(tk, w -> list_contains(['the','a','an','of','and','or','is','are','in','on','to','it','this','that','with','for','as','at','by','be'], w))) AS DOUBLE) / len(tk), 6) AS stopword_ratio
-      |  FROM (SELECT doc_id, text,
-      |          string_split_regex(trim(text), '[ \t\n\x0B\f\r]+') AS tk
-      |        FROM documents)
-      |), qual AS (
-      |  SELECT doc_id, round(least(1.0, greatest(0.0,
-      |           0.15 * ln(1.0 + token_count)
-      |           - 2.0 * punct_ratio - 2.0 * digit_ratio
-      |           - abs(stopword_ratio - 0.35))), 6) AS quality_score
-      |  FROM qstats
-      |), ranked AS (
+    s""", ${qualityCtes("qual", "documents", Seq("doc_id"))}
+      |, ranked AS (
       |  SELECT c.doc_id, c.component, q.quality_score,
       |         row_number() OVER (PARTITION BY c.component
       |                            ORDER BY q.quality_score DESC, c.doc_id ASC) AS rk
@@ -3179,83 +3181,26 @@ object ExtQueries {
 
   /** The curation oracle composes the SAME blocks as the standalone
     * operators: manifest CTEs (dup canonical + quality), the langId
-    * marker argmax, and the decontam gram join — then charges each doc
-    * to its first failing stage. Shared through the per-doc `staged`
+    * marker argmax, the decontam gram join, the repetition signals and
+    * the synthetic-PII counts — then charges each doc to its first
+    * failing stage. Shared through the per-doc `staged`
     * CTE by [[curationSql]] (per-source funnel) and
     * [[trainExportSql]] (kept-set shard manifest). */
   private val curationStageCtes: String = manifestCtes +
-    """, lt AS (
-      |  SELECT doc_id,
-      |         string_split_regex(trim(lower(text)), '[ \t\n\x0B\f\r]+') AS tk,
-      |         length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]', '', 'g')) AS cjk,
-      |         greatest(length(text), 1) AS tlen
-      |  FROM documents
-      |), ls AS (
-      |  SELECT doc_id,
-      |    CAST(len(list_filter(tk, w -> list_contains(['the','a','of','and','is','to','in','that','it','for'], w))) AS DOUBLE) / (len(tk)+1) AS s_en,
-      |    CAST(len(list_filter(tk, w -> list_contains(['der','die','das','und','ist','nicht','mit','ein','zu','den'], w))) AS DOUBLE) / (len(tk)+1) AS s_de,
-      |    CAST(len(list_filter(tk, w -> list_contains(['le','la','les','et','est','un','une','des','que','pour'], w))) AS DOUBLE) / (len(tk)+1) AS s_fr,
-      |    CAST(len(list_filter(tk, w -> list_contains(['el','la','los','las','y','es','un','una','que','por'], w))) AS DOUBLE) / (len(tk)+1) AS s_es,
-      |    CAST(cjk AS DOUBLE) / tlen * 10.0 AS s_zh
-      |  FROM lt
-      |), lp AS (
-      |  SELECT doc_id,
-      |    CASE WHEN greatest(s_en, s_de, s_fr, s_es, s_zh) <= 0.005 THEN 'und'
-      |         WHEN s_en = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'en'
-      |         WHEN s_de = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'de'
-      |         WHEN s_fr = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'fr'
-      |         WHEN s_es = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'es'
-      |         ELSE 'zh' END AS lang_pred
-      |  FROM ls
-      |), dw AS (
-      |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-      |), dg AS (
-      |  SELECT DISTINCT doc_id, array_to_string(ws[i:i+3], ' ') AS gram
-      |  FROM dw, LATERAL (SELECT unnest(range(1, greatest(len(ws) - 2, 1))) AS i) t
-      |), dbench AS (
-      |  SELECT DISTINCT gram FROM dg WHERE doc_id % 50 = 0
-      |), dhits AS (
-      |  SELECT dg.doc_id, count(*) AS n_hit
-      |  FROM dg JOIN dbench USING (gram)
-      |  WHERE dg.doc_id % 50 <> 0
-      |  GROUP BY 1
-      |), rw AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '[ \t\n\x0B\f\r]+') AS ws FROM documents
-      |), rb AS (
-      |  SELECT doc_id, len(ws) AS n_words,
-      |         round(1.0 - CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws), 6) AS dup_word_ratio
-      |  FROM rw
-      |), rc AS (
-      |  SELECT doc_id, max(cnt) AS top FROM (
-      |    SELECT doc_id, word, count(*) AS cnt
-      |    FROM (SELECT doc_id, unnest(ws) AS word FROM rw) GROUP BY doc_id, word
-      |  ) GROUP BY doc_id
-      |), rep AS (
-      |  SELECT rb.doc_id,
-      |         (rb.dup_word_ratio > 0.8
-      |          OR round(CAST(rc.top AS DOUBLE) / rb.n_words, 6) > 0.2) AS rep_flagged
-      |  FROM rb JOIN rc USING (doc_id)
-      |), pin AS (
-      |  SELECT doc_id, concat_ws(' ',
-      |    CASE WHEN doc_id % 10 = 0 THEN 'contact user' || CAST(doc_id AS VARCHAR) || '@example.com now' END,
-      |    CASE WHEN doc_id % 7 = 0 THEN 'call 555-123-4567' END,
-      |    CASE WHEN doc_id % 13 = 0 THEN 'from 10.0.0.1' END,
-      |    text) AS itext
-      |  FROM documents
-      |), ppi AS (
-      |  SELECT doc_id,
-      |         len(regexp_extract_all(itext, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-      |         + len(regexp_extract_all(itext, '\b\d{3}[-.]\d{3}[-.]\d{4}\b'))
-      |         + len(regexp_extract_all(itext, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS pii_hits
-      |  FROM pin
+    s""", ${langIdCtes("lp", "documents", Seq("doc_id"))}
+      |, ${decontamHitsCtes("dhits")}
+      |, ${repetitionCtes("rep", "documents")}
+      |, ppi AS (
+      |  SELECT doc_id, ${piiPatternsSql.map(p => piiCountSql(p._1, "itext")).mkString(" + ")} AS pii_hits
+      |  FROM (SELECT doc_id, $piiInjectedSql AS itext FROM documents)
       |), staged AS (
       |  SELECT d.doc_id, d.source,
       |         CASE WHEN r.doc_id <> kp.keep_id THEN 'duplicate'
       |              WHEN r.quality_score < 0.25 THEN 'quality'
-      |              WHEN rp.rep_flagged THEN 'repetition'
+      |              WHEN rp.flagged THEN 'repetition'
       |              WHEN lp.lang_pred <> 'en' THEN 'lang'
       |              WHEN pp.pii_hits >= 2 THEN 'pii'
-      |              WHEN coalesce(h.n_hit, 0) > 0 THEN 'contam'
+      |              WHEN coalesce(h.n_hit_ngrams, 0) > 0 THEN 'contam'
       |              ELSE 'kept' END AS stage
       |  FROM documents d
       |  JOIN ranked r ON r.doc_id = d.doc_id
@@ -3304,9 +3249,9 @@ object ExtQueries {
     val key = graft.ops.ShardExport.shuffleKeySql("s.doc_id", 7L)
     s"""
       |SELECT CAST(($key) % 8 AS INT) AS shard, count(*) AS n_docs,
-      |       CAST(sum(rb.n_words) AS BIGINT) AS total_tokens,
-      |       CAST(ceil(sum(rb.n_words) / 512.0) AS BIGINT) AS n_seqs
-      |FROM staged s JOIN rb ON rb.doc_id = s.doc_id
+      |       CAST(sum(rep.n_words) AS BIGINT) AS total_tokens,
+      |       CAST(ceil(sum(rep.n_words) / 512.0) AS BIGINT) AS n_seqs
+      |FROM staged s JOIN rep ON rep.doc_id = s.doc_id
       |WHERE s.stage = 'kept'
       |GROUP BY shard ORDER BY shard""".stripMargin
   }
@@ -3366,15 +3311,16 @@ object ExtQueries {
     val staged = Staging.perJvm("graft_ivf_inc", dir) { p =>
       val emb = Tables.embeddings(s, dir)
       val corpus = emb.filter(col("vec_id") % 10 =!= 7)
-      val t0 = System.nanoTime()
-      val model = IvfIndex.train(corpus)
-      IndexStore.saveIvf(model, p)
-      IvfIndex.writeIndexed(corpus, s"$p/layout", model)
-      val t1 = System.nanoTime()
-      IvfIndex.appendIndexed(emb.filter(col("vec_id") % 10 === 7), s"$p/layout", model)
-      stageTimings("q_ann_ivf_incremental") = Seq(
-        "train_index" -> (t1 - t0) / 1e9,
-        "fold" -> (System.nanoTime() - t1) / 1e9)
+      timeStages("q_ann_ivf_incremental") { stage =>
+        val model = stage("train_index") {
+          val model = IvfIndex.train(corpus)
+          IndexStore.saveIvf(model, p)
+          IvfIndex.writeIndexed(corpus, s"$p/layout", model)
+          model
+        }
+        stage("fold")(IvfIndex.appendIndexed(
+          emb.filter(col("vec_id") % 10 === 7), s"$p/layout", model))
+      }
     }
     val model = IndexStore.loadIvf(staged)
     IvfIndex.topKIndexed(s, s"$staged/layout",
@@ -3431,13 +3377,8 @@ object ExtQueries {
     // engine: Array.fill(k)(sample(rnd.nextInt(sample.length))) — 0-based
     // positions into the md5-rank-ordered sample; SQL ranks are 1-based
     val initRanks = Array.fill(k)(rnd.nextInt(n) + 1).mkString("[", ",", "]")
-    // exact left-fold Σ (v[d]-c[d])² — the engine's `nearest`/distExpr
-    def sqDist(v: String, c: String) =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(list_zip($v, $c), pr -> (pr[1] - pr[2]) * (pr[1] - pr[2]))), " +
-        s"(acc, x) -> acc + x)"
     def distsOver(v: String, cents: String) =
-      s"list_transform(range(1, ${k + 1}), c -> ${sqDist(v, s"$cents[c]")})"
+      s"list_transform(range(1, ${k + 1}), c -> ${sqDistSql(v, s"$cents[c]")})"
     // per-dim mean of a rank-ordered vector list: left-fold sum / count
     def meanOf(vs: String) =
       s"list_transform(range(1, ${dim + 1}), dd -> " +
@@ -3459,8 +3400,6 @@ object ExtQueries {
          |  FROM $prev t CROSS JOIN g$i g
          |)""".stripMargin
     }.mkString(",\n")
-    val cos = s"${dotFold("q.embedding", "c.embedding")} / " +
-      s"(sqrt(${dotFold("q.embedding", "q.embedding")}) * sqrt(${dotFold("c.embedding", "c.embedding")}))"
     s"""WITH nchk AS (
        |  SELECT CASE WHEN count(*) <> $n
        |              THEN CAST(error('annIvf oracle embeds Random(42) draws over a $n-row sample; corpus has '
@@ -3492,18 +3431,7 @@ object ExtQueries {
        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
        |  FROM qp q JOIN cb c USING (cell)
        |  WHERE q.vec_id <> c.vec_id
-       |), scored AS (
-       |  SELECT cand.query_id, cand.neighbor_id, $cos AS cos_raw
-       |  FROM cand JOIN embeddings q ON q.vec_id = cand.query_id
-       |            JOIN embeddings c ON c.vec_id = cand.neighbor_id
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos_raw DESC, neighbor_id ASC) AS rank
-       |  FROM scored
-       |)
-       |SELECT query_id, rank, neighbor_id, round(cos_raw, 6) AS cosine
-       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |), $annScoredSql, """.stripMargin + annTop5Sql
   }
 
   /** CUBE rollup (SURVEY §2.4 'free from Spark' tier, exposed +
@@ -3638,13 +3566,8 @@ object ExtQueries {
     * engines run the same literal RE2-compatible patterns in the same
     * order, so a dialect difference breaks the hash. */
   def piiScrub(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
-    val injected = d.select(col("doc_id"), concat_ws(" ",
-      when(col("doc_id") % 10 === 0,
-        concat(lit("contact user"), col("doc_id").cast("string"), lit("@example.com now"))),
-      when(col("doc_id") % 7 === 0, lit("call 555-123-4567")),
-      when(col("doc_id") % 13 === 0, lit("from 10.0.0.1")),
-      col("text")).as("text"))
+    val injected = Tables.documents(s, dir)
+      .select(col("doc_id"), withSyntheticPii(col("text")).as("text"))
     // sort-then-project (r18): see textStats — the four regex passes
     // used to run twice under the terminal orderBy's range sampling
     injected.orderBy("doc_id")
@@ -3655,24 +3578,18 @@ object ExtQueries {
         length(graft.ops.Pii.redact(col("text"))).as("redacted_chars"))
   }
 
-  val piiScrubSql: String =
-    """WITH inj AS (
-      |  SELECT doc_id, concat_ws(' ',
-      |    CASE WHEN doc_id % 10 = 0 THEN 'contact user' || CAST(doc_id AS VARCHAR) || '@example.com now' END,
-      |    CASE WHEN doc_id % 7 = 0 THEN 'call 555-123-4567' END,
-      |    CASE WHEN doc_id % 13 = 0 THEN 'from 10.0.0.1' END,
-      |    text) AS text
-      |  FROM documents
-      |)
-      |SELECT doc_id,
-      |       len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-      |       len(regexp_extract_all(text, '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS n_phones,
-      |       len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS n_ips,
-      |       length(regexp_replace(regexp_replace(regexp_replace(text,
-      |         '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-      |         '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '[PHONE]', 'g'),
-      |         '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g')) AS redacted_chars
-      |FROM inj ORDER BY doc_id""".stripMargin
+  val piiScrubSql: String = {
+    val redacted = piiPatternsSql.foldLeft("text") { case (t, (pat, tag)) =>
+      s"regexp_replace($t, $pat, $tag, 'g')" }
+    val Seq(email, phone, ip) = piiPatternsSql.map(p => piiCountSql(p._1, "text"))
+    s"""WITH inj AS (
+       |  SELECT doc_id, $piiInjectedSql AS text
+       |  FROM documents
+       |)
+       |SELECT doc_id, $email AS n_emails, $phone AS n_phones, $ip AS n_ips,
+       |       length($redacted) AS redacted_chars
+       |FROM inj ORDER BY doc_id""".stripMargin
+  }
 
   // ------------------------------------------------- sampling / selection
 
@@ -3737,12 +3654,9 @@ object ExtQueries {
       .orderBy("split")
 
   val splitStatsSql: String =
-    """WITH b AS (
+    raw"""WITH b AS (
       |  SELECT doc_id, len(string_split_regex(trim(text), '[ \t\n\x0B\f\r]+')) AS token_count,
-      |         ((instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),1,1))-1) * 4096
-      |        + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),2,1))-1) * 256
-      |        + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),3,1))-1) * 16
-      |        + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),4,1))-1)) % 100 AS pct
+      |         ${md5ModSql("doc_id", 100)} AS pct
       |  FROM documents
       |)
       |SELECT CASE WHEN pct < 80 THEN 'train' WHEN pct < 90 THEN 'val' ELSE 'test' END AS split,
@@ -3792,23 +3706,8 @@ object ExtQueries {
   }
 
   val mixtureSampleSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, text, string_split_regex(trim(text), '[ \t\n\x0B\f\r]+') AS tk
-      |  FROM documents
-      |), stats AS (
-      |  SELECT doc_id, len(tk) AS token_count,
-      |         round(CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / length(text), 6) AS punct_ratio,
-      |         round(CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text), 6) AS digit_ratio,
-      |         round(CAST(len(list_filter(tk, w -> list_contains(['the','a','an','of','and','or','is','are','in','on','to','it','this','that','with','for','as','at','by','be'], w))) AS DOUBLE) / len(tk), 6) AS stopword_ratio
-      |  FROM toks
-      |), scored AS (
-      |  SELECT doc_id,
-      |         round(least(1.0, greatest(0.0,
-      |           0.15 * ln(1.0 + token_count)
-      |           - 2.0 * punct_ratio - 2.0 * digit_ratio
-      |           - abs(stopword_ratio - 0.35))), 6) AS quality_score
-      |  FROM stats
-      |), w AS (
+    s"""WITH ${qualityCtes("scored", "documents", Seq("doc_id"))}
+      |, w AS (
       |  SELECT d.doc_id, d.lang,
       |         CAST(round(s.quality_score * 1000000) AS HUGEINT) AS micro
       |  FROM documents d JOIN scored s USING (doc_id)
@@ -3850,43 +3749,9 @@ object ExtQueries {
   }
 
   val qualityTopKSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, text, string_split_regex(trim(text), '[ \t\n\x0B\f\r]+') AS tk
-      |  FROM documents
-      |), stats AS (
-      |  SELECT doc_id, text, len(tk) AS token_count,
-      |         round(CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / length(text), 6) AS punct_ratio,
-      |         round(CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text), 6) AS digit_ratio,
-      |         round(CAST(len(list_filter(tk, w -> list_contains(['the','a','an','of','and','or','is','are','in','on','to','it','this','that','with','for','as','at','by','be'], w))) AS DOUBLE) / len(tk), 6) AS stopword_ratio
-      |  FROM toks
-      |), scored AS (
-      |  SELECT doc_id,
-      |         round(least(1.0, greatest(0.0,
-      |           0.15 * ln(1.0 + token_count)
-      |           - 2.0 * punct_ratio - 2.0 * digit_ratio
-      |           - abs(stopword_ratio - 0.35))), 6) AS quality_score,
-      |         string_split_regex(trim(lower(text)), '[ \t\n\x0B\f\r]+') AS ltk,
-      |         length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]', '', 'g')) AS cjk,
-      |         greatest(length(text), 1) AS tlen
-      |  FROM stats
-      |), langs AS (
-      |  SELECT doc_id, quality_score,
-      |    CAST(len(list_filter(ltk, w -> list_contains(['the','a','of','and','is','to','in','that','it','for'], w))) AS DOUBLE) / (len(ltk)+1) AS s_en,
-      |    CAST(len(list_filter(ltk, w -> list_contains(['der','die','das','und','ist','nicht','mit','ein','zu','den'], w))) AS DOUBLE) / (len(ltk)+1) AS s_de,
-      |    CAST(len(list_filter(ltk, w -> list_contains(['le','la','les','et','est','un','une','des','que','pour'], w))) AS DOUBLE) / (len(ltk)+1) AS s_fr,
-      |    CAST(len(list_filter(ltk, w -> list_contains(['el','la','los','las','y','es','un','una','que','por'], w))) AS DOUBLE) / (len(ltk)+1) AS s_es,
-      |    CAST(cjk AS DOUBLE) / tlen * 10.0 AS s_zh
-      |  FROM scored
-      |), pred AS (
-      |  SELECT doc_id, quality_score,
-      |    CASE WHEN greatest(s_en, s_de, s_fr, s_es, s_zh) <= 0.005 THEN 'und'
-      |         WHEN s_en = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'en'
-      |         WHEN s_de = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'de'
-      |         WHEN s_fr = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'fr'
-      |         WHEN s_es = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'es'
-      |         ELSE 'zh' END AS lang_pred
-      |  FROM langs
-      |), ranked AS (
+    s"""WITH ${qualityCtes("scored", "documents", Seq("doc_id", "text"))}
+      |, ${langIdCtes("pred", "scored", Seq("doc_id", "quality_score"))}
+      |, ranked AS (
       |  SELECT lang_pred, doc_id, quality_score,
       |         CAST(row_number() OVER (PARTITION BY lang_pred
       |           ORDER BY quality_score DESC, doc_id ASC) AS INT) AS rk
@@ -3913,30 +3778,7 @@ object ExtQueries {
       .orderBy("lang_pred")
 
   val lengthQuantilesSql: String =
-    """WITH t AS (
-      |  SELECT doc_id, length(text) AS char_count,
-      |         string_split_regex(trim(lower(text)), '[ \t\n\x0B\f\r]+') AS ltk,
-      |         length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]', '', 'g')) AS cjk,
-      |         greatest(length(text), 1) AS tlen
-      |  FROM documents
-      |), langs AS (
-      |  SELECT doc_id, char_count,
-      |    CAST(len(list_filter(ltk, w -> list_contains(['the','a','of','and','is','to','in','that','it','for'], w))) AS DOUBLE) / (len(ltk)+1) AS s_en,
-      |    CAST(len(list_filter(ltk, w -> list_contains(['der','die','das','und','ist','nicht','mit','ein','zu','den'], w))) AS DOUBLE) / (len(ltk)+1) AS s_de,
-      |    CAST(len(list_filter(ltk, w -> list_contains(['le','la','les','et','est','un','une','des','que','pour'], w))) AS DOUBLE) / (len(ltk)+1) AS s_fr,
-      |    CAST(len(list_filter(ltk, w -> list_contains(['el','la','los','las','y','es','un','una','que','por'], w))) AS DOUBLE) / (len(ltk)+1) AS s_es,
-      |    CAST(cjk AS DOUBLE) / tlen * 10.0 AS s_zh
-      |  FROM t
-      |), pred AS (
-      |  SELECT char_count,
-      |    CASE WHEN greatest(s_en, s_de, s_fr, s_es, s_zh) <= 0.005 THEN 'und'
-      |         WHEN s_en = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'en'
-      |         WHEN s_de = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'de'
-      |         WHEN s_fr = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'fr'
-      |         WHEN s_es = greatest(s_en, s_de, s_fr, s_es, s_zh) THEN 'es'
-      |         ELSE 'zh' END AS lang_pred
-      |  FROM langs
-      |)
+    s"""WITH ${langIdCtes("pred", "(SELECT length(text) AS char_count, text FROM documents)", Seq("char_count"))}
       |SELECT lang_pred, count(*) AS n,
       |       quantile_cont(char_count, 0.25) AS p25,
       |       quantile_cont(char_count, 0.5) AS p50,
@@ -3945,234 +3787,119 @@ object ExtQueries {
 
   // ---------------------------------------------------------------- registry
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_text_stats"        -> (textStats _),
-    "q_dedup_exact"       -> (dedupExact _),
-    "q_passage_dedup"     -> (passageDedup _),
-    "q_passage_dedup_incremental" -> (passageDedupIncremental _),
-    "q_budget_sample"     -> (budgetSample _),
-    "q_semdedup"          -> (semDedup _),
-    "q_live_metrics"      -> (liveMetrics _),
-    "q_unigram_quality"   -> (unigramQuality _),
-    "q_dsir"              -> (dsirSelect _),
-    "q_dsir_incremental"  -> (dsirIncremental _),
-    "q_chunks"            -> (chunksExport _),
-    "q_corpus_diff"       -> (corpusDiff _),
-    "q_corpus_diff_incremental" -> (corpusDiffIncremental _),
-    "q_split_leakage"     -> (splitLeakage _),
-    "q_split_leakage_incremental" -> (splitLeakageIncremental _),
-    "q_novelty"           -> (noveltyCard _),
-    "q_novelty_incremental" -> (noveltyIncremental _),
-    "q_bigram_quality"    -> (bigramQuality _),
-    "q_bm25"              -> (bm25 _),
-    "q_bm25_indexed"      -> (bm25Indexed _),
-    "q_bm25_incremental"  -> (bm25Incremental _),
-    "q_bm25_topk"         -> (bm25TopK _),
-    "q_phrase_search"     -> (phraseSearch _),
-    "q_phrase_search_incremental" -> (phraseSearchIncremental _),
-    "q_lang_id"           -> (langId _),
-    "q_sessionize"        -> (sessionize _),
-    "q_interval_join"     -> (intervalJoin _),
-    "q_sql_interval"      -> (sqlIntervalJoin _),
-    "q_sql_interval_overlap" -> (sqlIntervalOverlap _),
-    "q_sql_bm25"          -> (sqlBm25 _),
-    "q_sql_phrase"        -> (sqlPhrase _),
-    "q_sql_chunks"        -> (sqlChunks _),
-    "q_sql_tfidf"         -> (sqlTfidf _),
-    "q_daemon_status"     -> (daemonStatus _),
-    "q_sql_daemon_status" -> (sqlDaemonStatus _),
-    "q_interval_left"     -> (intervalJoinLeft _),
-    "q_interval_overlap"  -> (intervalOverlapQ _),
-    "q_pricing_summary"   -> (pricingSummary _),
-    "q_revenue_by_nation" -> (revenueByNation _),
-    "q_top_parts"         -> (topParts _),
-    "q_dedup_minhash"     -> (dedupMinhash _),
-    "q_dedup_incremental" -> (dedupIncremental _),
-    "q_dedup_simhash"     -> (simhashFingerprints _),
-    "q_ngram_jaccard"     -> (ngramJaccard _),
-    "q_ann_brute"         -> (annBruteForce _),
-    "q_ann_lsh"           -> (annLsh _),
-    "q_embed_neardup"     -> (embedNearDup _),
-    "q_multimodal_decode" -> (multimodalDecode _),
-    "q_ann_ivf"           -> (annIvf _),
-    "q_ann_ivf_indexed"   -> (annIvfIndexed _),
-    "q_ann_ivf_incremental" -> (annIvfIncremental _),
-    "q_cube_revenue"      -> (cubeRevenue _),
-    "q_dedup_winnow"      -> ((s: SparkSession, d: String) => winnowDedup(s, d)),
-    "q_dedup_clusters"    -> (dedupClusters _),
-    "q_dedup_overlap"     -> (dedupOverlap _),
-    "q_dup_spans"         -> (dupSpans _),
-    "q_span_coverage"     -> (spanCoverage _),
-    "q_dup_spans_incremental" -> (dupSpansIncremental _),
-    "q_dedup_clusters_incremental" -> (dedupClustersIncremental _),
-    "q_dedup_manifest_incremental" -> (dedupManifestIncremental _),
-    "q_curation"          -> (curation _),
-    "q_train_export"      -> (trainExport _),
-    "q_stream_curation"   -> (streamCuration _),
-    "q_dedup_manifest"    -> (dedupManifest _),
-    "q_asof_join"         -> (asofJoin _),
-    "q_decontam"          -> (decontam _),
-    "q_decontam_bloom"    -> (decontamBloom _),
-    "q_decontam_semantic" -> (decontamSemantic _),
-    "q_kmeans"            -> (kmeansCard _),
-    "q_repetition"        -> (repetition _),
-    "q_tfidf_terms"       -> (tfidfTopTerms _),
-    "q_tfidf_incremental" -> (tfidfIncremental _),
-    "q_stream_window"     -> (streamWindow _),
-    "q_stream_percentile" -> (streamPercentile _),
-    "q_stream_topk"       -> (streamTopK _),
-    "q_stream_dedup"      -> (streamDedup _),
-    "q_stream_join"       -> (streamJoin _),
-    "q_pack"              -> (packSequences _),
-    "q_shard_export"      -> (shardExport _),
-    "q_pii"               -> (piiScrub _),
-    "q_split_stats"       -> (splitStats _),
-    "q_stratified"        -> (stratifiedSample _),
-    "q_mixture_sample"    -> (mixtureSample _),
-    "q_quality_topk"      -> (qualityTopK _),
-    "q_length_quantiles"  -> (lengthQuantiles _),
-    "q_drift"             -> (drift _),
-    "q_drift_incremental" -> (driftIncremental _),
-    "q_profile"           -> (profile _),
-    "q_outliers"          -> (outliers _))
+  /** Why the daemon-status queries have no DuckDB oracle (the driver
+    * records a rows-only check): they read the daemon's applied-fold
+    * ledgers — commit-protocol text files, not tables — so there is
+    * nothing a SQL engine could replay; determinism is gated instead by
+    * ContinuousIngestSpec's exact-id assertions and
+    * DaemonStatusContentSpec's SQL == DataFrame. */
+  private val daemonLedgersReason =
+    "reads the daemon's applied-fold ledgers: commit-protocol files, not tables"
 
-  val oracles: Map[String, String] = Map(
-    "q_text_stats"        -> textStatsSql,
-    "q_dedup_exact"       -> dedupExactSql,
-    "q_passage_dedup"     -> passageDedupSql,
-    "q_passage_dedup_incremental" -> passageDedupSql,
-    "q_budget_sample"     -> budgetSampleSql,
-    "q_semdedup"          -> semDedupSql,
-    "q_live_metrics"      -> liveMetricsSql,
-    "q_unigram_quality"   -> unigramQualitySql,
-    "q_dsir"              -> dsirSelectSql,
-    // the incremental entry runs the BATCH SQL: the hash gate IS the
-    // fold==rebuild contract for the persisted model counts
-    "q_dsir_incremental"  -> dsirSelectSql,
-    "q_chunks"            -> chunksExportSql,
-    "q_corpus_diff"       -> corpusDiffSql,
-    // maintained-state == batch-recompute gates (r12): the incremental
-    // variants run the SAME SQL as their batch twins
-    "q_corpus_diff_incremental" -> corpusDiffSql,
-    "q_split_leakage"     -> splitLeakageSql,
-    "q_split_leakage_incremental" -> splitLeakageSql,
-    "q_novelty"           -> noveltyCardSql,
+  /** Every query of this file with its oracle SQL or rows-only reason.
+    * Where an incremental, indexed or SQL twin shares its batch twin's
+    * oracle, the hash gate IS the fold == rebuild (indexed == batch,
+    * SQL == DataFrame) contract. */
+  lazy val registry: Seq[QueryDef] = Seq(
+    oracled("q_text_stats", textStats, textStatsSql),
+    oracled("q_dedup_exact", dedupExact, dedupExactSql),
+    oracled("q_passage_dedup", passageDedup, passageDedupSql),
+    oracled("q_passage_dedup_incremental", passageDedupIncremental, passageDedupSql),
+    oracled("q_budget_sample", budgetSample, budgetSampleSql),
+    oracled("q_semdedup", semDedup, semDedupSql),
+    oracled("q_live_metrics", liveMetrics, liveMetricsSql),
+    oracled("q_unigram_quality", unigramQuality, unigramQualitySql),
+    oracled("q_dsir", dsirSelect, dsirSelectSql),
+    oracled("q_dsir_incremental", dsirIncremental, dsirSelectSql),
+    oracled("q_chunks", chunksExport, chunksExportSql),
+    oracled("q_corpus_diff", corpusDiff, corpusDiffSql),
+    oracled("q_corpus_diff_incremental", corpusDiffIncremental, corpusDiffSql),
+    oracled("q_split_leakage", splitLeakage, splitLeakageSql),
+    oracled("q_split_leakage_incremental", splitLeakageIncremental, splitLeakageSql),
+    oracled("q_novelty", noveltyCard, noveltyCardSql),
     // batch derivation restricted to the delta docs: the gate proves
     // the maintained gram-df store == a whole-corpus re-gram
-    "q_novelty_incremental" -> noveltyIncrementalSql,
-    "q_bigram_quality"    -> bigramQualitySql,
-    "q_bm25"              -> bm25Sql,
-    // the persisted-index probe and the incrementally-folded index must
-    // reproduce the batch scores exactly — same oracle, so the hash
-    // gates ARE the indexed == batch and fold == rebuild contracts
-    "q_bm25_indexed"      -> bm25Sql,
-    "q_bm25_incremental"  -> bm25Sql,
+    oracled("q_novelty_incremental", noveltyIncremental, noveltyIncrementalSql),
+    oracled("q_bigram_quality", bigramQuality, bigramQualitySql),
+    oracled("q_bm25", bm25, bm25Sql),
+    oracled("q_bm25_indexed", bm25Indexed, bm25Sql),
+    oracled("q_bm25_incremental", bm25Incremental, bm25Sql),
+    // UNPRUNED full scoring: the gate proves MaxScore pruning is exact
+    oracled("q_bm25_topk", bm25TopK, bm25TopKSql),
     // the oracle derives phrase hits from RAW TEXT; the engine serves
     // them from posting lists — the hash gate proves the positional
     // index reproduces the text scan
-    // UNPRUNED full scoring: the gate proves MaxScore pruning is exact
-    "q_bm25_topk"         -> bm25TopKSql,
-    "q_phrase_search"     -> phraseSearchSql,
-    // same raw-text oracle: the gate proves the positional postings
-    // survive the incremental fold path occurrence-for-occurrence
-    "q_phrase_search_incremental" -> phraseSearchSql,
-    "q_lang_id"           -> langIdSql,
-    "q_sessionize"        -> sessionizeSql,
+    oracled("q_phrase_search", phraseSearch, phraseSearchSql),
+    oracled("q_phrase_search_incremental", phraseSearchIncremental, phraseSearchSql),
+    oracled("q_lang_id", langId, langIdSql),
+    oracled("q_sessionize", sessionize, sessionizeSql),
     // both oracles are the NAIVE quadratic range joins the binned
     // equi-join plan replaces — the hash gates prove plan equivalence
-    "q_interval_join"     -> intervalJoinSql,
-    // SQL-TVF twins (r12/r13): same oracles as their DataFrame paths
-    "q_sql_interval"      -> intervalJoinSql,
-    "q_sql_interval_overlap" -> intervalOverlapSql,
-    "q_sql_bm25"          -> bm25Sql,
-    "q_sql_phrase"        -> phraseSearchSql,
-    "q_sql_chunks"        -> chunksExportSql,
-    "q_sql_tfidf"         -> tfidfIncrementalSql,
-    "q_interval_left"     -> intervalJoinLeftSql,
-    "q_interval_overlap"  -> intervalOverlapSql,
-    "q_pricing_summary"   -> pricingSummarySql,
-    "q_revenue_by_nation" -> revenueByNationSql,
-    "q_top_parts"         -> topPartsSql,
-    "q_ann_brute"         -> annBruteForceSql,
-    "q_cube_revenue"      -> cubeRevenueSql,
-    "q_multimodal_decode" -> multimodalDecodeSql,
-    "q_split_stats"       -> splitStatsSql,
-    "q_stratified"        -> stratifiedSampleSql,
-    "q_mixture_sample"    -> mixtureSampleSql,
-    "q_quality_topk"      -> qualityTopKSql,
-    "q_length_quantiles"  -> lengthQuantilesSql,
-    "q_drift"             -> driftSql,
-    "q_drift_incremental" -> driftSql,
-    "q_profile"           -> profileSql,
-    "q_outliers"          -> outliersSql,
-    "q_stream_window"     -> streamWindowSql,
-    "q_stream_percentile" -> streamPercentileSql,
-    "q_stream_topk"       -> streamTopKSql,
-    "q_stream_dedup"      -> streamDedupSql,
-    "q_stream_join"       -> streamJoinSql,
-    "q_pack"              -> packSequencesSql,
-    "q_shard_export"      -> shardExportSql,
-    "q_pii"               -> piiScrubSql,
-    "q_dedup_clusters"    -> dedupClustersSql,
-    "q_dedup_overlap"     -> dedupOverlapSql,
-    "q_dup_spans"         -> dupSpansSql,
-    "q_span_coverage"     -> spanCoverageSql,
-    "q_dup_spans_incremental" -> dupSpansSql,
-    // incremental fold must reproduce the batch fixpoint exactly —
-    // same oracle, so the hash gate proves the equivalence contract
-    "q_dedup_clusters_incremental" -> dedupClustersSql,
-    // store-carried quality must reproduce the batch manifest exactly
-    "q_dedup_manifest_incremental" -> dedupManifestSql,
-    "q_curation"          -> curationSql,
-    "q_train_export"      -> trainExportSql,
-    // the stream-maintained store must serve the SAME funnel as the
-    // batch pipeline (per-fold equivalence composes across
-    // microbatches) — same oracle, so continuous == batch is
-    // hash-gated end to end
-    "q_stream_curation"   -> curationSql,
-    "q_dedup_manifest"    -> dedupManifestSql,
-    "q_dedup_minhash"     -> dedupMinhashSql,
-    "q_dedup_incremental" -> dedupIncrementalSql,
-    "q_ngram_jaccard"     -> ngramJaccardSql,
-    "q_asof_join"         -> asofJoinSql,
-    "q_decontam"          -> decontamSql,
-    "q_decontam_bloom"    -> decontamSql,
-    "q_decontam_semantic" -> decontamSemanticSql,
-    "q_kmeans"            -> kmeansCardSql,
-    "q_dedup_winnow"      -> winnowDedupSql,
-    "q_repetition"        -> repetitionSql,
-    "q_dedup_simhash"     -> simhashSql,
-    "q_ann_lsh"           -> annLshSql,
-    "q_embed_neardup"     -> embedNearDupSql,
-    "q_ann_ivf"           -> annIvfSql,
-    // the persisted-index probe must produce EXACTLY the in-session
-    // probe's rows (bit-identical model round-trip + precomputed cells)
-    // — same oracle, so the offline lifecycle is hash-gated too
-    "q_ann_ivf_indexed"   -> annIvfSql,
+    oracled("q_interval_join", intervalJoin, intervalJoinSql),
+    oracled("q_sql_interval", sqlIntervalJoin, intervalJoinSql),
+    oracled("q_sql_interval_overlap", sqlIntervalOverlap, intervalOverlapSql),
+    oracled("q_sql_bm25", sqlBm25, bm25Sql),
+    oracled("q_sql_phrase", sqlPhrase, phraseSearchSql),
+    oracled("q_sql_chunks", sqlChunks, chunksExportSql),
+    oracled("q_sql_tfidf", sqlTfidf, tfidfIncrementalSql),
+    rowsOnly("q_daemon_status", daemonStatus, daemonLedgersReason),
+    rowsOnly("q_sql_daemon_status", sqlDaemonStatus, daemonLedgersReason),
+    oracled("q_interval_left", intervalJoinLeft, intervalJoinLeftSql),
+    oracled("q_interval_overlap", intervalOverlapQ, intervalOverlapSql),
+    oracled("q_pricing_summary", pricingSummary, pricingSummarySql),
+    oracled("q_revenue_by_nation", revenueByNation, revenueByNationSql),
+    oracled("q_top_parts", topParts, topPartsSql),
+    oracled("q_dedup_minhash", dedupMinhash, dedupMinhashSql),
+    oracled("q_dedup_incremental", dedupIncremental, dedupIncrementalSql),
+    oracled("q_dedup_simhash", simhashFingerprints, simhashSql),
+    oracled("q_ngram_jaccard", ngramJaccard, ngramJaccardSql),
+    oracled("q_ann_brute", annBruteForce, annBruteForceSql),
+    oracled("q_ann_lsh", annLsh, annLshSql),
+    oracled("q_embed_neardup", embedNearDup, embedNearDupSql),
+    oracled("q_multimodal_decode", multimodalDecode, multimodalDecodeSql),
+    oracled("q_ann_ivf", annIvf, annIvfSql),
+    oracled("q_ann_ivf_indexed", annIvfIndexed, annIvfSql),
     // corpus-trained model, delta folded into the cell layout: the
     // oracle trains on the corpus subset but assigns/probes ALL rows —
     // identical to a same-model full rebuild, so fold == rebuild is
     // hash-gated
-    "q_ann_ivf_incremental" -> annIvfIncrementalSql,
-    "q_tfidf_terms"       -> tfidfTopTermsSql,
-    "q_tfidf_incremental" -> tfidfIncrementalSql)
-
-  /** rows-only: EMPTY since r7 — every query is fully DuckDB-oracled.
-    * The escape route, applied r5-r7: make the engine's randomness
-    * re-derivable. Winnowing (r5) and minhash/ngram (r6) via the
-    * engine-owned PolyHash61; simhash, the LSH hyperplanes, the IVF
-    * k-means and finally the HLL sketch (r7) via PolyHash61 /
-    * literal-embedded java.util.Random driver constants / unrolled
-    * Lloyd iterations / an engine-owned register layout
-    * (functions/GraftHll replacing DataSketches). Where a SIGN or an
-    * argmin decides an output (LSH bucket bits, k-means cells), the
-    * oracle uses the exact list_reduce fold — list_sum's summation
-    * order is unspecified. */
-  /** Queries deliberately WITHOUT a DuckDB oracle (the driver records
-    * a rows-only check): q_daemon_status (and its r13 SQL-TVF twin)
-    * reads the daemon's applied-fold ledgers — commit-protocol text
-    * files, not tables — so there is nothing a SQL engine could
-    * replay; determinism is gated instead by ContinuousIngestSpec's
-    * exact-id assertions and SqlDaemonStatusSpec's SQL == DataFrame. */
-  val rowsOnly: Set[String] = Set("q_daemon_status", "q_sql_daemon_status")
+    oracled("q_ann_ivf_incremental", annIvfIncremental, annIvfIncrementalSql),
+    oracled("q_cube_revenue", cubeRevenue, cubeRevenueSql),
+    oracled("q_dedup_winnow", (s: SparkSession, d: String) => winnowDedup(s, d), winnowDedupSql),
+    oracled("q_dedup_clusters", dedupClusters, dedupClustersSql),
+    oracled("q_dedup_overlap", dedupOverlap, dedupOverlapSql),
+    oracled("q_dup_spans", dupSpans, dupSpansSql),
+    oracled("q_span_coverage", spanCoverage, spanCoverageSql),
+    oracled("q_dup_spans_incremental", dupSpansIncremental, dupSpansSql),
+    oracled("q_dedup_clusters_incremental", dedupClustersIncremental, dedupClustersSql),
+    oracled("q_dedup_manifest_incremental", dedupManifestIncremental, dedupManifestSql),
+    oracled("q_curation", curation, curationSql),
+    oracled("q_train_export", trainExport, trainExportSql),
+    oracled("q_stream_curation", streamCuration, curationSql),
+    oracled("q_dedup_manifest", dedupManifest, dedupManifestSql),
+    oracled("q_asof_join", asofJoin, asofJoinSql),
+    oracled("q_decontam", decontam, decontamSql),
+    oracled("q_decontam_bloom", decontamBloom, decontamSql),
+    oracled("q_decontam_semantic", decontamSemantic, decontamSemanticSql),
+    oracled("q_kmeans", kmeansCard, kmeansCardSql),
+    oracled("q_repetition", repetition, repetitionSql),
+    oracled("q_tfidf_terms", tfidfTopTerms, tfidfTopTermsSql),
+    oracled("q_tfidf_incremental", tfidfIncremental, tfidfIncrementalSql),
+    oracled("q_stream_window", streamWindow, streamWindowSql),
+    oracled("q_stream_percentile", streamPercentile, streamPercentileSql),
+    oracled("q_stream_topk", streamTopK, streamTopKSql),
+    oracled("q_stream_dedup", streamDedup, streamDedupSql),
+    oracled("q_stream_join", streamJoin, streamJoinSql),
+    oracled("q_pack", packSequences, packSequencesSql),
+    oracled("q_shard_export", shardExport, shardExportSql),
+    oracled("q_pii", piiScrub, piiScrubSql),
+    oracled("q_split_stats", splitStats, splitStatsSql),
+    oracled("q_stratified", stratifiedSample, stratifiedSampleSql),
+    oracled("q_mixture_sample", mixtureSample, mixtureSampleSql),
+    oracled("q_quality_topk", qualityTopK, qualityTopKSql),
+    oracled("q_length_quantiles", lengthQuantiles, lengthQuantilesSql),
+    oracled("q_drift", drift, driftSql),
+    oracled("q_drift_incremental", driftIncremental, driftSql),
+    oracled("q_profile", profile, profileSql),
+    oracled("q_outliers", outliers, outliersSql))
 }

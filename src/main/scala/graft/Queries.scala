@@ -17,6 +17,8 @@ import org.apache.spark.sql.functions._
   */
 object Queries {
 
+  import QueryDef.oracled
+
   /** Shared DuckDB CTE prefix: the model DAG in ANSI SQL (mirrors
     * graft.model.Models, which mirrors the reference dbt models). */
   val modelCtes: String =
@@ -344,13 +346,18 @@ object Queries {
       .orderBy("grouping_id", "market_segment", "order_status")
 
   val mvGroupingSetsSql: String =
+    groupingSql("GROUPING SETS ((market_segment, order_status), (market_segment), ())")
+
+  /** Revenue and orders by (segment, status) at every grain of
+    * `groupBy`, with the standard grouping_id. */
+  private def groupingSql(groupBy: String): String =
     modelCtes +
-      """SELECT market_segment, order_status,
+      s"""SELECT market_segment, order_status,
         |       CAST(GROUPING(market_segment, order_status) AS BIGINT) AS grouping_id,
         |       CAST(sum(total_price) AS DOUBLE) AS total_revenue,
         |       count(*) AS total_orders
         |FROM fct_orders
-        |GROUP BY GROUPING SETS ((market_segment, order_status), (market_segment), ())
+        |GROUP BY $groupBy
         |ORDER BY grouping_id, market_segment, order_status""".stripMargin
 
   /** CUBE over rollup-covered dims: every one of the 2^2 grains
@@ -364,15 +371,7 @@ object Queries {
         col("total_revenue").cast("double").as("total_revenue"), col("total_orders"))
       .orderBy("grouping_id", "market_segment", "order_status")
 
-  val routedCubeSql: String =
-    modelCtes +
-      """SELECT market_segment, order_status,
-        |       CAST(GROUPING(market_segment, order_status) AS BIGINT) AS grouping_id,
-        |       CAST(sum(total_price) AS DOUBLE) AS total_revenue,
-        |       count(*) AS total_orders
-        |FROM fct_orders
-        |GROUP BY CUBE (market_segment, order_status)
-        |ORDER BY grouping_id, market_segment, order_status""".stripMargin
+  val routedCubeSql: String = groupingSql("CUBE (market_segment, order_status)")
 
   /** Multi-grain through the SQL surface: GROUP BY CUBE with
     * MEASURE() + grouping_id() — the analyzer rule delegates to
@@ -762,17 +761,22 @@ object Queries {
         col("total_revenue").cast("double").as("total_revenue"))
       .orderBy("order_date")
 
+  /** The spine's day calendar: every date from the first to the last
+    * `order_date` of the `filt` CTE. */
+  private val spineCalendarCte: String =
+    """cal AS (
+      |  SELECT CAST(unnest(generate_series(
+      |           (SELECT min(order_date) FROM filt),
+      |           (SELECT max(order_date) FROM filt),
+      |           INTERVAL 1 DAY)) AS DATE) AS order_date
+      |)""".stripMargin
+
   val routedSpineSql: String =
     modelCtes +
-      """, filt AS (
+      s""", filt AS (
         |  SELECT order_date, count(*) AS c, sum(total_price) AS s
         |  FROM stg_orders WHERE order_status = 'F' GROUP BY 1
-        |), cal AS (
-        |  SELECT CAST(unnest(generate_series(
-        |           (SELECT min(order_date) FROM filt),
-        |           (SELECT max(order_date) FROM filt),
-        |           INTERVAL 1 DAY)) AS DATE) AS order_date
-        |)
+        |), $spineCalendarCte
         |SELECT 'F' AS order_status, cal.order_date,
         |       CAST(coalesce(f.c, 0) AS BIGINT) AS order_count,
         |       CAST(coalesce(f.s, 0) AS DOUBLE) AS total_revenue
@@ -822,28 +826,22 @@ object Queries {
     * for the oracle. Capacity ≥ per-status distinct customers at this
     * scale, so counters are exact and the (cnt desc, item asc) output
     * order makes the k boundary deterministic on both engines. */
-  def mvTopK(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, explode}
-    SparkEntry.catalog(s, dir).get("mv_orders_topk")
-      .query(Seq("order_status"), Seq("top_customers"))
-      .select(col("order_status"), explode(col("top_customers")).as("t"))
-      .select(col("order_status"), col("t.item").as("customer"),
-        col("t.cnt").as("orders"), col("t.err").as("err"))
-      .orderBy("order_status", "customer")
-  }
+  def mvTopK(s: SparkSession, dir: String): DataFrame =
+    topCustomers(SparkEntry.catalog(s, dir))
 
   /** Same query routed through the topk_by_status rollup (counter
     * states re-aggregated, raw orders never rescanned) — semantically
     * invisible, so the oracle is identical. */
-  def routedTopK(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, explode}
-    SparkEntry.matCatalog(s, dir).get("mv_orders_topk")
+  def routedTopK(s: SparkSession, dir: String): DataFrame =
+    topCustomers(SparkEntry.matCatalog(s, dir))
+
+  private def topCustomers(cat: graft.api.MetricViewCatalog): DataFrame =
+    cat.get("mv_orders_topk")
       .query(Seq("order_status"), Seq("top_customers"))
       .select(col("order_status"), explode(col("top_customers")).as("t"))
       .select(col("order_status"), col("t.item").as("customer"),
         col("t.cnt").as("orders"), col("t.err").as("err"))
       .orderBy("order_status", "customer")
-  }
 
   val mvTopKSql: String =
     modelCtes +
@@ -877,7 +875,7 @@ object Queries {
 
   val mvSpineSql: String =
     modelCtes +
-      """, filt AS (
+      s""", filt AS (
         |  SELECT market_segment, order_date, total_price
         |  FROM fct_orders
         |  WHERE order_priority = '1-URGENT' AND order_status = 'F'
@@ -889,12 +887,7 @@ object Queries {
         |         sum(s) OVER (PARTITION BY market_segment ORDER BY order_date
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
         |  FROM agg
-        |), cal AS (
-        |  SELECT CAST(unnest(generate_series(
-        |           (SELECT min(order_date) FROM filt),
-        |           (SELECT max(order_date) FROM filt),
-        |           INTERVAL 1 DAY)) AS DATE) AS order_date
-        |), dense AS (
+        |), $spineCalendarCte, dense AS (
         |  SELECT c.market_segment, cal.order_date
         |  FROM (SELECT DISTINCT market_segment FROM valued) c CROSS JOIN cal
         |)
@@ -909,79 +902,53 @@ object Queries {
 
   // ---------------------------------------------------------------- registry
 
+  /** Every driver query by name, from the three per-file registries;
+    * a name registered twice is refused. */
+  lazy val byName: Map[String, QueryDef] =
+    QueryDef.byName(registry ++ WindowQueries.registry ++ ExtQueries.registry)
+
+  lazy val all: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, d) => n -> d.run }
+
+  lazy val oracles: Map[String, String] =
+    byName.collect { case (n, QueryDef(_, _, Right(sql))) => n -> sql }
+
   /** Queries intentionally without a DuckDB oracle (non-SQL-expressible
     * ops get the driver's weaker rows-only check). */
-  def rowsOnly: Set[String] = ExtQueries.rowsOnly
+  lazy val rowsOnly: Set[String] =
+    byName.collect { case (n, QueryDef(_, _, Left(_))) => n }.toSet
 
-  def all: Map[String, (SparkSession, String) => DataFrame] =
-    base ++ WindowQueries.all ++ ExtQueries.all
-
-  def oracles: Map[String, String] =
-    baseOracles ++ WindowQueries.oracles ++ ExtQueries.oracles
-
-  private def base: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stg_orders"            -> (stgOrders _),
-    "q_stg_customers"         -> (stgCustomers _),
-    "q_fct_orders"            -> (fctOrders _),
-    "q_fct_customer_summary"  -> (fctCustomerSummary _),
-    "q_mv_segment"            -> (mvOrderMetricsBySegment _),
-    "q_mv_year_status"        -> (mvOrderMetricsYearStatus _),
-    "q_mv_filtered"           -> (mvOrdersSimpleFiltered _),
-    "q_mv_distinct"           -> (mvOrdersDistinct _),
-    "q_mv_approx"             -> (mvOrdersApprox _),
-    "q_mv_percentile"         -> (mvOrdersPercentile _),
-    "q_mv_percentile_auto"    -> (mvOrdersPercentileAuto _),
-    "q_routed_percentile"     -> (routedPercentile _),
-    "q_mv_stddev"             -> (mvOrdersStddev _),
-    "q_mv_groupingsets"       -> (mvGroupingSets _),
-    "q_routed_cube"           -> (routedCube _),
-    "q_sql_cube"              -> (sqlCube _),
-    "q_routed_stddev"         -> (routedStddev _),
-    "q_sql_stddev"            -> (sqlStddev _),
-    "q_mv_customer"           -> (mvCustomerMetrics _),
-    "q_mv_sales_geo"          -> (mvSalesGeo _),
-    "q_mv_spine"              -> (mvSpine _),
-    "q_mv_topk"               -> (mvTopK _),
-    "q_routed_topk"           -> (routedTopK _),
-    "q_sql_measure"           -> (sqlMeasure _),
-    "q_sql_topk"              -> (sqlTopK _),
-    "q_sql_prior"             -> (sqlPrior _),
-    "q_sql_spine"             -> (sqlSpine _),
-    "q_routed_spine"          -> (routedSpine _),
-    "q_sql_ddl"               -> (sqlDdl _),
-    "q_describe"              -> (describeView _),
-    "q_describe_sketch"       -> (describeSketch _))
-
-  private def baseOracles: Map[String, String] = Map(
-    "q_stg_orders"            -> stgOrdersSql,
-    "q_stg_customers"         -> stgCustomersSql,
-    "q_fct_orders"            -> fctOrdersSql,
-    "q_fct_customer_summary"  -> fctCustomerSummarySql,
-    "q_mv_segment"            -> mvOrderMetricsBySegmentSql,
-    "q_mv_year_status"        -> mvOrderMetricsYearStatusSql,
-    "q_mv_filtered"           -> mvOrdersSimpleFilteredSql,
-    "q_mv_distinct"           -> mvOrdersDistinctSql,
-    "q_mv_customer"           -> mvCustomerMetricsSql,
-    "q_mv_approx"             -> mvOrdersApproxSql,
-    "q_mv_percentile"         -> mvOrdersPercentileSql,
-    "q_mv_percentile_auto"    -> mvOrdersPercentileAutoSql,
-    "q_routed_percentile"     -> routedPercentileSql,
-    "q_mv_stddev"             -> mvOrdersStddevSql,
-    "q_mv_groupingsets"       -> mvGroupingSetsSql,
-    "q_routed_cube"           -> routedCubeSql,
-    "q_sql_cube"              -> routedCubeSql,
-    "q_routed_stddev"         -> routedStddevSql,
-    "q_sql_stddev"            -> mvOrdersStddevSql,
-    "q_mv_sales_geo"          -> mvSalesGeoSql,
-    "q_mv_spine"              -> mvSpineSql,
-    "q_mv_topk"               -> mvTopKSql,
-    "q_routed_topk"           -> mvTopKSql,
-    "q_sql_measure"           -> sqlMeasureSql,
-    "q_sql_topk"              -> mvTopKSql,
-    "q_sql_prior"             -> WindowQueries.priorPeriodSql,
-    "q_sql_spine"             -> mvSpineSql,
-    "q_routed_spine"          -> routedSpineSql,
-    "q_describe_sketch"       -> describeSketchSql,
-    "q_sql_ddl"               -> sqlDdlSql,
-    "q_describe"              -> describeViewSql)
+  /** Every query of this file with its oracle SQL. */
+  lazy val registry: Seq[QueryDef] = Seq(
+    oracled("q_stg_orders", stgOrders, stgOrdersSql),
+    oracled("q_stg_customers", stgCustomers, stgCustomersSql),
+    oracled("q_fct_orders", fctOrders, fctOrdersSql),
+    oracled("q_fct_customer_summary", fctCustomerSummary, fctCustomerSummarySql),
+    oracled("q_mv_segment", mvOrderMetricsBySegment, mvOrderMetricsBySegmentSql),
+    oracled("q_mv_year_status", mvOrderMetricsYearStatus, mvOrderMetricsYearStatusSql),
+    oracled("q_mv_filtered", mvOrdersSimpleFiltered, mvOrdersSimpleFilteredSql),
+    oracled("q_mv_distinct", mvOrdersDistinct, mvOrdersDistinctSql),
+    oracled("q_mv_approx", mvOrdersApprox, mvOrdersApproxSql),
+    oracled("q_mv_percentile", mvOrdersPercentile, mvOrdersPercentileSql),
+    oracled("q_mv_percentile_auto", mvOrdersPercentileAuto, mvOrdersPercentileAutoSql),
+    oracled("q_routed_percentile", routedPercentile, routedPercentileSql),
+    oracled("q_mv_stddev", mvOrdersStddev, mvOrdersStddevSql),
+    oracled("q_mv_groupingsets", mvGroupingSets, mvGroupingSetsSql),
+    oracled("q_routed_cube", routedCube, routedCubeSql),
+    oracled("q_sql_cube", sqlCube, routedCubeSql),
+    oracled("q_routed_stddev", routedStddev, routedStddevSql),
+    oracled("q_sql_stddev", sqlStddev, mvOrdersStddevSql),
+    oracled("q_mv_customer", mvCustomerMetrics, mvCustomerMetricsSql),
+    oracled("q_mv_sales_geo", mvSalesGeo, mvSalesGeoSql),
+    oracled("q_mv_spine", mvSpine, mvSpineSql),
+    oracled("q_mv_topk", mvTopK, mvTopKSql),
+    oracled("q_routed_topk", routedTopK, mvTopKSql),
+    oracled("q_sql_measure", sqlMeasure, sqlMeasureSql),
+    oracled("q_sql_topk", sqlTopK, mvTopKSql),
+    oracled("q_sql_prior", sqlPrior, WindowQueries.priorPeriodSql),
+    oracled("q_sql_spine", sqlSpine, mvSpineSql),
+    oracled("q_routed_spine", routedSpine, routedSpineSql),
+    oracled("q_sql_ddl", sqlDdl, sqlDdlSql),
+    oracled("q_describe", describeView, describeViewSql),
+    oracled("q_describe_sketch", describeSketch, describeSketchSql))
 }

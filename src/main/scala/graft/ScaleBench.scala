@@ -177,7 +177,7 @@ object ScaleBench {
         // test); the registered query pins k=8 for its fixture-scale
         // oracle (ADVICE r12 — the two must not share a knob)
         val fn = if (name == "q_semdedup") ExtQueries.semDedupAutoK _
-                 else ExtQueries.all(name)
+                 else Queries.all(name)
         val t = seconds(sink(fn(spark, dir)))
         if (name == "q_dedup_clusters") ccRounds = graft.ops.ConnectedComponents.lastRounds
         times(name) = times(name) :+ t

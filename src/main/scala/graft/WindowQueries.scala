@@ -11,26 +11,36 @@ import org.apache.spark.sql.functions._
 object WindowQueries {
 
   import Queries.modelCtes
+  import QueryDef.oracled
 
   /** W1: trailing-7-day revenue at the order_date grain. */
   def trailing7d(s: SparkSession, dir: String): DataFrame =
-    SparkEntry.catalog(s, dir).get("mv_order_metrics")
+    trailing7dFrom(SparkEntry.catalog(s, dir))
+
+  private def trailing7dFrom(cat: graft.api.MetricViewCatalog): DataFrame =
+    cat.get("mv_order_metrics")
       .query(Seq("order_date"), Seq("trailing_7d_revenue"))
       .select(col("order_date"),
         col("trailing_7d_revenue").cast("double").as("trailing_7d_revenue"))
       .orderBy("order_date")
 
-  val trailing7dSql: String =
+  val trailing7dSql: String = trailing7dSqlBy(None)
+
+  /** Trailing-7-day revenue per day, within each `key` group if any. */
+  private def trailing7dSqlBy(key: Option[String]): String = {
+    val k = key.fold("")(_ + ", ")
     modelCtes +
-      """, base AS (
-        |  SELECT order_date, sum(total_price) AS s FROM fct_orders GROUP BY 1
+      s""", base AS (
+        |  SELECT ${k}order_date, sum(total_price) AS s
+        |  FROM fct_orders GROUP BY ${k}order_date
         |)
-        |SELECT order_date,
-        |       CAST(sum(s) OVER (
+        |SELECT ${k}order_date,
+        |       CAST(sum(s) OVER (${key.fold("")(c => s"\n         PARTITION BY $c")}
         |         ORDER BY datediff('day', DATE '1970-01-01', order_date)
         |         RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE)
         |         AS trailing_7d_revenue
-        |FROM base ORDER BY order_date""".stripMargin
+        |FROM base ORDER BY ${k}order_date""".stripMargin
+  }
 
   /** W1 partitioned: trailing-7d within each market segment. */
   def trailing7dSegment(s: SparkSession, dir: String): DataFrame =
@@ -40,19 +50,7 @@ object WindowQueries {
         col("trailing_7d_revenue").cast("double").as("trailing_7d_revenue"))
       .orderBy("market_segment", "order_date")
 
-  val trailing7dSegmentSql: String =
-    modelCtes +
-      """, base AS (
-        |  SELECT market_segment, order_date, sum(total_price) AS s
-        |  FROM fct_orders GROUP BY 1, 2
-        |)
-        |SELECT market_segment, order_date,
-        |       CAST(sum(s) OVER (
-        |         PARTITION BY market_segment
-        |         ORDER BY datediff('day', DATE '1970-01-01', order_date)
-        |         RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |         AS trailing_7d_revenue
-        |FROM base ORDER BY market_segment, order_date""".stripMargin
+  val trailing7dSegmentSql: String = trailing7dSqlBy(Some("market_segment"))
 
   /** W2: cumulative (running-total) revenue over order_date. */
   def cumulative(s: SparkSession, dir: String): DataFrame =
@@ -328,11 +326,7 @@ object WindowQueries {
   /** Window measure served from the baseline cache (never from rollups,
     * reference README.md:431). */
   def trailingFromBaseline(s: SparkSession, dir: String): DataFrame =
-    SparkEntry.matCatalog(s, dir).get("mv_order_metrics")
-      .query(Seq("order_date"), Seq("trailing_7d_revenue"))
-      .select(col("order_date"),
-        col("trailing_7d_revenue").cast("double").as("trailing_7d_revenue"))
-      .orderBy("order_date")
+    trailing7dFrom(SparkEntry.matCatalog(s, dir))
 
   /** Trailing-30-day revenue stddev per segment (r11): the variance
     * rewrite's (n, Σx, Σx²) partials collapse to (segment, day) grain,
@@ -340,7 +334,10 @@ object WindowQueries {
     * combiner applies after — dispersion windows exactly like sum.
     * The oracle hand-expands the same two-phase plan. */
   def trailingStddev(s: SparkSession, dir: String): DataFrame =
-    SparkEntry.catalog(s, dir).get("mv_orders_stats")
+    trailingStddevFrom(SparkEntry.catalog(s, dir))
+
+  private def trailingStddevFrom(cat: graft.api.MetricViewCatalog): DataFrame =
+    cat.get("mv_orders_stats")
       .query(Seq("market_segment", "order_date"), Seq("trailing_30d_stddev"))
       .orderBy("market_segment", "order_date")
 
@@ -371,9 +368,7 @@ object WindowQueries {
     * result is bit-identical to the raw-row collapse and the oracle is
     * the same SQL. RoutingSpec gates the plan (no raw scan). */
   def routedWindow(s: SparkSession, dir: String): DataFrame =
-    SparkEntry.matCatalog(s, dir).get("mv_orders_stats")
-      .query(Seq("market_segment", "order_date"), Seq("trailing_30d_stddev"))
-      .orderBy("market_segment", "order_date")
+    trailingStddevFrom(SparkEntry.matCatalog(s, dir))
 
   /** W1 through the SQL surface (VERDICT r16 task 5): the same
     * trailing-7d window measure as [[trailing7d]], but via
@@ -390,39 +385,22 @@ object WindowQueries {
         |ORDER BY order_date""".stripMargin)
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_routed_window"          -> (routedWindow _),
-    "q_sql_window"             -> (sqlWindow _),
-    "q_win_stddev"             -> (trailingStddev _),
-    "q_win_trailing7d"         -> (trailing7d _),
-    "q_win_trailing7d_segment" -> (trailing7dSegment _),
-    "q_win_cumulative"         -> (cumulative _),
-    "q_win_semiadditive"       -> (semiadditiveMonthly _),
-    "q_win_ytd"                -> (ytd _),
-    "q_win_month_year"         -> (trailingMonthYear _),
-    "q_win_prior"              -> (priorPeriod _),
-    "q_win_percentile"         -> (trailingPercentile _),
-    "q_routed_segment"         -> (routedSegment _),
-    "q_routed_monthly"         -> (routedMonthly _),
-    "q_routed_where"           -> (routedWhere _),
-    "q_baseline_priority"      -> (baselinePriority _),
-    "q_win_from_baseline"      -> (trailingFromBaseline _))
-
-  val oracles: Map[String, String] = Map(
-    "q_routed_window"          -> trailingStddevSql,
-    "q_sql_window"             -> trailing7dSql,
-    "q_win_stddev"             -> trailingStddevSql,
-    "q_win_trailing7d"         -> trailing7dSql,
-    "q_win_trailing7d_segment" -> trailing7dSegmentSql,
-    "q_win_cumulative"         -> cumulativeSql,
-    "q_win_semiadditive"       -> semiadditiveMonthlySql,
-    "q_win_ytd"                -> ytdSql,
-    "q_win_month_year"         -> trailingMonthYearSql,
-    "q_win_prior"              -> priorPeriodSql,
-    "q_win_percentile"         -> trailingPercentileSql,
-    "q_routed_segment"         -> routedSegmentSql,
-    "q_routed_monthly"         -> routedMonthlySql,
-    "q_routed_where"           -> routedWhereSql,
-    "q_baseline_priority"      -> baselinePrioritySql,
-    "q_win_from_baseline"      -> trailing7dSql)
+  /** Every query of this file with its oracle SQL. */
+  lazy val registry: Seq[QueryDef] = Seq(
+    oracled("q_routed_window", routedWindow, trailingStddevSql),
+    oracled("q_sql_window", sqlWindow, trailing7dSql),
+    oracled("q_win_stddev", trailingStddev, trailingStddevSql),
+    oracled("q_win_trailing7d", trailing7d, trailing7dSql),
+    oracled("q_win_trailing7d_segment", trailing7dSegment, trailing7dSegmentSql),
+    oracled("q_win_cumulative", cumulative, cumulativeSql),
+    oracled("q_win_semiadditive", semiadditiveMonthly, semiadditiveMonthlySql),
+    oracled("q_win_ytd", ytd, ytdSql),
+    oracled("q_win_month_year", trailingMonthYear, trailingMonthYearSql),
+    oracled("q_win_prior", priorPeriod, priorPeriodSql),
+    oracled("q_win_percentile", trailingPercentile, trailingPercentileSql),
+    oracled("q_routed_segment", routedSegment, routedSegmentSql),
+    oracled("q_routed_monthly", routedMonthly, routedMonthlySql),
+    oracled("q_routed_where", routedWhere, routedWhereSql),
+    oracled("q_baseline_priority", baselinePriority, baselinePrioritySql),
+    oracled("q_win_from_baseline", trailingFromBaseline, trailing7dSql))
 }

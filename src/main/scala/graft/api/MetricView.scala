@@ -400,7 +400,7 @@ final class MetricView(
 
   /** Spec whose dims are identity over their own names — used to filter
     * baseline/rollup tables where dims are already materialized columns. */
-  private lazy val identitySpec: MetricViewSpec =
+  private[graft] lazy val identitySpec: MetricViewSpec =
     spec.copy(dimensions = spec.dimensions.map(d => d.copy(expr = d.name)), joins = Nil)
 
   private def aggregateFromRows(dims: Seq[String], ms: Seq[Measure], where: Option[String]): DataFrame = {

@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
 final class Materializer(workDir: String, resolve: String => DataFrame) {
 
   private def viewDir(v: MetricView) = s"$workDir/${v.name}"
-  private def path(v: MetricView, mvName: String) = s"${viewDir(v)}/$mvName"
+  private def path(v: MetricView, mvName: String) =
+    Materializer.tablePath(workDir, v.name, mvName)
   private def hashFile(v: MetricView) = Paths.get(s"${viewDir(v)}/_spec_hash")
 
   /** Stored build marker: spec hash + the partial SCHEME version —
@@ -65,7 +66,7 @@ final class Materializer(workDir: String, resolve: String => DataFrame) {
     v.spec.materialization.foreach { mat =>
       mat.materializedViews.foreach { mv =>
         val df =
-          if (mv.isAggregated) rollupFrame(v, mv)
+          if (mv.isAggregated) Materializer.rollupFrame(SparkSession.active, v, mv, resolve)
           else v.baselineFrame
         VersionedTable.write(df, path(v, mv.name))
       }
@@ -93,27 +94,6 @@ final class Materializer(workDir: String, resolve: String => DataFrame) {
     invalidate(v)
     v.spec.materialization.toSeq.flatMap(_.materializedViews)
       .foreach(mv => VersionedTable.destroy(path(v, mv.name)))
-  }
-
-  /** Rollup = group by the rollup's dims, store decomposed partials of
-    * each listed measure. */
-  private def rollupFrame(v: MetricView, mv: MatViewSpec): DataFrame = {
-    val spark = SparkSession.active
-    val dimCols = mv.dimensions.map(d => Expander.dimCol(spark, v.spec, d))
-    val partials = graft.plan.AggDecompose.distinctPartials(
-      mv.measures.flatMap { mName =>
-        val m = v.spec.measure(mName)
-        require(!m.isWindowed,
-          s"rollup ${mv.name}: window measure $mName cannot be materialized in an aggregated view")
-        val dec = v.decomposed(m).getOrElse(sys.error(
-          s"rollup ${mv.name}: measure $mName ('${m.expr}') is not decomposable"))
-        dec.partials
-      }).map(_.agg)
-    val needed = mv.dimensions.map(v.spec.dimension(_).expr) ++
-      mv.measures.map(v.spec.measure(_).expr)
-    Expander.rowLevel(spark, v.spec, resolve, needed)
-      .groupBy(dimCols: _*)
-      .agg(partials.head, partials.tail: _*)
   }
 
   /** The built baseline cache, if declared and current. */
@@ -205,9 +185,42 @@ final class Materializer(workDir: String, resolve: String => DataFrame) {
   private def readFiltered(v: MetricView, r: MatViewSpec, where: Option[String]): DataFrame = {
     val spark = SparkSession.active
     val pre = VersionedTable.read(spark, path(v, r.name))
-    where.fold(pre)(w => pre.filter(Expander.dimFilter(spark, identityDims(v), w)))
+    where.fold(pre)(w => pre.filter(Expander.dimFilter(spark, v.identitySpec, w)))
   }
+}
 
-  private def identityDims(v: MetricView): MetricViewSpec =
-    v.spec.copy(dimensions = v.spec.dimensions.map(d => d.copy(expr = d.name)), joins = Nil)
+object Materializer {
+
+  /** Where view `view`'s materialized table `mv` lives under `workDir`. */
+  def tablePath(workDir: String, view: String, mv: String): String =
+    s"$workDir/$view/$mv"
+
+  /** The distinct decomposed partials rollup `mv` stores. A windowed or
+    * non-decomposable measure is refused by name: neither can be
+    * materialized in an aggregated view. */
+  def rollupPartials(v: MetricView, mv: MatViewSpec): Seq[graft.plan.PartialAgg] =
+    graft.plan.AggDecompose.distinctPartials(
+      mv.measures.flatMap { mName =>
+        val m = v.spec.measure(mName)
+        require(!m.isWindowed,
+          s"rollup ${mv.name}: window measure $mName cannot be materialized in an aggregated view")
+        val dec = v.decomposed(m).getOrElse(sys.error(
+          s"rollup ${mv.name}: measure $mName ('${m.expr}') is not decomposable"))
+        dec.partials
+      })
+
+  /** Rollup = the view's row-level expansion over the sources `resolve`
+    * returns, grouped by the rollup's dims, with [[rollupPartials]]
+    * aggregated. The batch build and the incremental fold (which
+    * resolves the view source to the arriving batch) share it. */
+  def rollupFrame(spark: SparkSession, v: MetricView, mv: MatViewSpec,
+      resolve: String => DataFrame): DataFrame = {
+    val dimCols = mv.dimensions.map(d => Expander.dimCol(spark, v.spec, d))
+    val partials = rollupPartials(v, mv).map(_.agg)
+    val needed = mv.dimensions.map(v.spec.dimension(_).expr) ++
+      mv.measures.map(v.spec.measure(_).expr)
+    Expander.rowLevel(spark, v.spec, resolve, needed)
+      .groupBy(dimCols: _*)
+      .agg(partials.head, partials.tail: _*)
+  }
 }

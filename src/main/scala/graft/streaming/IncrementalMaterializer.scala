@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.api.MetricView
-import graft.mat.VersionedTable
-import graft.plan.Expander
+import graft.mat.{Materializer, VersionedTable}
 import graft.spec.MatViewSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,32 +39,21 @@ final class IncrementalMaterializer(
     resolve: String => DataFrame = name =>
       sys.error(s"incremental materializer has no resolver for joined source '$name'")) {
 
-  private def rollupPath(view: String, mv: String) = s"$workDir/$view/$mv"
-
   /** Partial-agg frame of one batch of source rows for a rollup. The
     * batch stands in for the view source inside the full row-level
     * expansion, so semantic joins and the view filter apply to it
     * exactly as in a batch build (dim tables resolve via `resolve`;
     * they're treated as slowly-changing — the standard incremental-MV
     * contract for star joins). */
-  private def batchPartials(v: MetricView, mv: MatViewSpec, batch: DataFrame): DataFrame = {
-    val dimCols = mv.dimensions.map(d => Expander.dimCol(spark, v.spec, d))
-    val partials = graft.plan.AggDecompose.distinctPartials(
-      mv.measures.flatMap(m => v.decomposed(v.spec.measure(m)).get.partials)).map(_.agg)
-    val needed = mv.dimensions.map(v.spec.dimension(_).expr) ++
-      mv.measures.map(v.spec.measure(_).expr)
-    val rows = Expander.rowLevel(spark, v.spec,
-      name => if (name == v.spec.source) batch else resolve(name), needed)
-    rows.groupBy(dimCols: _*).agg(partials.head, partials.tail: _*)
-  }
+  private def batchPartials(v: MetricView, mv: MatViewSpec, batch: DataFrame): DataFrame =
+    Materializer.rollupFrame(spark, v, mv,
+      name => if (name == v.spec.source) batch else resolve(name))
 
   /** Merge partial frames: union → groupBy dims → re-merge partials
     * (sum of sums, sum of counts, min of mins, max of maxs). */
   private def merge(v: MetricView, mv: MatViewSpec, frames: Seq[DataFrame]): DataFrame = {
     val merged = frames.reduce(_.unionByName(_))
-    val mergeAggs = graft.plan.AggDecompose.distinctPartials(
-      mv.measures.flatMap(m => v.decomposed(v.spec.measure(m)).get.partials))
-      .map(p => p.reagg(p.name).as(p.name))
+    val mergeAggs = Materializer.rollupPartials(v, mv).map(p => p.reagg(p.name).as(p.name))
     merged.groupBy(mv.dimensions.map(col): _*).agg(mergeAggs.head, mergeAggs.tail: _*)
   }
 
@@ -79,65 +67,13 @@ final class IncrementalMaterializer(
   def foldBatch(v: MetricView, batch: DataFrame, foldId: Option[String] = None): Unit = {
     v.spec.materialization.toSeq.flatMap(_.materializedViews).filter(_.isAggregated)
       .foreach { mv =>
-        val path = rollupPath(v.name, mv.name)
+        val path = Materializer.tablePath(workDir, v.name, mv.name)
         VersionedTable.write({
           val fresh = batchPartials(v, mv, batch)
           if (VersionedTable.exists(path))
             merge(v, mv, Seq(VersionedTable.read(spark, path), fresh))
           else fresh
         }, path, foldId)
-      }
-  }
-
-  /** Partition-aware fold: maintains each aggregated rollup as a
-    * Hive-partitioned parquet layout keyed on `partitionCol` (which
-    * must be one of the rollup's dimensions, low-cardinality by the
-    * layout contract — [[graft.ops.Bucketing.writePartitioned]]), and
-    * rewrites ONLY the partitions whose values appear in the batch:
-    *
-    *  1. batch partials → the set of touched partition values (a
-    *     handful of values by the low-cardinality contract);
-    *  2. prior state for JUST those partitions (the filter prunes at
-    *     the directory level — untouched partitions are never read);
-    *  3. merge → dynamic partition overwrite, which replaces only the
-    *     directories present in the merged frame.
-    *
-    * Untouched partition directories keep their files byte-for-byte
-    * (mtime-gated in StreamingSpec), so a delta that lands in one
-    * day/status/shard costs O(|batch| + |touched partitions|) in both
-    * read AND write — at 100 TB the difference between rewriting a
-    * partition and rewriting the table every refresh. Trade vs the
-    * [[VersionedTable]] fold ([[foldBatch]]): per-partition commit
-    * atomicity instead of whole-snapshot, the standard in-place
-    * Hive/Spark contract (see writePartitioned's scaladoc).
-    */
-  def foldBatchPartitioned(v: MetricView, batch: DataFrame, partitionCol: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    v.spec.materialization.toSeq.flatMap(_.materializedViews).filter(_.isAggregated)
-      .foreach { mv =>
-        require(mv.dimensions.contains(partitionCol),
-          s"partition column '$partitionCol' is not a dimension of rollup '${mv.name}'")
-        val path = s"${rollupPath(v.name, mv.name)}_bypart"
-        val fresh = batchPartials(v, mv, batch)
-        val updated = if (new java.io.File(path).isDirectory) {
-          val touched = fresh.select(partitionCol).distinct().collect().map(_.get(0)).toSeq
-          // partitioned reads surface the partition column with an
-          // INFERRED type and at the end of the schema — cast it back
-          // so unionByName inside merge() lines up
-          val old = spark.read.parquet(path)
-            .withColumn(partitionCol,
-              col(partitionCol).cast(fresh.schema(partitionCol).dataType))
-            .filter(col(partitionCol).isin(touched: _*))
-          merge(v, mv, Seq(old, fresh))
-        } else fresh
-        // stage the merged frame before the overwrite: Spark (rightly)
-        // refuses a write whose plan still reads the destination path,
-        // and the stage keeps the merge re-runnable if the commit dies
-        val stage = s"$path._stage"
-        updated.write.mode("overwrite").parquet(stage)
-        graft.ops.Bucketing.writePartitioned(spark.read.parquet(stage), path,
-          Seq(partitionCol), dynamicOverwrite = true)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
       }
   }
 

@@ -128,7 +128,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dedup manifest: exactly one canonical per cluster, and it is the quality argmax") {
-    val rows = graft.ExtQueries.all("q_dedup_manifest")(spark, sfDir)
+    val rows = graft.Queries.all("q_dedup_manifest")(spark, sfDir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getBoolean(4)))
     assert(rows.nonEmpty)

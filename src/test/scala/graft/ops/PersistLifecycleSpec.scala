@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{ExtQueries, SparkSpec}
+import graft.{Queries, SparkSpec}
 
 /** Gate for the Persists release contract (VERDICT r2 "What's wrong"
   * #2): operators persist intermediates for their self-join stages, and
@@ -40,7 +40,7 @@ class PersistLifecycleSpec extends SparkSpec {
 
   persistingQueries.foreach { name =>
     test(s"$name releases every persisted dataset after its action") {
-      val n = ExtQueries.all(name)(spark, sfDir).count()
+      val n = Queries.all(name)(spark, sfDir).count()
       assert(n > 0, s"$name returned no rows")
       awaitNoPersistentRDDs(name)
     }

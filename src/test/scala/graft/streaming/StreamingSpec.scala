@@ -268,51 +268,61 @@ class StreamingSpec extends SparkSpec {
   private def pname(v: graft.api.MetricView, measure: String): String =
     v.decomposed(v.spec.measure(measure)).get.partials.head.name
 
-  test("partition-aware fold rewrites ONLY the touched partition (mtime-gated)") {
-    val cat = graft.SparkEntry.catalog(s, sfDir)
-    val v = cat.get("mv_orders_simple")
-    val work = java.nio.file.Files.createTempDirectory("graft_part").toString
-    val inc = new IncrementalMaterializer(s, work, s"$work/ckpt")
+  test("stream refresh refuses a windowed or non-decomposable rollup measure by name") {
+    // the incremental fold shares the batch build's rollup partials, so
+    // it refuses what the build refuses with the same named error
+    // (it used to fold the window measure's base partials silently, or
+    // fail with None.get on a non-decomposable one)
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_refuse_src").toString
+    val work = java.nio.file.Files.createTempDirectory("graft_refuse_work").toString
     val src = graft.model.Models.stgOrders(s, sfDir)
-    val mv = v.spec.materialization.get.materializedViews.find(_.isAggregated).get
-    val path = s"$work/${v.name}/${mv.name}_bypart"
-
-    // initial build covers every status partition
-    inc.foldBatchPartitioned(v, src, "order_status")
-
-    // per-partition-dir snapshot of (file name → mtime) — byte-for-byte
-    // "untouched" means same files with same timestamps
-    def partFiles(): Map[String, Map[String, Long]] =
-      new java.io.File(path).listFiles().filter(_.getName.startsWith("order_status="))
-        .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => f.getName -> f.lastModified()).toMap).toMap
-    val before = partFiles()
-    assert(before.size >= 2, s"fixture needs >1 status partition, got ${before.keySet}")
-    Thread.sleep(1100) // guard against coarse filesystem mtime resolution
-
-    // a delta landing entirely in one partition (deterministic rows —
-    // the content oracle below re-derives the same frame)
-    val delta = src.filter(col("order_status") === "F" && col("order_id") % 7 === 3)
-    assert(delta.count() > 0)
-    inc.foldBatchPartitioned(v, delta, "order_status")
-
-    val after = partFiles()
-    before.keys.filterNot(_ == "order_status=F").foreach { p =>
-      assert(after(p) == before(p), s"untouched partition $p was rewritten")
+    src.limit(100).write.mode("append").parquet(srcDir)
+    val cat = new graft.api.MetricViewCatalog(s,
+      resolve = _ => s.read.parquet(srcDir),
+      materializationDir = Some(work),
+      streamSource = _ => Some(s.readStream.schema(src.schema).parquet(srcDir)))
+    def spec(measure: String) =
+      s"""version: 0.1
+         |source: stg_orders
+         |dimensions:
+         |  - name: order_status
+         |    expr: order_status
+         |  - name: order_date
+         |    expr: order_date
+         |measures:
+         |  - name: total_revenue
+         |    expr: sum(total_price)
+         |  - name: trailing_7d_revenue
+         |    expr: sum(total_price)
+         |    window:
+         |      - order: order_date
+         |        range: trailing 7 day
+         |  - name: unique_customers
+         |    expr: count(distinct customer_id)
+         |materialization:
+         |  schedule: every 8 weeks
+         |  mode: relaxed
+         |  materialized_views:
+         |    - name: by_status
+         |      type: aggregated
+         |      dimensions:
+         |        - order_status
+         |      measures:
+         |        - total_revenue
+         |        - $measure
+         |""".stripMargin
+    def refreshError(view: String, measure: String): String = {
+      cat.createOrReplace(view, spec(measure))
+      val e = intercept[Exception](cat.refresh(view))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
     }
-    assert(after("order_status=F") != before("order_status=F"),
-      "the touched partition should have been rewritten")
-
-    // and the folded layout equals a full recompute over src ⊎ delta
-    val partials = graft.plan.AggDecompose.distinctPartials(
-      mv.measures.flatMap(m => v.decomposed(v.spec.measure(m)).get.partials))
-    val got = normRows(s.read.parquet(path)
-      .select(col("order_status") +: partials.map(p => col(p.name)): _*).collect())
-    val full = normRows(src.unionByName(delta)
-      .groupBy("order_status")
-      .agg(partials.head.agg, partials.tail.map(_.agg): _*)
-      .collect())
-    assert(got == full)
+    val windowed = refreshError("mv_refuse_window", "trailing_7d_revenue")
+    assert(windowed.contains("rollup by_status: window measure trailing_7d_revenue " +
+      "cannot be materialized in an aggregated view"), windowed)
+    val distinct = refreshError("mv_refuse_distinct", "unique_customers")
+    assert(distinct.contains("rollup by_status: measure unique_customers " +
+      "('count(distinct customer_id)') is not decomposable"), distinct)
   }
 
   test("catalog.refresh routes through incremental fold when a stream source exists") {
