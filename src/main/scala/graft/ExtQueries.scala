@@ -3787,8 +3787,8 @@ object ExtQueries {
 
   // ---------------------------------------------------------------- registry
 
-  /** Why the daemon-status queries have no DuckDB oracle (the driver
-    * records a rows-only check): they read the daemon's applied-fold
+  /** Why the daemon-status queries have no DuckDB oracle (their rows
+    * get a rows-only check): they read the daemon's applied-fold
     * ledgers — commit-protocol text files, not tables — so there is
     * nothing a SQL engine could replay; determinism is gated instead by
     * ContinuousIngestSpec's exact-id assertions and

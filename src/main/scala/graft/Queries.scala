@@ -902,8 +902,8 @@ object Queries {
 
   // ---------------------------------------------------------------- registry
 
-  /** Every driver query by name, from the three per-file registries;
-    * a name registered twice is refused. */
+  /** Every `SparkEntry.queries` entry by name, from the three per-file
+    * registries; a name registered twice is refused. */
   lazy val byName: Map[String, QueryDef] =
     QueryDef.byName(registry ++ WindowQueries.registry ++ ExtQueries.registry)
 

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One driver query: its engine function and how the driver checks
-  * the rows — `Right(sql)`, the DuckDB oracle re-deriving them, or
+/** One `SparkEntry.queries` entry: its engine function and how its
+  * rows are checked — `Right(sql)`, the DuckDB oracle re-deriving them, or
   * `Left(reason)`, why no SQL engine can (a rows-only check). */
 final case class QueryDef(
     name: String,

@@ -271,8 +271,6 @@ class StreamingSpec extends SparkSpec {
   test("stream refresh refuses a windowed or non-decomposable rollup measure by name") {
     // the incremental fold shares the batch build's rollup partials, so
     // it refuses what the build refuses with the same named error
-    // (it used to fold the window measure's base partials silently, or
-    // fail with None.get on a non-decomposable one)
     val srcDir = java.nio.file.Files.createTempDirectory("graft_refuse_src").toString
     val work = java.nio.file.Files.createTempDirectory("graft_refuse_work").toString
     val src = graft.model.Models.stgOrders(s, sfDir)
